@@ -101,12 +101,13 @@ object Bench {
       .mkString("{", ",", "}")
     val failures = results.count(_._4.isDefined)
     val total = results.map(_._2).filter(_ >= 0).sum
-    // best-of-3: the end-of-bench JVM is warm but fragmented and the
-    // single-shot meter swung 255-383k across r10 captures while the
-    // dedicated min-of-3 meters read 1.28-1.5M — report the steady state
+    // median of 3 calls, each the fastest of its 3 timed passes: the
+    // end-of-bench JVM is warm but fragmented and a single call swung
+    // 255-383k across r10 captures; the median reports a typical call,
+    // where the max of the three reported the best of nine passes
     System.err.println(f"[bench] ${(System.nanoTime() - benchT0) / 1e9}%.1fs cdc_meter")
     System.err.flush()
-    val cdcRate = try (1 to 3).map(_ => cdcThroughput(spark, sfDir)).max
+    val cdcRate = try (1 to 3).map(_ => cdcThroughput(spark, sfDir)).sorted.apply(1)
       catch { case _: Throwable => -1.0 }
     // Stamp the git SHA so every bench artifact names the code it measured
     // (stale-artifact guard for cross-round comparisons).
@@ -125,7 +126,7 @@ object Bench {
     } catch { case _: Throwable => "unknown" }
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""spread":$spreads,"failures":$failures,"failed":${failures > 0},"errors":$errs,""" +
-      s""""cdc_rows_per_sec":$cdcRate,"cdc_meter":"max3",""" +
+      s""""cdc_rows_per_sec":$cdcRate,"cdc_meter":"median3(min3)",""" +
       s""""q_meter":"min3+spread","commit":"$sha",""" +
       s""""fixture_mtime":"$fixtureMtime","sf":"$sfDir"}"""
     // The driver keeps only the LAST ~2000 chars of stdout and json-parses

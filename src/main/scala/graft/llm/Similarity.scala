@@ -389,9 +389,10 @@ object Similarity {
     * the next dial is a third level or a graph-quantizer assignment. At
     * oracle scale (≤2k vectors) the auto size IS 16 and flat, so
     * small-sf outputs are byte-identical to the old default. A forced
-    * `nlist > 0` always trains flat ([[trainCentroids]] goes distributed
-    * past [[ScalarTrainerCeiling]]); `twoLevel > 0` forces a
-    * k1 = k2 = twoLevel two-level codebook.
+    * `nlist > 1` always trains flat ([[trainCentroids]] goes distributed
+    * past [[ScalarTrainerCeiling]]); `nlist = 1` trains nothing (one
+    * cell, the exact all-pairs screen, its input side broadcast);
+    * `twoLevel > 0` forces a k1 = k2 = twoLevel two-level codebook.
     */
   /** The trained cell map behind the SemDeDup operators: flat centroids
     * up to the clamp, a two-level codebook past it (and on request).
@@ -407,6 +408,18 @@ object Similarity {
     def assign(v: Column): Column = IvfCell(v, centroids)
     def probeAssign(v: Column, probes: Int): Column =
       IvfProbe(v, centroids, probes)
+  }
+  /** `nlist = 1`: ONE cell holding every non-null vector — the exact
+    * all-pairs screen. Nothing to train (a single trained centroid sends
+    * every vector to cell 0 anyway, and the training sample was a collect
+    * job over the input); a dimension mismatch still fails loudly, in
+    * [[cosine]] instead of in the cell assignment.
+    */
+  private case object OneCell extends CellModel {
+    def maxProbes: Int = 1
+    def assign(v: Column): Column = when(v.isNotNull, lit(0))
+    def probeAssign(v: Column, probes: Int): Column =
+      when(v.isNotNull, array(lit(0)))
   }
   private final case class TwoLevelModel(coarse: Array[Array[Double]],
       subs: Array[Array[Array[Double]]]) extends CellModel {
@@ -442,7 +455,8 @@ object Similarity {
   def semDedupPairs(emb: DataFrame, threshold: Double, nlist: Int = 0,
       probes: Int = 1, twoLevel: Int = 0): DataFrame = {
     val model =
-      if (nlist > 0) FlatModel(trainCentroids(emb, nlist,
+      if (nlist == 1) OneCell
+      else if (nlist > 0) FlatModel(trainCentroids(emb, nlist,
         sampleSize = math.max(2048, 4 * nlist)))
       else cellModel(emb, emb.count(), probes, twoLevel)
     require(probes >= 1 && probes <= model.maxProbes,
@@ -453,7 +467,10 @@ object Similarity {
         else explode(model.probeAssign(col("v"), probes)))
     val a = assigned.select(col("cell"), col("vec_id").as("da"), col("v").as("va"))
     val b = assigned.select(col("cell"), col("vec_id").as("db"), col("v").as("vb"))
-    val pairs = a.join(b, "cell")
+    // one cell: every pair shares the constant key, so a shuffle would
+    // send both sides to one task — broadcast instead (the one-cell mode
+    // is for inputs under one cell's worth of vectors)
+    val pairs = a.join(if (model == OneCell) broadcast(b) else b, "cell")
       .filter(col("da") < col("db"))
       .filter(cosine(col("va"), col("vb")) >= threshold)
       .select("da", "db")
@@ -472,14 +489,17 @@ object Similarity {
     * small and too skewed to retrain on. Both sides assign to cells
     * (batch side multi-probes for boundary recall), and only new×corpus
     * pairs within a cell are scored. `nlist = 0` auto-sizes from the
-    * corpus exactly like [[semDedupPairs]]; `nlist = 1` is one cell =
-    * the exact cross cosine join, the small-sf oracle mode.
+    * corpus exactly like [[semDedupPairs]]; `nlist = 1` is one untrained
+    * cell = the exact cross cosine join with the corpus side broadcast,
+    * the mode for corpora under one cell's worth of vectors and the
+    * small-sf oracle mode.
     */
   def semDedupPairsAgainst(newEmb: DataFrame, corpusEmb: DataFrame,
       threshold: Double, nlist: Int = 0, probes: Int = 1,
       twoLevel: Int = 0): DataFrame = {
     val model =
-      if (nlist > 0) FlatModel(trainCentroids(corpusEmb, nlist,
+      if (nlist == 1) OneCell
+      else if (nlist > 0) FlatModel(trainCentroids(corpusEmb, nlist,
         sampleSize = math.max(2048, 4 * nlist)))
       else cellModel(corpusEmb, corpusEmb.count(), probes, twoLevel)
     require(probes >= 1 && probes <= model.maxProbes,
@@ -495,7 +515,7 @@ object Similarity {
       .select(col("cell"), col("vec_id").as("new_id"), col("v").as("va"))
     val b = assign(corpusEmb, 1)
       .select(col("cell"), col("vec_id").as("corpus_id"), col("v").as("vb"))
-    val pairs = a.join(b, "cell")
+    val pairs = a.join(if (model == OneCell) broadcast(b) else b, "cell")
       .filter(cosine(col("va"), col("vb")) >= threshold)
       .select("new_id", "corpus_id")
     if (probes > 1) pairs.distinct() else pairs

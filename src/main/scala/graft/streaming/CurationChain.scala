@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The WHOLE streaming curation pipeline as ONE trigger body — the LLM
   * analogue of the CDC side's composed wire chain (ReplicaStream →
@@ -109,6 +110,62 @@ object CurationChain {
   private val StoreNames =
     Seq("exact", "phash", "sigs", "vecs", "vecpq", "admitted", "budget")
 
+  /** The columns of every store this object writes, declared once: every
+    * read names its schema, so no read runs Spark's footer-inference job
+    * (one job per store read per trigger, for columns written here). A
+    * `_tail` shares its main's schema; the bucket column (`pb`/`cell`)
+    * is a data column in a tail and a partition column in a main. Older
+    * narrower files widen on read (float embeddings read as double, as
+    * every kernel casts them anyway). A column absent from an older file
+    * reads as null, and no null can drop a store row from a screen: a
+    * null `b` counts as live ([[liveAsOf]]), a null `vecpq.mrg` means
+    * "verify exactly", a null front blob means "maybe present". Every
+    * other column has been written since its store first existed.
+    */
+  private[streaming] val StoreSchemas: Map[String, StructType] = {
+    def s(cols: (String, DataType)*): StructType =
+      StructType(cols.map { case (n, t) => StructField(n, t) })
+    Map(
+      "exact" -> s("doc_id" -> LongType, "content_hash" -> StringType,
+        "b" -> LongType, "pb" -> IntegerType),
+      "phash" -> s("media_id" -> LongType, "h" -> LongType,
+        "band" -> IntegerType, "v" -> LongType, "b" -> LongType,
+        "pb" -> IntegerType),
+      "sigs" -> s("doc_id" -> LongType, "sig" -> ArrayType(LongType),
+        "band" -> IntegerType, "bh" -> LongType, "b" -> LongType,
+        "pb" -> IntegerType),
+      "vecs" -> s("vec_id" -> LongType, "embedding" -> ArrayType(DoubleType),
+        "b" -> LongType, "cell" -> IntegerType),
+      "vecpq" -> s("vec_id" -> LongType, "cell" -> IntegerType,
+        "codes" -> ArrayType(IntegerType), "b" -> LongType,
+        "mrg" -> DoubleType),
+      "admitted" -> s("doc_id" -> LongType, "text" -> StringType,
+        "content_hash" -> StringType, "b" -> LongType),
+      "budget" -> s("source" -> StringType, "toks" -> LongType,
+        "b" -> LongType),
+      "tombstones" -> s("doc_id" -> LongType, "asOf" -> LongType),
+      "bloom" -> StoreLayout.FrontSchema,
+      "sigbloom" -> StoreLayout.FrontSchema)
+  }
+
+  /** The declared schema of the store at `dir` (`<root>/<store>[_tail]`). */
+  private def schemaOf(dir: String): StructType =
+    StoreSchemas(dir.split('/').last.stripSuffix("_tail"))
+
+  /** Read a store directory under its declared schema. */
+  private def read(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(schemaOf(dir)).parquet(dir)
+
+  /** A store row is live unless a tombstone NEWER than its admit batch
+    * `b` retires it (a row written by the retiring batch itself survives
+    * — that is how an UPDATE's new version coexists with its own
+    * tombstone). A null `b` (a file older than the column) stays live:
+    * screening against a possibly-retired row can only reject, never
+    * admit a duplicate.
+    */
+  private def liveAsOf(asOf: Column): Column =
+    asOf.isNull || col("b").isNull || col("b") >= asOf
+
   /** The bucketed screen stores and their partition columns — each has a
     * flat `_tail` sibling holding the deltas since the last merge.
     */
@@ -130,7 +187,7 @@ object CurationChain {
   def storeRows(spark: SparkSession, rootDir: String,
       store: String): DataFrame = {
     val parts = Seq(s"$rootDir/$store", s"$rootDir/${store}_tail")
-      .filter(hasData(spark, _)).map(spark.read.parquet(_))
+      .filter(hasData(spark, _)).map(read(spark, _))
     require(parts.nonEmpty, s"store $store has no data under $rootDir")
     if (parts.size == 1) parts.head else parts.head.unionByName(parts.last)
   }
@@ -145,7 +202,7 @@ object CurationChain {
 
   private def readStore(spark: SparkSession, dir: String,
       cols: Seq[String]): Option[DataFrame] =
-    if (hasData(spark, dir)) Some(spark.read.parquet(dir).select(cols.map(col): _*))
+    if (hasData(spark, dir)) Some(read(spark, dir).select(cols.map(col): _*))
     else None
 
   /** Broadcast-hint guard for the tombstone join side (r15 verdict item 4
@@ -260,108 +317,104 @@ object CurationChain {
       if (semantic) loadVecQuantizer(spark, rootDir) else None
     val vecCents: Option[Array[Array[Double]]] = vecQuant.map(_.cents)
 
-    // effective tombstones: standing (un-applied) ∪ this batch's, one
-    // max-asOf row per doc — tiny (bounded by churn since the last
-    // cadence), pinned because every store read below joins it
-    val tombOpt: Option[DataFrame] = {
-      val standing = readStore(spark, s"$rootDir/tombstones",
-        Seq("doc_id", "asOf"))
-      val fresh = batchTombstones.map(
-        _.select(col("doc_id")).withColumn("asOf", lit(batchId)))
-      (standing, fresh) match {
-        case (None, None) => None
-        case (a, b) => Some((a.toSeq ++ b.toSeq).reduce(_ unionByName _)
-          .groupBy("doc_id").agg(max("asOf").as("asOf")).persist())
-      }
-    }
-    // hint only while the standing store is provably small (see
-    // tombstonesBroadcastable); past the threshold the join goes unhinted
-    val tombHint: DataFrame => DataFrame =
-      if (tombstonesBroadcastable(spark, rootDir)) broadcast else identity
-    /** A store's LIVE rows: minus rows retired by a newer tombstone
-      * (`b < asOf`; a row written by the retiring batch itself
-      * survives — that is how an UPDATE's new version coexists with its
-      * own tombstone). `prune` restricts the scan to candidate buckets
-      * of the store's partition column — static partition pruning, the
-      * bucketed-layout read path (an empty bucket list means the caller
-      * already knows nothing matches: skip the read entirely).
-      */
-    def readLive(dir: String, key: String, cols: Seq[String],
-        prune: Option[(String, Seq[Int])] = None): Option[DataFrame] = {
-      val tailDir = dir + "_tail"
-      val hasMain = hasData(spark, dir)
-      val hasTail = hasData(spark, tailDir)
-      if (!hasMain && !hasTail) return None
-      if (prune.exists(_._2.isEmpty)) return None
-      val need = (Seq(key) ++ cols :+ "b").distinct
-      // the bucketed main reads candidate buckets only (static partition
-      // pruning); the FLAT tail — this cadence interval's few small
-      // delta files — reads whole (bounded by the merge cadence)
-      val parts = Seq(
-        if (hasMain) Some((prune match {
-          case Some((pc, vals)) => StoreLayout.prunedRead(spark, dir, pc, vals)
-          case None => spark.read.parquet(dir)
-        }).select(need.map(col): _*)) else None,
-        if (hasTail)
-          Some(spark.read.parquet(tailDir).select(need.map(col): _*))
-        else None).flatten
-      val df = parts.reduce(_ unionByName _)
-      Some(tombOpt match {
-        case None => df.select(cols.map(col): _*)
-        case Some(t) =>
-          // tombstones are churn-since-last-COMPACTION-bounded metadata —
-          // the broadcast hint keeps the store side from shuffling just
-          // to subtract them (guide §3.1), size-guarded above
-          df.join(tombHint(
-              t.select(col("doc_id").as(key), col("asOf").as("_asof"))),
-              Seq(key), "left")
-            .filter(col("_asof").isNull || col("b") >= col("_asof"))
-            .select(cols.map(col): _*)
-      })
-    }
-    def storePresent(dir: String): Boolean =
-      hasData(spark, dir) || hasData(spark, dir + "_tail")
-
-    // stage 1+2a: gate, then first-of-hash within the batch. Plain
-    // batches tiebreak by lowest id (the near-dup screens' greedy rule);
-    // CDC batches carry `ord` and tiebreak by STREAM ORDER — when two
-    // different docs offer identical text in one batch, the first writer
-    // of that content wins, consistent with last-op-wins elsewhere in
-    // the CDC path (r13 ADVICE: id-order diverged from event order).
-    val cdcOrdered = offers.columns.contains("ord")
-    val hashOrder: Seq[org.apache.spark.sql.Column] =
-      if (cdcOrdered) Seq(col("ord"), col("doc_id")) else Seq(col("doc_id"))
-    val wH = org.apache.spark.sql.expressions.Window
-      .partitionBy("content_hash")
-      .orderBy(hashOrder: _*)
-    // stamp each stage's eagerly-running jobs (bucket collects,
-    // checkpoints, staged writes) with a stage label, so the Spark UI
-    // and ChainTriggerProfile attribute the trigger's ~dozen actions to
-    // stages instead of anonymous callsites
-    def labeled[T](stage: String)(f: => T): T = {
-      spark.sparkContext.setJobDescription(s"graft.chain $stage")
-      try f finally spark.sparkContext.setJobDescription(null)
-    }
-    val gated = CorpusIngest.gateBatch(offers,
-        passThrough = Seq("doc_id") ++ (if (cdcOrdered) Seq("ord") else Nil) ++
-          (if (budgeted) Seq("source") else Nil) ++
-          (if (media) Seq("content") else Nil) ++
-          (if (semantic) Seq("embedding") else Nil))
-      .withColumn("rn", row_number().over(wH))
-      .filter(col("rn") === 1).drop("rn", "ord")
-    // the gated projection feeds every later stage and foreachBatch
-    // re-executes the plan per action — pin it (the q226 lesson)
-    val pinned = gated.persist()
-    var hashed: Option[DataFrame] = None
-    var percDrops: Option[DataFrame] = None
-    var pqCand: Option[DataFrame] = None
-    var pqSurv: Option[DataFrame] = None
-    // the persisted sig frames unpersist in the outer finally (not right
-    // after the admit checkpoint as before r16): the pooled
-    // admit-checkpoint-sigs future reads them until the staging await
-    var sigsP: Option[DataFrame] = None
-    var afterSigP: Option[DataFrame] = None
+    // every frame this body pins, released together in the outer finally
+    // — after the staging pool has drained, because the pooled writes
+    // (admit-checkpoint-sigs) still read the sig frames
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { val p = df.persist(); pins += p; p }
     try {
+      // effective tombstones: standing (un-applied) ∪ this batch's, one
+      // max-asOf row per doc — tiny (bounded by churn since the last
+      // cadence), pinned because every store read below joins it
+      val tombOpt: Option[DataFrame] = {
+        val standing = readStore(spark, s"$rootDir/tombstones",
+          Seq("doc_id", "asOf"))
+        val fresh = batchTombstones.map(
+          _.select(col("doc_id")).withColumn("asOf", lit(batchId)))
+        (standing, fresh) match {
+          case (None, None) => None
+          case (a, b) => Some(pin((a.toSeq ++ b.toSeq).reduce(_ unionByName _)
+            .groupBy("doc_id").agg(max("asOf").as("asOf"))))
+        }
+      }
+      // hint only while the standing store is provably small (see
+      // tombstonesBroadcastable); past the threshold the join goes unhinted
+      val tombHint: DataFrame => DataFrame =
+        if (tombstonesBroadcastable(spark, rootDir)) broadcast else identity
+      /** A store's LIVE rows ([[liveAsOf]]). `prune` restricts the scan
+        * to candidate buckets of the store's partition column — static
+        * partition pruning, the bucketed-layout read path (an empty
+        * bucket list means the caller already knows nothing matches:
+        * skip the read entirely).
+        */
+      def readLive(dir: String, key: String, cols: Seq[String],
+          prune: Option[(String, Seq[Int])] = None): Option[DataFrame] = {
+        val tailDir = dir + "_tail"
+        val hasMain = hasData(spark, dir)
+        val hasTail = hasData(spark, tailDir)
+        if (!hasMain && !hasTail) return None
+        if (prune.exists(_._2.isEmpty)) return None
+        val need = (Seq(key) ++ cols :+ "b").distinct
+        // the bucketed main reads candidate buckets only (static partition
+        // pruning); the FLAT tail — this cadence interval's few small
+        // delta files — reads whole (bounded by the merge cadence)
+        val parts = Seq(
+          if (hasMain) Some((prune match {
+            case Some((pc, vals)) =>
+              StoreLayout.prunedRead(spark, dir, pc, vals, Some(schemaOf(dir)))
+            case None => read(spark, dir)
+          }).select(need.map(col): _*)) else None,
+          if (hasTail) Some(read(spark, tailDir).select(need.map(col): _*))
+          else None).flatten
+        val df = parts.reduce(_ unionByName _)
+        Some(tombOpt match {
+          case None => df.select(cols.map(col): _*)
+          case Some(t) =>
+            // tombstones are churn-since-last-COMPACTION-bounded metadata —
+            // the broadcast hint keeps the store side from shuffling just
+            // to subtract them (guide §3.1), size-guarded above
+            df.join(tombHint(
+                t.select(col("doc_id").as(key), col("asOf").as("_asof"))),
+                Seq(key), "left")
+              .filter(liveAsOf(col("_asof")))
+              .select(cols.map(col): _*)
+        })
+      }
+      def storePresent(dir: String): Boolean =
+        hasData(spark, dir) || hasData(spark, dir + "_tail")
+
+      // stage 1+2a: gate, then first-of-hash within the batch. Plain
+      // batches tiebreak by lowest id (the near-dup screens' greedy rule);
+      // CDC batches carry `ord` and tiebreak by STREAM ORDER — when two
+      // different docs offer identical text in one batch, the first writer
+      // of that content wins, consistent with last-op-wins elsewhere in
+      // the CDC path (r13 ADVICE: id-order diverged from event order).
+      val cdcOrdered = offers.columns.contains("ord")
+      val hashOrder: Seq[Column] =
+        if (cdcOrdered) Seq(col("ord"), col("doc_id")) else Seq(col("doc_id"))
+      val wH = org.apache.spark.sql.expressions.Window
+        .partitionBy("content_hash")
+        .orderBy(hashOrder: _*)
+      // stamp each stage's eagerly-running jobs (bucket collects, counts,
+      // checkpoints, staged writes) with a stage label, so the Spark UI
+      // and ChainTriggerProfile attribute the trigger's ~30 jobs to stages
+      // instead of anonymous callsites. A pinned frame computes under the
+      // label of the FIRST action that reads it, so per-label job counts
+      // move when a pin moves work between stages.
+      def labeled[T](stage: String)(f: => T): T = {
+        spark.sparkContext.setJobDescription(s"graft.chain $stage")
+        try f finally spark.sparkContext.setJobDescription(null)
+      }
+      val gated = CorpusIngest.gateBatch(offers,
+          passThrough = Seq("doc_id") ++ (if (cdcOrdered) Seq("ord") else Nil) ++
+            (if (budgeted) Seq("source") else Nil) ++
+            (if (media) Seq("content") else Nil) ++
+            (if (semantic) Seq("embedding") else Nil))
+        .withColumn("rn", row_number().over(wH))
+        .filter(col("rn") === 1).drop("rn", "ord")
+      // the gated projection feeds every later stage and foreachBatch
+      // re-executes the plan per action — pin it (the q226 lesson)
+      val pinned = pin(gated)
       // stage 2b: exact screen against the standing hash store, bloom
       // front first: batch hashes whose bucket's blobs all miss are
       // DEFINITELY absent (one-sided: the blobs cover every published
@@ -385,9 +438,12 @@ object CurationChain {
           }
           // candidate buckets: a driver-side collect bounded by the
           // layout's bucket count (the probed-cell contract)
+          // the survivors feed the sig screen, the semantic counts and
+          // the admit checkpoint — pin them, or each re-runs the store
+          // read and anti-join
           readLive(exactDir, "doc_id", Seq("content_hash"),
               Some(("pb", StoreLayout.bucketsPresent(maybe))))
-            .map(st => pinned.join(st, Seq("content_hash"), "left_anti"))
+            .map(st => pin(pinned.join(st, Seq("content_hash"), "left_anti")))
             .getOrElse(pinned)
         }
       }
@@ -397,8 +453,10 @@ object CurationChain {
       // the staged phash append — hash once, persist the 16-byte/row
       // projection (the q226/ImageDedupStream lesson). Docs carrying no
       // decodable media pass unscreened.
-      val afterPerc = labeled("perceptual-screen") {
-        if (!media) afterExact
+      // (the survivors, and the pinned 16-byte/row hash projection the
+      // staged phash append reuses)
+      val (afterPerc, hashed) = labeled("perceptual-screen") {
+        if (!media) (afterExact, None)
         else {
           val ph = udf((b: Array[Byte]) =>
             graft.multimodal.MultimodalQueries.perceptualHash(b))
@@ -422,11 +480,9 @@ object CurationChain {
           val spread =
             if (media.rdd.getNumPartitions >= par) media
             else media.repartition(par)
-          val h = spread
+          val h = pin(spread
             .select(col("media_id"), ph(col("content")).as("h"))
-            .filter(col("h").isNotNull)
-            .persist()
-          hashed = Some(h)
+            .filter(col("h").isNotNull))
           // in-batch screen, then the standing BANDED store pruned to the
           // batch's (band, v) buckets ((band, v) has only 2048 values, so
           // no bloom front: a populated store saturates every key and the
@@ -466,11 +522,10 @@ object CurationChain {
           // band self-join + store join re-running ~10× per trigger
           // measured 3× the whole trigger time (the q226/sigs lesson
           // applied one stage earlier)
-          val dropIds = h.select(col("media_id").as("doc_id"))
-            .join(broadcast(okIds), Seq("doc_id"), "left_anti")
-            .persist()
-          percDrops = Some(dropIds)
-          afterExact.join(broadcast(dropIds), Seq("doc_id"), "left_anti")
+          val dropIds = pin(h.select(col("media_id").as("doc_id"))
+            .join(broadcast(okIds), Seq("doc_id"), "left_anti"))
+          (afterExact.join(broadcast(dropIds), Seq("doc_id"), "left_anti"),
+            Some(h))
         }
       }
 
@@ -483,8 +538,7 @@ object CurationChain {
       // partner by construction (only near-dups collide on a band hash),
       // so a novel batch skips the store read entirely and a dup-bearing
       // one reads its candidates' buckets only.
-      val sigs = TextDedupStream.signatures(afterPerc).persist()
-      sigsP = Some(sigs)
+      val sigs = pin(TextDedupStream.signatures(afterPerc))
       val inDropsS = TextDedupStream.sigSelfPairs(sigs)
         .select(col("db").as("doc_id")).distinct()
       val survS = sigs.join(broadcast(inDropsS), Seq("doc_id"), "left_anti")
@@ -507,11 +561,12 @@ object CurationChain {
               }
               .getOrElse(survS)
           }
-        screened.select("doc_id", "sig").persist()
+        pin(screened.select("doc_id", "sig"))
       }
-      afterSigP = Some(afterSig)
-      val survivedSig = afterPerc.join(broadcast(afterSig),
-        Seq("doc_id"), "left_semi")
+      // the semantic screen's counts, its final semi-join and the admit
+      // checkpoint all read the sig survivors — pin them once
+      val survivedSig = pin(afterPerc.join(broadcast(afterSig),
+        Seq("doc_id"), "left_semi"))
 
       // stage 5: semantic screen (in-batch + store), when embeddings
       // ride. Once the cell layout has founded (frozen centroids under
@@ -539,9 +594,8 @@ object CurationChain {
               // path (the probe collect, the candidate materialization,
               // and the final anti-join) — pin it, or each re-runs the
               // whole upstream screen subplan (the q226 lesson)
-              val survV = SemDedupStream
-                .admitBatch(vecs, spark.emptyDataFrame, threshold).persist()
-              pqSurv = Some(survV)
+              val survV = pin(SemDedupStream
+                .admitBatch(vecs, spark.emptyDataFrame, threshold))
               graft.llm.Similarity.adcProbes(
                   survV.select("vec_id", "embedding"), q.cents,
                   q.codebooks.get, vecNprobe) match {
@@ -554,13 +608,14 @@ object CurationChain {
                       // each posting carries its EXACT ADC error bound
                       // `mrg` ([[graft.llm.PqAdcMargin]]) — the filter
                       // can never drop a true pair, and a posting the
-                      // codebooks quantize badly just verifies exactly
-                      val cand = graft.llm.Similarity.adcScoreCandidates(
+                      // codebooks quantize badly just verifies exactly;
+                      // a posting with no bound (null `mrg`) verifies too
+                      val cand = pin(graft.llm.Similarity.adcScoreCandidates(
                           st.withColumnRenamed("vec_id", "neighbor_id"), pr,
                           Double.MinValue)
-                        .filter(col("adc") >= lit(threshold) - col("mrg"))
-                        .select("query_id", "neighbor_id", "cell").persist()
-                      pqCand = Some(cand)
+                        .filter(col("mrg").isNull ||
+                          col("adc") >= lit(threshold) - col("mrg"))
+                        .select("query_id", "neighbor_id", "cell"))
                       // id-pushdown fetch: candidate rows only, pruned to
                       // their cells (the SemDedupStream verify contract —
                       // past 10k candidates fall back to a semi-join)
@@ -713,24 +768,17 @@ object CurationChain {
       // reads pay for the un-merged tail. The bloom deltas stage through
       // the SAME publish — the front can only ever lag the store by rows
       // that were never published, i.e. never.
-      // the admitted keys' hashes collect to the driver (batch-scale —
-      // KB of longs per trigger) so the delta BLOBS build locally
-      // (StoreLayout.bloomDeltaLocal — no distributed agg job, and the
-      // agg's cost was store-INDEPENDENT anyway) and, crucially, can
-      // merge into the DRIVER-CACHED front after the publish: without
-      // that merge the cache can never hit, because every trigger's
-      // publish changes the blob directory listing (r14 verdict item 2)
       // After the two checkpoints above every staged delta below reads
       // only MATERIALIZED rows (`keep`, `keepSigs`, the persisted
       // `hashed` projection), so the staged writes and the two
       // driver-side blob builds are mutually independent — they are
       // submitted CONCURRENTLY from a small pool (guide §2.6: overlap
       // independent jobs). The trigger's fixed cost is its action CHAIN,
-      // not any single job (ChainTriggerProfile: ~14 sub-second actions
-      // back to back), and overlapping lets each small job's tail
-      // back-fill the executors with the next job's tasks. The protocol
-      // is untouched: seal happens only after EVERY future has finished,
-      // and a failure in any future fails the trigger BEFORE seal (the
+      // not any single job (a warm trigger runs ~30 sub-second jobs back
+      // to back, a third of them here), and overlapping lets each small
+      // job's tail back-fill the executors with the next job's tasks. The
+      // protocol is untouched: seal happens only after EVERY future has
+      // finished, and a failure in any future fails the trigger BEFORE seal (the
       // crash-mid-staging path: unsealed residue is discarded and the
       // batch recomputed on replay) — but only after the others have
       // drained, so a foreachBatch retry never races a still-writing
@@ -742,6 +790,28 @@ object CurationChain {
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       def staging[T](stage: String)(f: => T): scala.concurrent.Future[T] =
         scala.concurrent.Future { labeled(stage)(f) }
+      /** Shut the pool and wait out every staged write; the failure to
+        * raise if one is STILL RUNNING past the wait (r15 ADVICE):
+        * returning anyway would let a foreachBatch retry race the
+        * in-flight task in _staged, the exact race the protocol forbids.
+        * Keeps draining for 30 minutes with a loud stderr stamp first.
+        */
+      def drain(): Option[IllegalStateException] = {
+        pool.shutdown()
+        var drained = pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+        var waited = 1
+        while (!drained && waited < 3) {
+          System.err.println(
+            s"[graft.chain] staged-write pool still draining after ${waited * 10} min")
+          drained = pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+          waited += 1
+        }
+        if (drained) None
+        else Some(new IllegalStateException(
+          "staged writes did not drain within 30 minutes; failing the " +
+          "trigger so a foreachBatch retry cannot race an in-flight " +
+          "write in _staged"))
+      }
       try {
         // the admitted keys' hashes collect to the driver (batch-scale —
         // KB of longs per trigger) so the delta BLOBS build locally
@@ -869,36 +939,15 @@ object CurationChain {
               scala.concurrent.duration.Duration.Inf),
             sigBloomDir -> scala.concurrent.Await.result(fSigFront,
               scala.concurrent.duration.Duration.Inf)))
-      } finally {
-        pool.shutdown()
-        // r15 ADVICE: a false return means a staged write is STILL
-        // RUNNING past the wait — returning anyway would let a
-        // foreachBatch retry race the in-flight task in _staged, the
-        // exact race the protocol forbids. Keep draining (with a loud
-        // stderr stamp), then fail the trigger outright; if the body was
-        // already failing, this trades the root error for the hang only
-        // after 30 more minutes of drain attempts — a hung write is the
-        // bigger bug either way.
-        var drained = pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-        var waited = 1
-        while (!drained && waited < 3) {
-          System.err.println(
-            s"[graft.chain] staged-write pool still draining after ${waited * 10} min")
-          drained = pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-          waited += 1
-        }
-        if (!drained)
-          throw new IllegalStateException(
-            "staged writes did not drain within 30 minutes; failing the " +
-            "trigger so a foreachBatch retry cannot race an in-flight " +
-            "write in _staged")
+      } catch {
+        // the body's error stays the primary one; a drain failure on top
+        // of it rides along as suppressed
+        case e: Throwable => drain().foreach(e.addSuppressed); throw e
       }
+      drain().foreach(e => throw e)
       StoreTxn.seal(spark, rootDir, batchId)
     } finally {
-      pinned.unpersist(); hashed.foreach(_.unpersist())
-      percDrops.foreach(_.unpersist()); tombOpt.foreach(_.unpersist())
-      pqCand.foreach(_.unpersist()); pqSurv.foreach(_.unpersist())
-      sigsP.foreach(_.unpersist()); afterSigP.foreach(_.unpersist()); ()
+      pins.foreach(_.unpersist()); ()
     }
   }
 
@@ -940,7 +989,7 @@ object CurationChain {
     def rebuild(storeDir: String, bloomDir: String,
         keys: DataFrame => DataFrame): Unit =
       if (hasData(spark, storeDir)) {
-        val keyed = keys(spark.read.parquet(storeDir))
+        val keyed = keys(read(spark, storeDir))
           .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
         val blobs = StoreLayout.bloomDelta(keyed,
           math.max(1L, keyed.count()), P)
@@ -987,11 +1036,11 @@ object CurationChain {
     val quant = loadVecQuantizer(spark, rootDir)
     val needs = quant match {
       case None =>
-        spark.read.parquet(vecDir).count() >= floor
+        read(spark, vecDir).count() >= floor
       case Some(q) if vecPq && q.codebooks.isEmpty =>
         true // founded before the coded layout existed — upgrade refound
       case Some(q) =>
-        val counts = spark.read.parquet(vecDir).groupBy("cell")
+        val counts = read(spark, vecDir).groupBy("cell")
           .agg(count(lit(1)).as("n"))
           .agg(max("n").as("hot"), sum("n").as("total")).head
         !counts.isNullAt(0) &&
@@ -1001,7 +1050,7 @@ object CurationChain {
     if (!needs) return
     // EVERY read of the pre-rewrite store happens here, before the
     // swaps below delete the files those plans listed
-    val src = spark.read.parquet(vecDir).select("vec_id", "embedding")
+    val src = read(spark, vecDir).select("vec_id", "embedding")
     val n = src.count()
     val nlist = math.max(2, math.min(4096, math.ceil(math.sqrt(n.toDouble)).toInt))
     val newCents = graft.llm.Similarity.trainCentroids(src, nlist)
@@ -1046,7 +1095,7 @@ object CurationChain {
     newCbs.foreach { cbs =>
       def encoded(ignored: DataFrame): DataFrame =
         graft.llm.Similarity.encodeIvfCode(
-            spark.read.parquet(vecDir).select("vec_id", "embedding", "b"),
+            read(spark, vecDir).select("vec_id", "embedding", "b"),
             newCents, cbs, withMargin = true)
           .withColumnRenamed("neighbor_id", "vec_id")
       if (hasData(spark, vecpqDir))
@@ -1119,7 +1168,7 @@ object CurationChain {
           val hint: DataFrame => DataFrame =
             if (tombstonesBroadcastable(spark, rootDir)) broadcast else identity
           adm.join(hint(t), Seq("doc_id"), "left")
-            .filter(col("_asof").isNull || col("b") >= col("_asof"))
+            .filter(liveAsOf(col("_asof")))
             .select("doc_id", "text", "content_hash")
       }
     }.getOrElse(spark.emptyDataFrame)
@@ -1145,7 +1194,7 @@ object CurationChain {
     // driver-side listing of the same dir)
     val hint: DataFrame => DataFrame =
       if (tombstonesBroadcastable(spark, rootDir)) broadcast else identity
-    val t = spark.read.parquet(tombDir)
+    val t = read(spark, tombDir)
       .groupBy("doc_id").agg(max("asOf").as("_asof"))
       .localCheckpoint() // the rewrites below retire the dirs this reads
     StoreKeys.foreach { case (store, key) =>
@@ -1157,7 +1206,7 @@ object CurationChain {
             // size-guarded above
             df.join(hint(t.select(col("doc_id").as(key), col("_asof"))),
                 Seq(key), "left")
-              .filter(col("_asof").isNull || col("b") >= col("_asof"))
+              .filter(liveAsOf(col("_asof")))
               .drop("_asof"))
       }
     }

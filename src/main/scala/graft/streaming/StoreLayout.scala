@@ -3,6 +3,7 @@ package graft.streaming
 import graft.llm.{Bloom, BloomAgg, BloomContains, BloomKernels}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
 
 /** The streaming screen stores' ON-DISK layout: every store a screen
   * re-reads per trigger is hive-partitioned by a BUCKET of its join key,
@@ -122,12 +123,25 @@ object StoreLayout {
     df.select("pb").distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   /** Read only `parts` of a `partCol`-partitioned store — static
-    * partition pruning keeps unlisted buckets' files unopened.
+    * partition pruning keeps unlisted buckets' files unopened. A known
+    * `schema` skips the footer-inference job of a plain read.
     */
   def prunedRead(spark: SparkSession, dir: String, partCol: String,
-      parts: Seq[Int]): DataFrame =
-    spark.read.parquet(dir)
+      parts: Seq[Int], schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(dir)
       .filter(col(partCol).isin(parts.map(Integer.valueOf): _*))
+
+  /** The columns of a bloom front: one sealed blob per bucket per delta
+    * ([[bloomDelta]], [[bloomDeltaLocal]]). Fronts are read under it, so
+    * a probe never pays a footer-inference job; a null blob (a column
+    * absent from a file) reads as "maybe present", the side a front may
+    * err on.
+    */
+  val FrontSchema: StructType = StructType(Seq(
+    StructField("pb", IntegerType), StructField("bloom", BinaryType)))
+
+  private def readFront(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(FrontSchema).parquet(dir)
 
   /** One sealed bloom blob per bucket over `keyed`'s (`__h`, `pb`) rows.
     * `n` is the delta's TOTAL key count and `buckets` the root's bucket
@@ -150,7 +164,7 @@ object StoreLayout {
     */
   def bloomMaybe(batchKeys: DataFrame, blooms: DataFrame): DataFrame =
     batchKeys.join(blooms, Seq("pb"))
-      .filter(BloomContains(col("__h"), col("bloom")))
+      .filter(col("bloom").isNull || BloomContains(col("__h"), col("bloom")))
       .drop("bloom")
 
   /** Ceiling for the driver-side front cache: a front whose blob files
@@ -209,21 +223,30 @@ object StoreLayout {
       val hit = frontCache.get(dir)
       if (hit != null && hit._1 == fp) Some(hit._2)
       else {
-        val rows = spark.read.parquet(dir).select("pb", "bloom").collect()
-          .groupBy(_.getInt(0))
-          .map { case (pb, rs) =>
-            pb -> rs.map(_.getAs[Array[Byte]](1))
-          }
-        val bc = spark.sparkContext.broadcast(rows)
-        val old = frontCache.put(dir, (fp, bc))
-        // the displaced entry may belong to a stopped SparkContext
-        // (fingerprints carry the app id, so it can never be REUSED
-        // across contexts — but unpersist on a dead one throws)
-        if (old != null)
-          try old._2.unpersist(false) catch { case _: Exception => () }
-        Some(bc)
+        val rows = readFront(spark, dir).collect()
+          .map(r => (r.getInt(0), r.getAs[Array[Byte]](1))).toSeq
+        Some(putFront(spark, dir, fp, byBucket(rows)))
       }
     }
+  }
+
+  private def byBucket(
+      blobs: Seq[(Int, Array[Byte])]): Map[Int, Array[Array[Byte]]] =
+    blobs.groupBy(_._1).map { case (pb, rs) => pb -> rs.map(_._2).toArray }
+
+  /** Cache `front` for `dir` under fingerprint `fp`, releasing the entry
+    * it displaces — which may belong to a stopped SparkContext
+    * (fingerprints carry the app id, so it can never be REUSED across
+    * contexts — but unpersist on a dead one throws).
+    */
+  private def putFront(spark: SparkSession, dir: String, fp: String,
+      front: Map[Int, Array[Array[Byte]]])
+      : org.apache.spark.broadcast.Broadcast[Map[Int, Array[Array[Byte]]]] = {
+    val bc = spark.sparkContext.broadcast(front)
+    val old = frontCache.put(dir, (fp, bc))
+    if (old != null)
+      try old._2.unpersist(false) catch { case _: Exception => () }
+    bc
   }
 
   /** ONE probe job instead of read+join+collect: filter `batchKeys`
@@ -240,11 +263,9 @@ object StoreLayout {
     Some(cachedFrontAt(spark, dir, fp.get) match {
       case Some(bc) =>
         val hit = udf((h: Long, pb: Int) => bc.value.get(pb)
-          .exists(_.exists(b => BloomKernels.contains(b, h))))
+          .exists(_.exists(b => b == null || BloomKernels.contains(b, h))))
         batchKeys.filter(hit(col("__h"), col("pb")))
-      case None =>
-        bloomMaybe(batchKeys,
-          spark.read.parquet(dir).select("pb", "bloom"))
+      case None => bloomMaybe(batchKeys, readFront(spark, dir))
     })
   }
 
@@ -276,16 +297,24 @@ object StoreLayout {
     * out-of-band change (crash replay, recover, cadence rebuild,
     * another writer) mismatches at the next probe and falls back to a
     * full re-read — the cache can go stale-and-dropped, never
-    * silently wrong. No-op (entry dropped) when no prior cached state
-    * exists or the front outgrew the cap.
+    * silently wrong.
+    *
+    * With no cached front yet (a root's first publish in this driver),
+    * a non-empty delta SEEDS the cache when the listing holds exactly
+    * one blob file: that file must be the delta just published, so the
+    * driver already holds every blob in the front and the next probe
+    * needs no read job. Any other listing (or a front past the cap)
+    * leaves the cache empty and the next probe reads the front.
     */
   def noteFrontDelta(spark: SparkSession, dir: String,
       delta: Seq[(Int, Array[Byte])]): Unit = {
     val prior = frontCache.get(dir)
-    if (prior == null) return
     def entriesOf(fp: String): Set[String] =
       fp.dropWhile(_ != '|').drop(1).split(',').filter(_.nonEmpty).toSet
     frontFingerprint(spark, dir) match {
+      case Some((fp, bytes)) if bytes <= FrontCacheMaxBytes && prior == null =>
+        if (delta.nonEmpty && entriesOf(fp).size == 1)
+          putFront(spark, dir, fp, byBucket(delta))
       case Some((fp, bytes)) if bytes <= FrontCacheMaxBytes &&
           // the merge is only sound if the listing changed by EXACTLY
           // our one appended blob file since the cached fingerprint —
@@ -301,13 +330,11 @@ object StoreLayout {
           case (m, (pb, blob)) => m.updated(pb, m.getOrElse(pb,
             Array.empty[Array[Byte]]) :+ blob)
         }
-        val bc = spark.sparkContext.broadcast(merged)
-        frontCache.put(dir, (fp, bc))
-        try prior._2.unpersist(false) catch { case _: Exception => () }
-      case _ =>
+        putFront(spark, dir, fp, merged)
+      case _ if prior != null =>
         frontCache.remove(dir)
         try prior._2.unpersist(false) catch { case _: Exception => () }
+      case _ => ()
     }
-    ()
   }
 }

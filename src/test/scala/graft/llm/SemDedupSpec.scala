@@ -156,6 +156,69 @@ class SemDedupSpec extends SparkSpec {
     p2.foreach { case (n, c) => assert(n % 10 == 0 && c % 10 != 0) }
   }
 
+  test("nlist=1 is an untrained one-cell model giving the trained paths' " +
+      "pairs: seeded vectors, pairs at the threshold, a null embedding, " +
+      "empty input") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.lit
+    val s = spark
+    import s.implicits._
+    val t = 0.9
+    val rnd = new scala.util.Random(7)
+    def unit(v: Array[Double]): Seq[Double] = {
+      val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n).toSeq
+    }
+    val random = (0L until 60L).map(i =>
+      i -> unit(Array.fill(8)(rnd.nextGaussian())))
+    // partners of vector 0 at cosine t ± 1e-6: one pair just passes the
+    // gate, its twin just fails — both paths score with the same kernel
+    def at(c: Double): Seq[Double] = {
+      val b = random.head._2.toArray
+      val o = unit(Array.tabulate(8)(i => if (i == 0) -b(1) else if (i == 1) b(0) else 0.0))
+      b.indices.map(i => c * b(i) + math.sqrt(1 - c * c) * o(i))
+    }
+    val near = Seq(100L -> at(t + 1e-6), 101L -> at(t - 1e-6),
+      102L -> random(5)._2.map(_ * 3.0)) // a scaled copy: cosine 1
+    val vecs = (random ++ near).toDF("vec_id", "embedding")
+    val withNull = vecs.union(Seq(200L).toDF("vec_id")
+      .withColumn("embedding", lit(null).cast("array<double>")))
+    val empty = vecs.limit(0)
+    def cross(df: DataFrame): Set[(Long, Long)] =
+      df.select("new_id", "corpus_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+    // trained references: one trained cell (1×1 two-level), and 8
+    // trained cells with every cell probed — both exact by construction
+    val want = pairSet(Similarity.semDedupPairs(vecs, t, twoLevel = 1))
+    assert(want == pairSet(Similarity.semDedupPairs(vecs, t, nlist = 8, probes = 8)))
+    assert(want.contains((0L, 100L)) && !want.contains((0L, 101L)) &&
+      want.contains((5L, 102L)), s"threshold fixture broken: $want")
+    val one = Similarity.semDedupPairs(withNull, t, nlist = 1)
+    assert(pairSet(one) == want, "the null embedding joins no pair")
+    assert(one.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+      "one cell broadcasts instead of shuffling on a constant key")
+    assert(pairSet(Similarity.semDedupPairs(empty, t, nlist = 1)).isEmpty)
+
+    val (newE, corpus) = (vecs.filter($"vec_id" % 3 === 0),
+      vecs.filter($"vec_id" % 3 =!= 0))
+    val wantX = cross(Similarity.semDedupPairsAgainst(newE, corpus, t,
+      nlist = 8, probes = 8))
+    assert(wantX == cross(Similarity.semDedupPairsAgainst(newE, corpus, t,
+      twoLevel = 1)))
+    assert(cross(Similarity.semDedupPairsAgainst(
+      newE.union(withNull.filter($"vec_id" === 200L)),
+      corpus.union(withNull.filter($"vec_id" === 200L)), t, nlist = 1)) == wantX)
+    assert(cross(Similarity.semDedupPairsAgainst(newE, empty, t, nlist = 1)).isEmpty)
+    assert(cross(Similarity.semDedupPairsAgainst(empty, corpus, t, nlist = 1)).isEmpty)
+
+    // a dimension mismatch still fails loudly — in the cosine kernel
+    val bad = vecs.union(Seq(300L -> Seq(1.0, 0.0)).toDF("vec_id", "embedding"))
+    val err = intercept[Exception](
+      Similarity.semDedupPairs(bad, t, nlist = 1).collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("dimensions differ")))
+  }
+
   test("drop list is the higher id of each pair, deduplicated") {
     val pairs = Similarity.semDedupPairs(emb, threshold, nlist = 16)
     val drops = Similarity.semDedupDrops(emb, threshold, nlist = 16)

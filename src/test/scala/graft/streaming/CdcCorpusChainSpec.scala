@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.cdc.{BinlogRowCodec, BinlogSchema, MysqlProtocolCodec, MysqlReplicaSession}
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** The capstone contract: binlog BYTES in (session bring-up + WriteV2
@@ -46,6 +47,33 @@ class CdcCorpusChainSpec extends SparkSpec {
     out.toByteArray
   }
 
+  /** Bring-up packets, then each tranche's events framed as replica
+    * packets and cut into 700-byte chunks — one chunk batch per trigger.
+    */
+  private def framed(tranches: Seq[Seq[Array[Byte]]]): Seq[Seq[ByteChunk]] = {
+    val seed = (1 to 20).map(_.toByte).toArray
+    val ok = hx("00" + "00" + "00" + "0200" + "0000")
+    val eof = hx("fe" + "0000" + "0200")
+    val bringup: Seq[Array[Byte]] = Seq(
+      handshakeV10(seed),
+      (0xfe.toByte +: ("mysql_native_password".getBytes :+ 0.toByte)) ++ seed :+ 0.toByte,
+      ok, ok, Array(2.toByte), hx("deadbeef"), hx("deadbeef"), eof,
+      lenencStr("bin.000001") ++ lenencStr("4"), eof)
+    var pktSeq = 0
+    var chunkOrd = 0L
+    tranches.zipWithIndex.map { case (evs, ti) =>
+      val payloads =
+        (if (ti == 0) bringup else Seq.empty) ++ evs.map(0.toByte +: _)
+      val bytes = payloads.toArray.flatMap { p =>
+        val out = MysqlProtocolCodec.writePacket(pktSeq % 256, p)
+        pktSeq += 1; out
+      }
+      bytes.grouped(700).map { bs =>
+        val c = ByteChunk(1L, chunkOrd, bs); chunkOrd += 1; c
+      }.toSeq
+    }
+  }
+
   test("full-DML binlog bytes: UPDATE retires the doc's own past on the " +
       "wire path, DELETE clears corpus memory, equals the batch replay") {
     implicit val sqlCtx = spark.sqlContext
@@ -72,28 +100,7 @@ class CdcCorpusChainSpec extends SparkSpec {
         encodeEvent(WriteV2, encodeRows(WriteV2, schema,
           Seq(Seq[Any](11L, doc(3)))))))
 
-    val seed = (1 to 20).map(_.toByte).toArray
-    val ok = hx("00" + "00" + "00" + "0200" + "0000")
-    val eof = hx("fe" + "0000" + "0200")
-    val bringup: Seq[Array[Byte]] = Seq(
-      handshakeV10(seed),
-      (0xfe.toByte +: ("mysql_native_password".getBytes :+ 0.toByte)) ++ seed :+ 0.toByte,
-      ok, ok, Array(2.toByte), hx("deadbeef"), hx("deadbeef"), eof,
-      lenencStr("bin.000001") ++ lenencStr("4"), eof)
-    var pktSeq = 0
-    var chunkOrd = 0L
-    val trancheChunks: Seq[Seq[ByteChunk]] = trancheEvents.zipWithIndex.map {
-      case (evs, ti) =>
-        val payloads =
-          (if (ti == 0) bringup else Seq.empty) ++ evs.map(0.toByte +: _)
-        val bytes = payloads.toArray.flatMap { p =>
-          val out = MysqlProtocolCodec.writePacket(pktSeq % 256, p)
-          pktSeq += 1; out
-        }
-        bytes.grouped(700).map { bs =>
-          val c = ByteChunk(1L, chunkOrd, bs); chunkOrd += 1; c
-        }.toSeq
-    }
+    val trancheChunks = framed(trancheEvents)
 
     val base = java.nio.file.Files
       .createTempDirectory("graft_capstone_dml").toFile.getAbsolutePath
@@ -162,28 +169,7 @@ class CdcCorpusChainSpec extends SparkSpec {
         Seq[Any](1L, doc(1), ImageCodec.formulaPng2(1)),
         Seq[Any](1L, doc(100), ImageCodec.formulaPng2(1, patch = true)))))))
 
-    val seed = (1 to 20).map(_.toByte).toArray
-    val ok = hx("00" + "00" + "00" + "0200" + "0000")
-    val eof = hx("fe" + "0000" + "0200")
-    val bringup: Seq[Array[Byte]] = Seq(
-      handshakeV10(seed),
-      (0xfe.toByte +: ("mysql_native_password".getBytes :+ 0.toByte)) ++ seed :+ 0.toByte,
-      ok, ok, Array(2.toByte), hx("deadbeef"), hx("deadbeef"), eof,
-      lenencStr("bin.000001") ++ lenencStr("4"), eof)
-    var pktSeq = 0
-    var chunkOrd = 0L
-    val trancheChunks: Seq[Seq[ByteChunk]] = trancheEvents.zipWithIndex.map {
-      case (evs, ti) =>
-        val payloads =
-          (if (ti == 0) bringup else Seq.empty) ++ evs.map(0.toByte +: _)
-        val bytes = payloads.toArray.flatMap { p =>
-          val out = MysqlProtocolCodec.writePacket(pktSeq % 256, p)
-          pktSeq += 1; out
-        }
-        bytes.grouped(700).map { bs =>
-          val c = ByteChunk(1L, chunkOrd, bs); chunkOrd += 1; c
-        }.toSeq
-    }
+    val trancheChunks = framed(trancheEvents)
 
     val base = java.nio.file.Files
       .createTempDirectory("graft_capstone_media").toFile.getAbsolutePath
@@ -254,28 +240,7 @@ class CdcCorpusChainSpec extends SparkSpec {
         encodeEvent(WriteV2, encodeRows(WriteV2, postSchema, Seq(
           Seq[Any](3L, com(100))), tableId = 5L))))
 
-    val seed = (1 to 20).map(_.toByte).toArray
-    val ok = hx("00" + "00" + "00" + "0200" + "0000")
-    val eof = hx("fe" + "0000" + "0200")
-    val bringup: Seq[Array[Byte]] = Seq(
-      handshakeV10(seed),
-      (0xfe.toByte +: ("mysql_native_password".getBytes :+ 0.toByte)) ++ seed :+ 0.toByte,
-      ok, ok, Array(2.toByte), hx("deadbeef"), hx("deadbeef"), eof,
-      lenencStr("bin.000001") ++ lenencStr("4"), eof)
-    var pktSeq = 0
-    var chunkOrd = 0L
-    val trancheChunks: Seq[Seq[ByteChunk]] = trancheEvents.zipWithIndex.map {
-      case (evs, ti) =>
-        val payloads =
-          (if (ti == 0) bringup else Seq.empty) ++ evs.map(0.toByte +: _)
-        val bytes = payloads.toArray.flatMap { p =>
-          val out = MysqlProtocolCodec.writePacket(pktSeq % 256, p)
-          pktSeq += 1; out
-        }
-        bytes.grouped(700).map { bs =>
-          val c = ByteChunk(1L, chunkOrd, bs); chunkOrd += 1; c
-        }.toSeq
-    }
+    val trancheChunks = framed(trancheEvents)
 
     val base = java.nio.file.Files
       .createTempDirectory("graft_capstone_multi").toFile.getAbsolutePath
@@ -462,28 +427,7 @@ class CdcCorpusChainSpec extends SparkSpec {
           vrow(902L, dupOf(vec(0, 5))), vrow(903L, dupOf(vec(1, 0)))),
           tableId = 7L))))
 
-    val seed = (1 to 20).map(_.toByte).toArray
-    val ok = hx("00" + "00" + "00" + "0200" + "0000")
-    val eof = hx("fe" + "0000" + "0200")
-    val bringup: Seq[Array[Byte]] = Seq(
-      handshakeV10(seed),
-      (0xfe.toByte +: ("mysql_native_password".getBytes :+ 0.toByte)) ++ seed :+ 0.toByte,
-      ok, ok, Array(2.toByte), hx("deadbeef"), hx("deadbeef"), eof,
-      lenencStr("bin.000001") ++ lenencStr("4"), eof)
-    var pktSeq = 0
-    var chunkOrd = 0L
-    val trancheChunks: Seq[Seq[ByteChunk]] = trancheEvents.zipWithIndex.map {
-      case (evs, ti) =>
-        val payloads =
-          (if (ti == 0) bringup else Seq.empty) ++ evs.map(0.toByte +: _)
-        val bytes = payloads.toArray.flatMap { p =>
-          val out = MysqlProtocolCodec.writePacket(pktSeq % 256, p)
-          pktSeq += 1; out
-        }
-        bytes.grouped(700).map { bs =>
-          val c = ByteChunk(1L, chunkOrd, bs); chunkOrd += 1; c
-        }.toSeq
-    }
+    val trancheChunks = framed(trancheEvents)
 
     val base = java.nio.file.Files
       .createTempDirectory("graft_capstone_vec").toFile.getAbsolutePath
@@ -530,5 +474,74 @@ class CdcCorpusChainSpec extends SparkSpec {
     val posts = CurationChain.readAdmitted(spark, s"$base/posts")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(posts == Seq(1L, 2L))
+  }
+
+  /** Spark jobs of the second trigger of an embedding-carrying chain on
+    * a fresh root (the corpus_chain benchmark's timed shape at test
+    * scale). Was 49 before the one-cell semantic model, the pinned
+    * exact/sig survivors, the declared store schemas and the seeded
+    * bloom fronts; measured 31 after.
+    */
+  private val SecondTriggerJobCeiling = 31
+
+  test("a warm embedding trigger stays within its job ceiling, with every " +
+      "screen still firing") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import BinlogRowCodec._
+    val cols = Seq("doc_id" -> "bigint", "text" -> "varchar(2048)",
+      "embedding" -> "varchar(4096)")
+    val sch = BinlogSchema.fromMysqlTypes(cols)
+    val rnd = new java.util.Random(11)
+    val emb: Map[Long, String] = (1L to 70L).map { id =>
+      val v = Array.fill(16)(rnd.nextGaussian())
+      val n = math.sqrt(v.map(x => x * x).sum)
+      id -> v.map(_ / n).mkString("[", ",", "]")
+    }.toMap
+    def rows(rs: (Long, String, Long)*): Seq[Seq[Any]] =
+      rs.map { case (id, text, e) => Seq[Any](id, text, emb(e)) }
+    def write(rs: Seq[Seq[Any]]) = encodeEvent(WriteV2, encodeRows(WriteV2, sch, rs))
+    //  t0: docs 1-40
+    //  t1: docs 41-60 novel; 61 = doc 1's text (exact reject), 62 = a
+    //      one-word edit of doc 2 (near-dup reject), 63 = doc 3's
+    //      embedding under novel text (semantic reject); UPDATE doc 4
+    //      (judged against the corpus minus its own past), DELETE doc 5
+    val tranches = framed(Seq(
+      Seq(write(rows((1L to 40L).map(i => (i, doc(i), i)): _*))),
+      Seq(
+        write(rows((41L to 60L).map(i => (i, doc(i), i)): _*) ++ rows(
+          (61L, doc(1), 61L), (62L, doc(2, edit = true), 62L),
+          (63L, doc(63), 3L))),
+        encodeEvent(UpdateV2, encodeRows(UpdateV2, sch,
+          rows((4L, doc(4), 4L), (4L, doc(4, edit = true), 4L)))),
+        encodeEvent(DeleteV2, encodeRows(DeleteV2, sch,
+          rows((5L, doc(5), 5L)))))))
+
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_capstone_jobs").toFile.getAbsolutePath
+    val root = s"$base/corpus"
+    val in = MemoryStream[ByteChunk]
+    val q = CdcCorpusChain.startCdc(in.toDS(),
+      MysqlReplicaSession.Config("repl", "secret", serverId = 100L),
+      cols, root, s"$base/ckpt", embeddingCol = Some("embedding"))
+    val jobs = try {
+      in.addData(tranches.head); q.processAllAvailable()
+      val queryId = q.id.toString
+      JobCounter.count(spark.sparkContext, e => Option(e.properties).exists(p =>
+          p.getProperty("sql.streaming.queryId") == queryId &&
+            p.getProperty("streaming.sql.batchId") == "1")) {
+        in.addData(tranches(1)); q.processAllAvailable()
+      }._2
+    } finally q.stop()
+
+    val live = CurationChain.readAdmitted(spark, root).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(live.keySet == (1L to 60L).toSet - 5L,
+      s"exact, near-dup and semantic rejects plus the DELETE: ${live.keySet}")
+    assert(live(4L) == doc(4, edit = true))
+    info(s"second trigger: $jobs Spark jobs")
+    assert(jobs > 0, "the trigger's jobs must be attributed to it")
+    assert(jobs <= SecondTriggerJobCeiling,
+      s"the second trigger ran $jobs Spark jobs (ceiling $SecondTriggerJobCeiling)")
   }
 }

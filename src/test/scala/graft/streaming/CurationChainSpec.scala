@@ -8,6 +8,39 @@ import graft.SparkSpec
   */
 class CurationChainSpec extends SparkSpec {
 
+  /** Every chain store under `root` reads back, by footer inference,
+    * exactly the columns declared in [[CurationChain.StoreSchemas]] —
+    * each type equal or widening to the declared one (float embeddings,
+    * int ids) — and its declared read holds the same rows.
+    */
+  private def assertDeclaredSchemas(root: String): Unit = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.functions.col
+    def widens(from: DataType, to: DataType): Boolean = (from, to) match {
+      case (ArrayType(f, _), ArrayType(t, _)) => widens(f, t)
+      case (FloatType, DoubleType) | (IntegerType, LongType) => true
+      case _ => from == to
+    }
+    val stores = new java.io.File(root).listFiles().toSeq.filter(d =>
+      d.isDirectory &&
+        CurationChain.StoreSchemas.contains(d.getName.stripSuffix("_tail")))
+    assert(stores.nonEmpty, s"no stores under $root")
+    stores.foreach { d =>
+      val declared = CurationChain.StoreSchemas(d.getName.stripSuffix("_tail"))
+      val inferred = spark.read.parquet(d.getPath)
+      val got = inferred.schema.map(f => f.name -> f.dataType).toMap
+      assert(got.keySet == declared.fieldNames.toSet,
+        s"${d.getName}: written ${got.keySet}, declared ${declared.fieldNames.toSet}")
+      declared.foreach(f => assert(widens(got(f.name), f.dataType),
+        s"${d.getName}.${f.name}: written ${got(f.name)}, declared ${f.dataType}"))
+      val cols = declared.map(f => col(f.name).cast(f.dataType))
+      val a = spark.read.schema(declared).parquet(d.getPath).select(cols: _*)
+      val b = inferred.select(cols: _*)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+        s"${d.getName}: the declared read differs from the inferred one")
+    }
+  }
+
   /** 80 words over an id-namespaced vocabulary (zero shared 3-shingles
     * across ids — the TextDedupStreamSpec fixture); `edit` replaces one
     * mid-doc word: Jaccard ≈ 0.93 vs the base, past the 7/10 gate.
@@ -223,6 +256,7 @@ class CurationChainSpec extends SparkSpec {
     val ph2 = CurationChain.storeRows(spark, root, "phash")
       .select("media_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
     assert(ph2 == Seq(1L, 2L, 3L, 13L))
+    assertDeclaredSchemas(root)
   }
 
   test("media-less chains never create a phash store") {
@@ -360,6 +394,7 @@ class CurationChainSpec extends SparkSpec {
       ("INSERT", 2L, 11L, doc(3)),              // exact dup of standing 3
       ("INSERT", 3L, 12L, doc(1)))), 2L)        // 1 word from 1's current → sig reject
     assert(live().map(_._1) == Seq(1L, 3L, 10L, 20L))
+    assertDeclaredSchemas(root) // tails and standing tombstones
 
     // batch 3 hits the compactEvery cadence: tombstones apply
     // PHYSICALLY — raw stores drop the retired rows, the tombstone
@@ -375,6 +410,7 @@ class CurationChainSpec extends SparkSpec {
     assert(CurationChain.storeRows(spark, root, "exact").count() == 5)
     assert(CurationChain.storeRows(spark, root, "sigs")
       .select("doc_id").distinct().count() == 5)
+    assertDeclaredSchemas(root) // bucketed mains after the merge
 
     // post-apply consistency: the re-admitted content (id 10) is the
     // standing memory now — its text re-offered again is an exact dup
@@ -732,6 +768,7 @@ class CurationChainSpec extends SparkSpec {
       .groupBy("source").sum("toks")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(spent == Map("web" -> 200L, "books" -> 240L), spent.toString)
+    assertDeclaredSchemas(root)
   }
 
   test("budget × mutable corpus: retirement never refunds — a self-edit " +
@@ -910,5 +947,41 @@ class CurationChainSpec extends SparkSpec {
     // is gone, not shadowed
     assert(CurationChain.storeRows(spark, root, "vecpq").count() ==
       live().size.toLong)
+    assertDeclaredSchemas(root)
+  }
+
+  test("a coded posting without its margin (a column older files lack) " +
+      "verifies exactly instead of dropping the candidate") {
+    val s = spark
+    import s.implicits._
+    def axisVec(axis: Int): Array[Float] =
+      Array.tabulate(64)(i => if (i == axis) 1.0f else 0.0f)
+    def df(rows: Seq[(Long, String, Array[Float])]) =
+      rows.toDF("doc_id", "text", "embedding")
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_chain_nomrg").toFile.getAbsolutePath + "/c"
+    val body = CurationChain.ingestInto(root, compactEvery = 2,
+      vecCellFloor = 8, vecNprobe = 2) _
+    body(df((0 until 6).map(i => (i.toLong, doc(i), axisVec(i)))), 0L)
+    body(df((6 until 12).map(i => (i.toLong, doc(i), axisVec(i)))), 1L)
+    body(df(Seq((12L, doc(12), axisVec(12)))), 2L) // cadence: founds
+    // an out-of-distribution posting: its ADC score is ~0, only its
+    // margin keeps a true duplicate in the candidate set
+    body(df(Seq((101L, doc(101), axisVec(40)))), 3L)
+    Seq("vecpq", "vecpq_tail").map(d => s"$root/$d")
+      .filter(new java.io.File(_).exists()).foreach { dir =>
+        val stripped = spark.read.parquet(dir).drop("mrg")
+        val out = dir + "_nomrg"
+        (if (dir.endsWith("_tail")) stripped.write
+          else stripped.write.partitionBy("cell")).parquet(out)
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+        assert(new java.io.File(out).renameTo(new java.io.File(dir)))
+      }
+    assert(!spark.read.parquet(s"$root/vecpq_tail").columns.contains("mrg"))
+    body(df(Seq((102L, doc(102), axisVec(40)))), 5L)
+    val admitted = CurationChain.readAdmitted(spark, root)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(admitted.contains(101L) && !admitted.contains(102L),
+      s"the OOD duplicate must reject through the exact verify: $admitted")
   }
 }

@@ -16,10 +16,13 @@ object ReassemblyThroughput {
     val payloadSz = if (args.length > 2) args(2).toInt else 256
     val chunkSz = if (args.length > 3) args(3).toInt else 1400 // ~MTU
 
+    // one shuffle partition per core: a fixed count measures partition
+    // overhead on a small host (the state stores commit per partition)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[$cpus]")
       .appName("reassembly-throughput")
-      .config("spark.sql.shuffle.partitions", 32)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", false)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
