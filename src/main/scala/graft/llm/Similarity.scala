@@ -211,6 +211,7 @@ object Similarity {
     import spark.implicits._
     candidates
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      .filter(col("v").isNotNull) // a null vector joins no cell
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(sampleSize)
       .select("v").as[Seq[Double]].collect()
@@ -295,6 +296,7 @@ object Similarity {
       lit(0.0), (acc, x) => acc + x * x))
     val sample = candidates
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      .filter(col("v").isNotNull) // a null vector joins no cell
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(sampleSize)
       .withColumn("v",
@@ -541,20 +543,7 @@ object Similarity {
     */
   def trainPqCodebooks(candidates: DataFrame, m: Int = 8, ksub: Int = 256,
       sampleSize: Int = 2048, iters: Int = 8): Array[Array[Array[Double]]] = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    val sample = candidates
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(sampleSize)
-      .select("v").as[Seq[Double]].collect()
-      .map { v =>
-        val a = v.toArray
-        var s = 0.0; var i = 0
-        while (i < a.length) { s += a(i) * a(i); i += 1 }
-        val n = math.sqrt(s)
-        if (n == 0) a else a.map(_ / n)
-      }
+    val sample = collectSample(candidates, sampleSize)
     require(sample.nonEmpty, "cannot train PQ codebooks on an empty table")
     pqKmeans(sample, m, ksub, iters)
   }
@@ -605,22 +594,11 @@ object Similarity {
   def trainResidualCodebooks(candidates: DataFrame, centroids: Array[Array[Double]],
       m: Int = 8, ksub: Int = 256, sampleSize: Int = 2048,
       iters: Int = 8): Array[Array[Array[Double]]] = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    val sample = candidates
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(sampleSize)
-      .select("v").as[Seq[Double]].collect()
-      .map { v =>
-        val a = v.toArray
-        var s = 0.0; var i = 0
-        while (i < a.length) { s += a(i) * a(i); i += 1 }
-        val n = math.sqrt(s)
-        val unit = if (n == 0) a else a.map(_ / n)
+    val sample = collectSample(candidates, sampleSize)
+      .map { unit =>
         var best = 0; var bestDot = Double.NegativeInfinity; var c = 0
         while (c < centroids.length) {
-          var d = 0.0; i = 0
+          var d = 0.0; var i = 0
           while (i < unit.length) { d += unit(i) * centroids(c)(i); i += 1 }
           if (d > bestDot) { bestDot = d; best = c }
           c += 1
@@ -1355,18 +1333,8 @@ object Similarity {
       codebooks: Array[Array[Array[Double]]], path: String): Unit = {
     val spark = candidates.sparkSession
     import spark.implicits._
-    val sample = candidates
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(2048)
-      .select("v").as[Seq[Double]].collect()
     val dsub = codebooks(0)(0).length
-    val norms = sample.map { v =>
-      val a = v.toArray
-      var s2 = 0.0; var i = 0
-      while (i < a.length) { s2 += a(i) * a(i); i += 1 }
-      val n = math.sqrt(s2)
-      val unit = if (n == 0) a else a.map(_ / n)
+    val norms = collectSample(candidates, 2048).map { unit =>
       var d2 = 0.0
       var s = 0
       while (s < codebooks.length) {

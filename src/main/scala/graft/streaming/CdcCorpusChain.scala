@@ -30,12 +30,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * [[start]]/[[startCdc]] take the single-table dump shape the
   * reference's motivating workload has.
   *
-  * Scale posture: the wire fold is per-session state (bytes, not rows),
-  * the decode is a stateless per-row kernel, and the curation screens
-  * are the measured [[CurationChain]] joins — nothing here adds a
-  * shuffle beyond the screens' own key-colocated joins. The end-to-end
-  * contract is gated by CdcCorpusChainSpec: binlog bytes in, curated
-  * admitted store out, equal to the batch replay of the same documents.
+  * Scale posture: the wire is one per-session stateful operator
+  * (reassembly fused with the session fold: state is bytes, not rows;
+  * one exchange on session id and one state store per trigger, plus
+  * [[SchemaStream]]'s own in [[startCdcMulti]]), the decode is a
+  * stateless per-row kernel, and the curation screens are the measured
+  * [[CurationChain]] joins. The end-to-end contract is gated by
+  * CdcCorpusChainSpec: binlog bytes in, curated admitted store out,
+  * equal to the batch replay of the same documents.
   */
 object CdcCorpusChain {
 

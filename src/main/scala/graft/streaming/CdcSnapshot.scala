@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.cdc.{CdcMerge, Envelope, Instance, Routing}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -115,10 +115,19 @@ object CdcSnapshot {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(m).get)
     }
-    val dirs = m.buckets.values.toSeq.sorted.map(rel => s"$snapshotDir/$rel")
-    // mergeSchema: buckets written before a schema-widening change are
-    // narrower than later ones; the union schema nulls the gap.
-    spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    readBuckets(spark, m, m.buckets.values.toSeq.sorted.map(rel => s"$snapshotDir/$rel"))
+  }
+
+  /** Bucket directories of `m` under the snapshot's union schema: buckets
+    * written before a schema-widening change are narrower than later
+    * ones, and the union nulls the gap. The manifest records that union,
+    * so no footer job infers it; only a manifest written before the
+    * schema was recorded falls back to `mergeSchema`.
+    */
+  private def readBuckets(spark: SparkSession, m: SnapshotManifest,
+      dirs: Seq[String]): DataFrame = schemaOf(m) match {
+    case Some(s) => spark.read.schema(s).parquet(dirs: _*)
+    case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
   }
 
   /** Current snapshot as a DataFrame: resolve the newest manifest, read its
@@ -190,11 +199,12 @@ object CdcSnapshot {
     val n = prev.map(_.numBuckets).getOrElse(numBuckets)
     val version = prev.map(_.version + 1).getOrElse(1L)
 
-    val bucketed = batch.withColumn("__bucket", bucketCol(pkCols, n))
-    // Bucket ids present in the batch: bounded by n (metadata-sized), so the
-    // collect is a per-batch driver cost of at most `n` ints — not data.
-    val batchTouched = bucketed.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
+    // Bucket ids present in the batch: the collect returns at most `n` ints
+    // per partition (metadata, not data), and a per-partition set keeps it
+    // to one stage (no distinct shuffle).
+    val batchTouched = batch.select(bucketCol(pkCols, n)).as(Encoders.scalaInt)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+      .collect().distinct.sorted
     if (batchTouched.isEmpty) return
     // Auto-compaction: every Nth version rewrites EVERY bucket into this
     // merge's generation directory, so reads stop listing old generations.
@@ -217,22 +227,24 @@ object CdcSnapshot {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         recorded.getOrElse(batch.schema))
-    else spark.read.option("mergeSchema", "true")
-      .parquet(touchedPrevDirs.toIndexedSeq: _*)
+    else readBuckets(spark, prev.get, touchedPrevDirs.toIndexedSeq)
 
-    // Merge only the touched buckets' rows with the batch; one pk-hash
-    // shuffle, partition-pruned writes. DELETE tombstones drop the pk.
+    // Merge only the touched buckets' rows with the batch; one shuffle on
+    // the bucket, partition-pruned writes. DELETE tombstones drop the pk.
+    // The bucket is a function of the pk, so the latest-image window keyed
+    // on (bucket, pk) keeps the same rows, and the bucket partitioning
+    // already satisfies its clustering: no second exchange on the pk.
     // allowMissingColumns = schema evolution: a batch that gains a column
     // (post-DDL) widens touched buckets, with nulls for pre-DDL rows;
     // untouched buckets widen lazily when their next change arrives
     // (readers union by name over mixed-width buckets the same way).
-    val merged = CdcMerge
-      .latestImage(prevRows.unionByName(batch, allowMissingColumns = true),
-        pkCols, ordCol)
-      .withColumn("__bucket", bucketCol(pkCols, n))
+    val merged = CdcMerge.latestImage(
+      prevRows.unionByName(batch, allowMissingColumns = true)
+        .withColumn("__bucket", bucketCol(pkCols, n))
+        .repartition(col("__bucket")),
+      "__bucket" +: pkCols, ordCol)
     val stageRel = s"data-v$version"
-    merged.repartition(col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket")
+    merged.write.mode("overwrite").partitionBy("__bucket")
       .parquet(s"$snapshotDir/$stageRel")
 
     // A touched bucket can end up empty (every pk deleted): partitionBy

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One transport read: `idx`-th chunk of bytes on `session`'s stream. */
@@ -29,6 +29,9 @@ final case class WirePacket(session: Long, ordinal: Long, seq: Int,
   * the same codecs as batch replay ([[graft.cdc.MysqlPacketSplit]],
   * `BinlogDecode.eventSplit(packetMarker = true)`) — tested equivalent in
   * StreamingSpec against the batch splitter on the concatenated stream.
+  * [[ReplicaStream.fromChunks]] does not chain this operator: it runs
+  * [[step]] inside its own per-session operator, fused with the replica
+  * session fold, so the wire chain pays one shuffle and one state store.
   */
 object PacketReassembly {
 
@@ -40,6 +43,9 @@ object PacketReassembly {
   final case class ReState(nextIdx: Long, pending: Map[Long, Array[Byte]],
       partial: Array[Byte], nextOrdinal: Long,
       contSeq: Int, contBytes: Array[Byte])
+
+  /** A session's state before its first chunk (and after an idle timeout). */
+  val Fresh: ReState = ReState(0L, Map.empty, Array.emptyByteArray, 0L, 0, null)
 
   /** @param maxPending refuse-loudly bound on the per-session reorder
     *   buffer: a gap that never fills (lost chunk) would otherwise grow
@@ -56,33 +62,49 @@ object PacketReassembly {
         scala.concurrent.duration.Duration.Zero)
       : Dataset[WirePacket] = {
     import chunks.sparkSession.implicits._
+    perSession(chunks, idleTimeout, Fresh)(step(_, _, _, maxPending))
+  }
+
+  /** A pure per-session `step` over raw chunks as ONE stateful operator
+    * keyed by session. An idle timeout (as on [[reassemble]]) removes the
+    * session's whole state, so a resumed session starts from `fresh`.
+    */
+  private[streaming] def perSession[S: Encoder, U: Encoder](
+      chunks: Dataset[ByteChunk], idleTimeout: scala.concurrent.duration.Duration,
+      fresh: => S)(step: (Long, Iterator[ByteChunk], S) => (S, Seq[U])): Dataset[U] = {
+    import chunks.sparkSession.implicits._
     val ttlMs = if (idleTimeout.isFinite && idleTimeout.toMillis > 0)
       idleTimeout.toMillis else 0L
     val conf = if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     chunks
       .groupByKey(_.session)
-      .flatMapGroupsWithState[ReState, WirePacket](
-        OutputMode.Append, conf) {
-        (session: Long, rows: Iterator[ByteChunk], state: GroupState[ReState]) =>
+      .flatMapGroupsWithState[S, U](OutputMode.Append, conf) {
+        (session: Long, rows: Iterator[ByteChunk], state: GroupState[S]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
-          } else reassembleGroup(session, rows, state, maxPending, ttlMs)
+          } else {
+            val (next, out) = step(session, rows, state.getOption.getOrElse(fresh))
+            state.update(next)
+            if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
+            out.iterator
+          }
       }
   }
 
-  private def reassembleGroup(session: Long, rows: Iterator[ByteChunk],
-      state: GroupState[ReState], maxPending: Int, ttlMs: Long)
-      : Iterator[WirePacket] = {
-    var st = state.getOption.getOrElse(
-      ReState(0L, Map.empty, Array.emptyByteArray, 0L, 0, null))
+  /** One session's reassembly over one trigger's chunks, as a pure
+    * function of the state it starts from: the next state and the whole
+    * packets completed, in ordinal order.
+    */
+  def step(session: Long, chunks: Iterator[ByteChunk], st: ReState,
+      maxPending: Int): (ReState, Seq[WirePacket]) = {
     val out = scala.collection.mutable.ArrayBuffer.empty[WirePacket]
     // Park everything, then drain the contiguous prefix: order within
     // a trigger is not guaranteed either, so arrival order is ignored
     // entirely — only idx decides.
     var pending = st.pending
-    rows.foreach { c =>
+    chunks.foreach { c =>
       if (c.idx >= st.nextIdx && !pending.contains(c.idx))
         pending += (c.idx -> c.bytes)
     }
@@ -121,9 +143,6 @@ object PacketReassembly {
     require(pending.size <= maxPending,
       s"session $session: ${pending.size} buffered chunks exceed " +
         s"maxPending=$maxPending (lost chunk before idx $nextIdx?)")
-    st = ReState(nextIdx, pending, partial, ordinal, contSeq, contBytes)
-    state.update(st)
-    if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-    out.iterator
+    (ReState(nextIdx, pending, partial, ordinal, contSeq, contBytes), out.toSeq)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.cdc.MysqlReplicaSession
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One binlog event surfaced by the streaming replica session: the
   * `ordinal`-th event on `session`, bytes ready for
@@ -11,21 +10,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 final case class SessionEvent(session: Long, ordinal: Long, event: Array[Byte])
 
 /** The composed socket-free replication client as ONE streaming stage:
-  * reassembled wire packets → [[graft.cdc.MysqlReplicaSession]] fold
-  * (bring-up phases and the COM_BINLOG_DUMP streaming phase) → whole
-  * binlog events. This is the reference's main loop
-  * (`/root/reference/src/main.rs:74-130`) with the blocking socket reads
+  * raw transport chunks → wire packets ([[PacketReassembly.step]]) →
+  * [[graft.cdc.MysqlReplicaSession]] fold (bring-up phases and the
+  * COM_BINLOG_DUMP streaming phase) → whole binlog events. This is the
+  * reference's main loop (ru-cdc `src/main.rs:74-130`: read a
+  * packet, step the session, dispatch) with the blocking socket reads
   * replaced by a per-session state fold over a captured byte stream;
-  * chaining it after [[PacketReassembly.reassemble]] gives
-  * chunks → packets → session → events → typed rows → snapshot as a
-  * single Structured Streaming query (see CdcEndToEndSpec).
+  * chained with the decode it gives chunks → packets → session → events
+  * → typed rows → snapshot as a single Structured Streaming query (see
+  * CdcEndToEndSpec).
   *
-  * The fold consumes packets strictly in `ordinal` order. The reassembler
-  * emits ordinals contiguously per session, and checkpoint recovery
-  * replays a batch deterministically, so replayed packets (ordinal below
-  * the cursor) are dropped and a genuine gap — which can only mean the
-  * stages were rewired against different checkpoints — fails loudly
-  * rather than feeding the state machine out-of-order bytes.
+  * Reassembly and the session fold run in ONE `flatMapGroupsWithState`
+  * with one state per session, so a trigger pays one shuffle and one
+  * state-store commit for the wire, and both halves of the state commit
+  * atomically: checkpoint recovery replays a batch against exactly the
+  * state it first ran on, and the fold sees each packet once, in ordinal
+  * order, straight from the reassembler.
   *
   * `send`-side packets (login response, queries, the dump command) have no
   * transport to go to in capture replay — the captured server side already
@@ -33,60 +33,61 @@ final case class SessionEvent(session: Long, ordinal: Long, event: Array[Byte])
   * [[MysqlReplicaSession.onPayload]] outside Spark (the documented
   * transport exclusion) and ships the received bytes here as chunks.
   *
-  * Scale: state per session is O(1) — the session phase + cursor, no
-  * buffered bytes (the reassembler owns reorder buffering). One shuffle on
-  * session id, same key as reassembly, so AQE keeps the stages co-partitioned.
+  * Scale: state per session is O(reorder window + one packet) for the
+  * reassembly plus the O(1) session phase; one shuffle on session id.
+  * [[SchemaStream.withSchema]] downstream is a separate stateful operator
+  * and pays its own exchange and state store.
   */
 object ReplicaStream {
 
-  /** Fold state: the pure session state + the next packet ordinal expected
-    * + how many events this session has emitted (the event ordinal).
+  /** Fold state: the pure session state + how many events this session
+    * has emitted (the event ordinal).
     */
-  final case class FoldState(st: MysqlReplicaSession.State,
-      nextOrdinal: Long, eventsOut: Long)
+  final case class FoldState(st: MysqlReplicaSession.State, eventsOut: Long)
 
-  /** Packets of many sessions → decoded binlog events, streaming. */
-  def events(packets: Dataset[WirePacket], config: MysqlReplicaSession.Config)
-      : Dataset[SessionEvent] = {
-    import packets.sparkSession.implicits._
-    // Java serialization for the state store: State carries a sealed Phase
-    // hierarchy that product encoders can't express. State is O(bytes of
-    // one seed) per session, so codec speed is irrelevant here.
-    implicit val stateEnc: Encoder[FoldState] = Encoders.javaSerialization[FoldState]
-    packets
-      .groupByKey(_.session)
-      .flatMapGroupsWithState[FoldState, SessionEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (session: Long, rows: Iterator[WirePacket], state: GroupState[FoldState]) =>
-          var fs = state.getOption.getOrElse(
-            FoldState(MysqlReplicaSession.initial(config), 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[SessionEvent]
-          // group iterators after a shuffle have no order guarantee; the
-          // per-trigger run is bounded, so an in-memory sort is fine
-          rows.toArray.sortBy(_.ordinal).foreach { p =>
-            if (p.ordinal >= fs.nextOrdinal) {
-              require(p.ordinal == fs.nextOrdinal,
-                s"session $session: packet ordinal ${p.ordinal} arrived but " +
-                  s"${fs.nextOrdinal} expected — replica fold rewired against a " +
-                  "different reassembly checkpoint?")
-              val step = MysqlReplicaSession.onPayload(fs.st, p.payload)
-              var next = FoldState(step.state, p.ordinal + 1, fs.eventsOut)
-              step.event.foreach { ev =>
-                out += SessionEvent(session, next.eventsOut, ev)
-                next = next.copy(eventsOut = next.eventsOut + 1)
-              }
-              fs = next
-            } // ordinal < nextOrdinal: deterministic replay after recovery — drop
-          }
-          state.update(fs)
-          out.iterator
-      }
+  /** A session's fused state: reassembly, then fold. */
+  type SessionState = (PacketReassembly.ReState, FoldState)
+
+  /** A session's state before its first chunk (and after an idle timeout). */
+  def fresh(config: MysqlReplicaSession.Config): SessionState =
+    (PacketReassembly.Fresh, FoldState(MysqlReplicaSession.initial(config), 0L))
+
+  /** One session's trigger, as a pure function of the state it starts
+    * from: reassemble the chunks, fold every completed packet through the
+    * session, and return the next state with the events surfaced.
+    */
+  def step(session: Long, chunks: Iterator[ByteChunk], st: SessionState,
+      maxPending: Int): (SessionState, Seq[SessionEvent]) = {
+    val (re, packets) = PacketReassembly.step(session, chunks, st._1, maxPending)
+    val FoldState(st0, emitted) = st._2
+    var phase = st0
+    val out = scala.collection.mutable.ArrayBuffer.empty[SessionEvent]
+    packets.foreach { p =>
+      val next = MysqlReplicaSession.onPayload(phase, p.payload)
+      next.event.foreach(ev => out += SessionEvent(session, emitted + out.size, ev))
+      phase = next.state
+    }
+    ((re, FoldState(phase, emitted + out.size)), out.toSeq)
   }
 
-  /** The whole chain from raw transport chunks: reassemble, then fold. */
+  /** Raw transport chunks of many sessions → decoded binlog events,
+    * streaming. `maxPending` and `idleTimeout` are
+    * [[PacketReassembly.reassemble]]'s; an idle timeout drops the whole
+    * session state, so a resumed session (chunk idx 0 again) is a fresh
+    * connection: its bring-up folds from the initial phase.
+    */
   def fromChunks(chunks: Dataset[ByteChunk], config: MysqlReplicaSession.Config,
       maxPending: Int = 4096,
       idleTimeout: scala.concurrent.duration.Duration =
-        scala.concurrent.duration.Duration.Zero): Dataset[SessionEvent] =
-    events(PacketReassembly.reassemble(chunks, maxPending, idleTimeout), config)
+        scala.concurrent.duration.Duration.Zero): Dataset[SessionEvent] = {
+    import chunks.sparkSession.implicits._
+    // The reassembly half stays product-encoded; the fold half is Java
+    // serialized: State carries a sealed Phase hierarchy that product
+    // encoders can't express. It is O(bytes of one seed) per session, so
+    // codec speed is irrelevant here.
+    implicit val stateEnc: Encoder[SessionState] = Encoders.tuple(
+      Encoders.product[PacketReassembly.ReState], Encoders.javaSerialization[FoldState])
+    PacketReassembly.perSession(chunks, idleTimeout, fresh(config))(
+      step(_, _, _, maxPending))
+  }
 }

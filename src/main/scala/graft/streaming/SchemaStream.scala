@@ -26,7 +26,10 @@ final case class SchemaEvent(session: Long, ordinal: Long, db: String,
   * Scale posture: state per session = the table registry (id → name) +
   * one column list per table — catalog-scale, bounded by schema size,
   * never by stream length. Keyed by session like [[ReplicaStream]] and
-  * [[TxnStream]], so the whole chain shares one shuffle key.
+  * [[TxnStream]], but a separate stateful operator: chained after
+  * [[ReplicaStream.fromChunks]] it costs its own exchange on session id
+  * and its own state-store commit every trigger (streaming micro-batches
+  * run without adaptive execution, so nothing merges the two exchanges).
   */
 object SchemaStream {
 

@@ -27,7 +27,8 @@ final case class TxnEvent(session: Long, ordinal: Long, txnSeq: Long,
   * stream length, and EXPLICITLY bounded by `maxBuffered` (an oversized
   * span fails loudly with its session and ordinal named instead of
   * growing a state entry until the executor OOMs). Keyed by session like
-  * [[ReplicaStream]], so chaining keeps the same shuffle key end-to-end.
+  * [[ReplicaStream]], but a separate stateful operator with its own
+  * exchange and state store per trigger.
   */
 object TxnStream {
 
@@ -72,7 +73,7 @@ object TxnStream {
     }
   }
 
-  /** Whole binlog events (as from [[ReplicaStream.events]]) → events
+  /** Whole binlog events (as from [[ReplicaStream.fromChunks]]) → events
     * stamped with their commit, committed transactions and preludes only.
     *
     * @param maxBuffered refuse-loudly bound on one OPEN transaction's

@@ -301,4 +301,130 @@ class CdcEndToEndSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
     assert(snap == Seq((1L, "alice", "99.90"), (2L, "bob", "5.00")))
   }
+
+  // ---- the fused wire operator: reassembly and session fold as one ----
+
+  private val wireConfig = MysqlReplicaSession.Config("repl", "secret", serverId = 100L)
+
+  /** One session's server side: the bring-up, then `events` as 0x00-marked
+    * dump packets; each packet framed on its own.
+    */
+  private def sessionFrames(events: Seq[Array[Byte]]): Seq[Array[Byte]] = {
+    val seed = (1 to 20).map(_.toByte).toArray
+    val ok = hx("00" + "00" + "00" + "0200" + "0000")
+    val eof = hx("fe" + "0000" + "0200")
+    val payloads = Seq(handshakeV10(seed),
+      (0xfe.toByte +: ("mysql_native_password".getBytes :+ 0.toByte)) ++ seed :+ 0.toByte,
+      ok, ok, Array(2.toByte), hx("deadbeef"), hx("deadbeef"), eof,
+      lenencStr("bin.000001") ++ lenencStr("4"), eof) ++ events.map(0.toByte +: _)
+    payloads.zipWithIndex.map { case (p, i) => MysqlProtocolCodec.writePacket(i % 256, p) }
+  }
+
+  /** `bytes` cut into chunks of 1..`maxChunk` bytes. */
+  private def cut(session: Long, bytes: Array[Byte], rnd: scala.util.Random,
+      maxChunk: Int): Seq[ByteChunk] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[ByteChunk]
+    var pos = 0
+    while (pos < bytes.length) {
+      val n = math.min(1 + rnd.nextInt(maxChunk), bytes.length - pos)
+      out += ByteChunk(session, out.size.toLong,
+        java.util.Arrays.copyOfRange(bytes, pos, pos + n))
+      pos += n
+    }
+    out.toSeq
+  }
+
+  /** Reassembly then fold, sequentially: the whole stream split into
+    * packets by the batch splitter and folded in order.
+    */
+  private def sequentialEvents(session: Long, bytes: Array[Byte])
+      : Seq[(Long, Long, Seq[Byte])] = {
+    val packets = MysqlProtocolCodec.splitPackets(bytes)
+    var st = MysqlReplicaSession.initial(wireConfig)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Seq[Byte])]
+    (0 until packets.numElements()).foreach { i =>
+      val step = MysqlReplicaSession.onPayload(st, packets.getStruct(i, 2).getBinary(1))
+      step.event.foreach(e => out += ((session, out.size.toLong, e.toSeq)))
+      st = step.state
+    }
+    out.toSeq
+  }
+
+  test("fused wire operator: one stateful operator, events equal reassembly " +
+      "then fold under cross-trigger disorder and a mid-packet restart") {
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+
+    val rnd = new scala.util.Random(42)
+    // events up to 3000 bytes against chunks up to 700: packets span chunks
+    val frames = (0L until 3L).map(s => s -> sessionFrames(
+      Seq.fill(25)(Array.fill(1 + rnd.nextInt(3000))(rnd.nextInt(256).toByte))))
+    val streams = frames.map { case (s, fs) => s -> fs.toArray.flatten }
+    val chunks = streams.flatMap { case (s, bs) => cut(s, bs, rnd, 700) }
+    // arrival order shuffled across all sessions and four triggers: chunk
+    // idx order is violated within and across triggers
+    val triggers = rnd.shuffle(chunks).grouped(chunks.size / 4 + 1).toSeq
+    val (before, after) = triggers.splitAt(2)
+    // the restart cut lands inside a packet of some session: its
+    // contiguous delivered prefix ends off every packet boundary
+    val delivered = before.flatten.groupBy(_.session)
+    val midPacket = frames.exists { case (s, fs) =>
+      val got = delivered.getOrElse(s, Nil).map(c => c.idx -> c.bytes.length).toMap
+      val prefix = Iterator.from(0).map(_.toLong).takeWhile(got.contains).map(got).sum
+      !fs.scanLeft(0)(_ + _.length).contains(prefix)
+    }
+    assert(midPacket, "fixture: the restart must cut a packet")
+
+    val dir = Files.createTempDirectory("graft-wire-fused").toString
+    val in = MemoryStream[ByteChunk]
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Seq[Byte])]()
+    def start() = ReplicaStream.fromChunks(in.toDS(), wireConfig)
+      .writeStream.outputMode("append").option("checkpointLocation", s"$dir/ckpt")
+      .foreachBatch { (b: Dataset[graft.streaming.SessionEvent], _: Long) =>
+        b.collect().foreach(e => got.add((e.session, e.ordinal, e.event.toSeq)))
+      }.start()
+    val q1 = start()
+    try {
+      before.foreach { t => in.addData(t); q1.processAllAvailable() }
+      val plan = q1.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      assert(plan.collect { case s: StatefulOperator => s }.size == 1, plan.toString)
+      assert(q1.lastProgress.stateOperators.length == 1)
+    } finally q1.stop()
+    val q2 = start() // recovery: offsets + the one state store
+    try after.foreach { t => in.addData(t); q2.processAllAvailable() }
+    finally q2.stop()
+
+    val want = streams.flatMap { case (s, bs) => sequentialEvents(s, bs) }
+    assert(want.size == 75)
+    val mine = got.toArray(Array.empty[(Long, Long, Seq[Byte])]).toSeq
+    assert(mine.sortBy(e => (e._1, e._2)) == want.sortBy(e => (e._1, e._2)))
+  }
+
+  test("fused wire step: a fresh state after idle removal parses a resumed " +
+      "session's bring-up instead of dropping it") {
+    import graft.streaming.PacketReassembly
+    val rnd = new scala.util.Random(3)
+    def chunksOf(events: String*) =
+      cut(7L, sessionFrames(events.map(_.getBytes("UTF-8"))).toArray.flatten, rnd, 50)
+    def text(evs: Seq[graft.streaming.SessionEvent]) =
+      evs.map(e => e.ordinal -> new String(e.event, "UTF-8"))
+
+    val (st1, ev1) = ReplicaStream.step(7L, chunksOf("a", "b", "c").iterator,
+      ReplicaStream.fresh(wireConfig), maxPending = 4096)
+    assert(text(ev1) == Seq(0L -> "a", 1L -> "b", 2L -> "c"))
+    // the session times out and reconnects: chunk idx and packet ordinals
+    // restart at 0, and its state was removed as a whole
+    val resumed = chunksOf("d", "e")
+    val (_, ev2) = ReplicaStream.step(7L, resumed.iterator,
+      ReplicaStream.fresh(wireConfig), maxPending = 4096)
+    assert(text(ev2) == Seq(0L -> "d", 1L -> "e"))
+    // a surviving fold half would take the bring-up as dump packets
+    val (_, stale) = ReplicaStream.step(7L, resumed.iterator,
+      (PacketReassembly.Fresh, st1._2), maxPending = 4096)
+    assert(stale.isEmpty)
+  }
 }

@@ -219,6 +219,31 @@ class SemDedupSpec extends SparkSpec {
       .exists(e => String.valueOf(e.getMessage).contains("dimensions differ")))
   }
 
+  test("a null embedding stays out of the trained models' sample: nlist = 4 " +
+      "and the auto-sized model") {
+    import org.apache.spark.sql.functions.lit
+    val s = spark
+    import s.implicits._
+    val t = 0.9
+    val rnd = new scala.util.Random(11)
+    def unit(v: Array[Double]): Seq[Double] = {
+      val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n).toSeq
+    }
+    val random = (0L until 20L).map(i => i -> unit(Array.fill(8)(rnd.nextGaussian())))
+    // a scaled copy and an exact copy: cosine 1, so they share any cell
+    val dups = Seq(100L -> random(3)._2.map(_ * 2.0), 101L -> random(7)._2)
+    val vecs = (random ++ dups).toDF("vec_id", "embedding")
+    val withNull = vecs.union(Seq(200L).toDF("vec_id")
+      .withColumn("embedding", lit(null).cast("array<double>")))
+    val want = pairSet(Similarity.semDedupPairs(vecs, t, nlist = 1))
+    assert(want.contains((3L, 100L)) && want.contains((7L, 101L)), s"fixture: $want")
+    // every cell probed: exact
+    assert(pairSet(Similarity.semDedupPairs(withNull, t, nlist = 4, probes = 4)) == want)
+    val auto = pairSet(Similarity.semDedupPairs(withNull, t))
+    assert(auto.subsetOf(want) && auto.contains((3L, 100L)) && auto.contains((7L, 101L)),
+      s"auto-sized: $auto")
+  }
+
   test("drop list is the higher id of each pair, deduplicated") {
     val pairs = Similarity.semDedupPairs(emb, threshold, nlist = 16)
     val drops = Similarity.semDedupDrops(emb, threshold, nlist = 16)

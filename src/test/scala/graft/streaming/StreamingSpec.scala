@@ -626,6 +626,83 @@ class StreamingSpec extends SparkSpec {
       "narrow post-deletion batch must not drop the recorded column")
     assert(after.select("pk", "price").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       == Seq((40L, 4.0)))
+
+    // A merge touching a bucket last written BEFORE the widening reads that
+    // bucket under the recorded (wider) schema: same rows, null currency.
+    val evo2 = s"$dir/snapshot2"
+    CdcSnapshot.mergeBatch((1L to 20L).map(pk => Chg(pk, pk, "INSERT", pk * 1.0)).toDF(),
+      Seq("pk"), "cid", evo2, numBuckets = 4)
+    CdcSnapshot.mergeBatch(Seq((21L, 1L, "UPDATE", 10.0, "eur")).toDF(
+      "cid", "pk", "type", "price", "currency"), Seq("pk"), "cid", evo2)
+    val m = CdcSnapshot.latestManifest(spark, evo2).get
+    val narrowBucket = m.buckets.collectFirst {
+      case (_, rel) if rel.startsWith("data-v1/") => rel
+    }.getOrElse(fail(s"every bucket was rewritten: ${m.buckets}"))
+    val oldPk = spark.read.parquet(s"$evo2/$narrowBucket").select("pk")
+      .orderBy("pk").head.getLong(0)
+    CdcSnapshot.mergeBatch(Seq((22L, oldPk, "UPDATE", 99.0)).toDF(
+      "cid", "pk", "type", "price"), Seq("pk"), "cid", evo2)
+    val rows = CdcSnapshot.read(spark, evo2).select("pk", "price", "currency")
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1),
+        if (r.isNullAt(2)) null else r.getString(2))).toMap
+    assert(rows == (1L to 20L).map(pk => pk ->
+      (if (pk == 1L) (10.0, "eur") else if (pk == oldPk) (99.0, null)
+       else (pk * 1.0, null))).toMap)
+  }
+
+  test("snapshot merge in a trigger runs two jobs: touched-bucket collect and write") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-snap-jobs").toString
+    val in = MemoryStream[Chg]
+    // As in a trigger over stateful operators (the CDC wire chain), where
+    // adaptive execution does not run: a shuffle is a stage of its job,
+    // not a job of its own. The query clones the session conf at start.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val q = try CdcSnapshot.start(in.toDF(), Seq("pk"), "cid",
+      s"$dir/snapshot", s"$dir/ckpt", numBuckets = 4)
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    val jobs = try {
+      in.addData((1L to 40L).map(pk => Chg(pk, pk, "INSERT", pk * 1.0)))
+      q.processAllAvailable()
+      val queryId = q.id.toString
+      org.apache.spark.JobCounter.count(spark.sparkContext, e =>
+        Option(e.properties).exists(_.getProperty("sql.streaming.queryId") == queryId)) {
+        in.addData(Chg(41L, 3L, "UPDATE", 33.0), Chg(42L, 7L, "DELETE", 0.0),
+          Chg(43L, 50L, "INSERT", 5.0))
+        q.processAllAvailable()
+      }._2
+    } finally q.stop()
+    // no distinct shuffle's second stage, no schema-inference job
+    assert(jobs == 2, s"$jobs jobs")
+    val snap = CdcSnapshot.read(spark, s"$dir/snapshot").select("pk", "price")
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(snap == ((1L to 40L).filterNot(_ == 7L).map(pk =>
+      pk -> (if (pk == 3L) 33.0 else pk * 1.0)) :+ (50L -> 5.0)).toMap)
+  }
+
+  test("snapshot type conflict across touched buckets still fails the merge") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-snap-conflict").toString
+    val snapDir = s"$dir/snapshot"
+    def bucketOf(pk: Long): Int = Seq(pk).toDF("pk")
+      .select(pmod(xxhash64(col("pk")), lit(4L)).cast("int")).head.getInt(0)
+    // an int price in one bucket; a later batch carries bigint prices
+    // into a bucket with no earlier file, so the two files disagree
+    val a = 1L
+    val b = (2L to 100L).find(pk => bucketOf(pk) != bucketOf(a)).get
+    CdcSnapshot.mergeBatch(Seq((1L, a, "INSERT", 1)).toDF("cid", "pk", "type", "price"),
+      Seq("pk"), "cid", snapDir, numBuckets = 4)
+    CdcSnapshot.mergeBatch(Seq((2L, b, "INSERT", 2L)).toDF("cid", "pk", "type", "price"),
+      Seq("pk"), "cid", snapDir)
+    val both = Seq((3L, a, "UPDATE", 3L), (4L, b, "UPDATE", 4L))
+      .toDF("cid", "pk", "type", "price")
+    // the merge fails naming the column (so does mergeSchema, for a manifest
+    // with no recorded schema)
+    val err = intercept[Exception](CdcSnapshot.mergeBatch(both, Seq("pk"), "cid", snapDir))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("price")), err.toString)
   }
 
   test("bucket evolution: rebucket doubles the count, content identical, retention keeps versions") {
