@@ -1,10 +1,14 @@
 package graft
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Benchmark main: times every declared query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line for the driver.
+import LocalSpark.jsonStr
+
+/** Benchmark main: `runMain graft.Bench [q1,q2,...]` times every declared
+  * query (or only the comma-separated names given) on SPARK_GRAFT_SF_DIR
+  * and prints ONE JSON summary line, last.
   *
   * Timing = full materialization through the `noop` datasource (a bare
   * `count()` would let Catalyst prune projected expressions and undercount
@@ -15,23 +19,71 @@ object Bench {
   private def run(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** One query's outcome: the fastest of its timed passes (-1 when it
+    * failed), the pass spread ((max-min)/min), and the Spark jobs and
+    * stages its first timed pass started.
+    */
+  final case class Result(name: String, secs: Double, spread: Double,
+      jobs: Int, stages: Int, error: Option[String])
+
+  /** The declared queries named in `filter` (comma-separated, in the order
+    * given), or the whole corpus without one. An unknown name fails,
+    * listing the known ones.
+    */
+  def select(filter: Option[String]): Seq[Q] = filter match {
+    case None => SparkEntry.corpus
+    case Some(f) =>
+      val byName = SparkEntry.corpus.map(q => q.name -> q).toMap
+      val names = f.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq
+      val unknown = names.filterNot(byName.contains)
+      if (names.isEmpty || unknown.nonEmpty) throw new IllegalArgumentException(
+        s"unknown query name(s) ${unknown.mkString(", ")} in '$f'; known: " +
+          SparkEntry.corpus.map(_.name).mkString(", "))
+      names.map(byName)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver json-parses the LAST ~2000 chars of the
-    // combined output, and stray WARN lines (stderr, interleaved late by
-    // buffering) were landing after the summary line and breaking the
-    // parse (r9 item 7: BENCH_r09.json "parsed": null).
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = select(args.headOption)
+    val spark = LocalSpark.session()
 
     try run(SparkEntry.entry(spark)) catch { case _: Throwable => () } // warm-up, untimed
 
+    val results = runQueries(spark, sfDir, queries)
+    // median of 3 calls, each the fastest of its 3 timed passes: the
+    // end-of-bench JVM is warm but fragmented and a single call swung
+    // 255-383k rows/s across captures; the median reports a typical call,
+    // where the max of the three reported the best of nine passes
+    System.err.println("[bench] cdc_meter")
+    System.err.flush()
+    val cdcRate = try (1 to 3).map(_ => cdcThroughput(spark, sfDir)).sorted.apply(1)
+      catch { case _: Throwable => -1.0 }
+    val stamp = LocalSpark.stamp(sfDir)
+    // A tail reader keeps only the LAST ~2000 chars of stdout and
+    // json-parses them; the full line is several KB, so printing it last
+    // left a truncated, unparseable tail.
+    // Persist the complete line to BENCH_FULL.json, and make stdout's one
+    // "metric" line a COMPACT self-parsing summary: headline numbers, the
+    // slowest queries, and a pointer to the full map.
+    try {
+      val full = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
+      java.nio.file.Files.write(java.nio.file.Paths.get(full),
+        (fullLine(results, cdcRate, stamp, sfDir) + "\n").getBytes("UTF-8"))
+    } catch { case _: Throwable => () } // best-effort; never fail the bench
+    // Stop Spark BEFORE printing: the summary line must be the final
+    // output this process emits, with no shutdown-hook log lines after it
+    // to push it out of a tail reader's window.
+    spark.stop()
+    println(summaryLine(results, cdcRate, stamp, sfDir))
+    System.out.flush()
+    // A broken run must not look green to rc-keyed automation.
+    if (results.exists(_.error.isDefined)) sys.exit(1)
+  }
+
+  /** Times each query min-of-3 through the noop sink, counting the jobs
+    * and stages of its first timed pass once the listener bus has drained.
+    */
+  def runQueries(spark: SparkSession, sfDir: String, queries: Seq[Q]): Seq[Result] = {
     // The driver's sf fixtures are ONE parquet file per table, so the
     // envelope family's whole build+parse stage would run in a single task
     // and the bench would time the fixture, not the engine (r8 verdict
@@ -40,16 +92,14 @@ object Bench {
     // these queries at it — correctness runs (Verify) keep the pristine dir.
     val envelopeFamily = Set("q34_cdc_envelope_roundtrip", "q104_cdc_dlq_split",
       "q118_cdc_merge_fastpath")
-    val splitDir: String = try {
-      val d = java.nio.file.Files.createTempDirectory("graft-bench-split")
-      Tables(spark, sfDir, "orders").repartition(cpus.toInt)
-        .write.mode("overwrite").parquet(d.resolve("orders.parquet").toString)
-      d.toString
-    } catch { case _: Throwable => sfDir }
+    val splitDir: String = if (!queries.exists(q => envelopeFamily(q.name))) sfDir
+      else try {
+        val d = java.nio.file.Files.createTempDirectory("graft-bench-split")
+        Tables(spark, sfDir, "orders").repartition(spark.sparkContext.defaultParallelism)
+          .write.mode("overwrite").parquet(d.resolve("orders.parquet").toString)
+        d.toString
+      } catch { case _: Throwable => sfDir }
 
-    // Timed passes per query, keep the min: absorbs first-pass codegen
-    // and host-level CPU burst noise. Three passes for every query (see
-    // the spread note at the call site).
     def timed(q: Q): Double = {
       val t0 = System.nanoTime()
       run(q.fn(spark, if (envelopeFamily(q.name)) splitDir else sfDir))
@@ -59,16 +109,17 @@ object Bench {
     // `errors` with its message, and bumps `failures` — the headline total
     // alone can never silently improve because a query started crashing.
     val benchT0 = System.nanoTime()
-    val results: Seq[(String, Double, Double, Option[String])] = SparkEntry.corpus.zipWithIndex.map { case (q, qi) =>
+    try queries.zipWithIndex.map { case (q, qi) =>
       // Timestamped progress line BEFORE each query's passes (r15: the
       // driver's 32-core bench died at a 60-minute timeout having printed
       // nothing, so the stall was undiagnosable from the artifact). stderr,
       // not stdout: the driver json-parses stdout's tail. These lines
       // cannot pollute the summary because the summary prints to stdout
       // after spark.stop().
-      System.err.println(f"[bench] ${(System.nanoTime() - benchT0) / 1e9}%.1fs q${qi + 1}/${SparkEntry.corpus.size} ${q.name}")
+      System.err.println(f"[bench] ${(System.nanoTime() - benchT0) / 1e9}%.1fs q${qi + 1}/${queries.size} ${q.name}")
       System.err.flush()
-      spark.sparkContext.setJobDescription(s"bench: ${q.name}")
+      val label = s"bench: ${q.name}"
+      spark.sparkContext.setJobDescription(label)
       // drop cached plans between QUERIES: the persisted hash/IVF
       // projections are keyed by canonicalized plan, so without this a
       // query sharing a subtree with an earlier one reads the earlier
@@ -81,83 +132,64 @@ object Bench {
       // round with no code cause (r13 verdict item 3: q132/q178/q133
       // flagged). The third pass costs ~1/2 of the bench again but makes
       // the minimum a steady-state number everywhere, and the recorded
-      // spread ((max-min)/min across the three passes) lets a cross-round
-      // diff machine-classify any residual swing as noise vs regression.
+      // spread lets a diff between runs machine-classify any residual
+      // swing as noise vs regression.
       try {
-        val passes = Seq(timed(q), timed(q), timed(q))
+        val (first, jobs, stages) = JobCounter.countWithStages(spark.sparkContext,
+          e => Option(e.properties).exists(_.getProperty("spark.job.description") == label))(
+          timed(q))
+        val passes = Seq(first, timed(q), timed(q))
         val best = passes.min
-        (q.name, best, (passes.max - best) / math.max(best, 1e-9), None)
+        Result(q.name, best, (passes.max - best) / math.max(best, 1e-9), jobs, stages, None)
       }
       catch { case e: Throwable =>
-        (q.name, -1.0, 0.0, Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"))
+        Result(q.name, -1.0, 0.0, -1, -1,
+          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"))
       }
+      finally spark.sparkContext.setJobDescription(null)
     }
-    def jstr(s: String): String = "\"" + s.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
-    def r3j(v: Double): Double = math.rint(v * 1000) / 1000
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val spreads = results.map { case (k, _, s, _) => "\"" + k + "\":" + r3j(s) }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, Some(m)) => "\"" + k + "\":" + jstr(m) }
-      .mkString("{", ",", "}")
-    val failures = results.count(_._4.isDefined)
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // median of 3 calls, each the fastest of its 3 timed passes: the
-    // end-of-bench JVM is warm but fragmented and a single call swung
-    // 255-383k across r10 captures; the median reports a typical call,
-    // where the max of the three reported the best of nine passes
-    System.err.println(f"[bench] ${(System.nanoTime() - benchT0) / 1e9}%.1fs cdc_meter")
-    System.err.flush()
-    val cdcRate = try (1 to 3).map(_ => cdcThroughput(spark, sfDir)).sorted.apply(1)
-      catch { case _: Throwable => -1.0 }
-    // Stamp the git SHA so every bench artifact names the code it measured
-    // (stale-artifact guard for cross-round comparisons).
-    val sha = try {
-      val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-        .directory(new java.io.File(".")).start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
-      if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
-    } catch { case _: Throwable => "unknown" }
-    // Name the fixture generation too: a bench and a correctness artifact
-    // only form a consistent round snapshot when they saw the same testdata.
-    val fixtureMtime = try {
-      java.nio.file.Files
-        .getLastModifiedTime(java.nio.file.Paths.get(sfDir, "lineitem.parquet"))
-        .toInstant.toString
-    } catch { case _: Throwable => "unknown" }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""spread":$spreads,"failures":$failures,"failed":${failures > 0},"errors":$errs,""" +
-      s""""cdc_rows_per_sec":$cdcRate,"cdc_meter":"median3(min3)",""" +
-      s""""q_meter":"min3+spread","commit":"$sha",""" +
-      s""""fixture_mtime":"$fixtureMtime","sf":"$sfDir"}"""
-    // The driver keeps only the LAST ~2000 chars of stdout and json-parses
-    // them; the full 160-query line is ~6 KB, so printing it last left the
-    // per-round artifact with a truncated, unparseable tail (r8 item 6).
-    // Persist the complete line to BENCH_FULL.json, and make stdout's one
-    // "metric" line a COMPACT self-parsing summary: headline numbers, the
-    // slowest queries, and a pointer to the full map.
-    try {
-      val full = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
-      java.nio.file.Files.write(java.nio.file.Paths.get(full),
-        (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // best-effort; never fail the bench
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val slow = results.filter(_._2 >= 0).sortBy(-_._2).take(15)
-      .map { case (k, v, _, _) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val errsShort = results.collect { case (k, _, _, Some(m)) => "\"" + k + "\":" + jstr(m) }
-      .take(3).mkString("{", ",", "}")
-    // Stop Spark BEFORE printing: the summary line must be the final
-    // output this process emits, with no shutdown-hook log lines after it
-    // to push it out of the driver's tail window.
-    spark.stop()
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""n_queries":${results.size},"queries":$slow,""" +
+    finally if (splitDir != sfDir) {
+      val p = new org.apache.hadoop.fs.Path(splitDir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  private def r3(v: Double): Double = math.rint(v * 1000) / 1000
+  private def obj(kvs: Seq[(String, Any)]): String =
+    kvs.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
+  private def total(results: Seq[Result]): Double = results.map(_.secs).filter(_ >= 0).sum
+  private def errors(results: Seq[Result]): Seq[(String, String)] =
+    results.collect { case Result(k, _, _, _, _, Some(m)) => k -> jsonStr(m) }
+  private def tail(cdcRate: Double, stamp: LocalSpark.Stamp, sfDir: String): String =
+    s""""cdc_rows_per_sec":$cdcRate,"commit":${jsonStr(stamp.commit)},""" +
+      s""""fixture_mtime":${jsonStr(stamp.fixtureMtime)},"sf":${jsonStr(sfDir)}}"""
+
+  /** BENCH_FULL.json's line: every query's time, spread, jobs and stages. */
+  def fullLine(results: Seq[Result], cdcRate: Double, stamp: LocalSpark.Stamp,
+      sfDir: String): String = {
+    val failures = results.count(_.error.isDefined)
+    s"""{"metric":"total","value":${total(results)},"unit":"sec",""" +
+      s""""queries":${obj(results.map(r => r.name -> r.secs))},""" +
+      s""""spread":${obj(results.map(r => r.name -> r3(r.spread)))},""" +
+      s""""jobs":${obj(results.map(r => r.name -> r.jobs))},""" +
+      s""""stages":${obj(results.map(r => r.name -> r.stages))},""" +
+      s""""failures":$failures,"failed":${failures > 0},"errors":${obj(errors(results))},""" +
+      s""""cdc_meter":"median3(min3)","q_meter":"min3+spread",""" +
+      tail(cdcRate, stamp, sfDir)
+  }
+
+  /** stdout's compact summary: headline numbers, the 15 slowest queries,
+    * the first three errors, and a pointer to the full map.
+    */
+  def summaryLine(results: Seq[Result], cdcRate: Double, stamp: LocalSpark.Stamp,
+      sfDir: String): String = {
+    val failures = results.count(_.error.isDefined)
+    val slow = results.filter(_.secs >= 0).sortBy(-_.secs).take(15).map(r => r.name -> r3(r.secs))
+    s"""{"metric":"total","value":${r3(total(results))},"unit":"sec",""" +
+      s""""n_queries":${results.size},"queries":${obj(slow)},""" +
       s""""queries_note":"15 slowest of ${results.size}; full map in BENCH_FULL.json",""" +
-      s""""failures":$failures,"failed":${failures > 0},"errors":$errsShort,""" +
-      s""""cdc_rows_per_sec":${r3(cdcRate)},"commit":"$sha",""" +
-      s""""fixture_mtime":"$fixtureMtime","sf":"$sfDir"}""")
-    System.out.flush()
-    // A broken run must not look green to rc-keyed automation.
-    if (failures > 0) sys.exit(1)
+      s""""failures":$failures,"failed":${failures > 0},"errors":${obj(errors(results).take(3))},""" +
+      tail(r3(cdcRate), stamp, sfDir)
   }
 
   /** End-to-end CDC throughput (the reference's headline number,

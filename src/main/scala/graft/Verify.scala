@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,14 +9,7 @@ object Verify {
     // on a subset (the driver always runs the full map).
     val only = args.lift(2).map(_.split(",").toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -26,36 +18,17 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import LocalSpark.jsonStr
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Consistency stamp: which code and which fixture generation this
     // dump came from, so a correctness artifact can be checked against a
     // bench artifact at the same (commit, fixture) pair.
-    val sha = try {
-      val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-        .directory(new java.io.File(".")).start()
-      val o = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
-      if (p.waitFor() == 0 && o.nonEmpty) o else "unknown"
-    } catch { case _: Throwable => "unknown" }
-    val fixtureMtime = try Files.getLastModifiedTime(
-      Paths.get(sfDir, "lineitem.parquet")).toInstant.toString
-    catch { case _: Throwable => "unknown" }
+    val stamp = LocalSpark.stamp(sfDir)
     Files.writeString(Paths.get(s"$outDir/meta.json"),
-      s"""{"commit": ${q(sha)}, "fixture_mtime": ${q(fixtureMtime)}, """ +
-        s""""sf_dir": ${q(sfDir)}}""")
+      s"""{"commit": ${jsonStr(stamp.commit)}, "fixture_mtime": ${jsonStr(stamp.fixtureMtime)}, """ +
+        s""""sf_dir": ${jsonStr(sfDir)}}""")
     spark.stop()
   }
 }

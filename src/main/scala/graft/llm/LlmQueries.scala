@@ -1174,8 +1174,8 @@ object LlmQueries {
     // |batch|·cellSize cosines and cells keep following the corpus.
     // q204's nlist=1 exact mode IS this query's recall oracle at
     // small sf (SemDedupSpec: recall >= 0.85 measured, precision 1 by
-    // construction, no same-side pairs); the 10×/100× ScaleBench rows run
-    // HERE — the exact mode is by-construction quadratic (its 100× point
+    // construction, no same-side pairs); PERFORMANCE.md's 10×/100× scale
+    // rows run HERE — the exact mode is by-construction quadratic (its 100× point
     // measured 1126 s, the declared q41/q52-style oracle cost).
     Q("q208_semdedup_incremental_cells", { (s, dir) =>
         val e = t(s, dir, "embeddings")

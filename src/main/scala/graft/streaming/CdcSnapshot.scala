@@ -6,6 +6,7 @@ import graft.cdc.{CdcMerge, Envelope, Instance, Routing}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.StreamingQuery
 import java.nio.charset.StandardCharsets
@@ -198,6 +199,8 @@ object CdcSnapshot {
     val prev = latestManifest(spark, snapshotDir)
     val n = prev.map(_.numBuckets).getOrElse(numBuckets)
     val version = prev.map(_.version + 1).getOrElse(1L)
+    val recorded: Option[StructType] = prev.flatMap(schemaOf)
+    recorded.foreach(requireSameTypes(spark, _, batch))
 
     // Bucket ids present in the batch: the collect returns at most `n` ints
     // per partition (metadata, not data), and a per-partition set keeps it
@@ -222,7 +225,6 @@ object CdcSnapshot {
     // the manifest's RECORDED schema (not the batch's): a batch narrower
     // than the snapshot must not narrow the snapshot (e.g. the first merge
     // after a full deletion).
-    val recorded: Option[StructType] = prev.flatMap(schemaOf)
     val prevRows = if (touchedPrevDirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -267,6 +269,27 @@ object CdcSnapshot {
     publish(fs, root,
       SnapshotManifest(version, n, newBuckets, fullSchema.json, pkCols))
     gc(spark, snapshotDir, version, retention)
+  }
+
+  /** A batch must not change a recorded column's type: the merge's
+    * `unionByName` would write the coerced type into the touched buckets
+    * under a manifest that still records the old one, and every later merge
+    * or read touching an old and a new bucket would fail. Checked before
+    * any job runs: the union's schema is analysis only. A batch
+    * that coerces TO the recorded type (a narrower or all-null column)
+    * writes files that match the manifest, and passes.
+    */
+  private def requireSameTypes(spark: SparkSession, recorded: StructType,
+      batch: DataFrame): Unit = {
+    val unioned = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], recorded)
+      .unionByName(batch, allowMissingColumns = true).schema
+    recorded.fields.zip(unioned.fields).foreach { case (r, u) =>
+      if (!ColumnBridge.equalsIgnoreNullability(r.dataType, u.dataType))
+        throw new IllegalArgumentException(
+          s"CDC batch column `${r.name}` would change the snapshot's recorded type " +
+            s"${r.dataType.sql} to ${u.dataType.sql}; snapshot columns do not change type")
+    }
   }
 
   // Atomic publish: create-and-close of a brand-new file; readers list

@@ -396,9 +396,9 @@ object CurationChain {
         .partitionBy("content_hash")
         .orderBy(hashOrder: _*)
       // stamp each stage's eagerly-running jobs (bucket collects, counts,
-      // checkpoints, staged writes) with a stage label, so the Spark UI
-      // and ChainTriggerProfile attribute the trigger's ~30 jobs to stages
-      // instead of anonymous callsites. A pinned frame computes under the
+      // checkpoints, staged writes) with a stage label, so the Spark UI,
+      // perfbench's per-label chain metrics and tools/joblog.py attribute
+      // the trigger's ~30 jobs to stages instead of anonymous callsites. A pinned frame computes under the
       // label of the FIRST action that reads it, so per-label job counts
       // move when a pin moves work between stages.
       def labeled[T](stage: String)(f: => T): T = {

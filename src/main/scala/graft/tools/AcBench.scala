@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{LocalSpark, Tables}
 import graft.llm.{Blocklist, WordPhraseHits}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark behind the q173 Aho–Corasick claim:
@@ -16,12 +15,7 @@ object AcBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nPhrases = args.lift(1).map(_.toInt).getOrElse(400)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val vocab = Seq("spark", "batch", "part", "line", "column", "order", "small",
       "sort", "fast", "value", "scan", "hash", "slow", "group", "vector",
       "query", "agg", "table", "the", "key")

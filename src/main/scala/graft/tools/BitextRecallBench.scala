@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{LocalSpark, Tables}
 import graft.llm.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** q230 recall at the TAPERED probe fraction (r11 verdict item 6):
@@ -22,14 +21,7 @@ object BitextRecallBench {
     require(args.nonEmpty, "usage: BitextRecallBench <sfDir> [probeFloor]")
     val sfDir = args(0)
     val probeFloor = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     val e = Tables(spark, sfDir, "embeddings")
     val a = e.filter(col("vec_id") % 2 === 0)

@@ -1,8 +1,7 @@
 package graft.tools
 
+import graft.{LocalSpark, Tables}
 import graft.llm.Bpe
-import graft.Tables
-import org.apache.spark.sql.SparkSession
 
 /** BPE training cost curve: `runMain graft.tools.BpeBench <sfDir> <nMerges> <batch[,batch...]>`
   * trains the merge table on `documents` at each batch size and prints one
@@ -16,14 +15,7 @@ object BpeBench {
     val sfDir = args(0)
     val nMerges = args(1).toInt
     val batches = args(2).split(",").map(_.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val docs = Tables(spark, sfDir, "documents")
     docs.count() // warm the parquet footer + JVM
     batches.foreach { b =>

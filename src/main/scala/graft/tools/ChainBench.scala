@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.LocalSpark
 import graft.streaming.CurationChain
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Throughput of the COMPOSED curation chain (gate → exact → MinHash →
@@ -64,13 +65,7 @@ object ChainBench {
     val nTriggers = if (args.length > 1) args(1).toInt else 10
     val dupPct = if (args.length > 2) args(2).toInt else 20
     val media = args.length > 3 && args(3).toInt != 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     val root = java.nio.file.Files
       .createTempDirectory("graft_chainbench").toFile.getAbsolutePath + "/c"

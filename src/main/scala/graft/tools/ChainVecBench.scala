@@ -1,8 +1,9 @@
 package graft.tools
 
+import graft.LocalSpark
 import graft.llm.Similarity
 import graft.streaming.{CurationChain, StoreLayout}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Measures what the chain's PQ-coded semantic postings buy over the
@@ -76,13 +77,7 @@ object ChainVecBench {
     val sizes: Seq[Int] =
       if (args.length > 2) args.drop(2).map(_.toInt).toSeq
       else Seq(100000, 400000, 1600000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
     import spark.implicits._
 
     val results = sizes.map { n =>

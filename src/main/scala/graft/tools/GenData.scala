@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.LocalSpark
+import org.apache.spark.sql.SaveMode
 
 /** Deterministic fixture generator mirroring the driver's TESTDATA.md
   * tables (schemas, value ranges, dup/near-dup density) at arbitrary
@@ -123,14 +124,7 @@ object GenData {
     val out = args(0)
     val mult = args(1).toDouble
     def n(base: Long): Long = math.max(1L, math.round(base * mult))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     import spark.implicits._
 
     val nCust = n(15000); val nSupp = n(1000); val nPart = n(20000)

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.LocalSpark
+import org.apache.spark.sql.SaveMode
 
 /** Rich-vocabulary documents generator for tokenizer-scale measurements:
   * `runMain graft.tools.GenRichDocs <outDir> <nDocs> [vocabSize]` writes a
@@ -49,15 +50,10 @@ object GenRichDocs {
     val out = args(0)
     val nDocs = args(1).toLong
     val vocab = if (args.length > 2) args(2).toInt else 50000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     import spark.implicits._
     val zipf = new Zipf(vocab)
-    spark.range(nDocs).repartition(math.max(8, cpus.toInt))
+    spark.range(nDocs).repartition(math.max(8, spark.sparkContext.defaultParallelism))
       .map { id =>
         (id, docText(id, zipf), "en", s"src${(id % 8).toInt}", docText(id, zipf).length.toLong)
       }

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{LocalSpark, Tables}
 import graft.llm.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Build/probe split for the persisted ANN indexes (q220/q231/q232):
@@ -14,14 +13,7 @@ object IndexBench {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: IndexBench <sfDir>")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     val e = Tables(spark, sfDir, "embeddings")
     val q = e.filter(col("vec_id") < 10)

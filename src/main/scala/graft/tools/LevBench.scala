@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.functions._
 
 /** LevenshteinGuardRule effect: `runMain graft.tools.LevBench [nDocs]`
@@ -10,11 +10,7 @@ import org.apache.spark.sql.functions._
 object LevBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 3000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     import spark.implicits._
     graft.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(9)
@@ -24,7 +20,7 @@ object LevBench {
       val b = bases(i % bases.length)
       (i.toLong, if (i < bases.length) b
         else b.map(c => if (rnd.nextInt(30) == 0) ('a' + rnd.nextInt(6)).toChar else c))
-    }.toDF("id", "t").repartition(cpus.toInt).cache()
+    }.toDF("id", "t").repartition(spark.sparkContext.defaultParallelism).cache()
     docs.count()
     val a = docs.select(col("id").as("ia"), col("t").as("ta"))
     val b = docs.select(col("id").as("ib"), col("t").as("tb"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.JobCounter
 
 /** Plan-capture tool for the optimization rounds:
   * `runMain graft.tools.PlanDump <outDir> <tag> <query...>` writes each
@@ -15,18 +15,10 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     val tag = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = graft.Bench.select(
+      if (args.drop(2).sameElements(Array("all"))) None else Some(args.drop(2).mkString(",")))
+    val spark = graft.LocalSpark.session()
     java.nio.file.Files.createDirectories(outDir)
-    val names =
-      if (args.drop(2).sameElements(Array("all"))) graft.SparkEntry.corpus.map(_.name)
-      else args.drop(2).toSeq
     // GRAFT_PLANDUMP_EXEC=1: execute the query through the noop sink
     // FIRST, so the captured plan is the FINAL adaptive plan
     // (isFinalPlan=true) with runtime artifacts visible — AQE stage reuse
@@ -36,7 +28,7 @@ object PlanDump {
     val exec = sys.env.get("GRAFT_PLANDUMP_EXEC").contains("1")
     // the noop write runs under its own QueryExecution (the command's, not
     // the DataFrame's), so the executed adaptive plan is only reachable
-    // through the listener
+    // through the listener, which the listener bus calls asynchronously
     @volatile var lastQe: org.apache.spark.sql.execution.QueryExecution = null
     if (exec) spark.listenerManager.register(
       new org.apache.spark.sql.util.QueryExecutionListener {
@@ -46,15 +38,16 @@ object PlanDump {
         override def onFailure(funcName: String,
             qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
       })
-    names.foreach { name =>
-      val q = graft.SparkEntry.corpus.find(_.name == name).getOrElse(
-        sys.error(s"unknown query $name"))
+    queries.foreach { q =>
+      val name = q.name
       val df = q.fn(spark, sfDir)
       val txt = if (exec) {
+        // drain first: a late event from a job that ran while the
+        // DataFrame was built must not stand in for the save's
+        JobCounter.drain(spark.sparkContext)
         lastQe = null
         df.write.format("noop").mode("overwrite").save()
-        val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-        while (lastQe == null && System.nanoTime() < deadline) Thread.sleep(50)
+        JobCounter.drain(spark.sparkContext)
         require(lastQe != null, s"listener never delivered the executed plan for $name")
         lastQe.explainString(org.apache.spark.sql.execution.FormattedMode)
       } else df.queryExecution.explainString(

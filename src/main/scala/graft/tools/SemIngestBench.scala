@@ -1,8 +1,9 @@
 package graft.tools
 
+import graft.LocalSpark
 import graft.llm.Similarity
 import graft.streaming.SemDedupStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-trigger cost of the streaming semantic screen, retrain-per-trigger
@@ -29,13 +30,7 @@ object SemIngestBench {
     // maintenance — the 1M measurement preferred 316 cells over 1000
     val nlist = if (args.length > 4) args(4).toInt
       else SemDedupStream.nlistFor(corpusN)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     // hash-dense embeddings: independent ids are ~orthogonal (|cos| ~
     // 1/√dim), an exact copy is cos 1 — only planted dups trip the gate

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.LocalSpark
 import graft.streaming.{ImageDedupStream, StoreLayout, TextDedupStream}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,13 +49,7 @@ object StandaloneStoreBench {
     val sizes: Seq[Int] =
       if (args.length > 2) args.drop(2).map(_.toInt).toSeq
       else Seq(100000, 400000, 1600000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
     import spark.implicits._
     val P = StoreLayout.DefaultBuckets
 

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.LocalSpark
 import graft.streaming.{ImageDedupStream, StoreCompact}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what [[StoreCompact]] buys: the streaming screens re-read
@@ -19,13 +19,7 @@ object StoreBench {
     val nRows = if (args.length > 0) args(0).toInt else 200000
     val nFiles = if (args.length > 1) args(1).toInt else 2048
     val iters = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     val dir = java.nio.file.Files.createTempDirectory("graft_storebench")
       .toFile.getAbsolutePath + "/store"

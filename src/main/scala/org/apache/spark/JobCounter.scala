@@ -18,17 +18,30 @@ object JobCounter {
     */
   def count[T](sc: SparkContext,
       keep: SparkListenerJobStart => Boolean = _ => true)(f: => T): (T, Int) = {
+    val (out, jobs, _) = countWithStages(sc, keep)(f)
+    (out, jobs)
+  }
+
+  /** As [[count]], plus the stages those jobs declared (skipped ones
+    * included, as the job-start event lists them).
+    */
+  def countWithStages[T](sc: SparkContext,
+      keep: SparkListenerJobStart => Boolean = _ => true)(f: => T): (T, Int, Int) = {
     drain(sc) // earlier jobs' events must not reach the new listener
-    val n = new AtomicInteger()
+    val jobs = new AtomicInteger()
+    val stages = new AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (keep(e)) n.incrementAndGet()
+        if (keep(e)) {
+          jobs.incrementAndGet()
+          stages.addAndGet(e.stageInfos.size)
+        }
     }
     sc.addSparkListener(listener)
     try {
       val out = f
       drain(sc)
-      (out, n.get)
+      (out, jobs.get, stages.get)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -36,4 +36,11 @@ object ColumnBridge {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Spark's own type equality modulo nullability, nested fields included
+    * (`private[sql]` `DataType.equalsIgnoreNullability`).
+    */
+  def equalsIgnoreNullability(a: org.apache.spark.sql.types.DataType,
+      b: org.apache.spark.sql.types.DataType): Boolean =
+    org.apache.spark.sql.types.DataType.equalsIgnoreNullability(a, b)
 }

@@ -689,20 +689,45 @@ class StreamingSpec extends SparkSpec {
     def bucketOf(pk: Long): Int = Seq(pk).toDF("pk")
       .select(pmod(xxhash64(col("pk")), lit(4L)).cast("int")).head.getInt(0)
     // an int price in one bucket; a later batch carries bigint prices
-    // into a bucket with no earlier file, so the two files disagree
+    // into a bucket with no earlier file, so the two files would disagree
     val a = 1L
     val b = (2L to 100L).find(pk => bucketOf(pk) != bucketOf(a)).get
     CdcSnapshot.mergeBatch(Seq((1L, a, "INSERT", 1)).toDF("cid", "pk", "type", "price"),
       Seq("pk"), "cid", snapDir, numBuckets = 4)
-    CdcSnapshot.mergeBatch(Seq((2L, b, "INSERT", 2L)).toDF("cid", "pk", "type", "price"),
-      Seq("pk"), "cid", snapDir)
+    def namesPrice(err: Throwable): Boolean =
+      Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("price"))
+    // the widening merge fails naming the column, before it writes anything
+    val err = intercept[Exception](CdcSnapshot.mergeBatch(
+      Seq((2L, b, "INSERT", 2L)).toDF("cid", "pk", "type", "price"), Seq("pk"), "cid", snapDir))
+    assert(namesPrice(err), err.toString)
+    // so the snapshot still reads at version 1 with its int price
+    assert(CdcSnapshot.latestManifest(spark, snapDir).map(_.version).contains(1L))
+    val snap = CdcSnapshot.read(spark, snapDir)
+    assert(snap.schema("price").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(snap.select("pk", "price").collect().map(r => r.getLong(0) -> r.getInt(1)).toSeq
+      == Seq(a -> 1))
+    // and a batch touching the old bucket with bigint prices fails the same way
     val both = Seq((3L, a, "UPDATE", 3L), (4L, b, "UPDATE", 4L))
       .toDF("cid", "pk", "type", "price")
-    // the merge fails naming the column (so does mergeSchema, for a manifest
-    // with no recorded schema)
-    val err = intercept[Exception](CdcSnapshot.mergeBatch(both, Seq("pk"), "cid", snapDir))
-    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-      .exists(e => String.valueOf(e.getMessage).contains("price")), err.toString)
+    val err2 = intercept[Exception](CdcSnapshot.mergeBatch(both, Seq("pk"), "cid", snapDir))
+    assert(namesPrice(err2), err2.toString)
+  }
+
+  test("snapshot merge of a narrower column type keeps the recorded type") {
+    import spark.implicits._
+    val snapDir = Files.createTempDirectory("graft-snap-narrow").toString + "/snapshot"
+    CdcSnapshot.mergeBatch(Seq((1L, 1L, "INSERT", 10L)).toDF("cid", "pk", "type", "price"),
+      Seq("pk"), "cid", snapDir, numBuckets = 4)
+    // int and all-null prices coerce to the recorded bigint: nothing to refuse
+    CdcSnapshot.mergeBatch(Seq((2L, 2L, "INSERT", 20)).toDF("cid", "pk", "type", "price"),
+      Seq("pk"), "cid", snapDir)
+    CdcSnapshot.mergeBatch(Seq((3L, 1L, "UPDATE")).toDF("cid", "pk", "type")
+      .withColumn("price", lit(null)), Seq("pk"), "cid", snapDir)
+    val snap = CdcSnapshot.read(spark, snapDir)
+    assert(snap.schema("price").dataType == org.apache.spark.sql.types.LongType)
+    assert(snap.select("pk", "price").orderBy("pk").collect()
+      .map(r => r.getLong(0) -> Option(r.get(1))).toSeq == Seq(1L -> None, 2L -> Some(20L)))
   }
 
   test("bucket evolution: rebucket doubles the count, content identical, retention keeps versions") {
