@@ -205,14 +205,15 @@ object CurationChain {
     if (hasData(spark, dir)) Some(read(spark, dir).select(cols.map(col): _*))
     else None
 
-  /** Broadcast-hint guard for the tombstone join side (r15 verdict item 4
-    * / ADVICE): tombstones are bounded by churn since the last
+  /** Size guard for holding the tombstone set on the driver (r15 verdict
+    * item 4 / ADVICE): tombstones are bounded by churn since the last
     * COMPACTION, not by the trigger batch — `compactEvery` defaults to 0,
     * so under sustained CDC churn the store can grow without bound and a
-    * mandatory broadcast() would eventually fail on driver memory or
-    * Spark's 8 GB broadcast cap, where the unhinted join falls back to a
-    * shuffle. Cheap driver-side file-bytes check (a listing, no job):
-    * under the threshold the hint applies; past it the tombstone joins go
+    * driver-held copy (the trigger body's collected set, or a broadcast()
+    * hint) would eventually fail on driver memory or Spark's 8 GB
+    * broadcast cap, where the unhinted join falls back to a shuffle.
+    * Cheap driver-side file-bytes check (a listing, no job): under the
+    * threshold the set goes to the driver; past it the tombstone joins go
     * unhinted and the planner/AQE picks the strategy. The default 64 MB
     * of parquet-encoded (doc_id, asOf) longs is tens of millions of rows
     * — far above any healthy churn window, comfortably below the cap
@@ -318,14 +319,31 @@ object CurationChain {
     val vecCents: Option[Array[Array[Double]]] = vecQuant.map(_.cents)
 
     // every frame this body pins, released together in the outer finally
-    // — after the staging pool has drained, because the pooled writes
-    // (admit-checkpoint-sigs) still read the sig frames
+    // — after the staging pool has drained, because the pooled sig
+    // deltas still read the pinned sig survivors
     val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = { val p = df.persist(); pins += p; p }
+    // every broadcast variable this body ships (the staging pool ships
+    // too, hence the concurrent queue), destroyed with the pins
+    val shipped = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.broadcast.Broadcast[_]]()
+    def ship[T: scala.reflect.ClassTag](v: T) = {
+      val b = spark.sparkContext.broadcast(v); shipped.add(b); b
+    }
+    // stamp each stage's eagerly-running jobs (bucket collects, counts,
+    // checkpoints, staged writes) with a stage label, so the Spark UI,
+    // perfbench's per-label chain metrics and tools/joblog.py attribute
+    // the trigger's jobs to stages instead of anonymous callsites. A
+    // pinned frame computes under the label of the FIRST action that
+    // reads it, so per-label job counts move when a pin moves work
+    // between stages.
+    def labeled[T](stage: String)(f: => T): T = {
+      spark.sparkContext.setJobDescription(s"graft.chain $stage")
+      try f finally spark.sparkContext.setJobDescription(null)
+    }
     try {
       // effective tombstones: standing (un-applied) ∪ this batch's, one
-      // max-asOf row per doc — tiny (bounded by churn since the last
-      // cadence), pinned because every store read below joins it
+      // max-asOf row per doc (bounded by churn since the last cadence)
       val tombOpt: Option[DataFrame] = {
         val standing = readStore(spark, s"$rootDir/tombstones",
           Seq("doc_id", "asOf"))
@@ -333,14 +351,40 @@ object CurationChain {
           _.select(col("doc_id")).withColumn("asOf", lit(batchId)))
         (standing, fresh) match {
           case (None, None) => None
-          case (a, b) => Some(pin((a.toSeq ++ b.toSeq).reduce(_ unionByName _)
-            .groupBy("doc_id").agg(max("asOf").as("asOf"))))
+          case (a, b) => Some((a.toSeq ++ b.toSeq).reduce(_ unionByName _)
+            .groupBy("doc_id").agg(max("asOf").as("asOf")))
         }
       }
-      // hint only while the standing store is provably small (see
-      // tombstonesBroadcastable); past the threshold the join goes unhinted
-      val tombHint: DataFrame => DataFrame =
-        if (tombstonesBroadcastable(spark, rootDir)) broadcast else identity
+      // `retire(df, key)` keeps df's live rows ([[liveAsOf]]). While the
+      // standing store is provably small (tombstonesBroadcastable) the set
+      // collects to the driver ONCE and ships as one broadcast variable
+      // that every store read filters through — adaptive execution is off
+      // in the trigger body, so a hinted join would pay its own broadcast
+      // job in every action that reads a store. Rows the join could never
+      // match (a null doc_id) or never retire (a null asOf) are left out.
+      // Past the threshold the set stays distributed: pinned, and joined
+      // unhinted so the planner may shuffle it.
+      val retire: Option[(DataFrame, String) => DataFrame] = tombOpt.map { t =>
+        if (tombstonesBroadcastable(spark, rootDir)) {
+          val byId = labeled("tombstones") {
+            t.filter(col("doc_id").isNotNull && col("asOf").isNotNull).collect()
+          }.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+          val bc = ship((byId.map(_._1), byId.map(_._2)))
+          val live = udf { (id: Long, b: Long) =>
+            val (ids, asOf) = bc.value
+            val i = java.util.Arrays.binarySearch(ids, id)
+            i < 0 || b >= asOf(i)
+          }
+          (df: DataFrame, key: String) =>
+            df.filter(col(key).isNull || col("b").isNull || live(col(key), col("b")))
+        } else {
+          val pinned = pin(t)
+          (df: DataFrame, key: String) =>
+            df.join(pinned.select(col("doc_id").as(key), col("asOf").as("_asof")),
+                Seq(key), "left")
+              .filter(liveAsOf(col("_asof")))
+        }
+      }
       /** A store's LIVE rows ([[liveAsOf]]). `prune` restricts the scan
         * to candidate buckets of the store's partition column — static
         * partition pruning, the bucketed-layout read path (an empty
@@ -367,18 +411,7 @@ object CurationChain {
           if (hasTail) Some(read(spark, tailDir).select(need.map(col): _*))
           else None).flatten
         val df = parts.reduce(_ unionByName _)
-        Some(tombOpt match {
-          case None => df.select(cols.map(col): _*)
-          case Some(t) =>
-            // tombstones are churn-since-last-COMPACTION-bounded metadata —
-            // the broadcast hint keeps the store side from shuffling just
-            // to subtract them (guide §3.1), size-guarded above
-            df.join(tombHint(
-                t.select(col("doc_id").as(key), col("asOf").as("_asof"))),
-                Seq(key), "left")
-              .filter(liveAsOf(col("_asof")))
-              .select(cols.map(col): _*)
-        })
+        Some(retire.fold(df)(_(df, key)).select(cols.map(col): _*))
       }
       def storePresent(dir: String): Boolean =
         hasData(spark, dir) || hasData(spark, dir + "_tail")
@@ -395,16 +428,6 @@ object CurationChain {
       val wH = org.apache.spark.sql.expressions.Window
         .partitionBy("content_hash")
         .orderBy(hashOrder: _*)
-      // stamp each stage's eagerly-running jobs (bucket collects, counts,
-      // checkpoints, staged writes) with a stage label, so the Spark UI,
-      // perfbench's per-label chain metrics and tools/joblog.py attribute
-      // the trigger's ~30 jobs to stages instead of anonymous callsites. A pinned frame computes under the
-      // label of the FIRST action that reads it, so per-label job counts
-      // move when a pin moves work between stages.
-      def labeled[T](stage: String)(f: => T): T = {
-        spark.sparkContext.setJobDescription(s"graft.chain $stage")
-        try f finally spark.sparkContext.setJobDescription(null)
-      }
       val gated = CorpusIngest.gateBatch(offers,
           passThrough = Seq("doc_id") ++ (if (cdcOrdered) Seq("ord") else Nil) ++
             (if (budgeted) Seq("source") else Nil) ++
@@ -492,11 +515,16 @@ object CurationChain {
           // BATCH (drop ids, survivor ids, admitted keys) is
           // trigger-batch-bounded, never store-bounded — broadcast them
           // explicitly (guide §3.1): the sizes are unknowable to the
-          // planner (plans over fresh parquet/cached frames), so without
-          // the hint each ~500-row semi-join plans as a two-Exchange SMJ
-          // and AQE only converts it AFTER paying the shuffle. The
-          // store-side joins (exact/sig/vec candidates) keep their shuffle
-          // plans — those sides grow with the corpus.
+          // planner (plans over fresh parquet/cached frames), and adaptive
+          // execution is off in the trigger body, so without the hint each
+          // ~500-row semi-join runs as a two-Exchange SMJ. A broadcast is
+          // not free either: each executed BroadcastExchange is its own
+          // job, in every action that runs it (broadcasts are not shared
+          // between actions) — so a batch-side set that several actions
+          // read is pinned upstream, or held on the driver and shipped as
+          // a broadcast variable. The store-side joins (exact/sig/vec
+          // candidates) keep their shuffle plans — those sides grow with
+          // the corpus.
           val inDropsM = graft.multimodal.MultimodalQueries
             .hammingNearDupPairs(h)
             .select(col("db").as("media_id")).distinct()
@@ -532,7 +560,7 @@ object CurationChain {
       // stage 4: near-dup signature screen (in-batch + store). The sig
       // pipeline (shingle explode + k-minima agg + band joins) is the
       // most expensive stage and feeds BOTH the admitted set and the
-      // store append — pin it, or keepSigs below re-runs it end to end.
+      // store append — pin it, or the kept sig rows re-run it end to end.
       // The store side is PRE-BANDED and bucketed by (band, bh), fronted
       // by its own bloom: a batch band key whose blobs miss has no store
       // partner by construction (only near-dups collide on a band hash),
@@ -541,7 +569,10 @@ object CurationChain {
       val sigs = pin(TextDedupStream.signatures(afterPerc))
       val inDropsS = TextDedupStream.sigSelfPairs(sigs)
         .select(col("db").as("doc_id")).distinct()
-      val survS = sigs.join(broadcast(inDropsS), Seq("doc_id"), "left_anti")
+      // the in-batch survivors and the front-filtered band keys each feed
+      // the bucket collect AND the survivors' materialization — pinned, or
+      // the in-batch pair self-join runs once per action
+      val survS = pin(sigs.join(broadcast(inDropsS), Seq("doc_id"), "left_anti"))
       val afterSig = labeled("sig-screen") {
         val screened =
           if (!storePresent(sigDir)) survS
@@ -549,9 +580,9 @@ object CurationChain {
             val nBands = TextDedupStream.bandRows(survS, "new_id")
               .withColumn("__h", StoreLayout.keyHash(col("band"), col("bh")))
               .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
-            val maybe = StoreLayout.bloomScreen(spark, sigBloomDir, nBands)
+            val maybe = pin(StoreLayout.bloomScreen(spark, sigBloomDir, nBands)
               .map(_.dropDuplicates("new_id", "band", "bh"))
-              .getOrElse(nBands)
+              .getOrElse(nBands))
             readLive(sigDir, "doc_id", Seq("doc_id", "sig", "band", "bh"),
                 Some(("pb", StoreLayout.bucketsPresent(maybe))))
               .map { st =>
@@ -768,23 +799,21 @@ object CurationChain {
       // reads pay for the un-merged tail. The bloom deltas stage through
       // the SAME publish — the front can only ever lag the store by rows
       // that were never published, i.e. never.
-      // After the two checkpoints above every staged delta below reads
-      // only MATERIALIZED rows (`keep`, `keepSigs`, the persisted
-      // `hashed` projection), so the staged writes and the two
-      // driver-side blob builds are mutually independent — they are
-      // submitted CONCURRENTLY from a small pool (guide §2.6: overlap
-      // independent jobs). The trigger's fixed cost is its action CHAIN,
-      // not any single job (a warm trigger runs ~30 sub-second jobs back
-      // to back, a third of them here), and overlapping lets each small
-      // job's tail back-fill the executors with the next job's tasks. The
-      // protocol is untouched: seal happens only after EVERY future has
-      // finished, and a failure in any future fails the trigger BEFORE seal (the
+      // After the checkpoint above every staged delta below reads only
+      // MATERIALIZED rows (`keep`, the pinned `afterSig` and `hashed`
+      // projections), so the staged writes and the two driver-side blob
+      // builds are mutually independent — they are submitted
+      // CONCURRENTLY from a small pool (guide §2.6: overlap independent
+      // jobs). The trigger's fixed cost is its action CHAIN, not any
+      // single job (a warm trigger runs ~25 sub-second jobs back to back,
+      // a third of them here), and overlapping lets each small job's tail
+      // back-fill the executors with the next job's tasks. The protocol
+      // is untouched: seal happens only after EVERY future has finished,
+      // and a failure in any future fails the trigger BEFORE seal (the
       // crash-mid-staging path: unsealed residue is discarded and the
       // batch recomputed on replay) — but only after the others have
       // drained, so a foreachBatch retry never races a still-writing
       // task from the failed attempt.
-      val sess2 = spark
-      import sess2.implicits._
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val stagingEc: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -815,20 +844,24 @@ object CurationChain {
       try {
         // the admitted keys' hashes collect to the driver (batch-scale —
         // KB of longs per trigger) so the delta BLOBS build locally
-        // (StoreLayout.bloomDeltaLocal — no distributed agg job) and can
-        // merge into the DRIVER-CACHED front after the publish (without
-        // that merge the cache could never hit, since every publish
-        // changes the blob listing — r14 verdict item 2)
+        // (StoreLayout.bloomDeltaLocal — no distributed agg job), are
+        // written by the driver (StoreLayout.writeFrontLocal — no 1-task
+        // write job), and can merge into the DRIVER-CACHED front after the
+        // publish (without that merge the cache could never hit, since
+        // every publish changes the blob listing — r14 verdict item 2).
+        // The same collect brings the kept doc ids, sorted, for the sig
+        // deltas below.
         val fExactFront = staging("stage-exact-front") {
-          val exactKeys = keep
-            .select(StoreLayout.keyHash(col("content_hash")).as("__h"))
+          val kept = keep
+            .select(col("doc_id"),
+              StoreLayout.keyHash(col("content_hash")).as("__h"))
             .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
-            .collect().map(r => (r.getLong(0), r.getInt(1)))
+            .collect()
+          val exactKeys = kept.map(r => (r.getLong(1), r.getInt(2)))
           val exactBlobs = StoreLayout.bloomDeltaLocal(exactKeys,
             math.max(1L, exactKeys.length.toLong), P)
-          exactBlobs.toDF("pb", "bloom")
-            .coalesce(1).write.mode("overwrite").parquet(staged("bloom"))
-          exactBlobs
+          StoreLayout.writeFrontLocal(spark, staged("bloom"), exactBlobs)
+          (exactBlobs, kept.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted)
         }
         val fExactTail = staging("stage-exact-tail") {
           keep.select("doc_id", "content_hash").withColumn("b", lit(batchId))
@@ -850,21 +883,17 @@ object CurationChain {
               .write.mode("overwrite").parquet(staged("phash_tail"))
           }
         }
-        // the sig-survivor checkpoint rides the pool too (r15 verdict
-        // item 5: it sat on the SEQUENTIAL path between the admit
-        // checkpoint and the staged writes, while only the two sig-store
-        // deltas consume it). Its inputs are already materialized — the
-        // persisted `afterSig` and the checkpointed `keep` — so it is
-        // independent of every other staged write and overlaps them; the
-        // two sig deltas CHAIN on it (flatMap, no thread blocks waiting)
-        // and are still awaited before seal. `afterSig`/`sigs` unpersist
-        // in the outer finally, after the await, because this future
-        // reads them.
-        val fKeptBands = staging("admit-checkpoint-sigs") {
-          val keepSigs = afterSig
-            .join(broadcast(keep.select("doc_id")), Seq("doc_id"), "left_semi")
-            .localCheckpoint()
-          TextDedupStream.bandRows(keepSigs, "doc_id")
+        // the kept sig rows: the pinned `afterSig` filtered by the kept
+        // ids the exact-front collect brought back, shipped once as a
+        // broadcast variable — no checkpoint job and no broadcast job. The
+        // two sig deltas CHAIN on that collect (no thread blocks waiting)
+        // and are still awaited before seal; `afterSig` unpersists in the
+        // outer finally, after the await, because they read it.
+        val fKeptBands = fExactFront.map { case (_, keptIds) =>
+          val kept = ship(keptIds)
+          val isKept = udf((id: Long) =>
+            java.util.Arrays.binarySearch(kept.value, id) >= 0)
+          TextDedupStream.bandRows(afterSig.filter(isKept(col("doc_id"))), "doc_id")
             .withColumn("b", lit(batchId))
             .withColumn("pb", StoreLayout.bucketOf(
               StoreLayout.keyHash(col("band"), col("bh")), P))
@@ -882,8 +911,7 @@ object CurationChain {
               .collect().map(r => (r.getLong(0), r.getInt(1)))
             val sigBlobs = StoreLayout.bloomDeltaLocal(sigKeys,
               math.max(1L, sigKeys.length.toLong), P)
-            sigBlobs.toDF("pb", "bloom")
-              .coalesce(1).write.mode("overwrite").parquet(staged("sigbloom"))
+            StoreLayout.writeFrontLocal(spark, staged("sigbloom"), sigBlobs)
             sigBlobs
           })
         val fVecs =
@@ -936,7 +964,7 @@ object CurationChain {
           .foreach(e => throw e)
         pendingFronts.put((rootDir, batchId),
           Seq(bloomDir -> scala.concurrent.Await.result(fExactFront,
-              scala.concurrent.duration.Duration.Inf),
+              scala.concurrent.duration.Duration.Inf)._1,
             sigBloomDir -> scala.concurrent.Await.result(fSigFront,
               scala.concurrent.duration.Duration.Inf)))
       } catch {
@@ -947,7 +975,8 @@ object CurationChain {
       drain().foreach(e => throw e)
       StoreTxn.seal(spark, rootDir, batchId)
     } finally {
-      pins.foreach(_.unpersist()); ()
+      pins.foreach(_.unpersist())
+      shipped.forEach(_.destroy())
     }
   }
 

@@ -288,6 +288,47 @@ object StoreLayout {
     }.sortBy(_._1)
   }
 
+  /** Write `blobs` (a [[bloomDeltaLocal]] delta) into `dir` as ONE
+    * [[FrontSchema]] parquet file, from the driver: the blobs are already
+    * here, so a Spark write would be a 1-task job that only ships them
+    * out and back. Replaces whatever `dir` held (an overwrite, as a
+    * staged write is). An empty delta writes a file with no rows, as
+    * Spark does, so the directory always holds exactly one data file —
+    * the shape [[noteFrontDelta]] seeds from.
+    */
+  def writeFrontLocal(spark: SparkSession, dir: String,
+      blobs: Seq[(Int, Array[Byte])]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.MessageTypeParser
+    val (fs, p) = fsOf(spark, dir)
+    fs.delete(p, true)
+    fs.mkdirs(p)
+    val schema = MessageTypeParser.parseMessageType(
+      "message spark_schema { optional int32 pb; optional binary bloom; }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = new org.apache.hadoop.fs.Path(p,
+      s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
+    val writer = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(file, conf))
+      .withConf(conf)
+      .withType(schema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    try {
+      val rows = new SimpleGroupFactory(schema)
+      blobs.foreach { case (pb, blob) =>
+        writer.write(rows.newGroup().append("pb", pb)
+          .append("bloom", Binary.fromConstantByteArray(blob)))
+      }
+    } finally writer.close()
+  }
+
   /** Merge a just-PUBLISHED delta's blobs into the cached front and
     * re-stamp the fingerprint, so the next trigger's probe stays
     * driver-cached even though the publish changed the blob directory's

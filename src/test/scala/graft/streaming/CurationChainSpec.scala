@@ -459,6 +459,71 @@ class CurationChainSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.tombBroadcastMaxBytes")
   }
 
+  test("the driver-held tombstone set and the distributed tombstone join " +
+      "admit the same docs after every trigger") {
+    val s = spark
+    import s.implicits._
+    def axis(a: Int): Array[Float] = Array.tabulate(8)(i => if (i == a) 1.0f else 0.0f)
+    def ops(rows: Seq[(String, Long, Long, String, Array[Float])]) =
+      rows.toDF("op", "ord", "doc_id", "text", "embedding")
+    // every screen meets a retired row: an UPDATE re-offers its own
+    // embedding and edited text, a DELETEd doc's text and embedding
+    // re-offer as novel, standing docs still reject
+    val batches = Seq(
+      Seq(("INSERT", 1L, 1L, doc(1), axis(1)), ("INSERT", 2L, 2L, doc(2), axis(2)),
+        ("INSERT", 3L, 3L, doc(3), axis(3)), ("INSERT", 4L, 4L, doc(4), axis(4))),
+      Seq(("UPDATE", 1L, 1L, doc(1, edit = true), axis(1)),
+        ("DELETE", 2L, 2L, doc(2), axis(2)),
+        ("INSERT", 3L, 5L, doc(3), axis(5)),  // exact dup of 3
+        ("INSERT", 4L, 6L, doc(6), axis(4))), // semantic dup of 4
+      Seq(("INSERT", 1L, 7L, doc(2), axis(2)), // deleted content: novel
+        ("INSERT", 2L, 8L, doc(1), axis(6)),   // near-dup of 1's edit
+        ("UPDATE", 3L, 3L, doc(3), axis(3)),   // re-offers itself
+        ("DELETE", 4L, 4L, doc(4), axis(4))),
+      Seq(("INSERT", 1L, 9L, doc(9), axis(4)), // 4's embedding, 4 deleted
+        ("INSERT", 2L, 10L, doc(2), axis(7)))) // exact dup of 7
+    val expected = Seq(Seq(1L, 2L, 3L, 4L), Seq(1L, 3L, 4L), Seq(1L, 3L, 7L),
+      Seq(1L, 3L, 7L, 9L))
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_chain_tombparity").toFile.getAbsolutePath
+    def live(root: String) = CurationChain.readAdmitted(spark, root)
+      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    batches.zip(expected).zipWithIndex.foreach { case ((b, want), i) =>
+      CurationChain.ingestCdcInto(s"$base/held")(ops(b), i.toLong)
+      // a 1-byte threshold trips the guard once a standing store exists
+      spark.conf.set(CurationChain.TombBroadcastMaxBytesKey, "1")
+      try CurationChain.ingestCdcInto(s"$base/joined")(ops(b), i.toLong)
+      finally spark.conf.unset(CurationChain.TombBroadcastMaxBytesKey)
+      val held = live(s"$base/held")
+      assert(held == live(s"$base/joined"), s"trigger $i diverged")
+      assert(held.map(_._1) == want, s"trigger $i")
+    }
+  }
+
+  test("a semantic reject leaves no sig-store row and no sig-front key") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_chain_semres").toFile.getAbsolutePath + "/c"
+    CurationChain.ingestInto(root)(
+      rows(spark, Seq((2L, doc(2), vec(0)), (4L, doc(4), vec(1)))), 0L)
+    // 12: novel text (passes the sig screen), doc 2's embedding
+    CurationChain.ingestInto(root)(
+      rows(spark, Seq((12L, doc(12), vec(0)), (13L, doc(13), vec(2)))), 1L)
+    val tailIds = spark.read.parquet(s"$root/sigs_tail")
+      .select("doc_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
+    assert(tailIds == Seq(2L, 4L, 13L))
+
+    import org.apache.spark.sql.functions.col
+    val P = StoreLayout.ensureLayout(spark, root, Nil)
+    def bandKeys(id: Long, text: String) = TextDedupStream.bandRows(
+        TextDedupStream.signatures(rows(spark, Seq((id, text, vec(0))))), "doc_id")
+      .select(StoreLayout.keyHash(col("band"), col("bh")).as("__h"))
+      .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
+    def inFront(keys: org.apache.spark.sql.DataFrame): Long =
+      StoreLayout.bloomScreen(spark, s"$root/sigbloom", keys).get.count()
+    assert(inFront(bandKeys(13L, doc(13))) == 8, "an admitted doc's band keys are fronted")
+    assert(inFront(bandKeys(12L, doc(12))) == 0, "the rejected doc's band keys are not")
+  }
+
   test("CDC media ops: a re-encoded image UPDATE retires the doc's own " +
       "phash row and re-admits, DELETE clears perceptual memory, and " +
       "the cadence applies tombstones to the band store physically") {

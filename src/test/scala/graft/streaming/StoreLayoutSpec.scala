@@ -80,4 +80,39 @@ class StoreLayoutSpec extends SparkSpec {
     assert(foreign.collect().map(_.getLong(0)).toSet.subsetOf(got),
       "every foreign key must still screen as maybe-present")
   }
+
+  test("a driver-written front probes the same as a Spark-written one, " +
+      "empty or not, and seeds the cache from its one file") {
+    val base = tmp("graft_front_local")
+    val batch = keyed(1000L, 4000L) // half published, half novel
+    def joinProbe(dir: String): Set[Long] =
+      StoreLayout.bloomMaybe(batch,
+          spark.read.schema(StoreLayout.FrontSchema).parquet(dir))
+        .select("__h").distinct().collect().map(_.getLong(0)).toSet
+    def dataFiles(dir: String): Int = new java.io.File(dir).listFiles()
+      .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    Seq("full" -> delta(0L, 2000L), "empty" -> Seq.empty).foreach {
+      case (name, blobs) =>
+        val local = s"$base/local_$name"
+        val written = s"$base/spark_$name"
+        StoreLayout.writeFrontLocal(spark, local, blobs)
+        writeBlobs(written, blobs)
+        assert(dataFiles(local) == 1, s"$name: one data file")
+        assert(joinProbe(local) == joinProbe(written), s"$name: join probe")
+        assert(maybe(local, batch) == maybe(written, batch),
+          s"$name: cached probe")
+        if (blobs.isEmpty) assert(maybe(local, batch).isEmpty)
+        else assert(keyed(1000L, 2000L).collect().map(_.getLong(0)).toSet
+          .subsetOf(maybe(local, batch)), "a front never misses a published key")
+    }
+
+    val seeded = s"$base/seeded"
+    val blobs = delta(0L, 2000L)
+    StoreLayout.writeFrontLocal(spark, seeded, blobs)
+    StoreLayout.noteFrontDelta(spark, seeded, blobs)
+    val (_, reads) = JobCounter.count(spark.sparkContext)(
+      StoreLayout.bloomScreen(spark, seeded, batch))
+    assert(reads == 0, "a driver-written front seeds the cache like a Spark-written one")
+    assert(maybe(seeded, batch) == maybe(s"$base/spark_full", batch))
+  }
 }
