@@ -42,30 +42,20 @@ import org.apache.spark.sql.types._
   * shuffle-heavy signature agg runs, and the signature screen kills
   * light edits before any cosine is computed.
   *
-  * STORE LAYOUT (r13 verdict item 1 — the screens used to re-read and
-  * re-band the FULL store every trigger, O(admitted corpus) per
-  * micro-batch forever): every screen store is laid out on its join key
-  * ([[StoreLayout]]) so a trigger reads candidate buckets only —
-  * `exact` bucketed by content-hash and FRONTED by per-trigger bloom
-  * blobs (`bloom`: batch hashes whose blobs miss never touch the
-  * store); `sigs` persisted PRE-BANDED and bucketed by the (band, bh)
-  * join key with its own front (`sigbloom`: only band keys that collide
-  * with something admitted pull their buckets — for a novel batch that
-  * is none); `phash` pre-banded and bucketed by (band, v); `vecs` cell-
-  * partitioned under frozen trained centroids once past the founding
-  * floor (retrain-per-trigger below it) with `vecpq`, its PQ-CODED
-  * posting twin (r15): the founding/drift cadence also trains
-  * sub-codebooks, and the screen ADC-scores the probed cells' postings
-  * — 8+m+8 bytes/vector instead of dim·8 — keeping candidates at
+  * STORE LAYOUT: every screen store is a [[ScreenStore]] (`exact`,
+  * `phash`, `sigs`, `vecs`, `vecpq`; layout, fronts and reads described
+  * there), so a trigger reads candidate buckets only and its screen cost
+  * is bounded by the batch and its true duplicates, not by store size.
+  * `vecs` is cell-partitioned under frozen trained centroids once past
+  * the founding floor (retrain-per-trigger below it), and `vecpq` is its
+  * PQ-CODED posting twin: the screen ADC-scores the probed cells'
+  * postings (8+m+8 bytes/vector instead of dim·8), keeps candidates at
   * `adc ≥ threshold − mrg`, each posting's own exact error bound
   * ([[graft.llm.PqAdcMargin]]), then exact-verifies ONLY candidates
-  * against the raw store by id pushdown (an all-novel trigger reads
-  * zero raw vectors; `vecPq = false` keeps the raw probe). Per-trigger
-  * screen cost is then bounded by the
-  * batch and its true duplicates, not by store size. Stores compact per
-  * bucket on the `compactEvery` cadence (blooms rebuild, cells refound
-  * on drift) and heal via [[StoreCompact.recover]] after a mid-swap
-  * crash.
+  * against the raw store by id pushdown (`vecPq = false` keeps the raw
+  * probe). Stores compact on the `compactEvery` cadence (fronts rebuild,
+  * cells refound on drift) and heal via [[StoreCompact.recover]] after a
+  * mid-swap crash.
   *
   * EXACTLY-ONCE store publication (r12 ADVICE): `foreachBatch` is
   * at-least-once, and the naive sequential appends break under replay —
@@ -102,43 +92,23 @@ import org.apache.spark.sql.types._
   */
 object CurationChain {
 
-  /** The store subdirectories recovery and compaction iterate over.
-    * ([[StoreTxn.publish]] itself moves EVERY staged subdir — this list
-    * only scopes the per-trigger recover sweep and the compaction
-    * cadence.)
-    */
-  private val StoreNames =
-    Seq("exact", "phash", "sigs", "vecs", "vecpq", "admitted", "budget")
+  /** The unbucketed stores: the admitted corpus and the budget ledger. */
+  private val FlatStores = Seq("admitted", "budget")
 
-  /** The columns of every store this object writes, declared once: every
-    * read names its schema, so no read runs Spark's footer-inference job
-    * (one job per store read per trigger, for columns written here). A
-    * `_tail` shares its main's schema; the bucket column (`pb`/`cell`)
-    * is a data column in a tail and a partition column in a main. Older
-    * narrower files widen on read (float embeddings read as double, as
-    * every kernel casts them anyway). A column absent from an older file
-    * reads as null, and no null can drop a store row from a screen: a
-    * null `b` counts as live ([[liveAsOf]]), a null `vecpq.mrg` means
-    * "verify exactly", a null front blob means "maybe present". Every
-    * other column has been written since its store first existed.
+  /** Every store the root's layout marker guards. */
+  private val StoreNames = ScreenStore.All.map(_.name) ++ FlatStores
+
+  /** The columns of every store this object writes, declared once (the
+    * screen stores' in [[ScreenStore]]): every read names its schema, so
+    * no read runs Spark's footer-inference job. Older narrower files
+    * widen on read (float embeddings read as double, as every kernel
+    * casts them anyway); a column absent from an older file reads as
+    * null.
     */
   private[streaming] val StoreSchemas: Map[String, StructType] = {
     def s(cols: (String, DataType)*): StructType =
       StructType(cols.map { case (n, t) => StructField(n, t) })
-    Map(
-      "exact" -> s("doc_id" -> LongType, "content_hash" -> StringType,
-        "b" -> LongType, "pb" -> IntegerType),
-      "phash" -> s("media_id" -> LongType, "h" -> LongType,
-        "band" -> IntegerType, "v" -> LongType, "b" -> LongType,
-        "pb" -> IntegerType),
-      "sigs" -> s("doc_id" -> LongType, "sig" -> ArrayType(LongType),
-        "band" -> IntegerType, "bh" -> LongType, "b" -> LongType,
-        "pb" -> IntegerType),
-      "vecs" -> s("vec_id" -> LongType, "embedding" -> ArrayType(DoubleType),
-        "b" -> LongType, "cell" -> IntegerType),
-      "vecpq" -> s("vec_id" -> LongType, "cell" -> IntegerType,
-        "codes" -> ArrayType(IntegerType), "b" -> LongType,
-        "mrg" -> DoubleType),
+    ScreenStore.All.map(st => st.name -> st.schema).toMap ++ Map(
       "admitted" -> s("doc_id" -> LongType, "text" -> StringType,
         "content_hash" -> StringType, "b" -> LongType),
       "budget" -> s("source" -> StringType, "toks" -> LongType,
@@ -148,13 +118,9 @@ object CurationChain {
       "sigbloom" -> StoreLayout.FrontSchema)
   }
 
-  /** The declared schema of the store at `dir` (`<root>/<store>[_tail]`). */
-  private def schemaOf(dir: String): StructType =
-    StoreSchemas(dir.split('/').last.stripSuffix("_tail"))
-
-  /** Read a store directory under its declared schema. */
+  /** Read a flat store directory (`<root>/<store>`) under its declared schema. */
   private def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(schemaOf(dir)).parquet(dir)
+    spark.read.schema(StoreSchemas(dir.split('/').last)).parquet(dir)
 
   /** A store row is live unless a tombstone NEWER than its admit batch
     * `b` retires it (a row written by the retiring batch itself survives
@@ -166,31 +132,9 @@ object CurationChain {
   private def liveAsOf(asOf: Column): Column =
     asOf.isNull || col("b").isNull || col("b") >= asOf
 
-  /** The bucketed screen stores and their partition columns — each has a
-    * flat `_tail` sibling holding the deltas since the last merge.
-    */
-  private val BucketedStores = Seq("exact" -> Seq("pb"),
-    "phash" -> Seq("pb"), "sigs" -> Seq("pb"), "vecs" -> Seq("cell"),
-    "vecpq" -> Seq("cell"))
-  private val FlatStores = Seq("admitted", "budget")
-
   /** Every directory the per-trigger recover sweep heals. */
   private def recoverDirs(rootDir: String): Seq[String] =
-    (StoreNames ++ StoreNames.map(_ + "_tail") ++ DerivedNames)
-      .map(s => s"$rootDir/$s")
-
-  /** ALL rows of a screen store: the bucketed main plus the un-merged
-    * flat tail — what a consumer (or a spec) reads; the screens
-    * themselves read the main pruned to candidate buckets plus the
-    * whole (cadence-bounded) tail.
-    */
-  def storeRows(spark: SparkSession, rootDir: String,
-      store: String): DataFrame = {
-    val parts = Seq(s"$rootDir/$store", s"$rootDir/${store}_tail")
-      .filter(hasData(spark, _)).map(read(spark, _))
-    require(parts.nonEmpty, s"store $store has no data under $rootDir")
-    if (parts.size == 1) parts.head else parts.head.unionByName(parts.last)
-  }
+    ScreenStore.All.flatMap(_.dirs(rootDir)) ++ FlatStores.map(s => s"$rootDir/$s")
 
   private def hadoopFs(spark: SparkSession, dir: String) = {
     val path = new org.apache.hadoop.fs.Path(dir)
@@ -304,13 +248,6 @@ object CurationChain {
     val budgeted = budgets.nonEmpty
     if (budgeted) require(offers.columns.contains("source"),
       "budgeted ingest needs a `source` column on the batch")
-    val exactDir = s"$rootDir/exact"
-    val phashDir = s"$rootDir/phash"
-    val sigDir = s"$rootDir/sigs"
-    val vecDir = s"$rootDir/vecs"
-    val vecpqDir = s"$rootDir/vecpq"
-    val bloomDir = s"$rootDir/bloom"
-    val sigBloomDir = s"$rootDir/sigbloom"
     def staged(store: String): String = StoreTxn.stagePath(rootDir, batchId, store)
     val semantic = offers.columns.contains("embedding")
     val media = offers.columns.contains("content")
@@ -385,36 +322,9 @@ object CurationChain {
               .filter(liveAsOf(col("_asof")))
         }
       }
-      /** A store's LIVE rows ([[liveAsOf]]). `prune` restricts the scan
-        * to candidate buckets of the store's partition column — static
-        * partition pruning, the bucketed-layout read path (an empty
-        * bucket list means the caller already knows nothing matches:
-        * skip the read entirely).
-        */
-      def readLive(dir: String, key: String, cols: Seq[String],
-          prune: Option[(String, Seq[Int])] = None): Option[DataFrame] = {
-        val tailDir = dir + "_tail"
-        val hasMain = hasData(spark, dir)
-        val hasTail = hasData(spark, tailDir)
-        if (!hasMain && !hasTail) return None
-        if (prune.exists(_._2.isEmpty)) return None
-        val need = (Seq(key) ++ cols :+ "b").distinct
-        // the bucketed main reads candidate buckets only (static partition
-        // pruning); the FLAT tail — this cadence interval's few small
-        // delta files — reads whole (bounded by the merge cadence)
-        val parts = Seq(
-          if (hasMain) Some((prune match {
-            case Some((pc, vals)) =>
-              StoreLayout.prunedRead(spark, dir, pc, vals, Some(schemaOf(dir)))
-            case None => read(spark, dir)
-          }).select(need.map(col): _*)) else None,
-          if (hasTail) Some(read(spark, tailDir).select(need.map(col): _*))
-          else None).flatten
-        val df = parts.reduce(_ unionByName _)
-        Some(retire.fold(df)(_(df, key)).select(cols.map(col): _*))
-      }
-      def storePresent(dir: String): Boolean =
-        hasData(spark, dir) || hasData(spark, dir + "_tail")
+      // the screen stores as this trigger reads them: live rows only
+      val Seq(exactStore, phashStore, sigStore, vecStore, pqStore) =
+        ScreenStore.All.map(_.at(spark, rootDir, P, retire))
 
       // stage 1+2a: gate, then first-of-hash within the batch. Plain
       // batches tiebreak by lowest id (the near-dup screens' greedy rule);
@@ -445,27 +355,18 @@ object CurationChain {
       // pull their candidate buckets — the anti-join reads those buckets
       // only instead of scanning the whole store per trigger.
       val afterExact = labeled("exact-screen") {
-        if (!storePresent(exactDir)) pinned
+        if (!exactStore.present) pinned
         else {
-          val batchKeys = pinned.select("content_hash").distinct()
-            .withColumn("__h", StoreLayout.keyHash(col("content_hash")))
-            .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
           // the front probes through the DRIVER-CACHED blobs (one filter
-          // inside the batch plan — r14 verdict item 2: the read+join
-          // probe was two fixed jobs per trigger; the blobs only change
-          // when this body publishes or the cadence rebuilds, which the
-          // cache's listing fingerprint catches)
-          val maybe = StoreLayout.bloomScreen(spark, bloomDir, batchKeys) match {
-            case Some(filtered) => filtered.select("content_hash", "pb").distinct()
-            case None => batchKeys.select("content_hash", "pb")
-          }
-          // candidate buckets: a driver-side collect bounded by the
-          // layout's bucket count (the probed-cell contract)
+          // inside the batch plan); the candidate buckets are a
+          // driver-side collect bounded by the layout's bucket count
+          val maybe = exactStore.probe(
+            exactStore.keyed(pinned.select("content_hash").distinct()),
+            Seq("content_hash", "pb"))
           // the survivors feed the sig screen, the semantic counts and
           // the admit checkpoint — pin them, or each re-runs the store
           // read and anti-join
-          readLive(exactDir, "doc_id", Seq("content_hash"),
-              Some(("pb", StoreLayout.bucketsPresent(maybe))))
+          exactStore.candidates(Seq("content_hash"), maybe)
             .map(st => pin(pinned.join(st, Seq("content_hash"), "left_anti")))
             .getOrElse(pinned)
         }
@@ -529,14 +430,10 @@ object CurationChain {
             .hammingNearDupPairs(h)
             .select(col("db").as("media_id")).distinct()
           val survM = h.join(broadcast(inDropsM), Seq("media_id"), "left_anti")
-          val bandKeys = graft.multimodal.MultimodalQueries
+          val bandKeys = phashStore.tagged(graft.multimodal.MultimodalQueries
             .bandExplode(survM, "new_id")
-            .select(col("b").as("band"), col("v")).distinct()
-            .withColumn("pb", StoreLayout.bucketOf(
-              StoreLayout.keyHash(col("band"), col("v")), P))
-          val okIds = readLive(phashDir, "media_id",
-              Seq("media_id", "h", "band", "v"),
-              Some(("pb", StoreLayout.bucketsPresent(bandKeys))))
+            .select(col("b").as("band"), col("v")).distinct())
+          val okIds = phashStore.candidates(Seq("media_id", "h", "band", "v"), bandKeys)
             .map { st =>
               val dup = ImageDedupStream.hammingPairsAgainstBands(survM, st)
                 .select(col("new_id").as("media_id")).distinct()
@@ -575,16 +472,12 @@ object CurationChain {
       val survS = pin(sigs.join(broadcast(inDropsS), Seq("doc_id"), "left_anti"))
       val afterSig = labeled("sig-screen") {
         val screened =
-          if (!storePresent(sigDir)) survS
+          if (!sigStore.present) survS
           else {
-            val nBands = TextDedupStream.bandRows(survS, "new_id")
-              .withColumn("__h", StoreLayout.keyHash(col("band"), col("bh")))
-              .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
-            val maybe = pin(StoreLayout.bloomScreen(spark, sigBloomDir, nBands)
-              .map(_.dropDuplicates("new_id", "band", "bh"))
-              .getOrElse(nBands))
-            readLive(sigDir, "doc_id", Seq("doc_id", "sig", "band", "bh"),
-                Some(("pb", StoreLayout.bucketsPresent(maybe))))
+            val maybe = pin(sigStore.probe(
+              sigStore.keyed(TextDedupStream.bandRows(survS, "new_id")),
+              Seq("new_id", "band", "bh")))
+            sigStore.candidates(Seq("doc_id", "sig", "band", "bh"), maybe)
               .map { st =>
                 val dup = TextDedupStream.sigPairsAgainstBands(maybe, st)
                   .select(col("new_id").as("doc_id")).distinct()
@@ -619,8 +512,7 @@ object CurationChain {
             // below the threshold, and exact-verifies ONLY the
             // candidates against the raw store by id pushdown. An
             // all-novel batch reads code postings and zero raw vectors.
-            case Some(q) if vecPq && q.codebooks.isDefined &&
-                storePresent(vecpqDir) =>
+            case Some(q) if vecPq && q.codebooks.isDefined && pqStore.present =>
               // the in-batch screen result feeds THREE actions on this
               // path (the probe collect, the candidate materialization,
               // and the final anti-join) — pin it, or each re-runs the
@@ -632,9 +524,8 @@ object CurationChain {
                   q.codebooks.get, vecNprobe) match {
                 case None => survV // zero offers survived the batch screen
                 case Some(pr) =>
-                  readLive(vecpqDir, "vec_id",
-                      Seq("vec_id", "cell", "codes", "mrg"),
-                      Some(("cell", pr.probedCells.toSeq)))
+                  pqStore.read(Seq("vec_id", "cell", "codes", "mrg"),
+                      Some(pr.probedCells.toSeq))
                     .map { st =>
                       // each posting carries its EXACT ADC error bound
                       // `mrg` ([[graft.llm.PqAdcMargin]]) — the filter
@@ -655,14 +546,13 @@ object CurationChain {
                       val fetched =
                         if (idRows.isEmpty) None
                         else if (idRows.length <= 10000)
-                          readLive(vecDir, "vec_id", Seq("vec_id", "embedding"),
-                              Some(("cell",
-                                idRows.map(_.getInt(1)).distinct.sorted.toSeq)))
+                          vecStore.read(Seq("vec_id", "embedding"),
+                              Some(idRows.map(_.getInt(1)).distinct.sorted.toSeq))
                             .map(_.filter(col("vec_id").isin(idRows.map(r =>
                               java.lang.Long.valueOf(r.getLong(0))).toSeq: _*)))
                         else
-                          readLive(vecDir, "vec_id", Seq("vec_id", "embedding"),
-                              Some(("cell", pr.probedCells.toSeq)))
+                          vecStore.read(Seq("vec_id", "embedding"),
+                              Some(pr.probedCells.toSeq))
                             .map(_.join(
                               cand.select(col("neighbor_id").as("vec_id"))
                                 .distinct(), Seq("vec_id"), "left_semi"))
@@ -685,7 +575,7 @@ object CurationChain {
               }
             // raw cell probe: a founded root whose coded postings have
             // not (re)built yet — correct, just dim·8 bytes per probed row
-            case Some(q) if storePresent(vecDir) =>
+            case Some(q) if vecStore.present =>
               val cents = q.cents
               val survV = SemDedupStream
                 .admitBatch(vecs, spark.emptyDataFrame, threshold)
@@ -693,9 +583,7 @@ object CurationChain {
                   col("embedding").cast("array<double>").as("qv"))
                 .withColumn("cell", explode(graft.llm.IvfProbe(col("qv"),
                   cents, math.min(vecNprobe, cents.length))))
-              val cells = qv.select(col("cell").as("pb"))
-              readLive(vecDir, "vec_id", Seq("vec_id", "embedding", "cell"),
-                  Some(("cell", StoreLayout.bucketsPresent(cells))))
+              vecStore.candidates(Seq("vec_id", "embedding", "cell"), qv)
                 .map { st =>
                   val dup = qv.join(st.select(col("cell"),
                         col("vec_id").as("neighbor_id"),
@@ -709,7 +597,7 @@ object CurationChain {
                 .getOrElse(survV)
             case _ => SemDedupStream
               .admitBatch(vecs,
-                readLive(vecDir, "vec_id", Seq("vec_id", "embedding"))
+                vecStore.read(Seq("vec_id", "embedding"))
                   .getOrElse(spark.emptyDataFrame), threshold)
           }
           survivedSig.join(broadcast(ok.select(col("vec_id").as("doc_id"))),
@@ -790,15 +678,9 @@ object CurationChain {
       }
       // every store row carries its admit batch: the tombstone exclusion
       // and the physical apply are both keyed on (id, b < asOf). Screen
-      // store deltas stage FLAT into the store's `_tail` sibling with
-      // the bucket value as a data column — a handful of files per
-      // trigger instead of one per `key=value` dir (measured ~2× whole-
-      // trigger cost when every micro-batch fanned across the bucket
-      // dirs); [[StoreCompact.mergeTail]] folds tails into the bucketed
-      // mains on the compaction cadence, which bounds what the pruned
-      // reads pay for the un-merged tail. The bloom deltas stage through
-      // the SAME publish — the front can only ever lag the store by rows
-      // that were never published, i.e. never.
+      // store deltas stage into their `_tail` ([[ScreenStore]]), and the
+      // front deltas stage through the SAME publish — the front can only
+      // ever lag the store by rows that were never published, i.e. never.
       // After the checkpoint above every staged delta below reads only
       // MATERIALIZED rows (`keep`, the pinned `afterSig` and `hashed`
       // projections), so the staged writes and the two driver-side blob
@@ -843,44 +725,28 @@ object CurationChain {
       }
       try {
         // the admitted keys' hashes collect to the driver (batch-scale —
-        // KB of longs per trigger) so the delta BLOBS build locally
-        // (StoreLayout.bloomDeltaLocal — no distributed agg job), are
-        // written by the driver (StoreLayout.writeFrontLocal — no 1-task
-        // write job), and can merge into the DRIVER-CACHED front after the
-        // publish (without that merge the cache could never hit, since
-        // every publish changes the blob listing — r14 verdict item 2).
-        // The same collect brings the kept doc ids, sorted, for the sig
-        // deltas below.
+        // KB of longs per trigger) so the front delta builds and is
+        // written there, and can merge into the DRIVER-CACHED front after
+        // the publish ([[ScreenStore.View.writeFront]]). The same collect
+        // brings the kept doc ids, sorted, for the sig deltas below.
         val fExactFront = staging("stage-exact-front") {
-          val kept = keep
-            .select(col("doc_id"),
-              StoreLayout.keyHash(col("content_hash")).as("__h"))
-            .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
-            .collect()
-          val exactKeys = kept.map(r => (r.getLong(1), r.getInt(2)))
-          val exactBlobs = StoreLayout.bloomDeltaLocal(exactKeys,
-            math.max(1L, exactKeys.length.toLong), P)
-          StoreLayout.writeFrontLocal(spark, staged("bloom"), exactBlobs)
+          val kept = exactStore.keyed(keep.select("doc_id", "content_hash"))
+            .select("doc_id", "__h", "pb").collect()
+          val exactBlobs = exactStore.writeFront(staged("bloom"),
+            kept.map(r => (r.getLong(1), r.getInt(2))), replace = true)
           (exactBlobs, kept.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted)
         }
         val fExactTail = staging("stage-exact-tail") {
-          keep.select("doc_id", "content_hash").withColumn("b", lit(batchId))
-            .withColumn("pb", StoreLayout.bucketOf(
-              StoreLayout.keyHash(col("content_hash")), P))
-            .repartition(col("pb"))
-            .write.mode("overwrite").parquet(staged("exact_tail"))
+          exactStore.writeDelta(keep.select("doc_id", "content_hash")
+            .withColumn("b", lit(batchId)), staged("exact_tail"), "overwrite")
         }
         val fPhash = hashed.map { h =>
           staging("stage-phash-tail") {
-            graft.multimodal.MultimodalQueries.bandExplode(
+            phashStore.writeDelta(graft.multimodal.MultimodalQueries.bandExplode(
                 h.join(broadcast(keep.select(col("doc_id").as("media_id"))),
                   Seq("media_id"), "left_semi"), "media_id")
               .select(col("media_id"), col("h"), col("b").as("band"), col("v"))
-              .withColumn("b", lit(batchId))
-              .withColumn("pb", StoreLayout.bucketOf(
-                StoreLayout.keyHash(col("band"), col("v")), P))
-              .repartition(col("pb"))
-              .write.mode("overwrite").parquet(staged("phash_tail"))
+              .withColumn("b", lit(batchId)), staged("phash_tail"), "overwrite")
           }
         }
         // the kept sig rows: the pinned `afterSig` filtered by the kept
@@ -893,43 +759,34 @@ object CurationChain {
           val kept = ship(keptIds)
           val isKept = udf((id: Long) =>
             java.util.Arrays.binarySearch(kept.value, id) >= 0)
-          TextDedupStream.bandRows(afterSig.filter(isKept(col("doc_id"))), "doc_id")
-            .withColumn("b", lit(batchId))
-            .withColumn("pb", StoreLayout.bucketOf(
-              StoreLayout.keyHash(col("band"), col("bh")), P))
+          sigStore.tagged(TextDedupStream.bandRows(
+              afterSig.filter(isKept(col("doc_id"))), "doc_id")
+            .withColumn("b", lit(batchId)))
         }
         val fSigsTail = fKeptBands.flatMap(keptBands =>
           staging("stage-sigs-tail") {
-            keptBands.repartition(col("pb"))
-              .write.mode("overwrite").parquet(staged("sigs_tail"))
+            sigStore.writeDelta(keptBands, staged("sigs_tail"), "overwrite")
           })
         val fSigFront = fKeptBands.flatMap(keptBands =>
           staging("stage-sig-front") {
-            val sigKeys = keptBands
-              .select(StoreLayout.keyHash(col("band"), col("bh")).as("__h"),
-                col("pb"))
-              .collect().map(r => (r.getLong(0), r.getInt(1)))
-            val sigBlobs = StoreLayout.bloomDeltaLocal(sigKeys,
-              math.max(1L, sigKeys.length.toLong), P)
-            StoreLayout.writeFrontLocal(spark, staged("sigbloom"), sigBlobs)
-            sigBlobs
+            sigStore.writeFront(staged("sigbloom"), sigStore.frontKeys(keptBands),
+              replace = true)
           })
         val fVecs =
           if (!semantic) None
           else Some(staging("stage-vecs-tail") {
-            keep.select(col("doc_id").as("vec_id"), col("embedding"))
+            vecStore.writeDelta(keep.select(col("doc_id").as("vec_id"), col("embedding"))
               .withColumn("b", lit(batchId))
               .withColumn("cell", vecCents match {
                 case Some(cents) => graft.llm.IvfCell(
                   col("embedding").cast("array<double>"), cents)
                 case None => lit(0)
-              })
-              .repartition(col("cell"))
-              .write.mode("overwrite").parquet(staged("vecs_tail"))
+              }), staged("vecs_tail"), "overwrite")
           })
         // the coded postings delta: the SAME admitted rows, frozen-
-        // centroid cell + frozen-codebook encode, through the SAME
-        // staged publish — the postings can never lag the raw store
+        // centroid cell + frozen-codebook encode (which clusters its
+        // output by cell), through the SAME staged publish — the postings
+        // can never lag the raw store
         val fVecPq =
           if (!semantic || !vecPq) None
           else vecQuant.filter(_.codebooks.isDefined).map { q =>
@@ -963,9 +820,9 @@ object CurationChain {
         outcomes.collectFirst { case scala.util.Failure(e) => e }
           .foreach(e => throw e)
         pendingFronts.put((rootDir, batchId),
-          Seq(bloomDir -> scala.concurrent.Await.result(fExactFront,
+          Seq(ScreenStore.Exact -> scala.concurrent.Await.result(fExactFront,
               scala.concurrent.duration.Duration.Inf)._1,
-            sigBloomDir -> scala.concurrent.Await.result(fSigFront,
+            ScreenStore.Sigs -> scala.concurrent.Await.result(fSigFront,
               scala.concurrent.duration.Duration.Inf)))
       } catch {
         // the body's error stays the primary one; a drain failure on top
@@ -987,49 +844,32 @@ object CurationChain {
     stageCurated(rootDir, threshold, batch, None, batchId, vecNprobe,
       budgets, budgetDefault, vecPq)
 
-  /** Derived state the recover sweep also heals (their cadence rebuilds
-    * go through the same rename swap as compaction).
-    */
-  private val DerivedNames = Seq("bloom", "sigbloom")
-
-  /** Blob deltas staged by [[stageCurated]], waiting for their publish
+  /** Front deltas staged by [[stageCurated]], waiting for their publish
     * to land so they can merge into the driver-cached fronts
-    * ([[StoreLayout.noteFrontDelta]]). A replay that skips staging never
+    * ([[ScreenStore.noteFront]]). A replay that skips staging never
     * creates an entry — the cache then re-reads on its fingerprint
     * mismatch, which is the safe fallback.
     */
   private val pendingFronts = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Seq[(String, Seq[(Int, Array[Byte])])]]()
+    (String, Long), Seq[(ScreenStore, Seq[(Int, Array[Byte])])]]()
 
   private def mergePendingFronts(spark: SparkSession, rootDir: String,
       batchId: Long): Unit =
     Option(pendingFronts.remove((rootDir, batchId))).foreach(_.foreach {
-      case (dir, blobs) => StoreLayout.noteFrontDelta(spark, dir, blobs)
+      case (store, blobs) => store.noteFront(spark, rootDir, blobs)
     })
 
-  /** Rebuild the bloom fronts from the CURRENT store rows — the cadence
-    * maintenance that collapses the per-trigger delta blobs into one
-    * blob per bucket and drops tombstone-retired keys (the deltas are a
-    * safe superset until then). Runs after the stores compact, in the
-    * same between-triggers slot.
+  /** The compaction cadence's store maintenance: each screen store merges
+    * its tail and rebuilds its front ([[ScreenStore.View.compact]]), then
+    * the flat stores compact. Runs between triggers, after any tombstone
+    * apply, so the rebuilt fronts shed the retired keys.
     */
-  private def rebuildBlooms(spark: SparkSession, rootDir: String): Unit = {
+  private def compactStores(spark: SparkSession, rootDir: String): Unit = {
     val P = StoreLayout.ensureLayout(spark, rootDir, StoreNames)
-    def rebuild(storeDir: String, bloomDir: String,
-        keys: DataFrame => DataFrame): Unit =
-      if (hasData(spark, storeDir)) {
-        val keyed = keys(read(spark, storeDir))
-          .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
-        val blobs = StoreLayout.bloomDelta(keyed,
-          math.max(1L, keyed.count()), P)
-        if (hasData(spark, bloomDir))
-          StoreCompact.rewrite(spark, bloomDir, _ => blobs, targetFiles = 1)
-        else blobs.coalesce(1).write.mode("overwrite").parquet(bloomDir)
-      }
-    rebuild(s"$rootDir/exact", s"$rootDir/bloom",
-      _.select(StoreLayout.keyHash(col("content_hash")).as("__h")))
-    rebuild(s"$rootDir/sigs", s"$rootDir/sigbloom",
-      _.select(StoreLayout.keyHash(col("band"), col("bh")).as("__h")))
+    ScreenStore.All.foreach(_.at(spark, rootDir, P).compact())
+    FlatStores.map(s => s"$rootDir/$s")
+      .filter(hasData(spark, _))
+      .foreach(StoreCompact.compact(spark, _))
   }
 
   /** Default founding floor of the `vecs` cell layout: below it the
@@ -1053,8 +893,8 @@ object CurationChain {
   private def maintainVecCells(spark: SparkSession, rootDir: String,
       floor: Int, rebuildFactor: Double = 4.0,
       vecPq: Boolean = true): Unit = {
-    val vecDir = s"$rootDir/vecs"
-    val vecpqDir = s"$rootDir/vecpq"
+    val vecDir = ScreenStore.Vecs.dir(rootDir)
+    val vecpqDir = ScreenStore.VecPq.dir(rootDir)
     val cellsDir = s"$rootDir/vec_cells"
     val (fs, cellsPath) = hadoopFs(spark, cellsDir)
     // stale residue from a crashed (re)founding: the store is the truth
@@ -1065,11 +905,11 @@ object CurationChain {
     val quant = loadVecQuantizer(spark, rootDir)
     val needs = quant match {
       case None =>
-        read(spark, vecDir).count() >= floor
+        ScreenStore.Vecs.read(spark, vecDir).count() >= floor
       case Some(q) if vecPq && q.codebooks.isEmpty =>
         true // founded before the coded layout existed — upgrade refound
       case Some(q) =>
-        val counts = read(spark, vecDir).groupBy("cell")
+        val counts = ScreenStore.Vecs.read(spark, vecDir).groupBy("cell")
           .agg(count(lit(1)).as("n"))
           .agg(max("n").as("hot"), sum("n").as("total")).head
         !counts.isNullAt(0) &&
@@ -1079,7 +919,7 @@ object CurationChain {
     if (!needs) return
     // EVERY read of the pre-rewrite store happens here, before the
     // swaps below delete the files those plans listed
-    val src = read(spark, vecDir).select("vec_id", "embedding")
+    val src = ScreenStore.Vecs.read(spark, vecDir).select("vec_id", "embedding")
     val n = src.count()
     val nlist = math.max(2, math.min(4096, math.ceil(math.sqrt(n.toDouble)).toInt))
     val newCents = graft.llm.Similarity.trainCentroids(src, nlist)
@@ -1124,7 +964,7 @@ object CurationChain {
     newCbs.foreach { cbs =>
       def encoded(ignored: DataFrame): DataFrame =
         graft.llm.Similarity.encodeIvfCode(
-            read(spark, vecDir).select("vec_id", "embedding", "b"),
+            ScreenStore.Vecs.read(spark, vecDir).select("vec_id", "embedding", "b"),
             newCents, cbs, withMargin = true)
           .withColumnRenamed("neighbor_id", "vec_id")
       if (hasData(spark, vecpqDir))
@@ -1168,13 +1008,7 @@ object CurationChain {
       mergePendingFronts(spark, rootDir, batchId)
     }
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      BucketedStores.foreach { case (s, pc) =>
-        StoreCompact.mergeTail(spark, s"$rootDir/$s", pc)
-      }
-      FlatStores.map(s => s"$rootDir/$s")
-        .filter(hasData(spark, _))
-        .foreach(StoreCompact.compact(spark, _))
-      rebuildBlooms(spark, rootDir)
+      compactStores(spark, rootDir)
       maintainVecCells(spark, rootDir, vecCellFloor, vecRebuildFactor, vecPq)
     }
   }
@@ -1203,9 +1037,8 @@ object CurationChain {
     }.getOrElse(spark.emptyDataFrame)
 
   /** Which id column retires a store's rows when its doc tombstones. */
-  private val StoreKeys = Seq("exact" -> "doc_id", "phash" -> "media_id",
-    "sigs" -> "doc_id", "vecs" -> "vec_id", "vecpq" -> "vec_id",
-    "admitted" -> "doc_id")
+  private val StoreKeys =
+    ScreenStore.All.map(st => st.name -> st.id) :+ ("admitted" -> "doc_id")
 
   /** Physically remove tombstoned rows (a row retires when a tombstone
     * with `asOf > b` exists for its doc) from every store, then clear
@@ -1291,16 +1124,10 @@ object CurationChain {
     }
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
       applyTombstones(spark, rootDir)
-      BucketedStores.foreach { case (s, pc) =>
-        StoreCompact.mergeTail(spark, s"$rootDir/$s", pc)
-      }
-      FlatStores.map(s => s"$rootDir/$s")
-        .filter(hasData(spark, _))
-        .foreach(StoreCompact.compact(spark, _))
-      // bloom rebuild AFTER the tombstone apply + merge: the fronts shed
+      // front rebuild AFTER the tombstone apply + merge: the fronts shed
       // the retired keys here (they were a safe superset until now) and
       // the rebuilt blobs cover the merged mains completely
-      rebuildBlooms(spark, rootDir)
+      compactStores(spark, rootDir)
       maintainVecCells(spark, rootDir, vecCellFloor, vecRebuildFactor, vecPq)
     }
   }

@@ -16,20 +16,13 @@ import org.apache.spark.sql.functions._
   *
   * State is BOUNDED by content, not by rows ingested: the store holds
   * one logical (media_id, h) row — 16 bytes + id — per ADMITTED image,
-  * never the pixels, persisted PRE-BANDED (8 byte-band rows each) under
-  * the same [[StoreLayout]] as the composed [[CurationChain]]'s phash
-  * store: bucketed by the (band, v) join key so a trigger reads
-  * candidate buckets instead of re-banding the whole store (r14 verdict
-  * item 1 — the standalone body previously kept a flat store and paid
-  * O(corpus) per trigger). The screen reuses the q222 machinery: 8×8-bit
-  * band join with the q42 hot-bucket cap on the STORE side (an over-cap
-  * band value is non-discriminative and alone would put
-  * |bucket|·|batch| candidates on one reducer; a true pair keeps its 7
-  * other bands), exact bit_count(xor) ≤ maxHamming verify. No bloom
-  * front: (band, v) has only 2048 values, so a populated store
-  * saturates every key — the bucket pruning itself is what bounds the
-  * read (effective while the batch's band-key set is small against the
-  * bucket count), exactly the chain's reasoning for its phash store.
+  * never the pixels, kept as the bucketed [[ScreenStore.Phash]] store the
+  * composed [[CurationChain]] also keeps, so a trigger reads candidate
+  * buckets instead of re-banding the whole store. The screen reuses the
+  * q222 machinery: 8×8-bit band join with the q42 hot-bucket cap on the
+  * STORE side (an over-cap band value is non-discriminative and alone
+  * would put |bucket|·|batch| candidates on one reducer; a true pair
+  * keeps its 7 other bands), exact bit_count(xor) ≤ maxHamming verify.
   */
 object ImageDedupStream {
 
@@ -94,23 +87,6 @@ object ImageDedupStream {
     }
   }
 
-  /** The admitted hashes a consumer (or a spec) reads: one (media_id, h)
-    * row per admitted image, reconstructed from the banded store
-    * (main + un-merged tail).
-    */
-  def storeRows(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val parts = Seq(s"$storeDir/phash", s"$storeDir/phash_tail")
-      .filter(StoreCompact.hasData(spark, _)).map(spark.read.parquet(_))
-    require(parts.nonEmpty, s"phash store has no data under $storeDir")
-    parts.map(_.select("media_id", "h")).reduce(_ unionByName _).distinct()
-  }
-
-  private def storePresent(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Boolean =
-    StoreCompact.hasData(spark, s"$storeDir/phash") ||
-      StoreCompact.hasData(spark, s"$storeDir/phash_tail")
-
   /** The full trigger body for a parquet-backed band store root: hash the
     * batch's image bytes (decode failures are data — dropped, not
     * errors), screen against the standing store (missing/empty =
@@ -118,30 +94,24 @@ object ImageDedupStream {
     * `stream.writeStream.foreachBatch(ImageDedupStream.ingestInto(dir) _)`
     * with a (media_id, content) batch.
     *
-    * LAYOUT-BACKED (r14 verdict item 1): `storeDir` is a [[StoreLayout]]
-    * root — `phash` holds PRE-BANDED rows (media_id, h, band, v)
-    * bucketed by the (band, v) join key, `phash_tail` the flat deltas
-    * since the last merge. A trigger reads only the buckets its batch's
-    * ~8·|batch| band keys map to, plus the cadence-bounded tail —
-    * per-trigger cost bounded by the batch, not store size
-    * (StandaloneStoreBench measures the curve). A replayed batch's rows
-    * reject as their own duplicates (hamming 0), so nothing
-    * double-appends — the single-store convergence argument unchanged.
+    * `storeDir` is a root holding the [[ScreenStore.Phash]] store: a
+    * trigger reads only the buckets its batch's ~8·|batch| band keys map
+    * to, plus the cadence-bounded tail, so its cost is bounded by the
+    * batch, not by store size. A replayed batch's rows reject as their
+    * own duplicates (hamming 0), so nothing double-appends.
     *
-    * `compactEvery` > 0 folds the tail into the bucketed main
-    * ([[StoreCompact.mergeTail]]) every that-many triggers (keyed on
-    * batchId, so restarts don't reset the cadence) — the
-    * append-per-trigger tail otherwise fragments into the small-file
+    * `compactEvery` > 0 folds the tail into the main every that-many
+    * triggers (keyed on batchId, so restarts don't reset the cadence) —
+    * the append-per-trigger tail otherwise fragments into the small-file
     * layout StoreBench measures at 2.3–6.3× probe cost.
     */
   def ingestInto(storeDir: String, maxHamming: Int = 7, maxBucket: Int = 1024,
       compactEvery: Int = 0)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val phashDir = s"$storeDir/phash"
-    Seq(phashDir, s"${phashDir}_tail")
-      .foreach(StoreCompact.recover(spark, _))
-    val P = StoreLayout.ensureLayout(spark, storeDir, Seq("phash"))
+    ScreenStore.Phash.dirs(storeDir).foreach(StoreCompact.recover(spark, _))
+    val store = ScreenStore.Phash.at(spark, storeDir,
+      StoreLayout.ensureLayout(spark, storeDir, Seq("phash")))
     val dh = udf((b: Array[Byte]) => ImageCodec.dHashOf(b))
     // the decode is the expensive kernel and foreachBatch re-executes the
     // plan per action (screen jobs + append) — hash once, persist the
@@ -157,44 +127,30 @@ object ImageDedupStream {
           .select(col("db").as("media_id")).distinct()
         val survivors = hashed.join(inDrops, Seq("media_id"), "left_anti")
         val admitted =
-          if (!storePresent(spark, storeDir)) survivors
+          if (!store.present) survivors
           else {
-            val bandKeys = MultimodalQueries.bandExplode(survivors, "new_id")
-              .select(col("b").as("band"), col("v")).distinct()
-              .withColumn("pb", StoreLayout.bucketOf(
-                StoreLayout.keyHash(col("band"), col("v")), P))
-            val pbs = StoreLayout.bucketsPresent(bandKeys)
-            val tailDir = phashDir + "_tail"
-            val parts = Seq(
-              if (pbs.nonEmpty && StoreCompact.hasData(spark, phashDir))
-                Some(StoreLayout.prunedRead(spark, phashDir, "pb", pbs))
-              else None,
-              if (StoreCompact.hasData(spark, tailDir))
-                Some(spark.read.parquet(tailDir))
-              else None).flatten
-            if (parts.isEmpty) survivors
-            else {
-              val st = parts.map(_.select("media_id", "h", "band", "v"))
-                .reduce(_ unionByName _)
-              val dups = hammingPairsAgainstBands(survivors, st,
-                  maxHamming, maxBucket)
-                .select(col("new_id").as("media_id")).distinct()
-              survivors.join(dups, Seq("media_id"), "left_anti")
+            val bandKeys = store.tagged(MultimodalQueries
+              .bandExplode(survivors, "new_id")
+              .select(col("b").as("band"), col("v")).distinct())
+            store.candidates(Seq("media_id", "h", "band", "v"), bandKeys) match {
+              case None => survivors
+              case Some(st) =>
+                val dups = hammingPairsAgainstBands(survivors, st,
+                    maxHamming, maxBucket)
+                  .select(col("new_id").as("media_id")).distinct()
+                survivors.join(dups, Seq("media_id"), "left_anti")
             }
           }
         // the admitted plan reads the store the append grows — truncate
         // the lineage before writing
-        MultimodalQueries.bandExplode(admitted, "media_id")
-          .select(col("media_id"), col("h"), col("b").as("band"), col("v"))
-          .withColumn("pb", StoreLayout.bucketOf(
-            StoreLayout.keyHash(col("band"), col("v")), P))
-          .localCheckpoint()
-          .repartition(col("pb"))
-          .write.mode("append").parquet(phashDir + "_tail")
+        store.writeDelta(
+          store.tagged(MultimodalQueries.bandExplode(admitted, "media_id")
+            .select(col("media_id"), col("h"), col("b").as("band"), col("v")))
+            .localCheckpoint(),
+          ScreenStore.Phash.tail(storeDir), "append")
       }
     } finally { hashed.unpersist(); () }
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      StoreCompact.mergeTail(spark, phashDir, Seq("pb")); ()
-    }
+    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+      store.compact()
   }
 }

@@ -20,12 +20,12 @@ import org.apache.spark.sql.functions._
   * semantics exist here — the streaming layer only sequences the
   * oracle-gated batch operators and owns the corpus append.
   *
-  * Scale: per-trigger work is |batch|·cellSize cosines + one corpus
-  * cell-assignment pass; the corpus side re-reads per trigger — the
-  * right trade below ~10⁶ rows (measured, SemIngestBench), while the
-  * PERSISTED-index lifecycle ([[ingestIntoIndexed]]: frozen cells,
-  * PQ-coded postings, candidate-bounded exact verify) is the
-  * corpus-size-flat path past it.
+  * Scale: [[admitBatch]]'s per-trigger work is |batch|·cellSize cosines
+  * plus one corpus cell-assignment pass. The trigger body
+  * ([[ingestIntoIndexed]]) runs it against the whole corpus only below
+  * the index floor; past it the PERSISTED index (frozen cells, PQ-coded
+  * postings, candidate-bounded exact verify) keeps per-trigger cost
+  * flat in corpus size.
   */
 object SemDedupStream {
 
@@ -120,50 +120,6 @@ object SemDedupStream {
     }
   }
 
-  /** The full trigger body for a parquet-backed corpus store: screen the
-    * batch against `corpusDir` (missing/empty dir = bootstrap) and
-    * append the admitted rows to it. Wire as
-    * `stream.writeStream.foreachBatch(SemDedupStream.ingestInto(dir, t) _)`.
-    * `compactEvery` > 0 runs [[StoreCompact]] after every that-many
-    * triggers (keyed on batchId so restarts keep the cadence).
-    *
-    * DEPRECATED (r14 verdict item 1): this body re-reads the FLAT corpus
-    * per trigger — O(admitted corpus) per micro-batch, the regime the
-    * layout-backed paths escaped. It stays correct and is the cheaper
-    * trade only below ~10⁶ corpus rows (measured, SemIngestBench);
-    * [[ingestIntoIndexed]] is the standalone scale path (persisted
-    * frozen-cell PQ index, per-trigger cost measured corpus-size-FLAT)
-    * and the composed [[CurationChain]] the multi-screen one.
-    */
-  @deprecated("the flat store scans O(corpus) per trigger — use " +
-    "ingestIntoIndexed (corpus-size-flat) or the composed CurationChain",
-    "r15")
-  def ingestInto(corpusDir: String, threshold: Double, probes: Int = 4,
-      compactEvery: Int = 0)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    StoreCompact.recover(spark, corpusDir) // heal an interrupted compaction
-    // Bootstrap detection by actual path existence (Hadoop FileSystem),
-    // not by matching the AnalysisException message text — error phrasing
-    // varies across Spark versions/locales and a mismatch would crash the
-    // first trigger instead of bootstrapping.
-    val corpus =
-      if (StoreCompact.hasData(spark, corpusDir))
-        spark.read.parquet(corpusDir).select("vec_id", "embedding")
-      else spark.emptyDataFrame
-    // foreachBatch re-executes the batch plan per action (two here:
-    // the screen's pair jobs and the append) — persist, the soak lesson
-    val pinned = batch.persist()
-    try {
-      val admitted = admitBatch(pinned, corpus, threshold, probes)
-      admitted.select("vec_id", "embedding")
-        .write.mode("append").parquet(corpusDir)
-    } finally { pinned.unpersist(); () }
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      StoreCompact.compact(spark, corpusDir); ()
-    }
-  }
-
   /** How many corpus rows must exist before the persisted index is worth
     * founding: below ~4 vectors/cell the trained quantizer is noise and
     * the per-trigger screens are cheap anyway.
@@ -249,8 +205,11 @@ object SemDedupStream {
   }
 
 
-  /** The INDEXED trigger body — [[ingestInto]] with the persisted-index
-    * lifecycle composed in (r12 verdict item 2). Layout under `rootDir`:
+  /** The trigger body: screen each batch against the standing corpus and
+    * admit the novel vectors, with the persisted-index lifecycle composed
+    * in (r12 verdict item 2). Wire as
+    * `stream.writeStream.foreachBatch(SemDedupStream.ingestIntoIndexed(root, t) _)`.
+    * Layout under `rootDir`:
     * `corpus` (vec_id, embedding, b — the source of truth) and `ivf`
     * (centroids + PQ codebooks + cell-partitioned m-byte CODE postings —
     * derived; [[Similarity.buildIvfCodeIndex]], r13 verdict item 2: the

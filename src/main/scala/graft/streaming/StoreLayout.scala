@@ -5,41 +5,22 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
 
-/** The streaming screen stores' ON-DISK layout: every store a screen
-  * re-reads per trigger is hive-partitioned by a BUCKET of its join key,
-  * so a trigger reads candidate buckets instead of scanning the whole
-  * store (r13 verdict item 1 — the one remaining O(corpus)-per-trigger
-  * regime in the composed chain):
-  *
-  *  - `exact`   — bucket of the content hash; fronted by `bloom`
-  *  - `sigs`    — PRE-BANDED rows, bucket of the (band, bh) join key;
-  *                fronted by `sigbloom` over the same band keys
-  *  - `phash`   — PRE-BANDED rows, bucket of the (band, v) byte-band key
-  *  - `vecs`    — IVF cell under frozen trained centroids (the q220
-  *                postings layout), probe-pruned like the persisted index
-  *
-  * The BLOOM FRONT is what makes the per-trigger cost sublinear in store
-  * size rather than merely divided by the bucket count: each trigger's
-  * admitted keys stage one (bucket, blob) delta row through the same
-  * [[StoreTxn]] publish as the store rows themselves (so the front can
-  * never miss a published key — a false NEGATIVE would re-admit a
-  * duplicate, while the front's false positives only fall through to the
-  * exact anti-join, which stays correct). A batch key whose blobs all
-  * miss is DEFINITELY novel and its bucket is never read; only 'maybe'
-  * keys (true dups + the designed ε of false positives) pull their
-  * buckets. Tombstoned rows stay in the blobs until the compaction
-  * cadence rebuilds them from the live store — a superset, safe by the
-  * same one-sidedness.
+/** The primitives under the screen stores' layout ([[ScreenStore]],
+  * which describes the layout and is the only code that uses them on a
+  * store): a root's bucket count and `_layout` marker, the join-key hash
+  * and its bucket, and the bloom front — driver-built and driver-written
+  * deltas, the distributed build the compaction cadence rebuilds with,
+  * and the probe through a driver-cached copy of the blobs.
   *
   * Bucket count is fixed per store root at creation (`_layout` marker):
   * bucket assignment is a pure function of the key and the count, so
   * changing the count under existing stores would silently read the
   * wrong buckets — a root written under a different count fails loudly
-  * instead. The division of labor: the BLOOM front makes the all-novel
-  * trigger free (zero buckets read at the designed ε), and the BUCKET
-  * count bounds what a dup-bearing trigger pays (each true duplicate
-  * key reads its bucket = 1/buckets of the store); at 100 TB raise
-  * [[DefaultBuckets]] for new roots to keep that per-dup slice small.
+  * instead. The bloom front makes the all-novel trigger free (zero
+  * buckets read at the designed ε), and the bucket count bounds what a
+  * dup-bearing trigger pays (each true duplicate key reads its bucket =
+  * 1/buckets of the store); at 100 TB raise [[DefaultBuckets]] for new
+  * roots to keep that per-dup slice small.
   */
 object StoreLayout {
 
@@ -114,22 +95,6 @@ object StoreLayout {
   /** Bucket of a [[keyHash]] value. */
   def bucketOf(h: Column, buckets: Int): Column =
     pmod(shiftrightunsigned(h, 32), lit(buckets.toLong)).cast("int")
-
-  /** The distinct bucket values present in `df.pb` — a driver-side
-    * collect BOUNDED by the root's bucket count (the same contract as
-    * the IVF probed-cell collect).
-    */
-  def bucketsPresent(df: DataFrame): Seq[Int] =
-    df.select("pb").distinct().collect().map(_.getInt(0)).toSeq.sorted
-
-  /** Read only `parts` of a `partCol`-partitioned store — static
-    * partition pruning keeps unlisted buckets' files unopened. A known
-    * `schema` skips the footer-inference job of a plain read.
-    */
-  def prunedRead(spark: SparkSession, dir: String, partCol: String,
-      parts: Seq[Int], schema: Option[StructType] = None): DataFrame =
-    schema.fold(spark.read)(spark.read.schema(_)).parquet(dir)
-      .filter(col(partCol).isin(parts.map(Integer.valueOf): _*))
 
   /** The columns of a bloom front: one sealed blob per bucket per delta
     * ([[bloomDelta]], [[bloomDeltaLocal]]). Fronts are read under it, so
@@ -288,13 +253,12 @@ object StoreLayout {
     }.sortBy(_._1)
   }
 
-  /** Write `blobs` (a [[bloomDeltaLocal]] delta) into `dir` as ONE
+  /** Add `blobs` (a [[bloomDeltaLocal]] delta) to `dir` as ONE new
     * [[FrontSchema]] parquet file, from the driver: the blobs are already
     * here, so a Spark write would be a 1-task job that only ships them
-    * out and back. Replaces whatever `dir` held (an overwrite, as a
-    * staged write is). An empty delta writes a file with no rows, as
-    * Spark does, so the directory always holds exactly one data file —
-    * the shape [[noteFrontDelta]] seeds from.
+    * out and back. An empty delta writes a file with no rows, as Spark
+    * does, so a fresh directory holds exactly one data file — the shape
+    * [[noteFrontDelta]] seeds from.
     */
   def writeFrontLocal(spark: SparkSession, dir: String,
       blobs: Seq[(Int, Array[Byte])]): Unit = {
@@ -306,7 +270,6 @@ object StoreLayout {
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.MessageTypeParser
     val (fs, p) = fsOf(spark, dir)
-    fs.delete(p, true)
     fs.mkdirs(p)
     val schema = MessageTypeParser.parseMessageType(
       "message spark_schema { optional int32 pb; optional binary bloom; }")

@@ -27,12 +27,10 @@ import org.apache.spark.sql.functions._
   * exact screen upstream already holds.
   *
   * State is BOUNDED by admitted content: one logical (doc_id, sig) row —
-  * k longs + id — per admitted doc, never text, persisted PRE-BANDED
-  * (8 band rows each) under the same [[StoreLayout]] as the composed
-  * [[CurationChain]]'s signature store: bucketed by the (band, bh) join
-  * key and bloom-fronted, so a trigger reads candidate buckets instead
-  * of re-banding the whole store (r14 verdict item 1 — the standalone
-  * body previously kept a flat store and paid O(corpus) per trigger).
+  * k longs + id — per admitted doc, never text, kept as the bucketed,
+  * bloom-fronted [[ScreenStore.Sigs]] store the composed [[CurationChain]]
+  * also keeps, so a trigger reads candidate buckets instead of
+  * re-banding the whole store.
   */
 object TextDedupStream {
 
@@ -164,24 +162,6 @@ object TextDedupStream {
     }
   }
 
-  /** The admitted signatures a consumer (or a spec) reads: one
-    * (doc_id, sig) row per admitted doc, reconstructed from the banded
-    * store (main + un-merged tail). The band rows are the store's
-    * physical layout; this is its logical content.
-    */
-  def storeRows(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val parts = Seq(s"$storeDir/sigs", s"$storeDir/sigs_tail")
-      .filter(StoreCompact.hasData(spark, _)).map(spark.read.parquet(_))
-    require(parts.nonEmpty, s"signature store has no data under $storeDir")
-    parts.map(_.select("doc_id", "sig")).reduce(_ unionByName _).distinct()
-  }
-
-  private def storePresent(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Boolean =
-    StoreCompact.hasData(spark, s"$storeDir/sigs") ||
-      StoreCompact.hasData(spark, s"$storeDir/sigs_tail")
-
   /** The full trigger body for a parquet-backed signature store root:
     * sign the batch's (doc_id, text) rows, screen against the standing
     * store (missing/empty = bootstrap), admit the novel docs. Wire as
@@ -189,42 +169,30 @@ object TextDedupStream {
     * — downstream of [[CorpusIngest]]'s quality + exact-hash gate when
     * composing the full curation ingest.
     *
-    * LAYOUT-BACKED (r14 verdict item 1 — this body used to re-read and
-    * re-band a FLAT (doc_id, sig) store per trigger, the exact
-    * O(admitted-corpus)/trigger regime the composed [[CurationChain]]
-    * escaped): `storeDir` is a [[StoreLayout]] root — `sigs` holds
-    * PRE-BANDED rows (doc_id, sig, band, bh) bucketed by the (band, bh)
-    * join key, `sigs_tail` the flat deltas since the last merge, and
-    * `sigbloom` the bloom front. A trigger probes the front (a batch
-    * band key whose blobs miss has no store partner — only near-dups
-    * collide on a band hash, so a novel batch reads ZERO main buckets),
-    * reads the candidates' buckets plus the cadence-bounded tail, and
-    * screens via [[sigPairsAgainstBands]] — per-trigger cost is bounded
-    * by the batch and its true duplicates, not store size
-    * (StandaloneStoreBench measures the curve).
+    * `storeDir` is a root holding the [[ScreenStore.Sigs]] store (its
+    * layout and front are described there): a trigger probes the front,
+    * reads the candidates' buckets plus the tail, and screens via
+    * [[sigPairsAgainstBands]], so its cost is bounded by the batch and
+    * its true duplicates, not by store size.
     *
-    * CONVERGENCE without a txn (the single-store argument extended to
-    * the front): the bloom delta appends BEFORE the band rows, so every
-    * crash window leaves the front a safe SUPERSET of the store — a
-    * false positive only costs a bucket read; the reverse order could
-    * leave published rows uncovered and re-admit their duplicates. A
-    * replayed batch re-screens against the grown store and its rows
-    * reject as their own duplicates, so nothing double-appends.
+    * CONVERGENCE without a txn: the front delta is written BEFORE the
+    * band rows, so every crash window leaves the front a safe SUPERSET
+    * of the store. A replayed batch re-screens against the grown store
+    * and its rows reject as their own duplicates, so nothing
+    * double-appends.
     *
-    * `compactEvery` > 0 folds the tail into the bucketed main
-    * ([[StoreCompact.mergeTail]]) and rebuilds the front every that-many
-    * triggers (keyed on batchId so restarts keep the cadence).
+    * `compactEvery` > 0 folds the tail into the main and rebuilds the
+    * front every that-many triggers (keyed on batchId so restarts keep
+    * the cadence).
     */
   def ingestInto(storeDir: String, bands: Int = 8, k: Int = 32,
       num: Int = 7, den: Int = 10, maxBucket: Int = 10000,
       compactEvery: Int = 0)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val sigDir = s"$storeDir/sigs"
-    val bloomDir = s"$storeDir/sigbloom"
-    Seq(sigDir, s"${sigDir}_tail", bloomDir)
-      .foreach(StoreCompact.recover(spark, _))
-    val P = StoreLayout.ensureLayout(spark, storeDir, Seq("sigs"))
+    ScreenStore.Sigs.dirs(storeDir).foreach(StoreCompact.recover(spark, _))
+    val store = ScreenStore.Sigs.at(spark, storeDir,
+      StoreLayout.ensureLayout(spark, storeDir, Seq("sigs")))
     // the signature agg is the expensive stage and foreachBatch re-executes
     // the plan per action (screen jobs + append) — sign once, persist the
     // k-long/row projection (the q226/SemDedupStream lesson)
@@ -235,33 +203,12 @@ object TextDedupStream {
           .select(col("db").as("doc_id")).distinct()
         val survivors = signed.join(inDrops, Seq("doc_id"), "left_anti")
         val admitted =
-          if (!storePresent(spark, storeDir)) survivors
+          if (!store.present) survivors
           else {
-            val nBands = bandize(survivors, "new_id", bands, k / bands)
-              .withColumn("__h", StoreLayout.keyHash(col("band"), col("bh")))
-              .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
-            // driver-cached front probe — one filter in the batch plan,
-            // no per-trigger blob read job (StoreLayout.bloomScreen)
-            val maybe = StoreLayout.bloomScreen(spark, bloomDir, nBands)
-              .map(_.dropDuplicates("new_id", "band", "bh"))
-              .getOrElse(nBands)
-            val storeB = {
-              val tailDir = sigDir + "_tail"
-              // an empty candidate-bucket list means every batch key
-              // definitely missed the front — skip the main read entirely
-              val pbs = StoreLayout.bucketsPresent(maybe)
-              val parts = Seq(
-                if (pbs.nonEmpty && StoreCompact.hasData(spark, sigDir))
-                  Some(StoreLayout.prunedRead(spark, sigDir, "pb", pbs))
-                else None,
-                if (StoreCompact.hasData(spark, tailDir))
-                  Some(spark.read.parquet(tailDir))
-                else None).flatten
-              if (parts.isEmpty) None
-              else Some(parts.map(_.select("doc_id", "sig", "band", "bh"))
-                .reduce(_ unionByName _))
-            }
-            storeB match {
+            val maybe = store.probe(
+              store.keyed(bandize(survivors, "new_id", bands, k / bands)),
+              Seq("new_id", "band", "bh"))
+            store.candidates(Seq("doc_id", "sig", "band", "bh"), maybe) match {
               case None => survivors
               case Some(st) =>
                 val dups = sigPairsAgainstBands(maybe, st, k, num, den,
@@ -272,45 +219,19 @@ object TextDedupStream {
           }
         // the appends read nothing they grow, but the admitted plan DOES
         // read the store — truncate the lineage before writing
-        val keepBands = bandize(admitted, "doc_id", bands, k / bands)
-          .withColumn("pb", StoreLayout.bucketOf(
-            StoreLayout.keyHash(col("band"), col("bh")), P))
+        val keepBands = store.tagged(bandize(admitted, "doc_id", bands, k / bands))
           .localCheckpoint()
-        // the delta's keys collect to the driver (batch-scale) so the
-        // blobs build locally and merge into the cached front after the
-        // append — the next trigger's probe then runs without a blob
-        // read job. Bloom FIRST (superset-safe — see the object doc),
-        // then rows.
-        val keys = keepBands
-          .select(StoreLayout.keyHash(col("band"), col("bh")).as("__h"),
-            col("pb"))
-          .collect().map(r => (r.getLong(0), r.getInt(1)))
-        val blobs = StoreLayout.bloomDeltaLocal(keys,
-          math.max(1L, keys.length.toLong), P)
-        val sess = spark
-        import sess.implicits._
-        blobs.toDF("pb", "bloom")
-          .coalesce(1).write.mode("append").parquet(bloomDir)
-        StoreLayout.noteFrontDelta(spark, bloomDir, blobs)
-        keepBands.repartition(col("pb"))
-          .write.mode("append").parquet(sigDir + "_tail")
+        val keys = store.frontKeys(keepBands)
+        if (keys.nonEmpty) {
+          // front FIRST (superset-safe, see above), then rows
+          val front = ScreenStore.Sigs.frontDir(storeDir).get
+          val blobs = store.writeFront(front, keys, replace = false)
+          ScreenStore.Sigs.noteFront(spark, storeDir, blobs)
+          store.writeDelta(keepBands, ScreenStore.Sigs.tail(storeDir), "append")
+        }
       }
     } finally { signed.unpersist(); () }
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      StoreCompact.mergeTail(spark, sigDir, Seq("pb"))
-      if (storePresent(spark, storeDir)) {
-        val rows = Seq(sigDir, sigDir + "_tail")
-          .filter(StoreCompact.hasData(spark, _))
-          .map(spark.read.parquet(_).select("band", "bh"))
-          .reduce(_ unionByName _)
-          .withColumn("__h", StoreLayout.keyHash(col("band"), col("bh")))
-          .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
-        val blobs = StoreLayout.bloomDelta(rows,
-          math.max(1L, rows.count()), P)
-        if (StoreCompact.hasData(spark, bloomDir))
-          StoreCompact.rewrite(spark, bloomDir, _ => blobs, targetFiles = 1)
-        else blobs.coalesce(1).write.mode("overwrite").parquet(bloomDir)
-      }
-    }
+    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+      store.compact()
   }
 }

@@ -1,25 +1,26 @@
 package graft.tools
 
 import graft.LocalSpark
-import graft.streaming.{StoreLayout, TextDedupStream}
+import graft.streaming.{ScreenStore, StoreLayout, TextDedupStream}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Measures what the bucketed store layout + bloom front buys (r13
-  * verdict item 1): the chain's screens used to anti-join / band-join a
-  * micro-batch against the FULL standing store every trigger — cost
-  * linear in admitted-corpus size, forever. With the [[StoreLayout]]
-  * layout the exact screen consults the bloom front (novel hashes never
-  * touch the store) and reads candidate buckets only, and the signature
-  * screen does the same on (band, bh) keys.
+/** Measures what the bucketed screen-store layout and its bloom front buy
+  * (r13 verdict item 1): the chain's screens used to anti-join /
+  * band-join a micro-batch against the FULL standing store every trigger
+  * — cost linear in admitted-corpus size, forever. With the
+  * [[ScreenStore]] layout the exact screen consults the bloom front
+  * (novel hashes never touch the store) and reads candidate buckets only,
+  * and the signature screen does the same on (band, bh) keys.
   *
   * `runMain graft.tools.ChainStoreBench [batch] [iters] [sizes...]`
-  * builds exact + sig stores at each size (default 1e5, 4e5, 1.6e6 rows),
-  * times one trigger's exact + sig screens the OLD way (full-store scan)
-  * and the NEW way (bloom front + pruned buckets), min-of-`iters`, and
-  * prints one JSON line per size plus a sublinearity summary: the pruned
-  * cost curve should stay ~flat while the full-scan curve tracks store
-  * size.
+  * builds exact + sig stores at each size (default 1e5, 4e5, 1.6e6 rows)
+  * the way the compaction cadence leaves them (tail merged into the main,
+  * front rebuilt), times one trigger's exact + sig screens the OLD way
+  * (full-store scan) and the NEW way (front probe + pruned buckets, as
+  * the chain runs them), min-of-`iters`, and prints one JSON line per
+  * size plus a sublinearity summary: the pruned cost curve should stay
+  * ~flat while the full-scan curve tracks store size.
   */
 object ChainStoreBench {
   private def timeIt(iters: Int)(f: => Unit): Double = {
@@ -39,44 +40,29 @@ object ChainStoreBench {
       if (args.length > 2) args.drop(2).map(_.toInt).toSeq
       else Seq(100000, 400000, 1600000)
     val spark = LocalSpark.session()
-    val P = StoreLayout.DefaultBuckets
 
     val results = sizes.map { n =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_csb")
+      val root = java.nio.file.Files.createTempDirectory("graft_csb")
         .toFile.getAbsolutePath
-      val exactDir = s"$dir/exact"; val bloomDir = s"$dir/bloom"
-      val sigDir = s"$dir/sigs"; val sigBloomDir = s"$dir/sigbloom"
+      val P = StoreLayout.ensureLayout(spark, root, Seq("exact", "sigs"))
+      val exact = ScreenStore.Exact.at(spark, root, P)
+      val sigs = ScreenStore.Sigs.at(spark, root, P)
 
-      // ---- exact store: n content hashes, bucketed; one rebuilt bloom
-      val store = spark.range(n.toLong)
+      // ---- exact store: n content hashes
+      exact.writeDelta(spark.range(n.toLong)
         .select(col("id").as("doc_id"), sha2(conv(col("id"), 10, 16), 256)
           .as("content_hash"))
-        .withColumn("b", lit(0L))
-        .withColumn("pb", StoreLayout.bucketOf(
-          StoreLayout.keyHash(col("content_hash")), P))
-      store.repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(exactDir)
-      StoreLayout.bloomDelta(
-          store.select(StoreLayout.keyHash(col("content_hash")).as("__h"),
-            col("pb")), n.toLong, P)
-        .coalesce(1).write.mode("overwrite").parquet(bloomDir)
+        .withColumn("b", lit(0L)), ScreenStore.Exact.tail(root), "overwrite")
+      exact.compact()
 
-      // ---- sig store: n signatures (k=32 longs), pre-banded + bucketed
+      // ---- sig store: n signatures (k=32 longs), pre-banded
       val sigOf = (0 until 32).map(i =>
         xxhash64(col("doc_id") * 37 + lit(i)))
       val sigStore = spark.range(n.toLong)
         .select(col("id").as("doc_id"), array(sigOf: _*).as("sig"))
-      val bandedStore = TextDedupStream.bandRows(sigStore, "doc_id")
-        .withColumn("b", lit(0L))
-        .withColumn("pb", StoreLayout.bucketOf(
-          StoreLayout.keyHash(col("band"), col("bh")), P))
-      bandedStore.repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(sigDir)
-      StoreLayout.bloomDelta(
-          bandedStore.select(
-            StoreLayout.keyHash(col("band"), col("bh")).as("__h"), col("pb")),
-          8L * n, P)
-        .coalesce(1).write.mode("overwrite").parquet(sigBloomDir)
+      sigs.writeDelta(TextDedupStream.bandRows(sigStore, "doc_id")
+        .withColumn("b", lit(0L)), ScreenStore.Sigs.tail(root), "overwrite")
+      sigs.compact()
 
       // ---- one trigger's batch: batchN docs, ~4 true dups of store rows
       val batch = spark.range(batchN.toLong)
@@ -97,42 +83,30 @@ object ChainStoreBench {
 
       // ---- exact screen, old: anti-join the FULL store
       val exactFull = timeIt(iters) {
-        noop(batch.join(spark.read.parquet(exactDir).select("content_hash"),
+        noop(batch.join(ScreenStore.Exact.rows(spark, root).select("content_hash"),
           Seq("content_hash"), "left_anti"))
       }
       // ---- exact screen, new: bloom front → candidate buckets only
       val exactPruned = timeIt(iters) {
-        val keys = batch.select("content_hash").distinct()
-          .withColumn("__h", StoreLayout.keyHash(col("content_hash")))
-          .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
-        val maybe = StoreLayout.bloomMaybe(keys,
-            spark.read.parquet(bloomDir).select("pb", "bloom"))
-          .select("content_hash", "pb").distinct()
-        val pbs = StoreLayout.bucketsPresent(maybe)
-        noop(batch.join(
-          StoreLayout.prunedRead(spark, exactDir, "pb", pbs)
-            .select("content_hash"),
-          Seq("content_hash"), "left_anti"))
+        val maybe = exact.probe(exact.keyed(batch.select("content_hash").distinct()),
+          Seq("content_hash", "pb"))
+        noop(exact.candidates(Seq("content_hash"), maybe)
+          .map(st => batch.join(st, Seq("content_hash"), "left_anti"))
+          .getOrElse(batch))
       }
 
       // ---- sig screen, old: band-join the FULL banded store
       val sigFull = timeIt(iters) {
         noop(TextDedupStream.sigPairsAgainstBands(
           TextDedupStream.bandRows(batchSigs, "new_id"),
-          spark.read.parquet(sigDir).select("doc_id", "sig", "band", "bh")))
+          ScreenStore.Sigs.rows(spark, root).select("doc_id", "sig", "band", "bh")))
       }
       // ---- sig screen, new: sigbloom front → candidate buckets only
       val sigPruned = timeIt(iters) {
-        val nBands = TextDedupStream.bandRows(batchSigs, "new_id")
-          .withColumn("__h", StoreLayout.keyHash(col("band"), col("bh")))
-          .withColumn("pb", StoreLayout.bucketOf(col("__h"), P))
-        val maybe = StoreLayout.bloomMaybe(nBands,
-            spark.read.parquet(sigBloomDir).select("pb", "bloom"))
-          .dropDuplicates("new_id", "band", "bh")
-        val pbs = StoreLayout.bucketsPresent(maybe)
-        noop(TextDedupStream.sigPairsAgainstBands(maybe,
-          StoreLayout.prunedRead(spark, sigDir, "pb", pbs)
-            .select("doc_id", "sig", "band", "bh")))
+        val maybe = sigs.probe(sigs.keyed(TextDedupStream.bandRows(batchSigs, "new_id")),
+          Seq("new_id", "band", "bh"))
+        sigs.candidates(Seq("doc_id", "sig", "band", "bh"), maybe)
+          .foreach(st => noop(TextDedupStream.sigPairsAgainstBands(maybe, st)))
       }
       batch.unpersist(); batchSigs.unpersist()
       println(f"""{"store_rows":$n,"batch":$batchN,""" +

@@ -6,18 +6,14 @@ import graft.streaming.SemDedupStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Per-trigger cost of the streaming semantic screen, retrain-per-trigger
-  * vs the persisted-index lifecycle: `runMain graft.tools.SemIngestBench
-  * [corpusN] [batchN] [nTriggers] [dim] [nlist]` seeds an identical
-  * corpus into both layouts, then drives the same batches (90% novel,
-  * 10% exact dups of corpus vectors) through `SemDedupStream.ingestInto`
-  * (trains a cell map over the corpus EVERY trigger) and
+/** Per-trigger cost of the streaming semantic screen's persisted-index
+  * lifecycle: `runMain graft.tools.SemIngestBench [corpusN] [batchN]
+  * [nTriggers] [dim] [nlist]` seeds a corpus and its index, then drives
+  * batches (90% novel, 10% exact dups of corpus vectors) through
   * `SemDedupStream.ingestIntoIndexed` (frozen centroids, partition-pruned
-  * postings, exactly-once staged publication) and prints both per-trigger
-  * time series. The indexed path's win grows with the corpus: the
-  * retrain path re-assigns every corpus vector to cells per trigger,
-  * the indexed path reads only the probed cells' postings. Numbers land
-  * in PERFORMANCE.md.
+  * postings, exactly-once staged publication) and prints the index build
+  * time, the calibrated ADC margin and the per-trigger time series.
+  * Numbers land in PERFORMANCE.md.
   */
 object SemIngestBench {
   def main(args: Array[String]): Unit = {
@@ -41,11 +37,9 @@ object SemIngestBench {
 
     val base = java.nio.file.Files
       .createTempDirectory("graft_semingest").toFile.getAbsolutePath
-    val plainDir = s"$base/plain"
     val idxRoot = s"$base/indexed"
     val seed = spark.range(corpusN)
       .select(col("id").as("vec_id"), embOf(col("id")).as("embedding"))
-    seed.write.parquet(plainDir)
     seed.withColumn("b", lit(0L)).write.parquet(s"$idxRoot/corpus")
     val t0 = System.nanoTime()
     // the r14 screen layout: cells prune, full-vector PQ codes score —
@@ -66,7 +60,7 @@ object SemIngestBench {
       novel.unionByName(dups)
     }
 
-    def drive(label: String, body: (DataFrame, Long) => Unit): Seq[Double] =
+    def drive(body: (DataFrame, Long) => Unit): Seq[Double] =
       (0 until nTriggers).map { trig =>
         val b = batchDf(trig)
         val s0 = System.nanoTime()
@@ -74,32 +68,25 @@ object SemIngestBench {
         (System.nanoTime() - s0) / 1e9
       }
 
-    val retrain = drive("retrain",
-      SemDedupStream.ingestInto(plainDir, threshold = 0.92): @annotation.nowarn(
-        "cat=deprecation"))
     // AUTO margin (the r15 default): the index build CALIBRATED the ADC
     // error on this corpus (p99 residual norm persisted in ivf/calib) —
     // the hash-dense fixture is PQ's worst case (no cluster structure,
     // ~1 bit/dim quantization), where the r14 bench had to hand-widen
     // the margin to 0.30; the calibrated default now covers it without
     // operator knowledge. A wide margin only costs verify work, never
-    // correctness — the bench asserts decision parity via the row
-    // counts below.
-    val indexed = drive("indexed",
+    // correctness.
+    val indexed = drive(
       SemDedupStream.ingestIntoIndexed(idxRoot, threshold = 0.92,
         nlist = nlist, nprobe = 4, rebuildCheckEvery = 4))
     val calib = Similarity.adcCalibratedMargin(spark, s"$idxRoot/ivf")
-    val nPlain = spark.read.parquet(plainDir).count()
     val nIdx = spark.read.parquet(s"$idxRoot/corpus").count()
     def fmt(xs: Seq[Double]) = xs.map(x => f"$x%.2f").mkString("[", ",", "]")
     println(f"""{"corpus_n":$corpusN,"batch_n":$batchN,"dim":$dim,""" +
       f""""nlist":$nlist,"adc_margin_p99":${calib.getOrElse(-1.0)}%.3f,""" +
       f""""index_build_s":$buildS%.1f,""" +
-      f""""retrain_trigger_s":${fmt(retrain)},""" +
       f""""indexed_trigger_s":${fmt(indexed)},""" +
-      f""""retrain_total_s":${retrain.sum}%.1f,""" +
       f""""indexed_total_s":${indexed.sum}%.1f,""" +
-      f""""rows_plain":$nPlain,"rows_indexed":$nIdx}""")
+      f""""rows_indexed":$nIdx}""")
     spark.stop()
   }
 }

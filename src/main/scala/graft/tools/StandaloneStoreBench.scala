@@ -1,15 +1,14 @@
 package graft.tools
 
 import graft.LocalSpark
-import graft.streaming.{ImageDedupStream, StoreLayout, TextDedupStream}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.{ImageDedupStream, ScreenStore, StoreLayout, TextDedupStream}
 import org.apache.spark.sql.functions._
 
 /** Measures the STANDALONE ingest bodies' per-trigger cost against store
   * size (r14 verdict item 1: `TextDedupStream.ingestInto` and
   * `ImageDedupStream.ingestInto` used to re-read and re-band a FLAT
   * store every trigger — O(admitted corpus) per micro-batch; they now
-  * ride the same [[StoreLayout]] bucketed + bloom-fronted layout as the
+  * ride the same bucketed, bloom-fronted [[ScreenStore]] layout as the
   * composed chain, so the curve should go ~flat where the old one
   * tracked store size).
   *
@@ -20,7 +19,8 @@ import org.apache.spark.sql.functions._
   * joins.
   *
   * `runMain graft.tools.StandaloneStoreBench [batch] [iters] [sizes...]`
-  * seeds stores at each size (default 1e5, 4e5, 1.6e6 logical rows),
+  * seeds stores at each size (default 1e5, 4e5, 1.6e6 logical rows) the
+  * way the compaction cadence leaves them (tail merged, front rebuilt),
   * times one all-novel trigger and one dup-bearing trigger through each
   * body (min-of-`iters` after a warm pass), and prints one JSON line per
   * size plus a growth summary.
@@ -36,13 +36,6 @@ object StandaloneStoreBench {
   private def doc(id: Long): String =
     (0 until 40).map(j => s"w${id}x$j").mkString(" ")
 
-  // one canonical marker writer: ensureLayout on the still-empty root
-  // (hand-writing the format here would drift from the shipped code)
-  private def writeLayoutMarker(spark: SparkSession, root: String,
-      store: String): Unit = {
-    StoreLayout.ensureLayout(spark, root, Seq(store)); ()
-  }
-
   def main(args: Array[String]): Unit = {
     val batchN = if (args.length > 0) args(0).toInt else 256
     val iters = if (args.length > 1) args(1).toInt else 3
@@ -51,7 +44,6 @@ object StandaloneStoreBench {
       else Seq(100000, 400000, 1600000)
     val spark = LocalSpark.session()
     import spark.implicits._
-    val P = StoreLayout.DefaultBuckets
 
     // 64 REAL docs whose signatures seed the store so a dup batch can
     // plant true edits of them; the synthetic bulk fills the rest
@@ -67,24 +59,19 @@ object StandaloneStoreBench {
 
       // ---- text store: n synthetic sigs + the 64 real ones, pre-banded
       // (marker first: ensureLayout fails loudly on data-before-marker)
-      writeLayoutMarker(spark, textRoot, "sigs")
+      val sigs = ScreenStore.Sigs.at(spark, textRoot,
+        StoreLayout.ensureLayout(spark, textRoot, Seq("sigs")))
       val sigOf = (0 until 32).map(i => xxhash64(col("doc_id") * 37 + lit(i)))
       val sigStore = spark.range(n.toLong)
         .select(col("id").as("doc_id"), array(sigOf: _*).as("sig"))
         .unionByName(knownSigs)
-      val banded = TextDedupStream.bandRows(sigStore, "doc_id")
-        .withColumn("pb", StoreLayout.bucketOf(
-          StoreLayout.keyHash(col("band"), col("bh")), P))
-      banded.repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(s"$textRoot/sigs")
-      StoreLayout.bloomDelta(
-          banded.select(
-            StoreLayout.keyHash(col("band"), col("bh")).as("__h"), col("pb")),
-          8L * (n + 64L), P)
-        .coalesce(1).write.mode("overwrite").parquet(s"$textRoot/sigbloom")
+      sigs.writeDelta(TextDedupStream.bandRows(sigStore, "doc_id"),
+        ScreenStore.Sigs.tail(textRoot), "overwrite")
+      sigs.compact()
 
       // ---- image store: n synthetic hashes + 64 real PNG hashes
-      writeLayoutMarker(spark, imgRoot, "phash")
+      val phash = ScreenStore.Phash.at(spark, imgRoot,
+        StoreLayout.ensureLayout(spark, imgRoot, Seq("phash")))
       val knownPngs = knownIds.map(id =>
         (id, graft.multimodal.ImageCodec.formulaPng2(id, patch = false)))
       val knownHashes = knownPngs.map { case (id, b) =>
@@ -94,13 +81,11 @@ object StandaloneStoreBench {
         .select(col("id").as("media_id"),
           xxhash64(col("id") * 41 + lit(7)).as("h"))
         .unionByName(knownHashes.toDF("media_id", "h"))
-      val hBanded = graft.multimodal.MultimodalQueries
-        .bandExplode(hStore, "media_id")
-        .select(col("media_id"), col("h"), col("b").as("band"), col("v"))
-        .withColumn("pb", StoreLayout.bucketOf(
-          StoreLayout.keyHash(col("band"), col("v")), P))
-      hBanded.repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(s"$imgRoot/phash")
+      phash.writeDelta(graft.multimodal.MultimodalQueries
+          .bandExplode(hStore, "media_id")
+          .select(col("media_id"), col("h"), col("b").as("band"), col("v")),
+        ScreenStore.Phash.tail(imgRoot), "overwrite")
+      phash.compact()
 
       // ---- trigger batches: all-novel, and ~4 true dups of known rows
       def novelBatch(off: Long) = (0 until batchN)

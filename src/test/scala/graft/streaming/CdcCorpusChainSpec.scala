@@ -193,7 +193,7 @@ class CdcCorpusChainSpec extends SparkSpec {
       "doc 1 must carry its post-UPDATE text")
     // the phash store holds the CURRENT image hash of doc 1 (the update
     // retired the original's row), plus 2 and 11
-    val ph = CurationChain.storeRows(spark, root, "phash")
+    val ph = ScreenStore.Phash.rows(spark, root)
       .select("media_id").distinct().collect().map(_.getLong(0)).toSet
     val t = spark.read.parquet(s"$root/tombstones")
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -354,7 +354,7 @@ class CdcCorpusChainSpec extends SparkSpec {
       "every screen fired on wire-decoded rows: 4 (in-batch exact), " +
         "10 (exact store), 11 (sig), 20 (sig at lag 2) rejected")
     // the signature store compounds from wire-decoded text identically
-    val sigs = CurationChain.storeRows(spark, wireRoot, "sigs")
+    val sigs = ScreenStore.Sigs.rows(spark, wireRoot)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(sigs == Set(1L, 2L, 3L, 12L, 21L))
   }

@@ -97,12 +97,12 @@ class CurationChainSpec extends SparkSpec {
     // store consistency: every store grew by exactly the admitted rows —
     // the semantically-rejected doc 12 left no hash/signature residue
     // (the sig store is PRE-BANDED: 8 band rows per admitted doc)
-    assert(CurationChain.storeRows(spark, root, "exact").count() == 3)
-    val sigIds = CurationChain.storeRows(spark, root, "sigs")
+    assert(ScreenStore.Exact.rows(spark, root).count() == 3)
+    val sigIds = ScreenStore.Sigs.rows(spark, root)
       .select("doc_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
     assert(sigIds == Seq(2L, 4L, 13L))
-    assert(CurationChain.storeRows(spark, root, "sigs").count() == 3 * 8)
-    val vecIds = CurationChain.storeRows(spark, root, "vecs")
+    assert(ScreenStore.Sigs.rows(spark, root).count() == 3 * 8)
+    val vecIds = ScreenStore.Vecs.rows(spark, root)
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(vecIds == Seq(2L, 4L, 13L))
     // the bloom fronts staged through the same publish as the stores
@@ -176,13 +176,13 @@ class CurationChainSpec extends SparkSpec {
     // stores mutually consistent with the admitted set — including the
     // perceptual band store: rejected docs' (novel) images left no
     // residue (phash and sigs are PRE-BANDED: 8 rows per admitted doc)
-    assert(CurationChain.storeRows(spark, root, "exact").count() == expected.size)
-    assert(CurationChain.storeRows(spark, root, "phash")
+    assert(ScreenStore.Exact.rows(spark, root).count() == expected.size)
+    assert(ScreenStore.Phash.rows(spark, root)
       .select("media_id").distinct().count() == expected.size)
-    assert(CurationChain.storeRows(spark, root, "phash").count() == 8L * expected.size)
-    assert(CurationChain.storeRows(spark, root, "sigs")
+    assert(ScreenStore.Phash.rows(spark, root).count() == 8L * expected.size)
+    assert(ScreenStore.Sigs.rows(spark, root)
       .select("doc_id").distinct().count() == expected.size)
-    assert(CurationChain.storeRows(spark, root, "vecs").count() == expected.size)
+    assert(ScreenStore.Vecs.rows(spark, root).count() == expected.size)
     // compaction held on the BUCKETED layout: each trigger appends at
     // most one file per bucket its ~2 admitted docs touch (≤ 2 buckets
     // for exact/vecs, ≤ 16-24 band buckets for sigs/phash), so 18
@@ -233,7 +233,7 @@ class CurationChainSpec extends SparkSpec {
     assert(admitted() == Seq(1L, 2L, 3L, 5L, 6L))
     // the shared store holds one hash (8 band rows) per admitted
     // DECODABLE doc only — the rejected in-batch dup left no residue
-    val ph0 = CurationChain.storeRows(spark, root, "phash")
+    val ph0 = ScreenStore.Phash.rows(spark, root)
       .select("media_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
     assert(ph0 == Seq(1L, 2L, 3L))
 
@@ -253,7 +253,7 @@ class CurationChainSpec extends SparkSpec {
     CurationChain.ingestInto(root)(b2, 2L)
     assert(admitted() == Seq(1L, 2L, 3L, 5L, 6L, 7L, 13L),
       "a re-encode of admitted media must be rejected at lag 2, any modality")
-    val ph2 = CurationChain.storeRows(spark, root, "phash")
+    val ph2 = ScreenStore.Phash.rows(spark, root)
       .select("media_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
     assert(ph2 == Seq(1L, 2L, 3L, 13L))
     assertDeclaredSchemas(root)
@@ -324,15 +324,15 @@ class CurationChainSpec extends SparkSpec {
       "mid-publish replay must equal the uncrashed run")
     assert(admittedIds(root) == Seq(1L, 2L, 13L))
     // no half-applied residue: every store grew by exactly the admitted rows
-    assert(CurationChain.storeRows(spark, root, "exact").count() == 3)
-    assert(CurationChain.storeRows(spark, root, "sigs")
+    assert(ScreenStore.Exact.rows(spark, root).count() == 3)
+    assert(ScreenStore.Sigs.rows(spark, root)
       .select("doc_id").distinct().count() == 3)
-    assert(CurationChain.storeRows(spark, root, "vecs").count() == 3)
+    assert(ScreenStore.Vecs.rows(spark, root).count() == 3)
 
     // committed replay — the engine re-delivers an already-applied batch:
     // must be a pure no-op (no double append, no store churn)
     CurationChain.ingestInto(root)(b1, 1L)
-    assert(CurationChain.storeRows(spark, root, "exact").count() == 3)
+    assert(ScreenStore.Exact.rows(spark, root).count() == 3)
     assert(admittedIds(root) == Seq(1L, 2L, 13L))
 
     // crash window 2 — mid-STAGING: an unsealed staged dir (no _STAGED
@@ -407,8 +407,8 @@ class CurationChainSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(raw == Seq(1L, 3L, 10L, 20L, 30L),
       s"physical apply must drop retired rows from the raw store: $raw")
-    assert(CurationChain.storeRows(spark, root, "exact").count() == 5)
-    assert(CurationChain.storeRows(spark, root, "sigs")
+    assert(ScreenStore.Exact.rows(spark, root).count() == 5)
+    assert(ScreenStore.Sigs.rows(spark, root)
       .select("doc_id").distinct().count() == 5)
     assertDeclaredSchemas(root) // bucketed mains after the merge
 
@@ -566,7 +566,7 @@ class CurationChainSpec extends SparkSpec {
     // retired original row and doc 2's rows
     CurationChain.ingestCdcInto(root, compactEvery = 3)(ops(Seq(
       ("INSERT", 1L, 30L, doc(30), ImageCodec.formulaPng2(30)))), 3L)
-    val ph = CurationChain.storeRows(spark, root, "phash")
+    val ph = ScreenStore.Phash.rows(spark, root)
     val phIds = ph.select("media_id").distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(phIds == Seq(1L, 11L, 30L), s"physical apply: $phIds")
@@ -813,8 +813,8 @@ class CurationChainSpec extends SparkSpec {
     assert(admitted() == Seq(1L, 2L, 4L))
     // NO residue for the budget-rejected doc 3: the stores are the
     // corpus's memory, and doc 3 never joined the corpus
-    assert(CurationChain.storeRows(spark, root, "exact").count() == 3)
-    assert(CurationChain.storeRows(spark, root, "sigs")
+    assert(ScreenStore.Exact.rows(spark, root).count() == 3)
+    assert(ScreenStore.Sigs.rows(spark, root)
       .select("doc_id").distinct().count() == 3)
 
     // trigger 1: the web budget carries ACROSS triggers (160 used):
@@ -947,9 +947,9 @@ class CurationChainSpec extends SparkSpec {
     assert(pqAdmitted == ((0L until 13L) :+ 101L :+ 103L),
       s"OOD dup must reject through the per-posting margin: $pqAdmitted")
     // the coded postings cover the raw store row-for-row
-    val vecIds = CurationChain.storeRows(spark, pqRoot, "vecs")
+    val vecIds = ScreenStore.Vecs.rows(spark, pqRoot)
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
-    val pq = CurationChain.storeRows(spark, pqRoot, "vecpq")
+    val pq = ScreenStore.VecPq.rows(spark, pqRoot)
     val pqIds = pq.select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(vecIds == pqIds,
       s"coded postings must cover the raw store: $vecIds vs $pqIds")
@@ -1005,12 +1005,12 @@ class CurationChainSpec extends SparkSpec {
       ("INSERT", 2L, 400L, doc(400), axisVec(7)))), 4L)
     assert(live() == (Seq(0L, 1L, 2L, 4L, 5L) ++ (6L to 12L) ++
       Seq(200L, 300L)), s"post-apply decisions: ${live()}")
-    val pqIds = CurationChain.storeRows(spark, root, "vecpq")
+    val pqIds = ScreenStore.VecPq.rows(spark, root)
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(pqIds == live(), s"retired postings must drop physically: $pqIds")
     // exactly one posting per live doc — the UPDATEd doc's old vector
     // is gone, not shadowed
-    assert(CurationChain.storeRows(spark, root, "vecpq").count() ==
+    assert(ScreenStore.VecPq.rows(spark, root).count() ==
       live().size.toLong)
     assertDeclaredSchemas(root)
   }

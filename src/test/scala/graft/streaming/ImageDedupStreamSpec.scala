@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.multimodal.ImageCodec
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming image dedup: per-trigger decode+dHash, in-batch banded drop,
@@ -10,6 +11,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * image, and the hot-bucket cap bounds candidate generation.
   */
 class ImageDedupStreamSpec extends SparkSpec {
+
+  /** Spark jobs of one warm trigger carrying a near-duplicate (measured). */
+  private val WarmTriggerJobs = 28
+
 
   private def png(id: Long, patch: Boolean = false): Array[Byte] =
     ImageCodec.formulaPng2(id, patch)
@@ -49,7 +54,7 @@ class ImageDedupStreamSpec extends SparkSpec {
       .foreachBatch(ImageDedupStream.ingestInto(dir) _)
       .start()
     try {
-      def storeIds() = ImageDedupStream.storeRows(spark, dir)
+      def storeIds() = ScreenStore.Phash.entries(spark, dir)
         .select("media_id").collect().map(_.getLong(0)).toSet
       // trigger 1 (bootstrap): 103 is an in-batch near-dup of 1; junk
       // bytes are data (dropped), never a crash
@@ -70,7 +75,7 @@ class ImageDedupStreamSpec extends SparkSpec {
       // the store is BOUNDED: one logical (media_id, h) row per admitted
       // image — never pixels, never a re-appended id. Physically the
       // banded layout holds exactly 8 byte-band rows per image.
-      val rows = ImageDedupStream.storeRows(spark, dir)
+      val rows = ScreenStore.Phash.entries(spark, dir)
       assert(rows.columns.toSet == Set("media_id", "h"))
       assert(rows.count() == 4L)
       val raw = spark.read.parquet(s"$dir/phash_tail")
@@ -111,7 +116,7 @@ class ImageDedupStreamSpec extends SparkSpec {
         in.addData(rows.result(): _*)
         query.processAllAvailable()
       }
-      val ids = ImageDedupStream.storeRows(spark, dir).select("media_id")
+      val ids = ScreenStore.Phash.entries(spark, dir).select("media_id")
         .collect().map(_.getLong(0)).toSeq
       assert(ids.toSet == (0 until 60).map(novelId).toSet,
         s"store must be exactly the 60 planted novels, got ${ids.sorted.take(70)}")
@@ -176,5 +181,36 @@ class ImageDedupStreamSpec extends SparkSpec {
     // and the capped band generated no candidates against rows 11/12
     // (they share ONLY the capped band with the probe): verified by the
     // pair set above containing neither
+  }
+
+  test("a warm standalone trigger carrying a near-duplicate runs a fixed " +
+      "number of Spark jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("imgdedup_jobs")
+      .resolve("store").toString
+    val in = MemoryStream[(Long, Array[Byte])]
+    val query = in.toDS().toDF("media_id", "content")
+      .writeStream
+      .foreachBatch(ImageDedupStream.ingestInto(dir) _)
+      .start()
+    val jobs = try {
+      in.addData((1L, png(1)), (2L, png(2)))
+      query.processAllAvailable()
+      in.addData((3L, png(3)))
+      query.processAllAvailable()
+      val queryId = query.id.toString
+      // the third trigger: one novel image, one near-dup of a bootstrap one
+      JobCounter.count(spark.sparkContext, e => Option(e.properties).exists(p =>
+          p.getProperty("sql.streaming.queryId") == queryId &&
+            p.getProperty("streaming.sql.batchId") == "2")) {
+        in.addData((4L, png(4)), (105L, png(1, patch = true)))
+        query.processAllAvailable()
+      }._2
+    } finally query.stop()
+    assert(ScreenStore.Phash.entries(spark, dir).select("media_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L))
+    info(s"warm trigger: $jobs Spark jobs")
+    assert(jobs == WarmTriggerJobs,
+      s"a warm trigger ran $jobs Spark jobs (expected $WarmTriggerJobs)")
   }
 }

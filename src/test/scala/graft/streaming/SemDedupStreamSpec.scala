@@ -39,12 +39,15 @@ class SemDedupStreamSpec extends SparkSpec {
   test("foreachBatch ingest: the corpus compounds across triggers") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("semdedup_stream")
-      .resolve("corpus").toString
+    // four vectors stay below the index floor, so every trigger screens
+    // through admitBatch against the live corpus
+    val root = java.nio.file.Files.createTempDirectory("semdedup_stream")
+      .resolve("root").toString
+    val dir = s"$root/corpus"
     val in = MemoryStream[(Long, Seq[Float])]
     val query = in.toDS().toDF("vec_id", "embedding")
       .writeStream
-      .foreachBatch(SemDedupStream.ingestInto(dir, threshold = 0.9) _)
+      .foreachBatch(SemDedupStream.ingestIntoIndexed(root, 0.9) _)
       .start()
     try {
       def corpusIds() =
@@ -318,12 +321,15 @@ class SemDedupStreamSpec extends SparkSpec {
     def dupOf(v: Seq[Float]): Seq[Float] =
       v.zipWithIndex.map { case (x, i) => x + (if (i == 0) 0.01f else 0f) }
 
-    val dir = java.nio.file.Files.createTempDirectory("semdedup_soak")
-      .resolve("corpus").toString
+    // 60 novels stay below the index floor (4 × the 16-cell minimum), so
+    // every trigger screens through admitBatch against the live corpus
+    val root = java.nio.file.Files.createTempDirectory("semdedup_soak")
+      .resolve("root").toString
+    val dir = s"$root/corpus"
     val in = MemoryStream[(Long, Seq[Float])]
     val query = in.toDS().toDF("vec_id", "embedding")
       .writeStream
-      .foreachBatch(SemDedupStream.ingestInto(dir, threshold = 0.9) _)
+      .foreachBatch(SemDedupStream.ingestIntoIndexed(root, 0.9) _)
       .start()
     try {
       for (t <- 0 until 60) {

@@ -93,9 +93,9 @@ class StoreCompactSpec extends SparkSpec {
       TextDedupStream.ingestInto(plain)(batch, trig)
       TextDedupStream.ingestInto(compacted, compactEvery = 3)(batch, trig)
     }
-    val plainRows = TextDedupStream.storeRows(spark, plain)
+    val plainRows = ScreenStore.Sigs.entries(spark, plain)
       .select("doc_id").as[Long].collect().sorted.toSeq
-    val compactedRows = TextDedupStream.storeRows(spark, compacted)
+    val compactedRows = ScreenStore.Sigs.entries(spark, compacted)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(plainRows == (0L until 27L)) // all novel docs admitted
     assert(compactedRows == plainRows) // the merge never changes content
@@ -135,7 +135,7 @@ class StoreCompactSpec extends SparkSpec {
     // re-admitted
     val b2 = Seq((10L, doc(1)), (11L, doc(11))).toDF("doc_id", "text")
     TextDedupStream.ingestInto(dir)(b2, 2L)
-    val ids = TextDedupStream.storeRows(spark, dir).select("doc_id")
+    val ids = ScreenStore.Sigs.entries(spark, dir).select("doc_id")
       .as[Long].collect().sorted.toSeq
     assert(ids == Seq(0L, 1L, 2L, 3L, 11L)) // 10 rejected against the healed store
     assert(!new java.io.File(s"$dir/sigs_compact_old").exists())

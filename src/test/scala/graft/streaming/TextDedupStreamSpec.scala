@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming text near-dup admission: per-trigger MinHash signatures,
@@ -10,6 +11,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * hot-bucket cap bounds candidate generation.
   */
 class TextDedupStreamSpec extends SparkSpec {
+
+  /** Spark jobs of one warm trigger carrying a near-duplicate (measured). */
+  private val WarmTriggerJobs = 31
+
 
   /** ~40-word doc over an id-NAMESPACED vocabulary: distinct ids share
     * zero 3-shingles by construction (a first draft drew 38-shingle
@@ -74,7 +79,7 @@ class TextDedupStreamSpec extends SparkSpec {
       .foreachBatch(TextDedupStream.ingestInto(dir) _)
       .start()
     try {
-      def storeIds() = TextDedupStream.storeRows(spark, dir)
+      def storeIds() = ScreenStore.Sigs.entries(spark, dir)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       // trigger 1 (bootstrap): 103 is an in-batch edit of 1
       in.addData((1L, doc(1)), (2L, doc(2)), (103L, doc(1, edit = true)))
@@ -93,7 +98,7 @@ class TextDedupStreamSpec extends SparkSpec {
       // the store is BOUNDED: one logical (doc_id, sig) row per admitted
       // doc — k minima + id, never text, never a re-appended id.
       // Physically the banded layout holds exactly 8 band rows per doc.
-      val rows = TextDedupStream.storeRows(spark, dir)
+      val rows = ScreenStore.Sigs.entries(spark, dir)
       assert(rows.columns.toSet == Set("doc_id", "sig"))
       assert(rows.count() == 4L)
       val counts = spark.read.parquet(s"$dir/sigs_tail")
@@ -138,7 +143,7 @@ class TextDedupStreamSpec extends SparkSpec {
         in.addData(rows.result(): _*)
         query.processAllAvailable()
       }
-      val ids = TextDedupStream.storeRows(spark, dir).select("doc_id")
+      val ids = ScreenStore.Sigs.entries(spark, dir).select("doc_id")
         .collect().map(_.getLong(0)).toSeq
       assert(ids.toSet == (0 until 60).map(novelId).toSet,
         s"store must be exactly the 60 planted novels, got ${ids.sorted.take(70)}")
@@ -166,7 +171,7 @@ class TextDedupStreamSpec extends SparkSpec {
       .foreachBatch(TextDedupStream.ingestInto(dir) _)
       .start()
     try {
-      def storeIds() = TextDedupStream.storeRows(spark, dir)
+      def storeIds() = ScreenStore.Sigs.entries(spark, dir)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       // trigger 1: 1 is novel; 50 is an EXACT dup of 1 (curate's
       // in-stream hash dedup owns it); 60 carries a blocklisted phrase
@@ -226,5 +231,75 @@ class TextDedupStreamSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSet == Set((99L, 10L)),
       s"true pair must survive via uncapped bands: ${pairs.toSeq}")
+  }
+
+  test("a warm standalone trigger carrying a near-duplicate runs a fixed " +
+      "number of Spark jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("textdedup_jobs")
+      .resolve("store").toString
+    val in = MemoryStream[(Long, String)]
+    val query = in.toDS().toDF("doc_id", "text")
+      .writeStream
+      .foreachBatch(TextDedupStream.ingestInto(dir) _)
+      .start()
+    val jobs = try {
+      in.addData((1L, doc(1)), (2L, doc(2)))
+      query.processAllAvailable()
+      in.addData((3L, doc(3)))
+      query.processAllAvailable()
+      val queryId = query.id.toString
+      // the third trigger: one novel doc, one edit of a bootstrap doc
+      JobCounter.count(spark.sparkContext, e => Option(e.properties).exists(p =>
+          p.getProperty("sql.streaming.queryId") == queryId &&
+            p.getProperty("streaming.sql.batchId") == "2")) {
+        in.addData((4L, doc(4)), (105L, doc(1, edit = true)))
+        query.processAllAvailable()
+      }._2
+    } finally query.stop()
+    assert(ScreenStore.Sigs.entries(spark, dir).select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L))
+    info(s"warm trigger: $jobs Spark jobs")
+    assert(jobs == WarmTriggerJobs,
+      s"a warm trigger ran $jobs Spark jobs (expected $WarmTriggerJobs)")
+  }
+
+  test("a root in the older standalone shape — tail rows without `b`, a " +
+      "Spark-written front — still rejects its duplicates, before and " +
+      "after a compaction") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("textdedup_older")
+      .resolve("store").toString
+    val P = StoreLayout.ensureLayout(spark, dir, Seq("sigs"))
+    // the older body's delta: band rows tagged with their bucket, no `b`,
+    // and the front delta over their keys written by a Spark job first
+    val bands = TextDedupStream.bandRows(
+        sigsOf(Seq((1L, doc(1)), (2L, doc(2)))), "doc_id")
+      .withColumn("pb", StoreLayout.bucketOf(
+        StoreLayout.keyHash(col("band"), col("bh")), P))
+    val keys = bands.select(StoreLayout.keyHash(col("band"), col("bh")), col("pb"))
+      .collect().map(r => (r.getLong(0), r.getInt(1)))
+    StoreLayout.bloomDeltaLocal(keys, keys.length.toLong, P).toDF("pb", "bloom")
+      .coalesce(1).write.mode("append").parquet(s"$dir/sigbloom")
+    bands.repartition(col("pb")).write.mode("append").parquet(s"$dir/sigs_tail")
+    assert(!spark.read.parquet(s"$dir/sigs_tail").columns.contains("b"))
+    def storeIds() = ScreenStore.Sigs.entries(spark, dir)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+
+    // 101 edits doc 1; 3 is novel
+    TextDedupStream.ingestInto(dir, compactEvery = 2)(
+      Seq((3L, doc(3)), (101L, doc(1, edit = true))).toDF("doc_id", "text"), 1L)
+    assert(storeIds() == Set(1L, 2L, 3L))
+    // the cadence merges the older rows into the main and rebuilds the
+    // front from them; 102 edits doc 2, 4 is novel
+    TextDedupStream.ingestInto(dir, compactEvery = 2)(
+      Seq((4L, doc(4)), (102L, doc(2, edit = true))).toDF("doc_id", "text"), 2L)
+    assert(storeIds() == Set(1L, 2L, 3L, 4L))
+    assert(new java.io.File(s"$dir/sigs").exists(), "the tail merged into the main")
+    // after the rebuild: 103 edits doc 1 again, 5 is novel
+    TextDedupStream.ingestInto(dir, compactEvery = 2)(
+      Seq((5L, doc(5)), (103L, doc(1, edit = true))).toDF("doc_id", "text"), 3L)
+    assert(storeIds() == Set(1L, 2L, 3L, 4L, 5L))
   }
 }
