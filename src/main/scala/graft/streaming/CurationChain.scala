@@ -733,7 +733,7 @@ object CurationChain {
           val kept = exactStore.keyed(keep.select("doc_id", "content_hash"))
             .select("doc_id", "__h", "pb").collect()
           val exactBlobs = exactStore.writeFront(staged("bloom"),
-            kept.map(r => (r.getLong(1), r.getInt(2))), replace = true)
+            kept.map(r => (r.getLong(1), r.getInt(2))))
           (exactBlobs, kept.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted)
         }
         val fExactTail = staging("stage-exact-tail") {
@@ -769,8 +769,7 @@ object CurationChain {
           })
         val fSigFront = fKeptBands.flatMap(keptBands =>
           staging("stage-sig-front") {
-            sigStore.writeFront(staged("sigbloom"), sigStore.frontKeys(keptBands),
-              replace = true)
+            sigStore.writeFront(staged("sigbloom"), sigStore.frontKeys(keptBands))
           })
         val fVecs =
           if (!semantic) None

@@ -65,8 +65,9 @@ import org.apache.spark.sql.types._
   * DELTA ([[View.writeDelta]], [[View.writeFront]]): bucket-tagged rows
   * clustered by bucket into a tail directory (staged or live), and the
   * front delta's blobs built on the driver from keys collected there,
-  * written by the driver as one parquet file, then merged into the
-  * driver-cached front once they are published ([[noteFront]]).
+  * written by the driver as one parquet file (under a hidden name,
+  * renamed once whole), then merged into the driver-cached front once
+  * they are published ([[noteFront]]).
   * COMPACTION ([[View.compact]]): merge the tail into the main, then
   * rebuild the front from the merged rows.
   */
@@ -239,19 +240,14 @@ object ScreenStore {
       tagged(rows).select(hash.as("__h"), col("pb")).collect()
         .map(r => (r.getLong(0), r.getInt(1)))
 
-    /** Build a front delta over `keys` on the driver and write it as one
-      * file: into a fresh `dest` (replacing what it held) when `replace`,
-      * else added to `dest` beside the blobs already there. Returns the
-      * blobs for [[noteFront]].
+    /** Build a front delta over `keys` on the driver and add it to
+      * `dest` (a front, live or staged) as one file beside the blobs
+      * already there. Returns the blobs for [[noteFront]].
       */
-    def writeFront(dest: String, keys: Array[(Long, Int)],
-        replace: Boolean): Seq[(Int, Array[Byte])] = {
+    def writeFront(dest: String,
+        keys: Array[(Long, Int)]): Seq[(Int, Array[Byte])] = {
       val blobs = StoreLayout.bloomDeltaLocal(keys,
         math.max(1L, keys.length.toLong), P)
-      if (replace) {
-        val p = new org.apache.hadoop.fs.Path(dest)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      }
       StoreLayout.writeFrontLocal(spark, dest, blobs)
       blobs
     }

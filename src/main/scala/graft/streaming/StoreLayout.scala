@@ -259,6 +259,13 @@ object StoreLayout {
     * out and back. An empty delta writes a file with no rows, as Spark
     * does, so a fresh directory holds exactly one data file — the shape
     * [[noteFrontDelta]] seeds from.
+    *
+    * The file is written under a hidden `.`-prefixed name and renamed to
+    * its `part-` name once closed, as Spark's committer does: `dir` may
+    * be a LIVE front, and a crash mid-write must leave only a file that
+    * every reader skips (Spark's file index, [[frontFingerprint]],
+    * [[StoreCompact.hasData]]), never a truncated data file that fails
+    * every later probe's read.
     */
   def writeFrontLocal(spark: SparkSession, dir: String,
       blobs: Seq[(Int, Array[Byte])]): Unit = {
@@ -274,10 +281,11 @@ object StoreLayout {
     val schema = MessageTypeParser.parseMessageType(
       "message spark_schema { optional int32 pb; optional binary bloom; }")
     val conf = spark.sparkContext.hadoopConfiguration
-    val file = new org.apache.hadoop.fs.Path(p,
-      s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
+    val name = s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val file = new org.apache.hadoop.fs.Path(p, name)
+    val tmp = new org.apache.hadoop.fs.Path(p, s".$name.tmp")
     val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(file, conf))
+      .builder(HadoopOutputFile.fromPath(tmp, conf))
       .withConf(conf)
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
@@ -290,6 +298,7 @@ object StoreLayout {
           .append("bloom", Binary.fromConstantByteArray(blob)))
       }
     } finally writer.close()
+    require(fs.rename(tmp, file), s"writeFrontLocal: could not publish $file")
   }
 
   /** Merge a just-PUBLISHED delta's blobs into the cached front and

@@ -177,8 +177,10 @@ object TextDedupStream {
     *
     * CONVERGENCE without a txn: the front delta is written BEFORE the
     * band rows, so every crash window leaves the front a safe SUPERSET
-    * of the store. A replayed batch re-screens against the grown store
-    * and its rows reject as their own duplicates, so nothing
+    * of the store, and the front file lands by rename
+    * ([[StoreLayout.writeFrontLocal]]), so a crash mid-write leaves no
+    * half-written blob file. A replayed batch re-screens against the
+    * grown store and its rows reject as their own duplicates, so nothing
     * double-appends.
     *
     * `compactEvery` > 0 folds the tail into the main and rebuilds the
@@ -225,7 +227,7 @@ object TextDedupStream {
         if (keys.nonEmpty) {
           // front FIRST (superset-safe, see above), then rows
           val front = ScreenStore.Sigs.frontDir(storeDir).get
-          val blobs = store.writeFront(front, keys, replace = false)
+          val blobs = store.writeFront(front, keys)
           ScreenStore.Sigs.noteFront(spark, storeDir, blobs)
           store.writeDelta(keepBands, ScreenStore.Sigs.tail(storeDir), "append")
         }

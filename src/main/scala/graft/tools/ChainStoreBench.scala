@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.LocalSpark
-import graft.streaming.{ScreenStore, StoreLayout, TextDedupStream}
+import graft.streaming.{ScreenStore, StoreCompact, StoreLayout, TextDedupStream}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,12 +15,15 @@ import org.apache.spark.sql.functions._
   *
   * `runMain graft.tools.ChainStoreBench [batch] [iters] [sizes...]`
   * builds exact + sig stores at each size (default 1e5, 4e5, 1.6e6 rows)
-  * the way the compaction cadence leaves them (tail merged into the main,
-  * front rebuilt), times one trigger's exact + sig screens the OLD way
-  * (full-store scan) and the NEW way (front probe + pruned buckets, as
-  * the chain runs them), min-of-`iters`, and prints one JSON line per
-  * size plus a sublinearity summary: the pruned cost curve should stay
-  * ~flat while the full-scan curve tracks store size.
+  * as a merged main hive-partitioned by bucket at EVERY size (the
+  * cadence's [[StoreCompact.mergeTail]] keeps a main under its 10⁶-row
+  * floor flat, so its pruned read would filter a data column instead of
+  * skipping bucket directories) with the front rebuilt from it, times
+  * one trigger's exact + sig screens the OLD way (full-store scan) and
+  * the NEW way (front probe + pruned buckets, as the chain runs them),
+  * min-of-`iters`, and prints one JSON line per size plus a
+  * sublinearity summary: the pruned cost curve should stay ~flat while
+  * the full-scan curve tracks store size.
   */
 object ChainStoreBench {
   private def timeIt(iters: Int)(f: => Unit): Double = {
@@ -53,6 +56,8 @@ object ChainStoreBench {
         .select(col("id").as("doc_id"), sha2(conv(col("id"), 10, 16), 256)
           .as("content_hash"))
         .withColumn("b", lit(0L)), ScreenStore.Exact.tail(root), "overwrite")
+      StoreCompact.mergeTail(spark, ScreenStore.Exact.dir(root), Seq("pb"),
+        partitionFloor = 0)
       exact.compact()
 
       // ---- sig store: n signatures (k=32 longs), pre-banded
@@ -62,6 +67,8 @@ object ChainStoreBench {
         .select(col("id").as("doc_id"), array(sigOf: _*).as("sig"))
       sigs.writeDelta(TextDedupStream.bandRows(sigStore, "doc_id")
         .withColumn("b", lit(0L)), ScreenStore.Sigs.tail(root), "overwrite")
+      StoreCompact.mergeTail(spark, ScreenStore.Sigs.dir(root), Seq("pb"),
+        partitionFloor = 0)
       sigs.compact()
 
       // ---- one trigger's batch: batchN docs, ~4 true dups of store rows
@@ -109,6 +116,8 @@ object ChainStoreBench {
           .foreach(st => noop(TextDedupStream.sigPairsAgainstBands(maybe, st)))
       }
       batch.unpersist(); batchSigs.unpersist()
+      // a 1.6M-row root is ~3.5 GB: drop each before the next size
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       println(f"""{"store_rows":$n,"batch":$batchN,""" +
         f""""exact_full_s":$exactFull%.3f,"exact_pruned_s":$exactPruned%.3f,""" +
         f""""sig_full_s":$sigFull%.3f,"sig_pruned_s":$sigPruned%.3f}""")

@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.LocalSpark
-import graft.streaming.{ImageDedupStream, ScreenStore, StoreLayout, TextDedupStream}
+import graft.streaming.{ImageDedupStream, ScreenStore, StoreCompact, StoreLayout,
+  TextDedupStream}
 import org.apache.spark.sql.functions._
 
 /** Measures the STANDALONE ingest bodies' per-trigger cost against store
@@ -19,11 +20,13 @@ import org.apache.spark.sql.functions._
   * joins.
   *
   * `runMain graft.tools.StandaloneStoreBench [batch] [iters] [sizes...]`
-  * seeds stores at each size (default 1e5, 4e5, 1.6e6 logical rows) the
-  * way the compaction cadence leaves them (tail merged, front rebuilt),
-  * times one all-novel trigger and one dup-bearing trigger through each
-  * body (min-of-`iters` after a warm pass), and prints one JSON line per
-  * size plus a growth summary.
+  * seeds stores at each size (default 1e5, 4e5, 1.6e6 logical rows) as a
+  * merged main hive-partitioned by bucket at EVERY size (below
+  * [[StoreCompact.mergeTail]]'s 10⁶-row floor the cadence would leave it
+  * flat) with the text front rebuilt from it, times one all-novel
+  * trigger and one dup-bearing trigger through each body (min-of-`iters`
+  * after a warm pass), and prints one JSON line per size plus a growth
+  * summary.
   */
 object StandaloneStoreBench {
   private def timeIt(iters: Int)(f: => Unit): Double = {
@@ -67,6 +70,8 @@ object StandaloneStoreBench {
         .unionByName(knownSigs)
       sigs.writeDelta(TextDedupStream.bandRows(sigStore, "doc_id"),
         ScreenStore.Sigs.tail(textRoot), "overwrite")
+      StoreCompact.mergeTail(spark, ScreenStore.Sigs.dir(textRoot), Seq("pb"),
+        partitionFloor = 0)
       sigs.compact()
 
       // ---- image store: n synthetic hashes + 64 real PNG hashes
@@ -85,7 +90,8 @@ object StandaloneStoreBench {
           .bandExplode(hStore, "media_id")
           .select(col("media_id"), col("h"), col("b").as("band"), col("v")),
         ScreenStore.Phash.tail(imgRoot), "overwrite")
-      phash.compact()
+      StoreCompact.mergeTail(spark, ScreenStore.Phash.dir(imgRoot), Seq("pb"),
+        partitionFloor = 0)
 
       // ---- trigger batches: all-novel, and ~4 true dups of known rows
       def novelBatch(off: Long) = (0 until batchN)
@@ -128,6 +134,9 @@ object StandaloneStoreBench {
           nextTrig())
       }
 
+      // a 1.6M-row text root is ~3.5 GB: drop both before the next size
+      Seq(textRoot, imgRoot).foreach(r =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r)))
       println(f"""{"store_rows":$n,"batch":$batchN,""" +
         f""""text_novel_s":$textNovel%.3f,"text_dup_s":$textDup%.3f,""" +
         f""""img_novel_s":$imgNovel%.3f,"img_dup_s":$imgDup%.3f}""")

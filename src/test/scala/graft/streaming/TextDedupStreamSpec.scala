@@ -302,4 +302,34 @@ class TextDedupStreamSpec extends SparkSpec {
       Seq((5L, doc(5)), (103L, doc(1, edit = true))).toDF("doc_id", "text"), 3L)
     assert(storeIds() == Set(1L, 2L, 3L, 4L, 5L))
   }
+
+  test("a front write cut short leaves only a hidden file, which the next " +
+      "trigger's front read skips") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("textdedup_front_crash")
+    val dir = base.resolve("store").toString
+    TextDedupStream.ingestInto(dir)(
+      Seq((1L, doc(1)), (2L, doc(2))).toDF("doc_id", "text"), 0L)
+    // the crash: a front write cut between create and close leaves its
+    // half-written file under the hidden name it is renamed from
+    val front = new java.io.File(s"$dir/sigbloom")
+    val whole = front.listFiles().filter(_.getName.startsWith("part-")).head
+    val bytes = java.nio.file.Files.readAllBytes(whole.toPath)
+    val residue = s".${whole.getName.replace("part-", "part-cut-")}.tmp"
+    java.nio.file.Files.write(new java.io.File(front, residue).toPath,
+      bytes.take(bytes.length / 2))
+    // a restarted driver holds no cached front, so the next probe reads
+    // the front directory: a copy of the root under a new path
+    val restarted = base.resolve("restarted").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir),
+      new java.io.File(restarted))
+    // 101 edits doc 1; 3 is novel
+    TextDedupStream.ingestInto(restarted)(
+      Seq((3L, doc(3)), (101L, doc(1, edit = true))).toDF("doc_id", "text"), 1L)
+    assert(ScreenStore.Sigs.entries(spark, restarted).select("doc_id").collect()
+      .map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
+    assert(new java.io.File(s"$restarted/sigbloom").list()
+      .filter(_.endsWith(".tmp")).toSeq == Seq(residue),
+      "the trigger's own front file was renamed into place")
+  }
 }
