@@ -64,10 +64,10 @@ import org.apache.spark.sql.types._
   * half-written hashes, permanently dropping them while their reject
   * residue persists. So the trigger body never appends directly: the
   * admitted rows are derived once (against pre-batch store state) and
-  * go through [[StoreTxn]]'s stage → seal → publish → commit protocol —
-  * replay of a committed batch no-ops, a mid-publish crash finishes
-  * publication without recompute, a mid-staging crash recomputes
-  * safely.
+  * go through [[StoreTxn]]'s stage → seal → publish → commit protocol on
+  * the [[CorpusRoot]] spine — replay of a committed batch no-ops, a
+  * mid-publish crash finishes publication without recompute, a
+  * mid-staging crash recomputes safely.
   *
   * MUTABLE-corpus curation (r13): a CDC-fed documents table UPDATEs and
   * DELETEs, and without retirement a doc's new version is forever
@@ -76,9 +76,10 @@ import org.apache.spark.sql.types._
   * text, …) batches: the LAST op per doc wins, UPDATE/DELETE write a
   * TOMBSTONE (doc_id, asOf = batchId) through the same staged commit,
   * every store row carries its admit batch `b`, and the screens exclude
-  * rows with a tombstone newer than their batch — so an UPDATE's new
-  * text is screened against the corpus MINUS its own retired version,
-  * in the same trigger, exactly-once. Tombstones are logical until the
+  * rows with a tombstone newer than their batch ([[CorpusRoot]]'s
+  * tombstone protocol) — so an UPDATE's new text is screened against
+  * the corpus MINUS its own retired version, in the same trigger,
+  * exactly-once. Tombstones are logical until the
   * `compactEvery` cadence runs [[applyTombstones]] — a crash-healed
   * rewrite ([[StoreCompact.rewrite]] swap) that removes retired rows
   * physically and clears the tombstone store; a crash mid-apply leaves
@@ -113,127 +114,30 @@ object CurationChain {
         "content_hash" -> StringType, "b" -> LongType),
       "budget" -> s("source" -> StringType, "toks" -> LongType,
         "b" -> LongType),
-      "tombstones" -> s("doc_id" -> LongType, "asOf" -> LongType),
+      "tombstones" -> CorpusRoot.tombstoneSchema("doc_id"),
       "bloom" -> StoreLayout.FrontSchema,
       "sigbloom" -> StoreLayout.FrontSchema)
   }
-
-  /** Read a flat store directory (`<root>/<store>`) under its declared schema. */
-  private def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(StoreSchemas(dir.split('/').last)).parquet(dir)
-
-  /** A store row is live unless a tombstone NEWER than its admit batch
-    * `b` retires it (a row written by the retiring batch itself survives
-    * — that is how an UPDATE's new version coexists with its own
-    * tombstone). A null `b` (a file older than the column) stays live:
-    * screening against a possibly-retired row can only reject, never
-    * admit a duplicate.
-    */
-  private def liveAsOf(asOf: Column): Column =
-    asOf.isNull || col("b").isNull || col("b") >= asOf
 
   /** Every directory the per-trigger recover sweep heals. */
   private def recoverDirs(rootDir: String): Seq[String] =
     ScreenStore.All.flatMap(_.dirs(rootDir)) ++ FlatStores.map(s => s"$rootDir/$s")
 
-  private def hadoopFs(spark: SparkSession, dir: String) = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
   private def hasData(spark: SparkSession, dir: String): Boolean =
     StoreCompact.hasData(spark, dir)
 
+  /** Read a flat store directory (`<root>/<store>`) under its declared schema. */
   private def readStore(spark: SparkSession, dir: String,
       cols: Seq[String]): Option[DataFrame] =
-    if (hasData(spark, dir)) Some(read(spark, dir).select(cols.map(col): _*))
-    else None
-
-  /** Size guard for holding the tombstone set on the driver (r15 verdict
-    * item 4 / ADVICE): tombstones are bounded by churn since the last
-    * COMPACTION, not by the trigger batch — `compactEvery` defaults to 0,
-    * so under sustained CDC churn the store can grow without bound and a
-    * driver-held copy (the trigger body's collected set, or a broadcast()
-    * hint) would eventually fail on driver memory or Spark's 8 GB
-    * broadcast cap, where the unhinted join falls back to a shuffle.
-    * Cheap driver-side file-bytes check (a listing, no job): under the
-    * threshold the set goes to the driver; past it the tombstone joins go
-    * unhinted and the planner/AQE picks the strategy. The default 64 MB
-    * of parquet-encoded (doc_id, asOf) longs is tens of millions of rows
-    * — far above any healthy churn window, comfortably below the cap
-    * after in-memory expansion. Conf-keyed so deployments (and the
-    * oversized-tombstone spec) can move it.
-    */
-  private[streaming] val TombBroadcastMaxBytesKey = "spark.graft.tombBroadcastMaxBytes"
-  private[streaming] val TombBroadcastMaxBytesDefault: Long = 64L << 20
-  private def tombstonesBroadcastable(spark: SparkSession, rootDir: String): Boolean = {
-    val dir = s"$rootDir/tombstones"
-    val maxBytes = spark.conf.get(TombBroadcastMaxBytesKey,
-      TombBroadcastMaxBytesDefault.toString).toLong
-    if (!hasData(spark, dir)) true
-    else {
-      val (fs, p) = hadoopFs(spark, dir)
-      var bytes = 0L
-      val it = fs.listFiles(p, true)
-      while (bytes <= maxBytes && it.hasNext) bytes += it.next().getLen
-      bytes <= maxBytes
-    }
-  }
-
-  /** The frozen semantic quantizer of the `vecs`/`vecpq` stores (None
-    * until the cell layout founds — see [[maintainVecCells]]): coarse
-    * centroids plus PQ sub-codebooks. Layout mirrors the streaming index
-    * ([[graft.llm.Similarity.buildIvfCodeIndex]]): `vec_cells/centroids`,
-    * `vec_cells/codebooks`, `vec_cells/calib` (the calib quantiles are
-    * quality telemetry here — the screen's recall bound is the
-    * per-posting `mrg`, not a calibrated global margin). `codebooks` is
-    * None on a root founded before the coded layout existed — the next
-    * cadence upgrades it.
-    */
-  private final case class VecQuantizer(cents: Array[Array[Double]],
-      codebooks: Option[Array[Array[Array[Double]]]])
-
-  /** Driver memo of the quantizer: the arrays only change when a
-    * (re)found swaps `vec_cells`, so the per-trigger centroid/codebook/
-    * calib reads are fixed jobs for constants (the r14-item-2 overhead
-    * class). Keyed by the cells dir's recursive file listing — one
-    * metadata sweep per trigger instead of three read jobs.
-    */
-  private val quantCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, VecQuantizer)]()
-
-  private def loadVecQuantizer(spark: SparkSession,
-      rootDir: String): Option[VecQuantizer] = {
-    val cellsDir = s"$rootDir/vec_cells"
-    if (!hasData(spark, s"$cellsDir/centroids")) return None
-    val (fs, p) = hadoopFs(spark, cellsDir)
-    val stamp = new StringBuilder()
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      stamp.append(st.getPath.getName).append(':').append(st.getLen)
-        .append(':').append(st.getModificationTime).append(',')
-    }
-    val key = stamp.toString()
-    val hit = quantCache.get(cellsDir)
-    if (hit != null && hit._1 == key) Some(hit._2)
-    else {
-      val cents = graft.llm.Similarity.readIvfCentroids(spark, cellsDir)
-      val cbs =
-        if (hasData(spark, s"$cellsDir/codebooks"))
-          Some(graft.llm.Similarity.readCodebooks(spark, s"$cellsDir/codebooks"))
-        else None
-      val q = VecQuantizer(cents, cbs)
-      quantCache.put(cellsDir, (key, q))
-      Some(q)
-    }
-  }
+    if (!hasData(spark, dir)) None
+    else Some(spark.read.schema(StoreSchemas(dir.split('/').last)).parquet(dir)
+      .select(cols.map(col): _*))
 
   /** Derive the admitted set against the CURRENT store state and stage
-    * all outputs under `_staged/<batchId>/`, sealing with `_STAGED`.
-    * Touches no store — the crash window before [[StoreTxn.publish]] is
-    * recompute-safe. Split from [[ingestInto]] so the crash-replay spec
-    * can stop exactly here. `batchTombstones` (doc_id rows), when
+    * all outputs under `_staged/<batchId>/` ([[CorpusRoot.trigger]]
+    * seals them). Touches no store — the crash window before
+    * [[StoreTxn.publish]] is recompute-safe. `batchTombstones` (doc_id
+    * rows), when
     * present, retire those docs' standing store rows as of THIS batch —
     * the screens below exclude them, and the tombstone delta stages
     * into the same atomic publish.
@@ -251,77 +155,24 @@ object CurationChain {
     def staged(store: String): String = StoreTxn.stagePath(rootDir, batchId, store)
     val semantic = offers.columns.contains("embedding")
     val media = offers.columns.contains("content")
-    val vecQuant: Option[VecQuantizer] =
-      if (semantic) loadVecQuantizer(spark, rootDir) else None
+    val vecQuant: Option[SemDedupStream.Quantizer] =
+      if (semantic) SemDedupStream.loadQuantizer(spark, s"$rootDir/vec_cells")
+      else None
     val vecCents: Option[Array[Array[Double]]] = vecQuant.map(_.cents)
 
-    // every frame this body pins, released together in the outer finally
-    // — after the staging pool has drained, because the pooled sig
-    // deltas still read the pinned sig survivors
-    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = { val p = df.persist(); pins += p; p }
-    // every broadcast variable this body ships (the staging pool ships
-    // too, hence the concurrent queue), destroyed with the pins
-    val shipped = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.broadcast.Broadcast[_]]()
-    def ship[T: scala.reflect.ClassTag](v: T) = {
-      val b = spark.sparkContext.broadcast(v); shipped.add(b); b
-    }
-    // stamp each stage's eagerly-running jobs (bucket collects, counts,
-    // checkpoints, staged writes) with a stage label, so the Spark UI,
-    // perfbench's per-label chain metrics and tools/joblog.py attribute
-    // the trigger's jobs to stages instead of anonymous callsites. A
-    // pinned frame computes under the label of the FIRST action that
-    // reads it, so per-label job counts move when a pin moves work
-    // between stages.
-    def labeled[T](stage: String)(f: => T): T = {
-      spark.sparkContext.setJobDescription(s"graft.chain $stage")
-      try f finally spark.sparkContext.setJobDescription(null)
-    }
+    // every frame this body pins and every broadcast variable it ships,
+    // released together in the outer finally — after the staging pool has
+    // drained, because the pooled sig deltas still read the pinned sig
+    // survivors
+    val pins = new CorpusRoot.Pins(spark)
+    import pins.{pin, ship}
+    def labeled[T](stage: String)(f: => T): T =
+      JobLabel(spark, s"graft.chain $stage")(f)
     try {
-      // effective tombstones: standing (un-applied) ∪ this batch's, one
-      // max-asOf row per doc (bounded by churn since the last cadence)
-      val tombOpt: Option[DataFrame] = {
-        val standing = readStore(spark, s"$rootDir/tombstones",
-          Seq("doc_id", "asOf"))
-        val fresh = batchTombstones.map(
-          _.select(col("doc_id")).withColumn("asOf", lit(batchId)))
-        (standing, fresh) match {
-          case (None, None) => None
-          case (a, b) => Some((a.toSeq ++ b.toSeq).reduce(_ unionByName _)
-            .groupBy("doc_id").agg(max("asOf").as("asOf")))
-        }
-      }
-      // `retire(df, key)` keeps df's live rows ([[liveAsOf]]). While the
-      // standing store is provably small (tombstonesBroadcastable) the set
-      // collects to the driver ONCE and ships as one broadcast variable
-      // that every store read filters through — adaptive execution is off
-      // in the trigger body, so a hinted join would pay its own broadcast
-      // job in every action that reads a store. Rows the join could never
-      // match (a null doc_id) or never retire (a null asOf) are left out.
-      // Past the threshold the set stays distributed: pinned, and joined
-      // unhinted so the planner may shuffle it.
-      val retire: Option[(DataFrame, String) => DataFrame] = tombOpt.map { t =>
-        if (tombstonesBroadcastable(spark, rootDir)) {
-          val byId = labeled("tombstones") {
-            t.filter(col("doc_id").isNotNull && col("asOf").isNotNull).collect()
-          }.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-          val bc = ship((byId.map(_._1), byId.map(_._2)))
-          val live = udf { (id: Long, b: Long) =>
-            val (ids, asOf) = bc.value
-            val i = java.util.Arrays.binarySearch(ids, id)
-            i < 0 || b >= asOf(i)
-          }
-          (df: DataFrame, key: String) =>
-            df.filter(col(key).isNull || col("b").isNull || live(col(key), col("b")))
-        } else {
-          val pinned = pin(t)
-          (df: DataFrame, key: String) =>
-            df.join(pinned.select(col("doc_id").as(key), col("asOf").as("_asof")),
-                Seq(key), "left")
-              .filter(liveAsOf(col("_asof")))
-        }
-      }
+      // the live-row filter under the effective tombstones (standing ∪
+      // this batch's) — [[CorpusRoot.retire]]
+      val retire = CorpusRoot.retire(pins, rootDir, "doc_id", batchTombstones,
+        batchId, "graft.chain tombstones")
       // the screen stores as this trigger reads them: live rows only
       val Seq(exactStore, phashStore, sigStore, vecStore, pqStore) =
         ScreenStore.All.map(_.at(spark, rootDir, P, retire))
@@ -507,72 +358,15 @@ object CurationChain {
             .select(col("doc_id").as("vec_id"), col("embedding"))
           val ok = vecQuant match {
             // coded probe (the founded default): the store side reads
-            // the PQ POSTINGS of the probed cells — 8+m+8 bytes/vector
-            // instead of dim·8 — ADC-scores them at a calibrated margin
-            // below the threshold, and exact-verifies ONLY the
-            // candidates against the raw store by id pushdown. An
-            // all-novel batch reads code postings and zero raw vectors.
+            // the PQ POSTINGS of the probed cells and exact-verifies ONLY
+            // the candidates against the raw store by id pushdown
             case Some(q) if vecPq && q.codebooks.isDefined && pqStore.present =>
-              // the in-batch screen result feeds THREE actions on this
-              // path (the probe collect, the candidate materialization,
-              // and the final anti-join) — pin it, or each re-runs the
-              // whole upstream screen subplan (the q226 lesson)
-              val survV = pin(SemDedupStream
-                .admitBatch(vecs, spark.emptyDataFrame, threshold))
-              graft.llm.Similarity.adcProbes(
-                  survV.select("vec_id", "embedding"), q.cents,
-                  q.codebooks.get, vecNprobe) match {
-                case None => survV // zero offers survived the batch screen
-                case Some(pr) =>
-                  pqStore.read(Seq("vec_id", "cell", "codes", "mrg"),
-                      Some(pr.probedCells.toSeq))
-                    .map { st =>
-                      // each posting carries its EXACT ADC error bound
-                      // `mrg` ([[graft.llm.PqAdcMargin]]) — the filter
-                      // can never drop a true pair, and a posting the
-                      // codebooks quantize badly just verifies exactly;
-                      // a posting with no bound (null `mrg`) verifies too
-                      val cand = pin(graft.llm.Similarity.adcScoreCandidates(
-                          st.withColumnRenamed("vec_id", "neighbor_id"), pr,
-                          Double.MinValue)
-                        .filter(col("mrg").isNull ||
-                          col("adc") >= lit(threshold) - col("mrg"))
-                        .select("query_id", "neighbor_id", "cell"))
-                      // id-pushdown fetch: candidate rows only, pruned to
-                      // their cells (the SemDedupStream verify contract —
-                      // past 10k candidates fall back to a semi-join)
-                      val idRows = cand.select("neighbor_id", "cell")
-                        .distinct().limit(10001).collect()
-                      val fetched =
-                        if (idRows.isEmpty) None
-                        else if (idRows.length <= 10000)
-                          vecStore.read(Seq("vec_id", "embedding"),
-                              Some(idRows.map(_.getInt(1)).distinct.sorted.toSeq))
-                            .map(_.filter(col("vec_id").isin(idRows.map(r =>
-                              java.lang.Long.valueOf(r.getLong(0))).toSeq: _*)))
-                        else
-                          vecStore.read(Seq("vec_id", "embedding"),
-                              Some(pr.probedCells.toSeq))
-                            .map(_.join(
-                              cand.select(col("neighbor_id").as("vec_id"))
-                                .distinct(), Seq("vec_id"), "left_semi"))
-                      fetched.map { f =>
-                        val dup = cand.select("query_id", "neighbor_id")
-                          .distinct()
-                          .join(f.select(col("vec_id").as("neighbor_id"),
-                            col("embedding").cast("array<double>").as("cv")),
-                            Seq("neighbor_id"))
-                          .join(survV.select(col("vec_id").as("query_id"),
-                            col("embedding").cast("array<double>").as("qv")),
-                            Seq("query_id"))
-                          .filter(graft.llm.Similarity
-                            .cosine(col("qv"), col("cv")) >= threshold)
-                          .select(col("query_id").as("vec_id")).distinct()
-                        survV.join(broadcast(dup), Seq("vec_id"), "left_anti")
-                      }.getOrElse(survV)
-                    }
-                    .getOrElse(survV)
-              }
+              SemDedupStream.screenCoded(pins, vecs, q.cents, q.codebooks.get,
+                vecNprobe, threshold,
+                postings = cells =>
+                  pqStore.read(Seq("vec_id", "cell", "codes", "mrg"), Some(cells)),
+                vectors = cells =>
+                  vecStore.read(Seq("vec_id", "embedding"), Some(cells)))
             // raw cell probe: a founded root whose coded postings have
             // not (re)built yet — correct, just dim·8 bytes per probed row
             case Some(q) if vecStore.present =>
@@ -805,8 +599,7 @@ object CurationChain {
         }
         val fTomb = batchTombstones.map { t =>
           staging("stage-tombstones") {
-            t.select(col("doc_id")).distinct().withColumn("asOf", lit(batchId))
-              .write.mode("overwrite").parquet(staged("tombstones"))
+            CorpusRoot.stageTombstones(rootDir, batchId, t, "doc_id")
           }
         }
         val all: Seq[scala.concurrent.Future[Any]] =
@@ -829,19 +622,16 @@ object CurationChain {
         case e: Throwable => drain().foreach(e.addSuppressed); throw e
       }
       drain().foreach(e => throw e)
-      StoreTxn.seal(spark, rootDir, batchId)
-    } finally {
-      pins.foreach(_.unpersist())
-      shipped.forEach(_.destroy())
-    }
+    } finally pins.release()
   }
 
-  private[streaming] def stageBatch(rootDir: String, threshold: Double,
-      vecNprobe: Int = 4, budgets: Map[String, Long] = Map.empty,
-      budgetDefault: Long = Long.MaxValue, vecPq: Boolean = true)(
+  /** Stage and seal a plain batch without publishing it — where the
+    * crash-replay spec stops.
+    */
+  private[streaming] def stageBatch(rootDir: String, threshold: Double)(
       batch: DataFrame, batchId: Long): Unit =
-    stageCurated(rootDir, threshold, batch, None, batchId, vecNprobe,
-      budgets, budgetDefault, vecPq)
+    CorpusRoot.staged(batch.sparkSession, rootDir, batchId)(
+      stageCurated(rootDir, threshold, batch, None, batchId))
 
   /** Front deltas staged by [[stageCurated]], waiting for their publish
     * to land so they can merge into the driver-cached fronts
@@ -887,7 +677,10 @@ object CurationChain {
     * later cadences a hottest-cell drift past 4× fair share (appends
     * land under frozen centroids) triggers the same retrain — the
     * [[graft.llm.Similarity.ivfNeedsRebuild]] policy on the chain's own
-    * store.
+    * store. The quantizer lives under `vec_cells` in the streaming
+    * index's layout ([[SemDedupStream.loadQuantizer]]): `centroids`,
+    * `codebooks` and `calib` (quality telemetry only — the screen's
+    * recall bound is the per-posting `mrg`).
     */
   private def maintainVecCells(spark: SparkSession, rootDir: String,
       floor: Int, rebuildFactor: Double = 4.0,
@@ -895,14 +688,14 @@ object CurationChain {
     val vecDir = ScreenStore.Vecs.dir(rootDir)
     val vecpqDir = ScreenStore.VecPq.dir(rootDir)
     val cellsDir = s"$rootDir/vec_cells"
-    val (fs, cellsPath) = hadoopFs(spark, cellsDir)
+    val cellsPath = new org.apache.hadoop.fs.Path(cellsDir)
+    val fs = cellsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // stale residue from a crashed (re)founding: the store is the truth
     // and absent centroids only cost pruning, so residue just deletes
     fs.delete(new org.apache.hadoop.fs.Path(cellsDir + "_tmp"), true)
     fs.delete(new org.apache.hadoop.fs.Path(cellsDir + "_old"), true)
     if (!hasData(spark, vecDir)) return
-    val quant = loadVecQuantizer(spark, rootDir)
-    val needs = quant match {
+    val needs = SemDedupStream.loadQuantizer(spark, cellsDir) match {
       case None =>
         ScreenStore.Vecs.read(spark, vecDir).count() >= floor
       case Some(q) if vecPq && q.codebooks.isEmpty =>
@@ -992,19 +785,10 @@ object CurationChain {
       vecRebuildFactor: Double = 4.0, vecPq: Boolean = true)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    StoreTxn.guardMonotone(spark, rootDir, batchId)
-    recoverDirs(rootDir).foreach(StoreCompact.recover(spark, _))
-    if (!StoreTxn.isCommitted(spark, rootDir, batchId)) {
-      if (!StoreTxn.isStaged(spark, rootDir, batchId)) {
-        StoreTxn.clearForeignStaged(spark, rootDir, batchId)
-        stageBatch(rootDir, threshold, vecNprobe, budgets, budgetDefault,
-          vecPq)(batch, batchId)
-      }
-      // a sealed staged copy (this call's, or a mid-publish crash's)
-      // publishes WITHOUT recompute — the stores may already hold some of
-      // its files, and recomputing against them is the replay bug
-      StoreTxn.publish(spark, rootDir, batchId)
-      mergePendingFronts(spark, rootDir, batchId)
+    CorpusRoot.trigger(spark, rootDir, batchId, recoverDirs(rootDir),
+        mergePendingFronts(spark, rootDir, batchId)) {
+      stageCurated(rootDir, threshold, batch, None, batchId, vecNprobe,
+        budgets, budgetDefault, vecPq)
     }
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
       compactStores(spark, rootDir)
@@ -1019,75 +803,34 @@ object CurationChain {
     */
   def readAdmitted(spark: SparkSession, rootDir: String): DataFrame =
     readStore(spark, s"$rootDir/admitted",
-        Seq("doc_id", "text", "content_hash", "b")).map { adm =>
-      readStore(spark, s"$rootDir/tombstones", Seq("doc_id", "asOf")) match {
-        case None => adm.select("doc_id", "text", "content_hash")
-        case Some(t0) =>
-          val t = t0.groupBy("doc_id").agg(max("asOf").as("_asof"))
-          // churn-bounded tombstone metadata vs the corpus-scale store;
-          // hint size-guarded (tombstonesBroadcastable — unbounded when
-          // no compaction cadence ever applies them)
-          val hint: DataFrame => DataFrame =
-            if (tombstonesBroadcastable(spark, rootDir)) broadcast else identity
-          adm.join(hint(t), Seq("doc_id"), "left")
-            .filter(liveAsOf(col("_asof")))
-            .select("doc_id", "text", "content_hash")
-      }
-    }.getOrElse(spark.emptyDataFrame)
+        Seq("doc_id", "text", "content_hash", "b"))
+      .map(CorpusRoot.live(spark, rootDir, "doc_id", _)
+        .select("doc_id", "text", "content_hash"))
+      .getOrElse(spark.emptyDataFrame)
 
-  /** Which id column retires a store's rows when its doc tombstones. */
-  private val StoreKeys =
-    ScreenStore.All.map(st => st.name -> st.id) :+ ("admitted" -> "doc_id")
-
-  /** Physically remove tombstoned rows (a row retires when a tombstone
-    * with `asOf > b` exists for its doc) from every store, then clear
-    * the tombstone store. Each rewrite goes through the
-    * [[StoreCompact.rewrite]] swap, so a crash mid-apply is healed by
-    * the next trigger's recover; a crash BEFORE the final clear leaves
-    * tombstones standing — the logical exclusion still holds and the
-    * next cadence finishes the apply (idempotent: rewriting an
-    * already-clean store drops nothing).
+  /** Physically remove tombstoned rows from every store — the bucketed
+    * mains AND their un-merged flat tails — then clear the tombstone
+    * store ([[CorpusRoot.applyTombstones]]: crash-healed, idempotent).
     */
-  def applyTombstones(spark: SparkSession, rootDir: String): Unit = {
-    val tombDir = s"$rootDir/tombstones"
-    if (!hasData(spark, tombDir)) return
-    // size-guard BEFORE the checkpoint reads the store (the guard is a
-    // driver-side listing of the same dir)
-    val hint: DataFrame => DataFrame =
-      if (tombstonesBroadcastable(spark, rootDir)) broadcast else identity
-    val t = read(spark, tombDir)
-      .groupBy("doc_id").agg(max("asOf").as("_asof"))
-      .localCheckpoint() // the rewrites below retire the dirs this reads
-    StoreKeys.foreach { case (store, key) =>
-      // the bucketed main AND its un-merged flat tail both hold live rows
-      Seq(s"$rootDir/$store", s"$rootDir/${store}_tail").foreach { dir =>
-        if (hasData(spark, dir))
-          StoreCompact.rewrite(spark, dir, df =>
-            // churn-bounded metadata vs a store-scale rewrite: hint
-            // size-guarded above
-            df.join(hint(t.select(col("doc_id").as(key), col("_asof"))),
-                Seq(key), "left")
-              .filter(liveAsOf(col("_asof")))
-              .drop("_asof"))
-      }
-    }
-    val (fs, p) = hadoopFs(spark, tombDir)
-    fs.delete(p, true)
-    ()
-  }
+  def applyTombstones(spark: SparkSession, rootDir: String): Unit =
+    CorpusRoot.applyTombstones(spark, rootDir, "doc_id",
+      (ScreenStore.All.map(st => st.name -> st.id) :+ ("admitted" -> "doc_id"))
+        .flatMap { case (store, key) =>
+          Seq(s"$rootDir/$store" -> key, s"$rootDir/${store}_tail" -> key)
+        })
 
   /** The CDC trigger body — [[ingestInto]] for a batch of ROW OPERATIONS
     * `(op, ord, doc_id, text[, content][, embedding])` with `op` ∈
     * INSERT/UPDATE/DELETE and `ord` the within-batch event order (see
-    * [[CdcCorpusChain.cdcDocsFromChunks]]). The LAST op per doc wins;
-    * UPDATE and DELETE tombstone the doc's standing store rows as of
-    * this batch, and INSERT/UPDATE texts re-offer through the full
-    * screen chain against the corpus MINUS the retired rows — all under
-    * ONE staged publish, so replay cannot half-apply a retire/re-admit
-    * pair. An UPDATE whose new text fails the gate (or screens against
-    * OTHER docs) removes the doc from the corpus entirely — the current
-    * version failed curation. Tombstones apply physically on the
-    * `compactEvery` cadence, before compaction.
+    * [[CdcCorpusChain.cdcDocsFromChunks]]). The LAST op per doc wins
+    * ([[CorpusRoot.lastOps]]); UPDATE and DELETE tombstone the doc's
+    * standing store rows as of this batch, and INSERT/UPDATE texts
+    * re-offer through the full screen chain against the corpus MINUS the
+    * retired rows — all under ONE staged publish, so replay cannot
+    * half-apply a retire/re-admit pair. An UPDATE whose new text fails
+    * the gate (or screens against OTHER docs) removes the doc from the
+    * corpus entirely — the current version failed curation. Tombstones
+    * apply physically on the `compactEvery` cadence, before compaction.
     */
   def ingestCdcInto(rootDir: String, threshold: Double = 0.92,
       compactEvery: Int = 0, vecCellFloor: Int = VecCellFloorDefault,
@@ -1096,30 +839,14 @@ object CurationChain {
       vecRebuildFactor: Double = 4.0, vecPq: Boolean = true)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    StoreTxn.guardMonotone(spark, rootDir, batchId)
-    recoverDirs(rootDir).foreach(StoreCompact.recover(spark, _))
-    if (!StoreTxn.isCommitted(spark, rootDir, batchId)) {
-      if (!StoreTxn.isStaged(spark, rootDir, batchId)) {
-        StoreTxn.clearForeignStaged(spark, rootDir, batchId)
-        val wOrd = org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy(col("ord").desc)
-        val last = batch
-          .withColumn("rn", row_number().over(wOrd))
-          .filter(col("rn") === 1).drop("rn")
-          .persist()
-        try {
-          val tombIds = last
-            .filter(col("op").isin("UPDATE", "DELETE")).select("doc_id")
-          // `ord` rides into stageCurated so the in-batch first-of-hash
-          // tiebreak follows stream order for CDC batches
-          val offers = last
-            .filter(col("op").isin("INSERT", "UPDATE")).drop("op")
-          stageCurated(rootDir, threshold, offers, Some(tombIds), batchId,
-            vecNprobe, budgets, budgetDefault, vecPq)
-        } finally { last.unpersist(); () }
+    CorpusRoot.trigger(spark, rootDir, batchId, recoverDirs(rootDir),
+        mergePendingFronts(spark, rootDir, batchId)) {
+      // `ord` rides into stageCurated so the in-batch first-of-hash
+      // tiebreak follows stream order for CDC batches
+      CorpusRoot.lastOps(batch, "doc_id") { (offers, retired) =>
+        stageCurated(rootDir, threshold, offers, Some(retired), batchId,
+          vecNprobe, budgets, budgetDefault, vecPq)
       }
-      StoreTxn.publish(spark, rootDir, batchId)
-      mergePendingFronts(spark, rootDir, batchId)
     }
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
       applyTombstones(spark, rootDir)

@@ -103,12 +103,15 @@ object ImageDedupStream {
     * `compactEvery` > 0 folds the tail into the main every that-many
     * triggers (keyed on batchId, so restarts don't reset the cadence) —
     * the append-per-trigger tail otherwise fragments into the small-file
-    * layout StoreBench measures at 2.3–6.3× probe cost.
+    * layout StoreBench measures at 2.3–6.3× probe cost. Jobs are
+    * labelled `graft.image <stage>` ([[JobLabel]]).
     */
   def ingestInto(storeDir: String, maxHamming: Int = 7, maxBucket: Int = 1024,
       compactEvery: Int = 0)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
+    def labeled[T](stage: String)(f: => T): T =
+      JobLabel(spark, s"graft.image $stage")(f)
     ScreenStore.Phash.dirs(storeDir).foreach(StoreCompact.recover(spark, _))
     val store = ScreenStore.Phash.at(spark, storeDir,
       StoreLayout.ensureLayout(spark, storeDir, Seq("phash")))
@@ -121,12 +124,12 @@ object ImageDedupStream {
       .filter(col("h").isNotNull)
       .persist()
     try {
-      if (!hashed.isEmpty) {
+      if (!labeled("screen")(hashed.isEmpty)) {
         val inDrops = MultimodalQueries
           .hammingNearDupPairs(hashed, maxHamming, maxBucket)
           .select(col("db").as("media_id")).distinct()
         val survivors = hashed.join(inDrops, Seq("media_id"), "left_anti")
-        val admitted =
+        val admitted = labeled("screen") {
           if (!store.present) survivors
           else {
             val bandKeys = store.tagged(MultimodalQueries
@@ -141,16 +144,20 @@ object ImageDedupStream {
                 survivors.join(dups, Seq("media_id"), "left_anti")
             }
           }
+        }
         // the admitted plan reads the store the append grows — truncate
         // the lineage before writing
-        store.writeDelta(
+        val keep = labeled("checkpoint") {
           store.tagged(MultimodalQueries.bandExplode(admitted, "media_id")
             .select(col("media_id"), col("h"), col("b").as("band"), col("v")))
-            .localCheckpoint(),
-          ScreenStore.Phash.tail(storeDir), "append")
+            .localCheckpoint()
+        }
+        labeled("delta") {
+          store.writeDelta(keep, ScreenStore.Phash.tail(storeDir), "append")
+        }
       }
     } finally { hashed.unpersist(); () }
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      store.compact()
+      labeled("compact")(store.compact())
   }
 }

@@ -40,3 +40,21 @@ class ThroughputMeter extends StreamingQueryListener {
     Snapshot(batches.get(), totalRows.get(), in, proc)
   }
 }
+
+/** Stamp every Spark job `f` runs with the description `label`, so the
+  * Spark UI, perfbench's per-label metrics and `tools/joblog.py`
+  * attribute a trigger's jobs to its stages instead of to anonymous call
+  * sites. The trigger bodies prefix their stage names: `graft.chain`
+  * ([[CurationChain]]), `graft.sem` ([[SemDedupStream]]'s indexed root),
+  * `graft.text` ([[TextDedupStream]]) and `graft.image`
+  * ([[ImageDedupStream]]). A pinned frame computes under the label of
+  * the FIRST action that reads it, so per-label job counts move when a
+  * pin moves work between stages. Labels do not nest: the description
+  * clears when `f` returns.
+  */
+private[streaming] object JobLabel {
+  def apply[T](spark: org.apache.spark.sql.SparkSession, label: String)(f: => T): T = {
+    spark.sparkContext.setJobDescription(label)
+    try f finally spark.sparkContext.setJobDescription(null)
+  }
+}

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.llm.Similarity
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Streaming SEMANTIC dedup — the embedding-side of [[CorpusIngest]] and
   * the production form of the q208 incremental operator: every ingest
@@ -24,10 +25,17 @@ import org.apache.spark.sql.functions._
   * plus one corpus cell-assignment pass. The trigger body
   * ([[ingestIntoIndexed]]) runs it against the whole corpus only below
   * the index floor; past it the PERSISTED index (frozen cells, PQ-coded
-  * postings, candidate-bounded exact verify) keeps per-trigger cost
-  * flat in corpus size.
+  * postings, candidate-bounded exact verify — [[screenCoded]], the
+  * screen [[CurationChain]]'s semantic stage runs too) keeps per-trigger
+  * cost flat in corpus size.
   */
 object SemDedupStream {
+
+  /** Below one cell's worth of vectors the exact screen (nlist = 1) is
+    * cheaper than training a cell map — and cell geometry degenerates
+    * when k outgrows the trainable sample anyway.
+    */
+  private val ExactScreenCeiling = 512L
 
   /** Screen one micro-batch: drop in-batch near-dup higher ids (greedy
     * q71 rule), then drop everything with a near-dup neighbor in the
@@ -36,65 +44,6 @@ object SemDedupStream {
     * only the in-batch screen with cells trained on the batch itself.
     * Pure batch-side function — `foreachBatch` calls it per trigger.
     */
-  /** Below one cell's worth of vectors the exact screen (nlist = 1) is
-    * cheaper than training a cell map — and cell geometry degenerates
-    * when k outgrows the trainable sample anyway.
-    */
-  private val ExactScreenCeiling = 512L
-
-  /** Sentinel for `adcMargin`: resolve the margin from the index's own
-    * calibration ([[Similarity.adcCalibratedMargin]] — the p99 PQ residual
-    * norm measured at build time, the Cauchy–Schwarz bound on per-pair ADC
-    * cosine error). PQ quantization error is data-dependent; a fixed
-    * margin silently under-screens corpora whose error exceeds it
-    * (r14 ADVICE medium). Explicit margins are honored but warned about
-    * when they fall below the measured p99.
-    */
-  val AutoMargin: Double = -1.0
-
-  /** Fallback when no calibration is persisted (pre-calibration index). */
-  private val DefaultMargin = 0.08
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  // calib parquet memo: the one-row file only changes when a rebuild
-  // swaps the index dir, so per-trigger re-reads are a fixed job for a
-  // constant (the r14-item-2 overhead class). Keyed by the calib file's
-  // (mtime, len) — one metadata call per trigger instead of a read job.
-  private val calibCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Option[Double])]()
-
-  private def calibratedMargin(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[Double] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/calib")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val stamp = fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString(",")
-    val hit = calibCache.get(indexDir)
-    if (hit != null && hit._1 == stamp) hit._2
-    else {
-      val v = Similarity.adcCalibratedMargin(spark, indexDir)
-      calibCache.put(indexDir, (stamp, v))
-      v
-    }
-  }
-
-  private def resolveMargin(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, requested: Double): Double = {
-    val calib = calibratedMargin(spark, indexDir)
-    if (requested < 0) calib.getOrElse(DefaultMargin)
-    else {
-      calib.filter(_ > requested).foreach { p99 =>
-        log.warn(s"adcMargin $requested below measured p99 ADC error " +
-          s"$p99 for $indexDir — near-threshold duplicates may be " +
-          "silently admitted")
-      }
-      requested
-    }
-  }
-
   def admitBatch(batch: DataFrame, corpus: DataFrame, threshold: Double,
       probes: Int = 4): DataFrame = {
     // one count serves both the idle-trigger gate and the exact-screen
@@ -120,6 +69,116 @@ object SemDedupStream {
     }
   }
 
+  /** A frozen semantic quantizer: coarse centroids plus PQ sub-codebooks,
+    * laid out as [[Similarity.buildIvfCodeIndex]] writes them under `dir`
+    * (`centroids`, `codebooks`). `codebooks` is None for a quantizer
+    * founded before the coded layout existed.
+    */
+  private[streaming] final case class Quantizer(cents: Array[Array[Double]],
+      codebooks: Option[Array[Array[Array[Double]]]])
+
+  /** Driver memo of the quantizers: the arrays only change when a
+    * (re)build swaps the directory, so per-trigger centroid/codebook
+    * reads would be fixed jobs for constants. Keyed by a listing of the
+    * two subdirectories — one metadata sweep per trigger instead of two
+    * read jobs.
+    */
+  private val quantCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, Quantizer)]()
+
+  /** The quantizer under `dir`; None until its centroids exist. */
+  private[streaming] def loadQuantizer(spark: SparkSession,
+      dir: String): Option[Quantizer] = {
+    if (!StoreCompact.hasData(spark, s"$dir/centroids")) return None
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stamp = new StringBuilder()
+    Seq("centroids", "codebooks").map(new org.apache.hadoop.fs.Path(root, _))
+      .filter(fs.exists).foreach { p =>
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          val st = it.next()
+          stamp.append(st.getPath.getName).append(':').append(st.getLen)
+            .append(':').append(st.getModificationTime).append(',')
+        }
+      }
+    val key = stamp.toString()
+    val hit = quantCache.get(dir)
+    if (hit != null && hit._1 == key) Some(hit._2)
+    else {
+      val q = Quantizer(Similarity.readIvfCentroids(spark, dir),
+        if (StoreCompact.hasData(spark, s"$dir/codebooks"))
+          Some(Similarity.readCodebooks(spark, s"$dir/codebooks"))
+        else None)
+      quantCache.put(dir, (key, q))
+      Some(q)
+    }
+  }
+
+  /** The CODED screen of a (vec_id, embedding) batch against a founded
+    * corpus — both semantic roots run it. The in-batch greedy drop runs
+    * first; then each survivor probes its `nprobe` nearest cells, the
+    * probed cells' PQ postings (8+m+8 bytes/vector instead of dim·8) are
+    * ADC-scored, and a posting stays a candidate at
+    * `adc ≥ threshold − mrg`: `mrg` is the posting's own exact ADC error
+    * bound ([[graft.llm.PqAdcMargin]]), so the filter never drops a true
+    * pair, and a posting without one (a null `mrg`, as older files read)
+    * always verifies. ONLY the candidates then verify exactly against the
+    * raw vectors, fetched by id pushdown (past 10k candidates, a
+    * semi-join over the probed cells) — an all-novel batch reads code
+    * postings and zero raw vectors. `postings(cells)` gives the live
+    * (vec_id, cell, codes, mrg) rows of those cells, `vectors(cells)` the
+    * live (vec_id, embedding) rows. Returns the admitted rows of `vecs`.
+    */
+  private[streaming] def screenCoded(pins: CorpusRoot.Pins, vecs: DataFrame,
+      cents: Array[Array[Double]], codebooks: Array[Array[Array[Double]]],
+      nprobe: Int, threshold: Double,
+      postings: Seq[Int] => Option[DataFrame],
+      vectors: Seq[Int] => Option[DataFrame]): DataFrame = {
+    // the in-batch survivors feed the probe collect, the candidate
+    // materialization and the final anti-join — pinned, or each re-runs
+    // the whole upstream screen subplan (the q226 lesson)
+    val surv = pins.pin(admitBatch(vecs, vecs.sparkSession.emptyDataFrame,
+      threshold))
+    Similarity.adcProbes(surv.select("vec_id", "embedding"), cents,
+        codebooks, nprobe) match {
+      case None => surv // zero offers survived the batch screen
+      case Some(pr) =>
+        postings(pr.probedCells.toSeq).map { st =>
+          val cand = pins.pin(Similarity.adcScoreCandidates(
+              st.withColumnRenamed("vec_id", "neighbor_id"), pr,
+              Double.MinValue)
+            .filter(col("mrg").isNull ||
+              col("adc") >= lit(threshold) - col("mrg"))
+            .select("query_id", "neighbor_id", "cell"))
+          val idRows = cand.select("neighbor_id", "cell")
+            .distinct().limit(10001).collect()
+          val fetched =
+            if (idRows.isEmpty) None
+            else if (idRows.length <= 10000)
+              vectors(idRows.map(_.getInt(1)).distinct.sorted.toSeq)
+                .map(_.filter(col("vec_id").isin(idRows.map(r =>
+                  java.lang.Long.valueOf(r.getLong(0))).toSeq: _*)))
+            else
+              vectors(pr.probedCells.toSeq).map(_.join(
+                cand.select(col("neighbor_id").as("vec_id")).distinct(),
+                Seq("vec_id"), "left_semi"))
+          fetched.map { f =>
+            val dup = cand.select("query_id", "neighbor_id").distinct()
+              .join(f.select(col("vec_id").as("neighbor_id"),
+                col("embedding").cast("array<double>").as("cv")),
+                Seq("neighbor_id"))
+              .join(surv.select(col("vec_id").as("query_id"),
+                col("embedding").cast("array<double>").as("qv")),
+                Seq("query_id"))
+              .filter(Similarity.cosine(col("qv"), col("cv")) >= threshold)
+              .select(col("query_id").as("vec_id")).distinct()
+            surv.join(broadcast(dup), Seq("vec_id"), "left_anti")
+          }.getOrElse(surv)
+        }.getOrElse(surv)
+    }
+  }
+
   /** How many corpus rows must exist before the persisted index is worth
     * founding: below ~4 vectors/cell the trained quantizer is noise and
     * the per-trigger screens are cheap anyway.
@@ -142,68 +201,49 @@ object SemDedupStream {
     math.max(16, math.min(4096,
       math.ceil(math.sqrt(n / 10.0)).toInt))
 
-  private def dirHasData(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = StoreCompact.hasData(spark, dir)
+  private def corpusDir(rootDir: String): String = s"$rootDir/corpus"
+  private def indexDir(rootDir: String): String = s"$rootDir/ivf"
 
-  /** The LIVE corpus rows (vec_id, embedding, b): minus rows retired by
-    * a newer tombstone — the CDC-extended indexed root keeps the same
-    * (id, b < asOf) convention as [[CurationChain]].
+  /** The declared columns of the indexed root's corpus and postings:
+    * reads name them, so none runs Spark's footer-inference job. Float
+    * embeddings widen on read; a column absent from an older file reads
+    * as null.
     */
-  private def liveCorpus(spark: org.apache.spark.sql.SparkSession,
-      rootDir: String): Option[DataFrame] = {
-    val corpusDir = s"$rootDir/corpus"
-    if (!dirHasData(spark, corpusDir)) return None
-    val raw = spark.read.parquet(corpusDir)
-    // an externally seeded corpus (bench bootstrap) may predate the
-    // batch-stamp column — batch 0 is the correct reading for such rows
-    val df = (if (raw.columns.contains("b")) raw
-      else raw.withColumn("b", lit(0L))).select("vec_id", "embedding", "b")
-    Some(tombstonesOf(spark, rootDir) match {
-      case None => df
-      case Some(t) =>
-        df.join(t.withColumnRenamed("asOf", "_asof"), Seq("vec_id"), "left")
-          .filter(col("_asof").isNull || col("b") >= col("_asof"))
-          .drop("_asof")
-    })
-  }
+  private val CorpusSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(DoubleType)), StructField("b", LongType)))
+  private val PostingsSchema = StructType(Seq(
+    StructField("neighbor_id", LongType), StructField("cell", IntegerType),
+    StructField("codes", ArrayType(IntegerType)), StructField("b", LongType),
+    StructField("mrg", DoubleType)))
 
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-      rootDir: String): Option[DataFrame] = {
-    val dir = s"$rootDir/tombstones"
-    if (!dirHasData(spark, dir)) None
-    else Some(spark.read.parquet(dir)
-      .groupBy("vec_id").agg(max("asOf").as("asOf")))
-  }
+  /** Every corpus row (vec_id, embedding, b). An externally seeded corpus
+    * (bench bootstrap) may predate the batch-stamp column — batch 0 is
+    * the correct reading for such rows.
+    */
+  private def readCorpus(spark: SparkSession, rootDir: String): Option[DataFrame] =
+    if (!StoreCompact.hasData(spark, corpusDir(rootDir))) None
+    else Some(spark.read.schema(CorpusSchema).parquet(corpusDir(rootDir))
+      .withColumn("b", coalesce(col("b"), lit(0L))))
 
-  /** Retrain the index from the LIVE corpus rows and swap it in with the
-    * [[StoreCompact]] rename discipline (retire → publish → drop), so a
-    * crash inside the swap window is healed by the `recover` call at the
-    * top of the next trigger instead of reading half an index. The
-    * layout is [[Similarity.buildIvfCodeIndex]] (r13 verdict item 2):
+  /** The corpus rows live under the standing tombstones. */
+  private def liveCorpus(spark: SparkSession, rootDir: String): Option[DataFrame] =
+    readCorpus(spark, rootDir).map(CorpusRoot.live(spark, rootDir, "vec_id", _))
+
+  /** Retrain the index from the LIVE corpus rows and swap it in
+    * ([[StoreCompact.swap]]), so a crash inside the swap window is healed
+    * by the `recover` at the top of the next trigger instead of reading
+    * half an index. The layout is [[Similarity.buildIvfCodeIndex]]:
     * coarse cells prune, FULL-VECTOR PQ codes score — postings are
-    * N·(8+m+8) bytes instead of N·dim·8, the 64×-class read reduction
-    * the screen pays per trigger.
+    * N·(8+m+8) bytes instead of N·dim·8, the 64×-class read reduction the
+    * screen pays per trigger.
     */
-  private def rebuildIndex(spark: org.apache.spark.sql.SparkSession,
-      rootDir: String, indexDir: String, nlist: Int, m: Int,
-      ksub: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(indexDir + "_compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(indexDir + "_compact_old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    Similarity.buildIvfCodeIndex(
-      liveCorpus(spark, rootDir).getOrElse(
+  private def rebuildIndex(spark: SparkSession, rootDir: String,
+      nlist: Int): Unit =
+    StoreCompact.swap(spark, indexDir(rootDir)) { tmp =>
+      Similarity.buildIvfCodeIndex(liveCorpus(spark, rootDir).getOrElse(
         throw new IllegalStateException(s"rebuild with no corpus at $rootDir")),
-      tmp.toString, nlist, m, ksub)
-    val live = new org.apache.hadoop.fs.Path(indexDir)
-    if (fs.exists(live))
-      require(fs.rename(live, old), s"rebuild: could not retire $indexDir")
-    require(fs.rename(tmp, live), s"rebuild: could not publish $tmp")
-    fs.delete(old, true)
-    ()
-  }
-
+        tmp, nlist)
+    }
 
   /** The trigger body: screen each batch against the standing corpus and
     * admit the novel vectors, with the persisted-index lifecycle composed
@@ -212,24 +252,14 @@ object SemDedupStream {
     * Layout under `rootDir`:
     * `corpus` (vec_id, embedding, b — the source of truth) and `ivf`
     * (centroids + PQ codebooks + cell-partitioned m-byte CODE postings —
-    * derived; [[Similarity.buildIvfCodeIndex]], r13 verdict item 2: the
-    * old raw-vector postings made every screening trigger read
-    * ~dim·8 bytes/vector of its probed cells — the code layout reads
-    * 8+m, the 64×-class reduction at dim 64, and most triggers touch
-    * the raw corpus not at all). Per trigger:
+    * derived; [[Similarity.buildIvfCodeIndex]]). Per trigger, on the
+    * [[CorpusRoot]] spine:
     *
-    *  1. screen — in-batch greedy drop, then the corpus side through the
-    *     STANDING index: probe nprobe cells, ADC-score the pruned code
-    *     postings (≈ cosine, full-vector codes), and exact-verify only
-    *     the candidates clearing `threshold - mrg` — each posting's OWN
-    *     exact ADC error bound, written at encode time
-    *     ([[graft.llm.PqAdcMargin]]; recall-safe for any query by
-    *     Cauchy–Schwarz, with `adcMargin` surviving only as the global
-    *     fallback for pre-margin indexes) — against the raw corpus
-    *     (id-pushdown fetch; an all-novel batch produces ZERO
-    *     candidates and never opens a corpus file). Before the index
-    *     exists — corpus below [[indexFloor]] — the per-trigger
-    *     [[admitBatch]] path screens, so bootstrap semantics are the
+    *  1. screen — past the index floor, [[screenCoded]] through the
+    *     STANDING index (probe `nprobe` cells, ADC-score the pruned code
+    *     postings, exact-verify only the candidates against the raw
+    *     corpus); below it — corpus under [[indexFloor]] — the
+    *     per-trigger [[admitBatch]] path, so bootstrap semantics are the
     *     gated operator's;
     *  2. publish — admitted rows stage to BOTH the corpus and the
     *     index's postings (frozen-centroid assignment + frozen-codebook
@@ -247,226 +277,134 @@ object SemDedupStream {
     *     when it fires. Maintenance runs AFTER commit on derived state
     *     only, swap-healed — admit decisions never depend on a
     *     half-built index.
+    *
+    * Jobs are labelled `graft.sem <stage>` ([[JobLabel]]).
     */
   def ingestIntoIndexed(rootDir: String, threshold: Double,
-      nlist: Int = 0, nprobe: Int = 4, probes: Int = 4,
-      rebuildCheckEvery: Int = 4, rebuildFactor: Double = 4.0,
-      m: Int = 8, ksub: Int = 256, adcMargin: Double = AutoMargin)(
+      nlist: Int = 0, nprobe: Int = 4,
+      rebuildCheckEvery: Int = 4, rebuildFactor: Double = 4.0)(
       batch: DataFrame, batchId: Long): Unit =
-    ingestIndexedImpl(rootDir, threshold, nlist, nprobe, probes,
-      rebuildCheckEvery, rebuildFactor, m, ksub, adcMargin,
-      compactEvery = 0, cdc = false)(batch, batchId)
+    ingestIndexed(rootDir, threshold, nlist, nprobe, rebuildCheckEvery,
+      rebuildFactor, compactEvery = 0, cdc = false)(batch, batchId)
 
   /** The CDC form of [[ingestIntoIndexed]] (r13 verdict item 7 — the
     * mutable corpus previously had no index path, so an UPDATEd/DELETEd
     * doc's vector stayed probeable forever): batches of
     * (op, ord, vec_id, embedding), last op per id wins, UPDATE/DELETE
-    * tombstone the id's standing corpus row AND index posting (the same
-    * (id, b < asOf) exclusion, applied to candidates before the verify
-    * and to the corpus read inside it), INSERT/UPDATE vectors re-offer
-    * through the screen against the corpus MINUS the retired rows —
-    * one staged publish. `compactEvery` applies tombstones physically
-    * (corpus + postings rewrite, then the tombstone store clears).
+    * tombstone the id's standing corpus row AND index posting (the
+    * [[CorpusRoot]] tombstone protocol, applied to the candidate
+    * postings and to the corpus read of the verify), INSERT/UPDATE
+    * vectors re-offer through the screen against the corpus MINUS the
+    * retired rows — one staged publish. `compactEvery` applies
+    * tombstones physically (corpus + postings rewrite, then the
+    * tombstone store clears).
     */
   def ingestCdcIntoIndexed(rootDir: String, threshold: Double,
-      nlist: Int = 0, nprobe: Int = 4, probes: Int = 4,
+      nlist: Int = 0, nprobe: Int = 4,
       rebuildCheckEvery: Int = 4, rebuildFactor: Double = 4.0,
-      m: Int = 8, ksub: Int = 256, adcMargin: Double = AutoMargin,
       compactEvery: Int = 0)(
       batch: DataFrame, batchId: Long): Unit =
-    ingestIndexedImpl(rootDir, threshold, nlist, nprobe, probes,
-      rebuildCheckEvery, rebuildFactor, m, ksub, adcMargin,
-      compactEvery, cdc = true)(batch, batchId)
+    ingestIndexed(rootDir, threshold, nlist, nprobe, rebuildCheckEvery,
+      rebuildFactor, compactEvery, cdc = true)(batch, batchId)
 
-  private def ingestIndexedImpl(rootDir: String, threshold: Double,
-      nlist: Int, nprobe: Int, probes: Int,
-      rebuildCheckEvery: Int, rebuildFactor: Double,
-      m: Int, ksub: Int, adcMargin: Double,
+  private def ingestIndexed(rootDir: String, threshold: Double,
+      nlist: Int, nprobe: Int, rebuildCheckEvery: Int, rebuildFactor: Double,
       compactEvery: Int, cdc: Boolean)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val corpusDir = s"$rootDir/corpus"
-    val indexDir = s"$rootDir/ivf"
-    StoreTxn.guardMonotone(spark, rootDir, batchId)
-    StoreCompact.recover(spark, corpusDir)
-    StoreCompact.recover(spark, indexDir) // heal an interrupted rebuild swap
-    val indexed = dirHasData(spark, s"$indexDir/centroids")
-    if (!StoreTxn.isCommitted(spark, rootDir, batchId)) {
-      if (!StoreTxn.isStaged(spark, rootDir, batchId)) {
-        StoreTxn.clearForeignStaged(spark, rootDir, batchId)
-        // CDC: the LAST op per id wins; UPDATE/DELETE retire as of this
-        // batch; INSERT/UPDATE vectors re-offer
-        val (offers0, tombIds) =
-          if (!cdc) (batch, None: Option[DataFrame])
-          else {
-            val wOrd = org.apache.spark.sql.expressions.Window
-              .partitionBy("vec_id").orderBy(col("ord").desc)
-            val last = batch.withColumn("rn", row_number().over(wOrd))
-              .filter(col("rn") === 1).drop("rn")
-            (last.filter(col("op").isin("INSERT", "UPDATE"))
-              .select("vec_id", "embedding"),
-              Some(last.filter(col("op").isin("UPDATE", "DELETE"))
-                .select("vec_id")))
-          }
-        val pinned = offers0.persist()
-        // effective retirement for THIS trigger's screens: standing
-        // tombstones ∪ this batch's (so an UPDATE screens against the
-        // corpus minus its own old vector, in the same trigger)
-        val freshTomb = tombIds.map(_.distinct()
-          .withColumn("asOf", lit(batchId)).persist())
-        val standing = tombstonesOf(spark, rootDir)
-        val tombAll: Option[DataFrame] = (standing, freshTomb) match {
-          case (None, None) => None
-          case (a, b) => Some((a.toSeq ++ b.toSeq).reduce(_ unionByName _)
-            .groupBy("vec_id").agg(max("asOf").as("asOf")))
-        }
-        def liveOf(df: DataFrame): DataFrame = tombAll match {
-          case None => df
-          case Some(t) =>
-            df.join(t.select(col("vec_id"), col("asOf").as("_asof")),
-                Seq("vec_id"), "left")
-              .filter(col("_asof").isNull || col("b") >= col("_asof"))
-              .drop("_asof")
-        }
-        var surv0: Option[DataFrame] = None
-        try {
-          val admitted =
-            if (indexed) {
-              // the in-batch screen result feeds the isEmpty probe, the
-              // candidate probe collect, the verify join, and the staged
-              // write — pin it, or each action re-runs the screen subplan
-              val surv = admitBatch(pinned, spark.emptyDataFrame,
-                threshold, probes).persist() // in-batch screen only
-              surv0 = Some(surv)
-              // A pure-DELETE (or replayed-empty) CDC batch has zero
-              // offers — skip the candidate/verify jobs entirely and
-              // fall through to staging, so the batch's TOMBSTONES
-              // still publish (the ADVICE r14 high: the old path died
-              // in liveOf on the candidate frame and lost the DELETEs)
-              if (surv.isEmpty) surv
-              else {
-                // ADC candidates (postings pruned to the probed cells, m
-                // bytes/vector), each kept at `adc ≥ threshold − mrg` —
-                // the posting's own exact error bound, so recall never
-                // depends on the calibrated global margin (that margin
-                // survives only as the fallback for indexes built
-                // before `mrg` existed); retired postings excluded by
-                // (id, b), then the candidate-bounded exact verify
-                val cand = liveOf(Similarity.ivfCodeThresholdCandidatesExact(
-                    indexDir, surv, threshold, nprobe,
-                    resolveMargin(spark, indexDir, adcMargin))
-                  .withColumnRenamed("neighbor_id", "vec_id"))
-                  .withColumnRenamed("vec_id", "neighbor_id")
-                val dupIds = verifyCandidatesLive(spark, rootDir, surv, cand,
-                  threshold, tombAll)
-                surv.join(dupIds, Seq("vec_id"), "left_anti")
-              }
-            } else {
-              val corpus = liveCorpus(spark, rootDir)
-                .map(liveOf).map(_.select("vec_id", "embedding"))
-                .getOrElse(spark.emptyDataFrame)
-              admitBatch(pinned, corpus, threshold, probes)
-            }
-          // the staged writes must not re-read the stores the publish
-          // below grows — truncate the lineage to the computed rows
-          val keep = admitted.select("vec_id", "embedding")
-            .withColumn("b", lit(batchId)).localCheckpoint()
-          keep.write.mode("overwrite")
-            .parquet(StoreTxn.stagePath(rootDir, batchId, "corpus"))
-          if (indexed)
-            Similarity.stageIvfCodeAppend(keep, indexDir,
-              StoreTxn.stagePath(rootDir, batchId, "ivf") + "/postings")
-          freshTomb.foreach {
-            _.write.mode("overwrite")
-              .parquet(StoreTxn.stagePath(rootDir, batchId, "tombstones"))
-          }
-          StoreTxn.seal(spark, rootDir, batchId)
-        } finally {
-          pinned.unpersist(); freshTomb.foreach(_.unpersist())
-          surv0.foreach(_.unpersist()); ()
-        }
+    val postingsDir = s"${indexDir(rootDir)}/postings"
+    CorpusRoot.trigger(spark, rootDir, batchId,
+        Seq(corpusDir(rootDir), indexDir(rootDir), postingsDir)) {
+      if (!cdc) stageIndexed(rootDir, threshold, nprobe, batch, None, batchId)
+      else CorpusRoot.lastOps(batch, "vec_id") { (offers, retired) =>
+        stageIndexed(rootDir, threshold, nprobe, offers, Some(retired), batchId)
       }
-      StoreTxn.publish(spark, rootDir, batchId)
     }
     // maintenance — derived state only, after commit
-    if (cdc && compactEvery > 0 && batchId > 0 &&
-        batchId % compactEvery == 0) {
-      applyIndexedTombstones(spark, rootDir)
-    }
+    if (cdc && compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+      CorpusRoot.applyTombstones(spark, rootDir, "vec_id",
+        Seq(corpusDir(rootDir) -> "vec_id", postingsDir -> "neighbor_id"))
     // (re)builds SIZE the cell count from the live corpus when the auto
     // sentinel rides (nlist = 0) — a drift rebuild re-sizes, so the
     // quantizer tracks corpus growth under the streaming policy
     def sizedNlist(n: Long): Int = if (nlist > 0) nlist else nlistFor(n)
-    if (!indexed) {
-      val n = liveCorpus(spark, rootDir).map(_.count()).getOrElse(0L)
+    def liveN: Long = liveCorpus(spark, rootDir).map(_.count()).getOrElse(0L)
+    if (!loadQuantizer(spark, indexDir(rootDir)).exists(_.codebooks.isDefined)) {
+      val n = liveN
       if (n > 0 && n >= indexFloor(sizedNlist(n)))
-        rebuildIndex(spark, rootDir, indexDir, sizedNlist(n), m, ksub)
+        rebuildIndex(spark, rootDir, sizedNlist(n))
     } else if (rebuildCheckEvery > 0 && batchId > 0 &&
         batchId % rebuildCheckEvery == 0 &&
-        Similarity.ivfNeedsRebuild(spark, indexDir, rebuildFactor)) {
-      val n = liveCorpus(spark, rootDir).map(_.count()).getOrElse(0L)
-      rebuildIndex(spark, rootDir, indexDir, sizedNlist(n), m, ksub)
-    }
+        Similarity.ivfNeedsRebuild(spark, indexDir(rootDir), rebuildFactor))
+      rebuildIndex(spark, rootDir, sizedNlist(liveN))
   }
 
-  /** [[verifyCandidates]] with the trigger's effective tombstones (the
-    * standing store alone misses THIS batch's retirements).
+  /** Stage and seal a plain batch without publishing it — where the
+    * crash-replay spec stops.
     */
-  private def verifyCandidatesLive(spark: org.apache.spark.sql.SparkSession,
-      rootDir: String, queries: DataFrame, cand: DataFrame,
-      threshold: Double, tombAll: Option[DataFrame]): DataFrame = {
-    val pairs = cand.select("query_id", "neighbor_id").distinct()
-    val idRows = pairs.select("neighbor_id").distinct().limit(10001).collect()
-    val corpus0 = liveCorpus(spark, rootDir).getOrElse(
-      return pairs.select(col("query_id").as("vec_id")).limit(0))
-    val corpus = tombAll match {
-      case None => corpus0
-      case Some(t) =>
-        corpus0.join(t.select(col("vec_id"), col("asOf").as("_asof")),
-            Seq("vec_id"), "left")
-          .filter(col("_asof").isNull || col("b") >= col("_asof"))
-          .drop("_asof")
-    }
-    val fetched =
-      if (idRows.length <= 10000)
-        corpus.filter(col("vec_id").isin(
-          idRows.map(r => java.lang.Long.valueOf(r.getLong(0))).toSeq: _*))
-      else
-        corpus.join(pairs.select(col("neighbor_id").as("vec_id")).distinct(),
-          Seq("vec_id"), "left_semi")
-    pairs
-      .join(fetched.select(col("vec_id").as("neighbor_id"),
-        col("embedding").cast("array<double>").as("cv")), Seq("neighbor_id"))
-      .join(queries.select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv")), Seq("query_id"))
-      .filter(Similarity.cosine(col("qv"), col("cv")) >= threshold)
-      .select(col("query_id").as("vec_id")).distinct()
-  }
+  private[streaming] def stageBatch(rootDir: String, threshold: Double)(
+      batch: DataFrame, batchId: Long): Unit =
+    CorpusRoot.staged(batch.sparkSession, rootDir, batchId)(
+      stageIndexed(rootDir, threshold, nprobe = 4, batch, None, batchId))
 
-  /** Physically drop tombstone-retired rows from the corpus AND the
-    * index postings (both carry `b`; a row retires when a tombstone with
-    * `asOf > b` exists for its id), then clear the tombstone store —
-    * the indexed root's [[CurationChain.applyTombstones]].
+  /** Screen `offers` (vec_id, embedding) against the live corpus — the
+    * standing tombstones plus this batch's `retired` ids excluded — and
+    * stage the admitted rows to the corpus and the postings, and the
+    * retired ids to the tombstones.
     */
-  def applyIndexedTombstones(spark: org.apache.spark.sql.SparkSession,
-      rootDir: String): Unit = {
-    val tombDir = s"$rootDir/tombstones"
-    if (!dirHasData(spark, tombDir)) return
-    val t = spark.read.parquet(tombDir)
-      .groupBy("vec_id").agg(max("asOf").as("_asof"))
-      .localCheckpoint()
-    Seq(s"$rootDir/corpus" -> "vec_id",
-        s"$rootDir/ivf/postings" -> "neighbor_id").foreach {
-      case (dir, key) =>
-        if (dirHasData(spark, dir))
-          StoreCompact.rewrite(spark, dir, df =>
-            df.join(t.select(col("vec_id").as(key), col("_asof")),
-                Seq(key), "left")
-              .filter(col("_asof").isNull || col("b") >= col("_asof"))
-              .drop("_asof"))
-    }
-    val p = new org.apache.hadoop.fs.Path(tombDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
+  private def stageIndexed(rootDir: String, threshold: Double, nprobe: Int,
+      offers: DataFrame, retired: Option[DataFrame], batchId: Long): Unit = {
+    val spark = offers.sparkSession
+    def labeled[T](stage: String)(f: => T): T =
+      JobLabel(spark, s"graft.sem $stage")(f)
+    def staged(store: String): String = StoreTxn.stagePath(rootDir, batchId, store)
+    val pins = new CorpusRoot.Pins(spark)
+    try {
+      val retire = CorpusRoot.retire(pins, rootDir, "vec_id", retired,
+        batchId, "graft.sem tombstones")
+      def live(df: DataFrame): DataFrame = retire.fold(df)(_(df, "vec_id"))
+      val corpus = readCorpus(spark, rootDir)
+        .map(c => live(c).select("vec_id", "embedding"))
+      val vecs = pins.pin(offers.select("vec_id", "embedding"))
+      val coded = loadQuantizer(spark, indexDir(rootDir))
+        .flatMap(q => q.codebooks.map(q.cents -> _))
+      val postingsDir = s"${indexDir(rootDir)}/postings"
+      val admitted = labeled("screen") {
+        coded match {
+          case Some((cents, cbs)) =>
+            screenCoded(pins, vecs, cents, cbs, nprobe, threshold,
+              postings = cells =>
+                if (!StoreCompact.hasData(spark, postingsDir)) None
+                else Some(live(spark.read.schema(PostingsSchema).parquet(postingsDir)
+                    .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
+                    .withColumnRenamed("neighbor_id", "vec_id"))
+                  .select("vec_id", "cell", "codes", "mrg")),
+              vectors = _ => corpus)
+          case None =>
+            admitBatch(vecs, corpus.getOrElse(spark.emptyDataFrame), threshold)
+        }
+      }
+      // the staged writes must not re-read the stores the publish grows —
+      // truncate the lineage to the computed rows
+      val keep = labeled("checkpoint") {
+        admitted.select("vec_id", "embedding")
+          .withColumn("b", lit(batchId)).localCheckpoint()
+      }
+      labeled("stage-corpus") {
+        keep.write.mode("overwrite").parquet(staged("corpus"))
+      }
+      coded.foreach { case (cents, cbs) =>
+        labeled("stage-postings") {
+          Similarity.encodeIvfCode(keep, cents, cbs, withMargin = true)
+            .write.mode("overwrite").partitionBy("cell")
+            .parquet(staged("ivf") + "/postings")
+        }
+      }
+      retired.foreach { ids =>
+        labeled("stage-tombstones") {
+          CorpusRoot.stageTombstones(rootDir, batchId, ids, "vec_id")
+        }
+      }
+    } finally pins.release()
   }
 }

@@ -3,15 +3,17 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 
 /** Compaction for the append-accumulated parquet stores the streaming
-  * dedup screens keep ([[ImageDedupStream]] (media_id, h),
-  * [[TextDedupStream]] (doc_id, sig), [[SemDedupStream]]'s vector store):
-  * every trigger appends one small file, so a one-trigger-per-minute
+  * bodies keep (the [[ScreenStore]]s of [[ImageDedupStream]],
+  * [[TextDedupStream]] and [[CurationChain]], and the corpus, postings
+  * and index of [[SemDedupStream]]'s indexed root): every trigger
+  * appends one small file, so a one-trigger-per-minute
   * ingest leaves half a million files a year — the classic small-file
   * failure, where the per-trigger store RE-READ (the screens' exact
   * backstop) spends its time opening footers instead of scanning rows.
   *
   * `compact` rewrites the store into `targetFiles` coalesced files via a
-  * temp directory and a rename swap. The swap is two renames, not one
+  * temp directory and a rename swap ([[swap]], shared by every rewrite
+  * here and by the index rebuild). The swap is two renames, not one
   * atomic operation — safe here because a foreachBatch ingest is the
   * store's ONLY writer and triggers run serially, so compaction runs
   * BETWEEN triggers (same maintenance slot as the index rebuilds), and a
@@ -121,14 +123,10 @@ object StoreCompact {
       if (keys.isEmpty) targetFiles
       else math.max(targetFiles, fs.listStatus(path).count(_.isDirectory))
     if (before <= target) return (before, before)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "_compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(dir + "_compact_old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    writeCompacted(spark.read.parquet(dir), keys, targetFiles, tmp.toString)
-    val after = leafFiles(fs, tmp)
-    require(fs.rename(path, old), s"compact: could not retire $dir")
-    require(fs.rename(tmp, path), s"compact: could not publish $tmp")
-    fs.delete(old, true)
+    val after = swap(spark, dir) { tmp =>
+      writeCompacted(spark.read.parquet(dir), keys, targetFiles, tmp)
+      leafFiles(fs, new org.apache.hadoop.fs.Path(tmp))
+    }
     (before, after)
   }
 
@@ -154,8 +152,6 @@ object StoreCompact {
       if (hasData(spark, dir)) { compact(spark, dir, targetFiles); () }
       return
     }
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parts = Seq(dir, tailDir).filter(hasData(spark, _))
       .map(spark.read.parquet(_))
     val merged = parts.reduce(_ unionByName _).distinct().persist()
@@ -166,21 +162,15 @@ object StoreCompact {
       // bucket-dir would dominate it), above it the `key=value` dirs
       // materialize and pruned reads skip unlisted buckets' files
       val n = merged.count()
-      val tmp = new org.apache.hadoop.fs.Path(dir + "_compact_tmp")
-      val old = new org.apache.hadoop.fs.Path(dir + "_compact_old")
-      fs.delete(tmp, true); fs.delete(old, true)
-      if (n >= partitionFloor)
-        merged.repartition(targetFiles, partCols.map(col): _*)
-          .write.mode("overwrite").partitionBy(partCols: _*)
-          .parquet(tmp.toString)
-      else
-        merged.coalesce(targetFiles).write.mode("overwrite")
-          .parquet(tmp.toString)
-      if (fs.exists(path))
-        require(fs.rename(path, old), s"mergeTail: could not retire $dir")
-      require(fs.rename(tmp, path), s"mergeTail: could not publish $tmp")
-      fs.delete(old, true)
-      fs.delete(new org.apache.hadoop.fs.Path(tailDir), true)
+      swap(spark, dir) { tmp =>
+        if (n >= partitionFloor)
+          merged.repartition(targetFiles, partCols.map(col): _*)
+            .write.mode("overwrite").partitionBy(partCols: _*).parquet(tmp)
+        else
+          merged.coalesce(targetFiles).write.mode("overwrite").parquet(tmp)
+      }
+      val tail = new org.apache.hadoop.fs.Path(tailDir)
+      tail.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tail, true)
     } finally { merged.unpersist(); () }
     ()
   }
@@ -188,7 +178,7 @@ object StoreCompact {
   /** Rewrite `dir` as `f(current rows)` under the same temp-dir + rename
     * swap (and so the same [[recover]] healing) as [[compact]] — the
     * physical-removal primitive behind tombstone application
-    * ([[CurationChain.applyTombstones]]): logical deletes filter reads
+    * ([[CorpusRoot.applyTombstones]]): logical deletes filter reads
     * until a cadence pass rewrites the store without the retired rows.
     * Partition layout is preserved; pass `repartitionTo` to CHANGE the
     * partition scheme (e.g. founding the vec-cell layout), where the
@@ -202,13 +192,27 @@ object StoreCompact {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val keys = repartitionTo.getOrElse(partitionKeysOf(fs, path))
+    swap(spark, dir)(writeCompacted(f(spark.read.parquet(dir)), keys, targetFiles, _))
+  }
+
+  /** THE replacement of a store directory: `write` fills
+    * `dir + "_compact_tmp"` (an earlier attempt's residue deleted first),
+    * then the live `dir`, if any, retires to `dir + "_compact_old"`, the
+    * replacement publishes, and the old copy drops. A crash between the
+    * two renames leaves only the retired copy, which [[recover]] restores.
+    */
+  private[streaming] def swap[T](spark: SparkSession, dir: String)(
+      write: String => T): T = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(dir + "_compact_tmp")
     val old = new org.apache.hadoop.fs.Path(dir + "_compact_old")
     fs.delete(tmp, true); fs.delete(old, true)
-    writeCompacted(f(spark.read.parquet(dir)), keys, targetFiles, tmp.toString)
-    require(fs.rename(path, old), s"rewrite: could not retire $dir")
-    require(fs.rename(tmp, path), s"rewrite: could not publish $tmp")
+    val out = write(tmp.toString)
+    if (fs.exists(path))
+      require(fs.rename(path, old), s"swap: could not retire $dir")
+    require(fs.rename(tmp, path), s"swap: could not publish $tmp")
     fs.delete(old, true)
-    ()
+    out
   }
 }

@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Exactly-once multi-store publication for `foreachBatch` trigger
   * bodies — ONE definition of the commit protocol (the band-layout
-  * lesson), used by [[CurationChain]] and [[SemDedupStream]]'s indexed
-  * lifecycle. `foreachBatch` is at-least-once, and a body that appends
-  * to SEVERAL stores can wedge half-applied: a crash between appends
-  * leaves the replayed batch's rows screened away by their own
-  * half-written state in one store while absent from the others (the
-  * r12 ADVICE failure). The protocol:
+  * lesson), run by [[CorpusRoot.trigger]] for [[CurationChain]] and
+  * [[SemDedupStream]]'s indexed root. `foreachBatch` is at-least-once,
+  * and a body that appends to SEVERAL stores can wedge half-applied: a
+  * crash between appends leaves the replayed batch's rows screened away
+  * by their own half-written state in one store while absent from the
+  * others (the r12 ADVICE failure). The protocol:
   *
   *  1. STAGE — write every store's delta under
   *     `<root>/_staged/<batchId>/<store>/…` (live stores untouched, so
@@ -29,10 +29,9 @@ import org.apache.spark.sql.SparkSession
   * is the bug); replay after a mid-staging crash discards the unsealed
   * residue and recomputes. Renames are per-file metadata operations —
   * the data is written once, in the staging step. Single-store bodies
-  * ([[TextDedupStream]], [[ImageDedupStream]], the plain
-  * [[SemDedupStream]]) don't need this: with one store a replayed
-  * admitted row is rejected as its own duplicate and the store
-  * converges.
+  * ([[TextDedupStream]], [[ImageDedupStream]]) don't need this: with one
+  * store a replayed admitted row is rejected as its own duplicate and
+  * the store converges.
   */
 object StoreTxn {
 
@@ -89,18 +88,21 @@ object StoreTxn {
           "checkpoint or start a fresh store root.")
     }
 
+  private def sealPath(rootDir: String, batchId: Long): String =
+    s"$rootDir/_staged/$batchId/_STAGED"
+
   /** True iff `batchId` is sealed (fully staged) but possibly not yet
     * fully published — the replay-without-recompute window.
     */
   def isStaged(spark: SparkSession, rootDir: String,
       batchId: Long): Boolean = {
-    val (fs, p) = fsOf(spark, s"$rootDir/_staged/$batchId/_STAGED")
+    val (fs, p) = fsOf(spark, sealPath(rootDir, batchId))
     fs.exists(p)
   }
 
   /** Seal `batchId`'s staged copy: every store delta is on disk. */
   def seal(spark: SparkSession, rootDir: String, batchId: Long): Unit = {
-    val (fs, p) = fsOf(spark, s"$rootDir/_staged/$batchId/_STAGED")
+    val (fs, p) = fsOf(spark, sealPath(rootDir, batchId))
     fs.create(p, true).close()
   }
 
@@ -112,13 +114,10 @@ object StoreTxn {
   def clearForeignStaged(spark: SparkSession, rootDir: String,
       batchId: Long): Unit = {
     val (fs, p) = fsOf(spark, s"$rootDir/_staged")
-    if (fs.exists(p)) {
-      fs.listStatus(p).foreach { st =>
-        if (st.getPath.getName != batchId.toString) fs.delete(st.getPath, true)
-      }
-      if (!isStaged(spark, rootDir, batchId))
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$rootDir/_staged/$batchId"), true)
+    val sealedOwn = fs.exists(new org.apache.hadoop.fs.Path(sealPath(rootDir, batchId)))
+    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
+      if (st.getPath.getName != batchId.toString || !sealedOwn)
+        fs.delete(st.getPath, true)
     }
     ()
   }

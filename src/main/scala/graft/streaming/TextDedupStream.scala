@@ -185,13 +185,15 @@ object TextDedupStream {
     *
     * `compactEvery` > 0 folds the tail into the main and rebuilds the
     * front every that-many triggers (keyed on batchId so restarts keep
-    * the cadence).
+    * the cadence). Jobs are labelled `graft.text <stage>` ([[JobLabel]]).
     */
   def ingestInto(storeDir: String, bands: Int = 8, k: Int = 32,
       num: Int = 7, den: Int = 10, maxBucket: Int = 10000,
       compactEvery: Int = 0)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
+    def labeled[T](stage: String)(f: => T): T =
+      JobLabel(spark, s"graft.text $stage")(f)
     ScreenStore.Sigs.dirs(storeDir).foreach(StoreCompact.recover(spark, _))
     val store = ScreenStore.Sigs.at(spark, storeDir,
       StoreLayout.ensureLayout(spark, storeDir, Seq("sigs")))
@@ -200,11 +202,11 @@ object TextDedupStream {
     // k-long/row projection (the q226/SemDedupStream lesson)
     val signed = signatures(batch, k).persist()
     try {
-      if (!signed.isEmpty) {
+      if (!labeled("screen")(signed.isEmpty)) {
         val inDrops = sigSelfPairs(signed, bands, k, num, den, maxBucket)
           .select(col("db").as("doc_id")).distinct()
         val survivors = signed.join(inDrops, Seq("doc_id"), "left_anti")
-        val admitted =
+        val admitted = labeled("screen") {
           if (!store.present) survivors
           else {
             val maybe = store.probe(
@@ -219,21 +221,26 @@ object TextDedupStream {
                 survivors.join(dups, Seq("doc_id"), "left_anti")
             }
           }
+        }
         // the appends read nothing they grow, but the admitted plan DOES
         // read the store — truncate the lineage before writing
-        val keepBands = store.tagged(bandize(admitted, "doc_id", bands, k / bands))
-          .localCheckpoint()
-        val keys = store.frontKeys(keepBands)
+        val keepBands = labeled("checkpoint") {
+          store.tagged(bandize(admitted, "doc_id", bands, k / bands))
+            .localCheckpoint()
+        }
+        val keys = labeled("front")(store.frontKeys(keepBands))
         if (keys.nonEmpty) {
           // front FIRST (superset-safe, see above), then rows
           val front = ScreenStore.Sigs.frontDir(storeDir).get
-          val blobs = store.writeFront(front, keys)
+          val blobs = labeled("front")(store.writeFront(front, keys))
           ScreenStore.Sigs.noteFront(spark, storeDir, blobs)
-          store.writeDelta(keepBands, ScreenStore.Sigs.tail(storeDir), "append")
+          labeled("delta") {
+            store.writeDelta(keepBands, ScreenStore.Sigs.tail(storeDir), "append")
+          }
         }
       }
     } finally { signed.unpersist(); () }
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      store.compact()
+      labeled("compact")(store.compact())
   }
 }

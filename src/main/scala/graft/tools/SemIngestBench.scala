@@ -68,12 +68,11 @@ object SemIngestBench {
         (System.nanoTime() - s0) / 1e9
       }
 
-    // AUTO margin (the r15 default): the index build CALIBRATED the ADC
-    // error on this corpus (p99 residual norm persisted in ivf/calib) —
-    // the hash-dense fixture is PQ's worst case (no cluster structure,
-    // ~1 bit/dim quantization), where the r14 bench had to hand-widen
-    // the margin to 0.30; the calibrated default now covers it without
-    // operator knowledge. A wide margin only costs verify work, never
+    // the screen keeps each posting at adc ≥ threshold − mrg, its own
+    // exact ADC error bound, so the hash-dense fixture (PQ's worst case:
+    // no cluster structure, ~1 bit/dim quantization) needs no margin
+    // setting; the build's calibrated p99 residual (ivf/calib) is
+    // reported as telemetry. A wide bound only costs verify work, never
     // correctness.
     val indexed = drive(
       SemDedupStream.ingestIntoIndexed(idxRoot, threshold = 0.92,

@@ -491,9 +491,9 @@ class CurationChainSpec extends SparkSpec {
     batches.zip(expected).zipWithIndex.foreach { case ((b, want), i) =>
       CurationChain.ingestCdcInto(s"$base/held")(ops(b), i.toLong)
       // a 1-byte threshold trips the guard once a standing store exists
-      spark.conf.set(CurationChain.TombBroadcastMaxBytesKey, "1")
+      spark.conf.set(CorpusRoot.TombBroadcastMaxBytesKey, "1")
       try CurationChain.ingestCdcInto(s"$base/joined")(ops(b), i.toLong)
-      finally spark.conf.unset(CurationChain.TombBroadcastMaxBytesKey)
+      finally spark.conf.unset(CorpusRoot.TombBroadcastMaxBytesKey)
       val held = live(s"$base/held")
       assert(held == live(s"$base/joined"), s"trigger $i diverged")
       assert(held.map(_._1) == want, s"trigger $i")

@@ -301,6 +301,140 @@ class SemDedupStreamSpec extends SparkSpec {
     body(ops(Seq.empty[(String, Long, Long, Seq[Float])]), 3L)
   }
 
+  /** Region i ∈ [0,4) at weight 0.6 on axis i, slot k on a 30° circle in
+    * the (e4, e5) plane at weight 0.8: distinct (i, k) pairs sit below
+    * cosine 0.95, as in the lifecycle cases above.
+    */
+  private def ringVec(region: Int, k: Int): Seq[Float] = {
+    val th = math.toRadians(30.0 * k)
+    Seq.tabulate(8) { j =>
+      if (j == region) 0.6f
+      else if (j == 4) (0.8 * math.cos(th)).toFloat
+      else if (j == 5) (0.8 * math.sin(th)).toFloat
+      else 0.0f
+    }
+  }
+  private def nudged(v: Seq[Float]): Seq[Float] =
+    v.zipWithIndex.map { case (x, i) => x + (if (i == 0) 0.01f else 0f) }
+
+  /** Two roots founded past the index floor by the same 16 vectors. */
+  private def foundedRoots(tag: String): (String, String) = {
+    import spark.implicits._
+    val Seq(a, b) = Seq("a", "b").map(r => java.nio.file.Files
+      .createTempDirectory(s"semdedup_$tag").resolve(r).toString)
+    Seq(a, b).foreach { root =>
+      Seq(Seq(0, 1), Seq(2, 3)).zipWithIndex.foreach { case (ks, t) =>
+        SemDedupStream.ingestIntoIndexed(root, threshold = 0.95, nlist = 4,
+            rebuildCheckEvery = 0)(
+          (0 until 4).flatMap(r => ks.map(k => (r * 100L + k, ringVec(r, k))))
+            .toDF("vec_id", "embedding"), t.toLong)
+      }
+      assert(new java.io.File(s"$root/ivf/centroids").exists(),
+        "the index founds past the floor")
+    }
+    (a, b)
+  }
+
+  test("indexed root past its floor: crash windows heal, committed " +
+      "batches no-op, and the replayed corpus and postings equal an " +
+      "uncrashed run") {
+    import spark.implicits._
+    val (clean, root) = foundedRoots("replay")
+    def body(r: String) = SemDedupStream.ingestIntoIndexed(r, threshold = 0.95,
+      nlist = 4, rebuildCheckEvery = 0) _
+    def corpusRows(r: String) = spark.read.parquet(s"$r/corpus")
+      .select("vec_id", "b").as[(Long, Long)].collect().sorted.toSeq
+    def postingRows(r: String) = spark.read.parquet(s"$r/ivf/postings")
+      .select("neighbor_id", "b").as[(Long, Long)].collect().sorted.toSeq
+    def sameAsClean(): Unit = {
+      assert(corpusRows(root) == corpusRows(clean),
+        "replayed corpus must equal the uncrashed run")
+      assert(postingRows(root) == postingRows(clean),
+        "replayed postings must equal the uncrashed run")
+    }
+    // batch 2: two novels, a dup of a founding vector, an in-batch dup
+    val b2 = Seq((40L, ringVec(0, 6)), (41L, ringVec(2, 7)),
+      (42L, nudged(ringVec(1, 1))), (43L, nudged(ringVec(0, 6))))
+      .toDF("vec_id", "embedding")
+
+    // crash window 1 — mid-PUBLISH: batch 2 fully staged, then only the
+    // corpus files moved before the crash. The replay must finish the
+    // publish without recompute (recomputing would reject 40 and 41 as
+    // duplicates of their own half-published rows).
+    SemDedupStream.stageBatch(root, 0.95)(b2, 2L)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val stagedCorpus = new org.apache.hadoop.fs.Path(s"$root/_staged/2/corpus")
+    val moved = fs.listStatus(stagedCorpus).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .map { p =>
+        require(fs.rename(p, new org.apache.hadoop.fs.Path(s"$root/corpus/b2-${p.getName}")))
+        1
+      }.sum
+    assert(moved > 0, "staging must have produced corpus files")
+    body(root)(b2, 2L) // the replay
+    body(clean)(b2, 2L)
+    sameAsClean()
+    assert(corpusRows(root).map(_._1).toSet.intersect(Set(40L, 41L, 42L, 43L)) ==
+      Set(40L, 41L))
+    assert(corpusRows(root).size == 18, "one corpus row per admitted id")
+
+    // committed replay: a pure no-op
+    body(root)(b2, 2L)
+    sameAsClean()
+
+    // crash window 2 — mid-STAGING: unsealed junk is discarded and the
+    // batch recomputed
+    val b3 = Seq((50L, ringVec(3, 8)), (51L, nudged(ringVec(2, 7))))
+      .toDF("vec_id", "embedding")
+    val staged3 = new org.apache.hadoop.fs.Path(s"$root/_staged/3/corpus")
+    fs.mkdirs(staged3)
+    fs.create(new org.apache.hadoop.fs.Path(staged3, "part-junk.parquet"), true)
+      .close()
+    body(root)(b3, 3L)
+    body(clean)(b3, 3L)
+    sameAsClean()
+    assert(corpusRows(root).map(_._1).contains(50L) &&
+      !corpusRows(root).map(_._1).contains(51L),
+      "50 must survive the discarded junk staging; 51 duplicates 41")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_staged")),
+      "published batches must leave no staged residue")
+  }
+
+  test("indexed root: postings without their margin (a column older files " +
+      "lack) verify exactly and admit the same set as postings with it") {
+    import spark.implicits._
+    val (withMrg, noMrg) = foundedRoots("nomrg")
+    // an out-of-distribution vector (axis 7 carries no founding weight):
+    // its ADC score against its own duplicate is far under the threshold,
+    // so only its margin — or, without one, the always-verify rule —
+    // keeps the duplicate in the candidate set
+    val ood = Seq.tabulate(8)(j => if (j == 7) 1.0f else 0.0f)
+    Seq(withMrg, noMrg).foreach { root =>
+      SemDedupStream.ingestIntoIndexed(root, threshold = 0.95, nlist = 4,
+        rebuildCheckEvery = 0)(Seq((60L, ood)).toDF("vec_id", "embedding"), 2L)
+    }
+    val dir = s"$noMrg/ivf/postings"
+    val stripped = spark.read.parquet(dir).drop("mrg")
+    stripped.write.partitionBy("cell").parquet(dir + "_nomrg")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    assert(new java.io.File(dir + "_nomrg").renameTo(new java.io.File(dir)))
+    assert(!spark.read.parquet(dir).columns.contains("mrg"))
+    val admitted = Seq(withMrg, noMrg).map { root =>
+      SemDedupStream.ingestIntoIndexed(root, threshold = 0.95, nlist = 4,
+          rebuildCheckEvery = 0)(
+        Seq((61L, nudged(ood)), (62L, nudged(ringVec(3, 3))),
+          (63L, ringVec(1, 9))).toDF("vec_id", "embedding"), 3L)
+      spark.read.parquet(s"$root/corpus").select("vec_id")
+        .as[Long].collect().toSet
+    }
+    assert(admitted(0) == admitted(1),
+      s"with and without margins: ${admitted(0)} vs ${admitted(1)}")
+    assert(admitted(1).contains(63L) && !admitted(1).contains(61L) &&
+      !admitted(1).contains(62L),
+      s"the OOD duplicate must reject through the exact verify: ${admitted(1)}")
+  }
+
   test("60-trigger soak: dup lags from 1 to 30 triggers all rejected, " +
       "corpus is exactly the planted novels", SoakTest) {
     implicit val sqlCtx = spark.sqlContext
