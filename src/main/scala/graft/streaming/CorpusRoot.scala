@@ -6,10 +6,12 @@ import org.apache.spark.sql.types._
 
 /** A CORPUS ROOT: a directory of stores that one `foreachBatch` body
   * grows exactly once per batch and that CDC UPDATEs and DELETEs retire
-  * by tombstone — the composed [[CurationChain]] root and
-  * [[SemDedupStream]]'s indexed root. This module is the only code that
-  * runs the trigger spine and the tombstone protocol; a body supplies its
-  * staged writes and its maintenance.
+  * by tombstone — the composed [[CurationChain]] root,
+  * [[SemDedupStream]]'s indexed root, and the standalone
+  * [[TextDedupStream]] and [[ImageDedupStream]] roots (the last two never
+  * tombstone). This module is the only code that runs the trigger spine
+  * and the tombstone protocol; a body supplies its staged writes and its
+  * maintenance.
   *
   * THE SPINE ([[trigger]]): refuse a batchId below the root's latest
   * commit ([[StoreTxn.guardMonotone]]), heal any interrupted store swap
@@ -35,12 +37,13 @@ import org.apache.spark.sql.types._
 private[streaming] object CorpusRoot {
 
   /** The exactly-once trigger spine (see the object doc): `stage` writes
-    * every store delta under `StoreTxn.stagePath(rootDir, batchId, _)`,
-    * `published` runs once the batch's files have landed. `heal` lists
-    * every directory a swap may have left half-renamed.
+    * every store delta under `StoreTxn.stagePath(rootDir, batchId, _)`;
+    * once the batch's files have landed, the screen-store fronts it
+    * staged merge into the driver cache ([[ScreenStage.published]]).
+    * `heal` lists every directory a swap may have left half-renamed.
     */
   def trigger(spark: SparkSession, rootDir: String, batchId: Long,
-      heal: Seq[String], published: => Unit = ())(stage: => Unit): Unit = {
+      heal: Seq[String])(stage: => Unit): Unit = {
     StoreTxn.guardMonotone(spark, rootDir, batchId)
     heal.foreach(StoreCompact.recover(spark, _))
     if (!StoreTxn.isCommitted(spark, rootDir, batchId)) {
@@ -49,7 +52,7 @@ private[streaming] object CorpusRoot {
         staged(spark, rootDir, batchId)(stage)
       }
       StoreTxn.publish(spark, rootDir, batchId)
-      published
+      ScreenStage.published(spark, rootDir, batchId)
     }
   }
 
@@ -181,9 +184,10 @@ private[streaming] object CorpusRoot {
     * id; None when there are none. While the standing store is small
     * ([[broadcastable]]) the set collects to the driver ONCE, under the
     * job description `label`, and ships as one broadcast variable that
-    * every read filters through — adaptive execution is off in a trigger
-    * body, so a hinted join would pay its own broadcast job in every
-    * action that reads a store. Rows the lookup could never match (a null
+    * every read filters through — a hinted join would pay its own
+    * broadcast job in every action that reads a store, whether adaptive
+    * execution is on in the body or not (see [[ScreenStage]] for which
+    * bodies run with it). Rows the lookup could never match (a null
     * id) or never retire (a null asOf) are left out. Past the threshold
     * the set stays distributed: pinned, and joined unhinted so the
     * planner may shuffle it.

@@ -1,28 +1,31 @@
 package graft.streaming
 
-import graft.multimodal.{ImageCodec, MultimodalQueries}
+import graft.multimodal.MultimodalQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming IMAGE dedup — [[SemDedupStream]]'s pattern on the pixel
   * modality, composing q222's decode+dHash kernel into the ingest path:
-  * every micro-batch of images is hashed once (ImageIO decode → 64-bit
-  * dHash), screened against ITSELF (banded hamming pairs, greedy
-  * keep-lowest) and against the STANDING band store, and only
-  * perceptually novel images are admitted — a re-crop/re-encode of an
+  * every micro-batch of media is hashed once (the chain's
+  * modality-dispatching kernel: image dHash, audio envelope, video
+  * temporal-mean dHash), screened against ITSELF (banded hamming pairs,
+  * greedy keep-lowest) and against the STANDING band store, and only
+  * perceptually novel items are admitted — a re-crop/re-encode of an
   * image admitted two triggers ago is rejected like one admitted at
   * bootstrap. Batch dedup (q226) answers "what is duplicated"; this
   * answers "don't store it twice" at ingest time.
   *
   * State is BOUNDED by content, not by rows ingested: the store holds
-  * one logical (media_id, h) row — 16 bytes + id — per ADMITTED image,
+  * one logical (media_id, h) row — 16 bytes + id — per ADMITTED item,
   * never the pixels, kept as the bucketed [[ScreenStore.Phash]] store the
   * composed [[CurationChain]] also keeps, so a trigger reads candidate
-  * buckets instead of re-banding the whole store. The screen reuses the
-  * q222 machinery: 8×8-bit band join with the q42 hot-bucket cap on the
-  * STORE side (an over-cap band value is non-discriminative and alone
-  * would put |bucket|·|batch| candidates on one reducer; a true pair
-  * keeps its 7 other bands), exact bit_count(xor) ≤ maxHamming verify.
+  * buckets instead of re-banding the whole store. The screen is the
+  * chain's [[ScreenStage.Perceptual]]; this object holds its pair
+  * kernels, the q222 machinery: 8×8-bit band join with the q42
+  * hot-bucket cap on the STORE side (an over-cap band value is
+  * non-discriminative and alone would put |bucket|·|batch| candidates on
+  * one reducer; a true pair keeps its 7 other bands), exact
+  * bit_count(xor) ≤ maxHamming verify.
   */
 object ImageDedupStream {
 
@@ -68,96 +71,32 @@ object ImageDedupStream {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Screen one micro-batch of hashes: drop in-batch near-dup higher ids
-    * (the greedy q71/q226 keep-lowest rule), then drop everything with a
-    * near-dup in the store. Pure batch-side function.
-    */
-  def admitBatch(batchH: DataFrame, storeH: DataFrame,
-      maxHamming: Int = 7, maxBucket: Int = 1024): DataFrame = {
-    if (batchH.isEmpty) return batchH
-    val inBatchDrops = MultimodalQueries
-      .hammingNearDupPairs(batchH, maxHamming, maxBucket)
-      .select(col("db").as("media_id")).distinct()
-    val survivors = batchH.join(inBatchDrops, Seq("media_id"), "left_anti")
-    if (storeH.isEmpty) survivors
-    else {
-      val dupIds = hammingPairsAgainst(survivors, storeH, maxHamming, maxBucket)
-        .select(col("new_id").as("media_id")).distinct()
-      survivors.join(dupIds, Seq("media_id"), "left_anti")
-    }
-  }
-
-  /** The full trigger body for a parquet-backed band store root: hash the
-    * batch's image bytes (decode failures are data — dropped, not
-    * errors), screen against the standing store (missing/empty =
-    * bootstrap), admit the novel images. Wire as
-    * `stream.writeStream.foreachBatch(ImageDedupStream.ingestInto(dir) _)`
-    * with a (media_id, content) batch.
-    *
-    * `storeDir` is a root holding the [[ScreenStore.Phash]] store: a
-    * trigger reads only the buckets its batch's ~8·|batch| band keys map
-    * to, plus the cadence-bounded tail, so its cost is bounded by the
-    * batch, not by store size. A replayed batch's rows reject as their
-    * own duplicates (hamming 0), so nothing double-appends.
-    *
+  /** The full trigger body for a [[ScreenStore.Phash]] store root: the
+    * chain's media stage ([[ScreenStage.Perceptual]]) as a one-stage
+    * [[ScreenStage.standalone]] fold over the batch's (media_id, content)
+    * rows — the novel items' band rows publish through [[StoreTxn]] on
+    * the [[CorpusRoot]] spine, so a trigger's cost is bounded by the
+    * batch and a replay is exactly-once. The bytes hash through the
+    * chain's modality-dispatching kernel, so WAV and AVI items screen
+    * beside images; bytes that decode as none of them leave no store row.
+    * Wire as `stream.writeStream.foreachBatch(ImageDedupStream.ingestInto(dir) _)`.
     * `compactEvery` > 0 folds the tail into the main every that-many
-    * triggers (keyed on batchId, so restarts don't reset the cadence) —
-    * the append-per-trigger tail otherwise fragments into the small-file
-    * layout StoreBench measures at 2.3–6.3× probe cost. Jobs are
-    * labelled `graft.image <stage>` ([[JobLabel]]).
+    * triggers. Jobs are labelled `graft.image <stage>` ([[JobLabel]]).
     */
-  def ingestInto(storeDir: String, maxHamming: Int = 7, maxBucket: Int = 1024,
-      compactEvery: Int = 0)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    def labeled[T](stage: String)(f: => T): T =
-      JobLabel(spark, s"graft.image $stage")(f)
-    ScreenStore.Phash.dirs(storeDir).foreach(StoreCompact.recover(spark, _))
-    val store = ScreenStore.Phash.at(spark, storeDir,
-      StoreLayout.ensureLayout(spark, storeDir, Seq("phash")))
-    val dh = udf((b: Array[Byte]) => ImageCodec.dHashOf(b))
-    // the decode is the expensive kernel and foreachBatch re-executes the
-    // plan per action (screen jobs + append) — hash once, persist the
-    // 16-byte/row projection (the q226 lesson)
-    val hashed = batch
-      .select(col("media_id"), dh(col("content")).as("h"))
-      .filter(col("h").isNotNull)
-      .persist()
-    try {
-      if (!labeled("screen")(hashed.isEmpty)) {
-        val inDrops = MultimodalQueries
-          .hammingNearDupPairs(hashed, maxHamming, maxBucket)
-          .select(col("db").as("media_id")).distinct()
-        val survivors = hashed.join(inDrops, Seq("media_id"), "left_anti")
-        val admitted = labeled("screen") {
-          if (!store.present) survivors
-          else {
-            val bandKeys = store.tagged(MultimodalQueries
-              .bandExplode(survivors, "new_id")
-              .select(col("b").as("band"), col("v")).distinct())
-            store.candidates(Seq("media_id", "h", "band", "v"), bandKeys) match {
-              case None => survivors
-              case Some(st) =>
-                val dups = hammingPairsAgainstBands(survivors, st,
-                    maxHamming, maxBucket)
-                  .select(col("new_id").as("media_id")).distinct()
-                survivors.join(dups, Seq("media_id"), "left_anti")
-            }
-          }
-        }
-        // the admitted plan reads the store the append grows — truncate
-        // the lineage before writing
-        val keep = labeled("checkpoint") {
-          store.tagged(MultimodalQueries.bandExplode(admitted, "media_id")
-            .select(col("media_id"), col("h"), col("b").as("band"), col("v")))
-            .localCheckpoint()
-        }
-        labeled("delta") {
-          store.writeDelta(keep, ScreenStore.Phash.tail(storeDir), "append")
-        }
-      }
-    } finally { hashed.unpersist(); () }
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      labeled("compact")(store.compact())
-  }
+  def ingestInto(storeDir: String, compactEvery: Int = 0)(
+      batch: DataFrame, batchId: Long): Unit =
+    ScreenStage.standalone(storeDir, "graft.image", ScreenStage.Perceptual,
+      compactEvery)(offers(batch), batchId)
+
+  /** Stage and seal a batch without publishing it — where the
+    * crash-replay spec stops.
+    */
+  private[streaming] def stageBatch(storeDir: String)(
+      batch: DataFrame, batchId: Long): Unit =
+    ScreenStage.stageBatch(storeDir, "graft.image", ScreenStage.Perceptual)(
+      offers(batch), batchId)
+
+  /** A (media_id, content) batch as the stage's offers. */
+  private def offers(batch: DataFrame): DataFrame =
+    batch.select(col("media_id").as("doc_id"), col("content"))
 }

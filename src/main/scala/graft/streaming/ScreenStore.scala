@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
   * the standalone [[TextDedupStream]] (`sigs`) and [[ImageDedupStream]]
   * (`phash`) bodies' one store each, and the composed [[CurationChain]]'s
   * five. This module is the only code that knows a screen store's
-  * on-disk layout; the trigger bodies read, delta, front and rebuild
-  * their stores through it.
+  * on-disk layout; the screen stages ([[ScreenStage]]) read, stage,
+  * front and rebuild their stores through it.
   *
   * LAYOUT. Under a store root, whose `_layout` marker fixes the bucket
   * count `P` ([[StoreLayout.ensureLayout]]), store `<s>` is:
@@ -28,11 +28,11 @@ import org.apache.spark.sql.types._
   *    key whose blobs all miss is DEFINITELY absent, so a novel batch
   *    reads zero main buckets; a false positive only costs a bucket
   *    read. The front must never miss a published key (a false negative
-  *    re-admits a duplicate): the chain stages each front delta into the
-  *    same [[StoreTxn]] publish as its rows, and the standalone text body
-  *    appends the front delta BEFORE the rows, so every crash window
-  *    leaves the front a superset. Retired rows stay in the blobs until
-  *    the cadence rebuilds the front from the live store.
+  *    re-admits a duplicate): every body stages each front delta into
+  *    the same [[StoreTxn]] publish as its rows ([[ScreenStage.Writer]]),
+  *    so the front can only lag its store by rows that were never
+  *    published. Retired rows stay in the blobs until the cadence
+  *    rebuilds the front from the live store.
   *
   * | store   | rows (id first)                | join key   | bucket | front    |
   * |---------|--------------------------------|------------|--------|----------|
@@ -48,8 +48,9 @@ import org.apache.spark.sql.types._
   * hold PRE-BANDED rows (8 per image or doc), so a screen joins on the
   * band key without re-banding the store. `phash` has no front: (band,
   * v) takes only 2048 values, so a populated store saturates every key.
-  * Chain rows also carry `b`, the batch that admitted them, for the
-  * tombstone rule; the standalone bodies do not write it.
+  * Every row also carries `b`, the batch that admitted it, for the
+  * tombstone rule (standalone roots written before they staged through
+  * [[StoreTxn]] hold tail rows without it, which read as live).
   *
   * Every read names the store's declared [[schema]], so no read runs
   * Spark's footer-inference job. A column absent from an older file
@@ -62,12 +63,13 @@ import org.apache.spark.sql.types._
   * ([[View.probe]]), collect the buckets present (bounded by `P`), and
   * read the main pruned to those buckets plus the whole tail, through the
   * caller's live-row filter. An empty bucket list reads nothing. A
-  * DELTA ([[View.writeDelta]], [[View.writeFront]]): bucket-tagged rows
-  * clustered by bucket into a tail directory (staged or live), and the
-  * front delta's blobs built on the driver from keys collected there,
-  * written by the driver as one parquet file (under a hidden name,
+  * DELTA ([[View.stageDelta]], [[View.stageFront]]): bucket-tagged rows
+  * clustered by bucket into the batch's staged tail, and the front
+  * delta's blobs built on the driver from keys collected there, written
+  * by the driver as one staged parquet file (under a hidden name,
   * renamed once whole), then merged into the driver-cached front once
-  * they are published ([[noteFront]]).
+  * they are published ([[noteFront]]). [[StoreTxn.publish]] moves both
+  * into the store under `b<batchId>-…` names.
   * COMPACTION ([[View.compact]]): merge the tail into the main, then
   * rebuild the front from the merged rows.
   */
@@ -226,12 +228,12 @@ object ScreenStore {
     def candidates(cols: Seq[String], keys: DataFrame): Option[DataFrame] =
       read(cols, Some(buckets(keys)))
 
-    /** Write a delta's rows into `dest` (a tail, live or staged), tagged
-      * and clustered by bucket so each bucket lands in one task.
+    /** Stage a delta's rows as batch `batchId`'s tail delta, tagged and
+      * clustered by bucket so each bucket lands in one task.
       */
-    def writeDelta(rows: DataFrame, dest: String, mode: String): Unit =
-      tagged(rows).repartition(col(bucket))
-        .write.mode(mode).parquet(dest)
+    def stageDelta(rows: DataFrame, batchId: Long): Unit =
+      tagged(rows).repartition(col(bucket)).write.mode("overwrite")
+        .parquet(StoreTxn.stagePath(root, batchId, s"${store.name}_tail"))
 
     /** The (hash, bucket) pairs of `rows`' join keys, collected to the
       * driver — a trigger's delta is KB of longs.
@@ -240,16 +242,25 @@ object ScreenStore {
       tagged(rows).select(hash.as("__h"), col("pb")).collect()
         .map(r => (r.getLong(0), r.getInt(1)))
 
-    /** Build a front delta over `keys` on the driver and add it to
-      * `dest` (a front, live or staged) as one file beside the blobs
-      * already there. Returns the blobs for [[noteFront]].
+    /** Build a front delta over `keys` on the driver and stage it as batch
+      * `batchId`'s one front file. Returns the blobs for [[noteFront]].
       */
-    def writeFront(dest: String,
-        keys: Array[(Long, Int)]): Seq[(Int, Array[Byte])] = {
+    def stageFront(keys: Array[(Long, Int)], batchId: Long): Seq[(Int, Array[Byte])] = {
       val blobs = StoreLayout.bloomDeltaLocal(keys,
         math.max(1L, keys.length.toLong), P)
-      StoreLayout.writeFrontLocal(spark, dest, blobs)
+      StoreLayout.writeFrontLocal(spark,
+        StoreTxn.stagePath(root, batchId, store.front.get), blobs)
       blobs
+    }
+
+    /** Bulk-load `rows` as the store's whole main, partitioned by bucket
+      * (through [[StoreCompact.swap]]), and rebuild the front from them —
+      * how a bench seeds a store of a given size.
+      */
+    def seed(rows: DataFrame): Unit = {
+      StoreCompact.swap(spark, main)(tmp => tagged(rows)
+        .repartition(8, col(bucket)).write.partitionBy(bucket).parquet(tmp))
+      compact()
     }
 
     /** The compaction cadence: fold the tail into the main, then rebuild

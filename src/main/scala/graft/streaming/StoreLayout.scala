@@ -167,18 +167,14 @@ object StoreLayout {
       entries.map(_.getLen).sum))
   }
 
-  /** The front's blobs grouped by bucket, DRIVER-CACHED across triggers
-    * (r14 verdict item 2: the per-trigger front reads were two fixed
-    * Spark jobs per screen — the blobs are KB-to-MB-scale metadata that
-    * only changes when THIS body appends a delta or the cadence
-    * rebuilds, both of which change the directory listing and so the
-    * fingerprint). None when the front is absent/empty or larger than
+  /** The front's blobs grouped by bucket under listing `fpAndBytes`,
+    * DRIVER-CACHED across triggers (r14 verdict item 2: the per-trigger
+    * front reads were two fixed Spark jobs per screen — the blobs are
+    * KB-to-MB-scale metadata that only changes when a publish lands a
+    * delta or the cadence rebuilds, both of which change the directory
+    * listing and so the fingerprint). None when the front is larger than
     * [[FrontCacheMaxBytes]] (caller falls back to [[bloomMaybe]]).
     */
-  def cachedFront(spark: SparkSession, dir: String): Option[
-      org.apache.spark.broadcast.Broadcast[Map[Int, Array[Array[Byte]]]]] =
-    frontFingerprint(spark, dir).flatMap(cachedFrontAt(spark, dir, _))
-
   private def cachedFrontAt(spark: SparkSession, dir: String,
       fpAndBytes: (String, Long)): Option[
       org.apache.spark.broadcast.Broadcast[Map[Int, Array[Array[Byte]]]]] = {
@@ -261,11 +257,9 @@ object StoreLayout {
     * [[noteFrontDelta]] seeds from.
     *
     * The file is written under a hidden `.`-prefixed name and renamed to
-    * its `part-` name once closed, as Spark's committer does: `dir` may
-    * be a LIVE front, and a crash mid-write must leave only a file that
-    * every reader skips (Spark's file index, [[frontFingerprint]],
-    * [[StoreCompact.hasData]]), never a truncated data file that fails
-    * every later probe's read.
+    * its `part-` name once closed, as Spark's committer does, so a crash
+    * mid-write leaves only a file that every reader and
+    * [[StoreTxn.publish]] skip, never a truncated data file.
     */
   def writeFrontLocal(spark: SparkSession, dir: String,
       blobs: Seq[(Int, Array[Byte])]): Unit = {

@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Exactly-once multi-store publication for `foreachBatch` trigger
   * bodies — ONE definition of the commit protocol (the band-layout
-  * lesson), run by [[CorpusRoot.trigger]] for [[CurationChain]] and
-  * [[SemDedupStream]]'s indexed root. `foreachBatch` is at-least-once,
+  * lesson), run by [[CorpusRoot.trigger]] for every corpus root. `foreachBatch` is at-least-once,
   * and a body that appends to SEVERAL stores can wedge half-applied: a
   * crash between appends leaves the replayed batch's rows screened away
   * by their own half-written state in one store while absent from the
@@ -28,10 +27,11 @@ import org.apache.spark.sql.SparkSession
   * staged copy is the truth — recomputing against half-updated stores
   * is the bug); replay after a mid-staging crash discards the unsealed
   * residue and recomputes. Renames are per-file metadata operations —
-  * the data is written once, in the staging step. Single-store bodies
-  * ([[TextDedupStream]], [[ImageDedupStream]]) don't need this: with one
-  * store a replayed admitted row is rejected as its own duplicate and
-  * the store converges.
+  * the data is written once, in the staging step. The single-store
+  * bodies ([[TextDedupStream]], [[ImageDedupStream]]) publish through it
+  * too: their store is a tail plus a front, and a recompute after a
+  * partial publish would reject the batch's rows as duplicates of their
+  * own half-published band rows and never write the rest.
   */
 object StoreTxn {
 

@@ -23,14 +23,15 @@ import org.apache.spark.sql.functions._
   * trade for bounding state by signatures instead of shingle sets;
   * TextDedupStreamSpec measures the planted-dup estimates clearing the
   * threshold). Docs too short to shingle (< 3 words) carry no signature
-  * and are admitted — near-dup screening is undefined on them, and the
-  * exact screen upstream already holds.
+  * and leave no store row — near-dup screening is undefined on them, and
+  * the exact screen upstream already holds.
   *
   * State is BOUNDED by admitted content: one logical (doc_id, sig) row —
   * k longs + id — per admitted doc, never text, kept as the bucketed,
   * bloom-fronted [[ScreenStore.Sigs]] store the composed [[CurationChain]]
   * also keeps, so a trigger reads candidate buckets instead of
-  * re-banding the whole store.
+  * re-banding the whole store. The screen itself is the chain's
+  * [[ScreenStage.Sig]]; this object holds its signature and pair kernels.
   */
 object TextDedupStream {
 
@@ -142,105 +143,29 @@ object TextDedupStream {
       .filter(col("matches") * den >= num * k)
   }
 
-  /** Screen one micro-batch of signatures: drop in-batch near-dup higher
-    * ids (the greedy q71 keep-lowest rule), then drop everything with a
-    * near-dup in the store. Pure batch-side function.
+  /** The full trigger body for a [[ScreenStore.Sigs]] store root: the
+    * chain's near-dup stage ([[ScreenStage.Sig]]) as a one-stage
+    * [[ScreenStage.standalone]] fold over the batch's (doc_id, text) rows
+    * — the novel docs' signatures and front delta publish through
+    * [[StoreTxn]] on the [[CorpusRoot]] spine, so a trigger's cost is
+    * bounded by the batch and its true duplicates and a replay is
+    * exactly-once. Wire as
+    * `stream.writeStream.foreachBatch(TextDedupStream.ingestInto(dir) _)`,
+    * downstream of [[CorpusIngest]]'s gate when composing the full
+    * ingest. `compactEvery` > 0 folds the tail into the main and rebuilds
+    * the front every that-many triggers. Jobs are labelled
+    * `graft.text <stage>` ([[JobLabel]]).
     */
-  def admitBatch(batchSigs: DataFrame, storeSigs: DataFrame,
-      bands: Int = 8, k: Int = 32, num: Int = 7, den: Int = 10,
-      maxBucket: Int = 10000): DataFrame = {
-    if (batchSigs.isEmpty) return batchSigs
-    val inBatchDrops = sigSelfPairs(batchSigs, bands, k, num, den, maxBucket)
-      .select(col("db").as("doc_id")).distinct()
-    val survivors = batchSigs.join(inBatchDrops, Seq("doc_id"), "left_anti")
-    if (storeSigs.isEmpty) survivors
-    else {
-      val dupIds =
-        sigPairsAgainst(survivors, storeSigs, bands, k, num, den, maxBucket)
-          .select(col("new_id").as("doc_id")).distinct()
-      survivors.join(dupIds, Seq("doc_id"), "left_anti")
-    }
-  }
+  def ingestInto(storeDir: String, compactEvery: Int = 0)(
+      batch: DataFrame, batchId: Long): Unit =
+    ScreenStage.standalone(storeDir, "graft.text", ScreenStage.Sig,
+      compactEvery)(batch.select("doc_id", "text"), batchId)
 
-  /** The full trigger body for a parquet-backed signature store root:
-    * sign the batch's (doc_id, text) rows, screen against the standing
-    * store (missing/empty = bootstrap), admit the novel docs. Wire as
-    * `stream.writeStream.foreachBatch(TextDedupStream.ingestInto(dir) _)`
-    * — downstream of [[CorpusIngest]]'s quality + exact-hash gate when
-    * composing the full curation ingest.
-    *
-    * `storeDir` is a root holding the [[ScreenStore.Sigs]] store (its
-    * layout and front are described there): a trigger probes the front,
-    * reads the candidates' buckets plus the tail, and screens via
-    * [[sigPairsAgainstBands]], so its cost is bounded by the batch and
-    * its true duplicates, not by store size.
-    *
-    * CONVERGENCE without a txn: the front delta is written BEFORE the
-    * band rows, so every crash window leaves the front a safe SUPERSET
-    * of the store, and the front file lands by rename
-    * ([[StoreLayout.writeFrontLocal]]), so a crash mid-write leaves no
-    * half-written blob file. A replayed batch re-screens against the
-    * grown store and its rows reject as their own duplicates, so nothing
-    * double-appends.
-    *
-    * `compactEvery` > 0 folds the tail into the main and rebuilds the
-    * front every that-many triggers (keyed on batchId so restarts keep
-    * the cadence). Jobs are labelled `graft.text <stage>` ([[JobLabel]]).
+  /** Stage and seal a batch without publishing it — where the
+    * crash-replay spec stops.
     */
-  def ingestInto(storeDir: String, bands: Int = 8, k: Int = 32,
-      num: Int = 7, den: Int = 10, maxBucket: Int = 10000,
-      compactEvery: Int = 0)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    def labeled[T](stage: String)(f: => T): T =
-      JobLabel(spark, s"graft.text $stage")(f)
-    ScreenStore.Sigs.dirs(storeDir).foreach(StoreCompact.recover(spark, _))
-    val store = ScreenStore.Sigs.at(spark, storeDir,
-      StoreLayout.ensureLayout(spark, storeDir, Seq("sigs")))
-    // the signature agg is the expensive stage and foreachBatch re-executes
-    // the plan per action (screen jobs + append) — sign once, persist the
-    // k-long/row projection (the q226/SemDedupStream lesson)
-    val signed = signatures(batch, k).persist()
-    try {
-      if (!labeled("screen")(signed.isEmpty)) {
-        val inDrops = sigSelfPairs(signed, bands, k, num, den, maxBucket)
-          .select(col("db").as("doc_id")).distinct()
-        val survivors = signed.join(inDrops, Seq("doc_id"), "left_anti")
-        val admitted = labeled("screen") {
-          if (!store.present) survivors
-          else {
-            val maybe = store.probe(
-              store.keyed(bandize(survivors, "new_id", bands, k / bands)),
-              Seq("new_id", "band", "bh"))
-            store.candidates(Seq("doc_id", "sig", "band", "bh"), maybe) match {
-              case None => survivors
-              case Some(st) =>
-                val dups = sigPairsAgainstBands(maybe, st, k, num, den,
-                    maxBucket)
-                  .select(col("new_id").as("doc_id")).distinct()
-                survivors.join(dups, Seq("doc_id"), "left_anti")
-            }
-          }
-        }
-        // the appends read nothing they grow, but the admitted plan DOES
-        // read the store — truncate the lineage before writing
-        val keepBands = labeled("checkpoint") {
-          store.tagged(bandize(admitted, "doc_id", bands, k / bands))
-            .localCheckpoint()
-        }
-        val keys = labeled("front")(store.frontKeys(keepBands))
-        if (keys.nonEmpty) {
-          // front FIRST (superset-safe, see above), then rows
-          val front = ScreenStore.Sigs.frontDir(storeDir).get
-          val blobs = labeled("front")(store.writeFront(front, keys))
-          ScreenStore.Sigs.noteFront(spark, storeDir, blobs)
-          labeled("delta") {
-            store.writeDelta(keepBands, ScreenStore.Sigs.tail(storeDir), "append")
-          }
-        }
-      }
-    } finally { signed.unpersist(); () }
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      labeled("compact")(store.compact())
-  }
+  private[streaming] def stageBatch(storeDir: String)(
+      batch: DataFrame, batchId: Long): Unit =
+    ScreenStage.stageBatch(storeDir, "graft.text", ScreenStage.Sig)(
+      batch.select("doc_id", "text"), batchId)
 }

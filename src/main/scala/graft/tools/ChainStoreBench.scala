@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.LocalSpark
-import graft.streaming.{ScreenStore, StoreCompact, StoreLayout, TextDedupStream}
+import graft.streaming.{ScreenStore, StoreLayout, TextDedupStream}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -52,24 +52,18 @@ object ChainStoreBench {
       val sigs = ScreenStore.Sigs.at(spark, root, P)
 
       // ---- exact store: n content hashes
-      exact.writeDelta(spark.range(n.toLong)
+      exact.seed(spark.range(n.toLong)
         .select(col("id").as("doc_id"), sha2(conv(col("id"), 10, 16), 256)
           .as("content_hash"))
-        .withColumn("b", lit(0L)), ScreenStore.Exact.tail(root), "overwrite")
-      StoreCompact.mergeTail(spark, ScreenStore.Exact.dir(root), Seq("pb"),
-        partitionFloor = 0)
-      exact.compact()
+        .withColumn("b", lit(0L)))
 
       // ---- sig store: n signatures (k=32 longs), pre-banded
       val sigOf = (0 until 32).map(i =>
         xxhash64(col("doc_id") * 37 + lit(i)))
       val sigStore = spark.range(n.toLong)
         .select(col("id").as("doc_id"), array(sigOf: _*).as("sig"))
-      sigs.writeDelta(TextDedupStream.bandRows(sigStore, "doc_id")
-        .withColumn("b", lit(0L)), ScreenStore.Sigs.tail(root), "overwrite")
-      StoreCompact.mergeTail(spark, ScreenStore.Sigs.dir(root), Seq("pb"),
-        partitionFloor = 0)
-      sigs.compact()
+      sigs.seed(TextDedupStream.bandRows(sigStore, "doc_id")
+        .withColumn("b", lit(0L)))
 
       // ---- one trigger's batch: batchN docs, ~4 true dups of store rows
       val batch = spark.range(batchN.toLong)

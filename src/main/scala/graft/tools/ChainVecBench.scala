@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   * `runMain graft.tools.ChainVecBench [batch] [iters] [sizes...]`
   * seeds a founded chain root (cell-partitioned `vecs`, coded `vecpq`,
   * published quantizer) at each size, then times full chain triggers —
-  * all-novel and ~4-true-dups batches — with `vecPq = true` vs `false`
-  * on the same root, min-of-`iters`, one JSON line per size. Both arms
+  * all-novel and ~4-true-dups batches — coded, then raw on the same
+  * root after deleting its codebooks and coded postings (the shape of
+  * a root founded before the coded layout), min-of-`iters`, one JSON
+  * line per size. Both arms
   * run the identical gate/exact/sig stages; the delta is the semantic
   * store side. A correctness cross-check asserts the dup triggers
   * reject exactly the planted dups in both arms.
@@ -125,29 +127,31 @@ object ChainVecBench {
       def nextTrig(): Long = { trig += 1; trig }
       def admitted(): Long = spark.read.parquet(s"$root/admitted").count()
 
-      def arm(vecPq: Boolean): (Double, Double) = {
+      def arm(): (Double, Double) = {
         val novel = timeIt(iters) {
-          CurationChain.ingestInto(root, vecPq = vecPq)(
-            novelBatch(trig * 10000), nextTrig())
+          CurationChain.ingestInto(root)(novelBatch(trig * 10000), nextTrig())
         }
         val before = admitted()
         val dup = timeIt(iters) {
-          CurationChain.ingestInto(root, vecPq = vecPq)(
-            dupBatch(trig * 10000), nextTrig())
+          CurationChain.ingestInto(root)(dupBatch(trig * 10000), nextTrig())
         }
         val perTrigger = (admitted() - before) / (iters + 1)
         require(perTrigger == batchN - 4,
           s"dup triggers must admit batch-4 rows, got $perTrigger/trigger")
         (novel, dup)
       }
-      val (pqNovel, pqDup) = arm(vecPq = true)
-      val (rawNovel, rawDup) = arm(vecPq = false)
       // the probed-cell set of a representative batch (the probe logic
       // the screen itself runs) → exact post-pruning scan bytes per arm
       val probed = Similarity.adcProbes(
         novelBatch(777777L).select(col("doc_id").as("vec_id"),
           col("embedding")), cents, cbs, 4).get.probedCells.toSet
+      val (pqNovel, pqDup) = arm()
       val pqNB = screenScanBytes(s"$root/vecpq", probed).toDouble
+      // the raw arm reaches the raw cell probe as an older founded root
+      // does: no codebooks and no coded postings
+      Seq("vec_cells/codebooks", "vecpq", "vecpq_tail").foreach(d =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$root/$d")))
+      val (rawNovel, rawDup) = arm()
       val rawNB = screenScanBytes(s"$root/vecs", probed).toDouble
       println(f"""{"store_rows":$n,"batch":$batchN,"nlist":$nlist,""" +
         f""""probed_cells":${probed.size},""" +

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.LocalSpark
-import graft.streaming.{ImageDedupStream, ScreenStore, StoreCompact, StoreLayout,
+import graft.streaming.{ImageDedupStream, ScreenStore, StoreLayout,
   TextDedupStream}
 import org.apache.spark.sql.functions._
 
@@ -68,11 +68,7 @@ object StandaloneStoreBench {
       val sigStore = spark.range(n.toLong)
         .select(col("id").as("doc_id"), array(sigOf: _*).as("sig"))
         .unionByName(knownSigs)
-      sigs.writeDelta(TextDedupStream.bandRows(sigStore, "doc_id"),
-        ScreenStore.Sigs.tail(textRoot), "overwrite")
-      StoreCompact.mergeTail(spark, ScreenStore.Sigs.dir(textRoot), Seq("pb"),
-        partitionFloor = 0)
-      sigs.compact()
+      sigs.seed(TextDedupStream.bandRows(sigStore, "doc_id"))
 
       // ---- image store: n synthetic hashes + 64 real PNG hashes
       val phash = ScreenStore.Phash.at(spark, imgRoot,
@@ -86,12 +82,9 @@ object StandaloneStoreBench {
         .select(col("id").as("media_id"),
           xxhash64(col("id") * 41 + lit(7)).as("h"))
         .unionByName(knownHashes.toDF("media_id", "h"))
-      phash.writeDelta(graft.multimodal.MultimodalQueries
-          .bandExplode(hStore, "media_id")
-          .select(col("media_id"), col("h"), col("b").as("band"), col("v")),
-        ScreenStore.Phash.tail(imgRoot), "overwrite")
-      StoreCompact.mergeTail(spark, ScreenStore.Phash.dir(imgRoot), Seq("pb"),
-        partitionFloor = 0)
+      phash.seed(graft.multimodal.MultimodalQueries
+        .bandExplode(hStore, "media_id")
+        .select(col("media_id"), col("h"), col("b").as("band"), col("v")))
 
       // ---- trigger batches: all-novel, and ~4 true dups of known rows
       def novelBatch(off: Long) = (0 until batchN)

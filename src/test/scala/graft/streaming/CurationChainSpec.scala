@@ -923,10 +923,15 @@ class CurationChainSpec extends SparkSpec {
       val root = java.nio.file.Files
         .createTempDirectory("graft_chain_pq").toFile.getAbsolutePath + "/c"
       val body = CurationChain.ingestInto(root, compactEvery = 2,
-        vecCellFloor = 8, vecNprobe = 2, vecPq = vecPq) _
+        vecCellFloor = 8, vecNprobe = 2) _
       body(df((0 until 6).map(i => (i.toLong, doc(i), axisVec(i)))), 0L)
       body(df((6 until 12).map(i => (i.toLong, doc(i), axisVec(i)))), 1L)
       body(df(Seq((12L, doc(12), axisVec(12)))), 2L) // cadence: founds
+      // the raw arm: the founded root loses its codebooks and coded
+      // postings, the shape of a root founded before the coded layout,
+      // so the screens take the raw cell probe
+      if (!vecPq) Seq("vec_cells/codebooks", "vecpq").foreach(d =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$root/$d")))
       // axis 40 is OUTSIDE the founding distribution (its subspace was
       // all-zero in training, so its posting decodes to ~0 there, ADC
       // error ~1): a calibrated GLOBAL margin measured on the founding

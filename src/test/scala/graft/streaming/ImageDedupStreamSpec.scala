@@ -13,34 +13,96 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class ImageDedupStreamSpec extends SparkSpec {
 
   /** Spark jobs of one warm trigger carrying a near-duplicate (measured). */
-  private val WarmTriggerJobs = 28
+  private val WarmTriggerJobs = 24
 
 
   private def png(id: Long, patch: Boolean = false): Array[Byte] =
     ImageCodec.formulaPng2(id, patch)
-  private def hashOf(id: Long, patch: Boolean = false): Long =
-    ImageCodec.dHashOf(png(id, patch)).get
 
-  test("admitBatch: in-batch greedy drop, then store screen") {
+  private def storeIdsAt(dir: String): Set[Long] =
+    ScreenStore.Phash.entries(spark, dir)
+      .select("media_id").collect().map(_.getLong(0)).toSet
+
+  private def rootAt(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).resolve("store").toString
+
+  /** The media ids a second trigger of `next` admits into a store
+    * bootstrapped from `store`.
+    */
+  private def admittedAfter(name: String, store: Seq[(Long, Array[Byte])],
+      next: Seq[(Long, Array[Byte])]): Set[Long] = {
+    import spark.implicits._
+    val dir = rootAt(name)
+    ImageDedupStream.ingestInto(dir)(store.toDF("media_id", "content"), 0L)
+    val before = storeIdsAt(dir)
+    ImageDedupStream.ingestInto(dir)(next.toDF("media_id", "content"), 1L)
+    storeIdsAt(dir) -- before
+  }
+
+  test("ingest: in-batch greedy drop, store screen") {
     import spark.implicits._
     // planted near-dup: formulaPng2(i, patch=true) is within hamming 7 of
     // its base (the q222 contract)
+    val dir = rootAt("imgdedup_admit")
     val batch = Seq(
-      (1L, hashOf(1)), (2L, hashOf(2)), (3L, hashOf(1, patch = true))
-    ).toDF("media_id", "h")
-    val boot = ImageDedupStream.admitBatch(batch, spark.emptyDataFrame)
-      .select("media_id").collect().map(_.getLong(0)).toSet
+      (1L, png(1)), (2L, png(2)), (3L, png(1, patch = true))
+    ).toDF("media_id", "content")
+    ImageDedupStream.ingestInto(dir)(batch, 0L)
+    val boot = storeIdsAt(dir)
     assert(boot == Set(1L, 2L), s"greedy rule keeps the lower id: $boot")
 
-    val store = Seq((1L, hashOf(1)), (2L, hashOf(2))).toDF("media_id", "h")
-    val next = Seq((4L, hashOf(4)), (5L, hashOf(2, patch = true)))
-      .toDF("media_id", "h")
-    val admitted = ImageDedupStream.admitBatch(next, store)
-      .select("media_id").collect().map(_.getLong(0)).toSet
+    val next = Seq((4L, png(4)), (5L, png(2, patch = true)))
+      .toDF("media_id", "content")
+    ImageDedupStream.ingestInto(dir)(next, 1L)
+    val admitted = storeIdsAt(dir) -- boot
     assert(admitted == Set(4L), s"store near-dup must be rejected: $admitted")
 
     // an idle trigger is a no-op, not a crash
-    assert(ImageDedupStream.admitBatch(batch.limit(0), store).isEmpty)
+    ImageDedupStream.ingestInto(dir)(batch.limit(0), 2L)
+    assert(storeIdsAt(dir) == Set(1L, 2L, 4L))
+  }
+
+  test("crash windows heal; replay equals clean") {
+    import spark.implicits._
+    val (clean, crashed) = (rootAt("imgdedup_clean"), rootAt("imgdedup_replay"))
+    def storeRows(r: String) = ScreenStore.Phash.rows(spark, r)
+      .select("media_id", "band", "v", "b").as[(Long, Int, Long, Long)]
+      .collect().sorted.toSeq
+    def sameAsClean(): Unit = assert(storeRows(crashed) == storeRows(clean),
+      "the replayed store must equal the uncrashed run")
+    val b0 = Seq((1L, png(1)), (2L, png(2))).toDF("media_id", "content")
+    // 3 and 4 are novel, 101 duplicates image 1
+    val b1 = Seq((3L, png(3)), (101L, png(1, patch = true)), (4L, png(4)))
+      .toDF("media_id", "content")
+    Seq(clean, crashed).foreach(ImageDedupStream.ingestInto(_)(b0, 0L))
+
+    // mid-PUBLISH: batch 1 sealed (adaptive execution off, so its tail
+    // spans several files), then only some of its tail files moved. The
+    // replay must finish the publish without recompute: recomputing would
+    // reject 3 and 4 as duplicates of their own half-published band rows
+    // and never write the rest.
+    CrashWindows.unadaptive(spark)(ImageDedupStream.stageBatch(crashed)(b1, 1L))
+    assert(CrashWindows.publishSome(spark, crashed, 1L, "phash_tail") > 0)
+    ImageDedupStream.ingestInto(crashed)(b1, 1L)
+    ImageDedupStream.ingestInto(clean)(b1, 1L)
+    sameAsClean()
+    assert(storeIdsAt(crashed) == Set(1L, 2L, 3L, 4L))
+
+    // committed replay: a pure no-op
+    ImageDedupStream.ingestInto(crashed)(b1, 1L)
+    sameAsClean()
+
+    // mid-STAGING: unsealed junk is discarded and the batch recomputed
+    val b2 = Seq((5L, png(5)), (102L, png(2, patch = true)))
+      .toDF("media_id", "content")
+    CrashWindows.junkStaging(spark, crashed, 2L, "phash_tail")
+    ImageDedupStream.ingestInto(crashed)(b2, 2L)
+    ImageDedupStream.ingestInto(clean)(b2, 2L)
+    sameAsClean()
+    assert(storeIdsAt(crashed) == Set(1L, 2L, 3L, 4L, 5L),
+      "5 must survive the discarded junk staging; 102 duplicates image 2")
+    assert(CrashWindows.noStaged(spark, crashed),
+      "published batches must leave no staged residue")
   }
 
   test("foreachBatch ingest: cross-trigger near-dup rejected, bounded store") {
@@ -124,39 +186,26 @@ class ImageDedupStreamSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("the band-store screen is modality-agnostic: audio envelope hashes " +
-      "flow through the same admitBatch") {
-    import spark.implicits._
-    import graft.multimodal.{AudioKernels, PcmFixtures}
-    def ah(id: Long, p: Boolean = false): Long =
-      AudioKernels.pcmHash(PcmFixtures.formulaWav2(id, p)).get
-    // admitBatch takes any (media_id, h) frame — the 64-bit envelope hash
-    // from the audio modality screens identically (q223's kernel, the
-    // streaming composition the image side pioneered)
-    val store = Seq((1L, ah(1)), (2L, ah(2))).toDF("media_id", "h")
-    val batch = Seq(
-      (4L, ah(4)), (5L, ah(2, p = true)), (6L, ah(4, p = true))
-    ).toDF("media_id", "h")
-    val admitted = ImageDedupStream.admitBatch(batch, store)
-      .select("media_id").collect().map(_.getLong(0)).toSet
+  test("ingest: WAV bytes screen by audio hash") {
+    import graft.multimodal.PcmFixtures
+    def wav(id: Long, p: Boolean = false) = PcmFixtures.formulaWav2(id, p)
+    // the body hashes any bytes through the chain's modality-dispatching
+    // kernel — the 64-bit envelope hash from the audio modality screens
+    // identically (q223's kernel, the streaming composition the image
+    // side pioneered)
+    val admitted = admittedAfter("imgdedup_wav", Seq((1L, wav(1)), (2L, wav(2))),
+      Seq((4L, wav(4)), (5L, wav(2, p = true)), (6L, wav(4, p = true))))
     // 5 duplicates store audio 2; 6 is an in-batch near-dup of 4
     assert(admitted == Set(4L), s"audio screen: $admitted")
   }
 
-  test("the band-store screen is modality-agnostic: video temporal-mean " +
-      "hashes flow through the same admitBatch") {
-    import spark.implicits._
-    import graft.multimodal.{MjpgCodec, VideoFixtures}
-    def vh(id: Long, p: Boolean = false): Long =
-      MjpgCodec.videoHash(VideoFixtures.neardupMjpgAvi(id, p)).get
+  test("ingest: AVI bytes screen by video hash") {
+    import graft.multimodal.VideoFixtures
+    def avi(id: Long, p: Boolean = false) = VideoFixtures.neardupMjpgAvi(id, p)
     // q233's 64-bit temporal-mean dHash screens identically — with the
     // audio case above, every hash-based modality shares one ingest path
-    val store = Seq((1L, vh(1)), (2L, vh(2))).toDF("media_id", "h")
-    val batch = Seq(
-      (4L, vh(4)), (5L, vh(2, p = true)), (6L, vh(4, p = true))
-    ).toDF("media_id", "h")
-    val admitted = ImageDedupStream.admitBatch(batch, store)
-      .select("media_id").collect().map(_.getLong(0)).toSet
+    val admitted = admittedAfter("imgdedup_avi", Seq((1L, avi(1)), (2L, avi(2))),
+      Seq((4L, avi(4)), (5L, avi(2, p = true)), (6L, avi(4, p = true))))
     // 5 duplicates store video 2; 6 is an in-batch near-dup of 4
     assert(admitted == Set(4L), s"video screen: $admitted")
   }

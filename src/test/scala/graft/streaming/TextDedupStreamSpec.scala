@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class TextDedupStreamSpec extends SparkSpec {
 
   /** Spark jobs of one warm trigger carrying a near-duplicate (measured). */
-  private val WarmTriggerJobs = 31
+  private val WarmTriggerJobs = 26
 
 
   /** ~40-word doc over an id-NAMESPACED vocabulary: distinct ids share
@@ -52,20 +52,73 @@ class TextDedupStreamSpec extends SparkSpec {
     pairs.foreach(p => assert(p._3 * 10 >= 7 * 32, s"estimate too low: $p"))
   }
 
-  test("admitBatch: in-batch greedy drop, then store screen, idle no-op") {
-    val batch = sigsOf(Seq((1L, doc(1)), (2L, doc(2)),
-      (103L, doc(1, edit = true))))
-    val boot = TextDedupStream.admitBatch(batch, spark.emptyDataFrame)
+  private def storeIdsAt(dir: String): Set[Long] =
+    ScreenStore.Sigs.entries(spark, dir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
+
+  test("ingest: greedy drop, store screen, idle") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("textdedup_admit")
+      .resolve("store").toString
+    val batch = Seq((1L, doc(1)), (2L, doc(2)),
+      (103L, doc(1, edit = true))).toDF("doc_id", "text")
+    TextDedupStream.ingestInto(dir)(batch, 0L)
+    val boot = storeIdsAt(dir)
     assert(boot == Set(1L, 2L), s"greedy rule keeps the lower id: $boot")
 
-    val store = sigsOf(Seq((1L, doc(1)), (2L, doc(2))))
-    val next = sigsOf(Seq((4L, doc(4)), (105L, doc(2, edit = true))))
-    val admitted = TextDedupStream.admitBatch(next, store)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val next = Seq((4L, doc(4)), (105L, doc(2, edit = true)))
+      .toDF("doc_id", "text")
+    TextDedupStream.ingestInto(dir)(next, 1L)
+    val admitted = storeIdsAt(dir) -- boot
     assert(admitted == Set(4L), s"store near-dup must be rejected: $admitted")
 
-    assert(TextDedupStream.admitBatch(batch.limit(0), store).isEmpty)
+    TextDedupStream.ingestInto(dir)(batch.limit(0), 2L)
+    assert(storeIdsAt(dir) == Set(1L, 2L, 4L))
+  }
+
+  test("crash windows heal; replay equals clean") {
+    import spark.implicits._
+    def root(name: String) = java.nio.file.Files.createTempDirectory(name)
+      .resolve("store").toString
+    val (clean, crashed) = (root("textdedup_clean"), root("textdedup_replay"))
+    def storeRows(r: String) = ScreenStore.Sigs.rows(spark, r)
+      .select("doc_id", "band", "bh", "b").as[(Long, Int, Long, Long)]
+      .collect().sorted.toSeq
+    def sameAsClean(): Unit = assert(storeRows(crashed) == storeRows(clean),
+      "the replayed store must equal the uncrashed run")
+    val b0 = Seq((1L, doc(1)), (2L, doc(2))).toDF("doc_id", "text")
+    // 3 and 4 are novel, 101 edits doc 1
+    val b1 = Seq((3L, doc(3)), (101L, doc(1, edit = true)), (4L, doc(4)))
+      .toDF("doc_id", "text")
+    Seq(clean, crashed).foreach(TextDedupStream.ingestInto(_)(b0, 0L))
+
+    // mid-PUBLISH: batch 1 sealed (adaptive execution off, so its tail
+    // spans several files), then only some of its tail files moved. The
+    // replay must finish the publish without recompute: recomputing would
+    // reject 3 and 4 as duplicates of their own half-published band rows
+    // and never write the rest.
+    CrashWindows.unadaptive(spark)(TextDedupStream.stageBatch(crashed)(b1, 1L))
+    assert(CrashWindows.publishSome(spark, crashed, 1L, "sigs_tail") > 0)
+    TextDedupStream.ingestInto(crashed)(b1, 1L)
+    TextDedupStream.ingestInto(clean)(b1, 1L)
+    sameAsClean()
+    assert(storeIdsAt(crashed) == Set(1L, 2L, 3L, 4L))
+
+    // committed replay: a pure no-op
+    TextDedupStream.ingestInto(crashed)(b1, 1L)
+    sameAsClean()
+
+    // mid-STAGING: unsealed junk is discarded and the batch recomputed
+    val b2 = Seq((5L, doc(5)), (102L, doc(2, edit = true)))
+      .toDF("doc_id", "text")
+    CrashWindows.junkStaging(spark, crashed, 2L, "sigs_tail")
+    TextDedupStream.ingestInto(crashed)(b2, 2L)
+    TextDedupStream.ingestInto(clean)(b2, 2L)
+    sameAsClean()
+    assert(storeIdsAt(crashed) == Set(1L, 2L, 3L, 4L, 5L),
+      "5 must survive the discarded junk staging; 102 edits doc 2")
+    assert(CrashWindows.noStaged(spark, crashed),
+      "published batches must leave no staged residue")
   }
 
   test("foreachBatch ingest: cross-trigger near-dup rejected, bounded store") {
@@ -313,7 +366,7 @@ class TextDedupStreamSpec extends SparkSpec {
     // the crash: a front write cut between create and close leaves its
     // half-written file under the hidden name it is renamed from
     val front = new java.io.File(s"$dir/sigbloom")
-    val whole = front.listFiles().filter(_.getName.startsWith("part-")).head
+    val whole = front.listFiles().filter(_.getName.startsWith("b0-part-")).head
     val bytes = java.nio.file.Files.readAllBytes(whole.toPath)
     val residue = s".${whole.getName.replace("part-", "part-cut-")}.tmp"
     java.nio.file.Files.write(new java.io.File(front, residue).toPath,
