@@ -10,8 +10,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * feeds MQ consumers, `/root/reference/src/main.rs:74-130`; a training
   * pipeline feeds the corpus instead): the CDC wire chain and the LLM
   * curation chain, until now two separately-composed pipelines
-  * (ReplicaStream → TxnStream/SchemaStream → Pipeline on the wire side;
-  * [[CurationChain]] on the corpus side), joined in ONE streaming job.
+  * (ReplicaStream with SchemaStream's fold inside it → Pipeline on the
+  * wire side; [[CurationChain]] on the corpus side), joined in ONE
+  * streaming job.
   *
   * Per micro-batch: raw replica transport chunks reassemble and fold
   * through the session state machine ([[ReplicaStream.fromChunks]] —
@@ -31,11 +32,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * reference's motivating workload has.
   *
   * Scale posture: the wire is one per-session stateful operator
-  * (reassembly fused with the session fold: state is bytes, not rows;
-  * one exchange on session id and one state store per trigger, plus
-  * [[SchemaStream]]'s own in [[startCdcMulti]]), the decode is a
-  * stateless per-row kernel, and the curation screens are the measured
-  * [[CurationChain]] joins. The end-to-end contract is gated by
+  * (reassembly fused with the session fold, and in [[startCdcMulti]]
+  * with [[SchemaStream]]'s fold too: state is bytes and a table
+  * registry, not rows; one exchange on session id and one state store
+  * per trigger), the decode is a stateless per-row kernel, and the
+  * curation screens are the measured [[CurationChain]] joins. The end-to-end contract is gated by
   * CdcCorpusChainSpec: binlog bytes in, curated admitted store out,
   * equal to the batch replay of the same documents.
   */
@@ -189,13 +190,13 @@ object CdcCorpusChain {
   /** MULTI-TABLE [[startCdc]] (r13 verdict item 4 — previously prose):
     * one binlog stream carrying several tables' DML routes each table
     * into its OWN curated corpus root. [[SchemaStream.withSchema]] does
-    * the stateful TABLE_MAP pairing (table_id → (db, table) binding
-    * survives checkpoint restarts and batch splits — an in-batch-only
-    * pairing would misroute a ROWS event whose TABLE_MAP landed in the
-    * previous trigger), then ONE `foreachBatch` splits the stamped batch
-    * by table and runs each slice through the full
-    * [[CurationChain.ingestCdcInto]] admission body against that table's
-    * root. A row event for a table declared in NEITHER `tables` nor
+    * the stateful TABLE_MAP pairing inside the wire operator's state
+    * (the table_id → (db, table) binding survives checkpoint restarts
+    * and batch splits — an in-batch-only pairing would misroute a ROWS
+    * event whose TABLE_MAP landed in the previous trigger), then ONE
+    * `foreachBatch` splits the stamped batch by table and runs each
+    * slice through the full [[CurationChain.ingestCdcInto]] admission
+    * body against that table's root. A row event for a table declared in NEITHER `tables` nor
     * `bootstrapOnly` fails loudly at the schema stage (an explicit
     * allowlist beats a silent drop — the reference's wildcard filter
     * semantics live in [[graft.cdc.Routing]] for the envelope path);

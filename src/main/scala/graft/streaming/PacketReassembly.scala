@@ -62,16 +62,19 @@ object PacketReassembly {
         scala.concurrent.duration.Duration.Zero)
       : Dataset[WirePacket] = {
     import chunks.sparkSession.implicits._
-    perSession(chunks, idleTimeout, Fresh)(step(_, _, _, maxPending))
+    perSession(chunks, idleTimeout, Fresh)(_ => None, step(_, _, _, maxPending))
   }
 
   /** A pure per-session `step` over raw chunks as ONE stateful operator
-    * keyed by session. An idle timeout (as on [[reassemble]]) removes the
-    * session's whole state, so a resumed session starts from `fresh`.
+    * keyed by session. An idle timeout (as on [[reassemble]]) replaces the
+    * session's state with `reset` of it, or removes it where `reset`
+    * returns None; either way a resumed session starts its reassembly
+    * from chunk idx 0.
     */
   private[streaming] def perSession[S: Encoder, U: Encoder](
       chunks: Dataset[ByteChunk], idleTimeout: scala.concurrent.duration.Duration,
-      fresh: => S)(step: (Long, Iterator[ByteChunk], S) => (S, Seq[U])): Dataset[U] = {
+      fresh: => S)(reset: S => Option[S],
+      step: (Long, Iterator[ByteChunk], S) => (S, Seq[U])): Dataset[U] = {
     import chunks.sparkSession.implicits._
     val ttlMs = if (idleTimeout.isFinite && idleTimeout.toMillis > 0)
       idleTimeout.toMillis else 0L
@@ -82,7 +85,9 @@ object PacketReassembly {
       .flatMapGroupsWithState[S, U](OutputMode.Append, conf) {
         (session: Long, rows: Iterator[ByteChunk], state: GroupState[S]) =>
           if (state.hasTimedOut) {
-            state.remove()
+            // no timeout is set on a reset state: it waits for the
+            // session's next chunk, however long that takes
+            reset(state.get).fold(state.remove())(state.update)
             Iterator.empty
           } else {
             val (next, out) = step(session, rows, state.getOption.getOrElse(fresh))

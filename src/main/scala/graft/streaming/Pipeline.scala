@@ -36,8 +36,9 @@ object Pipeline {
   /** Schema-stamped wire events → Canal-JSON envelope rows: the LAST
     * missing link between the byte side and the envelope side, closing
     * the reference's whole dataflow as one chain —
-    * `ReplicaStream.fromChunks → TxnStream/SchemaStream →
-    * envelopesFromWire → fromConfig` is `main.rs` end to end. Each row
+    * `SchemaStream.withSchema(ReplicaStream.fromChunks) →
+    * envelopesFromWire → fromConfig` is `main.rs` end to end, its whole
+    * stateful part one per-session operator. Each row
     * event decodes under its stamped era schema (no external metadata),
     * UPDATE before-images land in `old`, DELETEs carry their image in
     * `data` with type DELETE (the Canal convention the reference renders,

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.cdc.MysqlReplicaSession
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 
 /** One binlog event surfaced by the streaming replica session: the
   * `ordinal`-th event on `session`, bytes ready for
@@ -35,8 +36,10 @@ final case class SessionEvent(session: Long, ordinal: Long, event: Array[Byte])
   *
   * Scale: state per session is O(reorder window + one packet) for the
   * reassembly plus the O(1) session phase; one shuffle on session id.
-  * [[SchemaStream.withSchema]] downstream is a separate stateful operator
-  * and pays its own exchange and state store.
+  * [[SchemaStream.withSchema]] over this stage's output rebuilds it with
+  * the schema fold as a third part of the same per-session state, so the
+  * chain up to stamped row events is still one exchange and one state
+  * store.
   */
 object ReplicaStream {
 
@@ -81,13 +84,70 @@ object ReplicaStream {
       idleTimeout: scala.concurrent.duration.Duration =
         scala.concurrent.duration.Duration.Zero): Dataset[SessionEvent] = {
     import chunks.sparkSession.implicits._
-    // The reassembly half stays product-encoded; the fold half is Java
-    // serialized: State carries a sealed Phase hierarchy that product
-    // encoders can't express. It is O(bytes of one seed) per session, so
-    // codec speed is irrelevant here.
-    implicit val stateEnc: Encoder[SessionState] = Encoders.tuple(
-      Encoders.product[PacketReassembly.ReState], Encoders.javaSerialization[FoldState])
-    PacketReassembly.perSession(chunks, idleTimeout, fresh(config))(
-      step(_, _, _, maxPending))
+    implicit val stateEnc: Encoder[SessionState] =
+      Encoders.tuple(reStateEnc, foldStateEnc)
+    val events = PacketReassembly.perSession(chunks, idleTimeout, fresh(config))(
+      _ => None, step(_, _, _, maxPending))
+    events.queryExecution.logical.setTagValue(WireTag,
+      Wire(chunks, config, maxPending, idleTimeout))
+    events
+  }
+
+  // The reassembly part stays product-encoded; the fold part is Java
+  // serialized: State carries a sealed Phase hierarchy that product
+  // encoders can't express. It is O(bytes of one seed) per session, so
+  // codec speed is irrelevant here.
+  private def reStateEnc = Encoders.product[PacketReassembly.ReState]
+  private def foldStateEnc = Encoders.javaSerialization[FoldState]
+
+  /** What [[fromChunks]] was built from, kept on its plan so that
+    * [[SchemaStream.withSchema]] can rebuild the stage with the schema
+    * fold inside it.
+    */
+  private[streaming] final case class Wire(chunks: Dataset[ByteChunk],
+      config: MysqlReplicaSession.Config, maxPending: Int,
+      idleTimeout: scala.concurrent.duration.Duration)
+
+  private val WireTag = TreeNodeTag[Wire]("graft.replicaWire")
+
+  /** The wire `events` came from, when [[fromChunks]] built them. */
+  private[streaming] def wireOf(events: Dataset[SessionEvent]): Option[Wire] =
+    events.queryExecution.logical.getTagValue(WireTag)
+
+  /** A session's state in the wire stage that stamps schemas: reassembly,
+    * fold, then the schema registry.
+    */
+  type SchemaSessionState = (PacketReassembly.ReState, FoldState, SchemaStream.SchemaState)
+
+  /** One session's trigger through [[step]] and then [[SchemaStream.step]]. */
+  def stepWithSchema(session: Long, chunks: Iterator[ByteChunk],
+      st: SchemaSessionState, maxPending: Int): (SchemaSessionState, Seq[SchemaEvent]) = {
+    val ((re, fold), events) = step(session, chunks, (st._1, st._2), maxPending)
+    val (schema, stamped) = SchemaStream.step(session, events, st._3)
+    ((re, fold, schema), stamped)
+  }
+
+  /** An idle timeout in the schema-stamping stage: reassembly and fold
+    * restart as a fresh connection. The table registry and the
+    * DDL-evolved column lists describe the source's catalog, not the
+    * connection, so they are kept.
+    */
+  def idleReset(config: MysqlReplicaSession.Config)(st: SchemaSessionState)
+      : SchemaSessionState = {
+    val (re, fold) = fresh(config)
+    (re, fold, st._3)
+  }
+
+  /** [[fromChunks]] with the schema fold inside the same operator: one
+    * exchange on session id and one state store for the whole chain.
+    */
+  private[streaming] def withSchema(wire: Wire, boot: SchemaStream.SchemaState)
+      : Dataset[SchemaEvent] = {
+    import wire.chunks.sparkSession.implicits._
+    implicit val stateEnc: Encoder[SchemaSessionState] = Encoders.tuple(
+      reStateEnc, foldStateEnc, Encoders.product[SchemaStream.SchemaState])
+    val (re, fold) = fresh(wire.config)
+    PacketReassembly.perSession(wire.chunks, wire.idleTimeout, (re, fold, boot))(
+      st => Some(idleReset(wire.config)(st)), stepWithSchema(_, _, _, wire.maxPending))
   }
 }

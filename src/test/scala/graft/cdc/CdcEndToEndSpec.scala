@@ -219,24 +219,14 @@ class CdcEndToEndSpec extends SparkSpec {
     assert(snap == Seq((1L, "alice", "99.90"), (3L, "carol", "7.00")))
   }
 
-  test("wire chain with a live ALTER: schema tracking survives the restart") {
-    // the round-8 composition: chunks → packets → session fold →
-    // SchemaStream (TABLE_MAP binding + DDL evolution in state) → typed
-    // rows under each event's era schema → snapshot. The restart cut
-    // lands AFTER the ALTER but before the new-era rows, so the evolved
-    // column list must come back from the state store, not the batch.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
+  // one table's DML across a live ALTER: TABLE_MAP(7), a v1 row, the
+  // ALTER, TABLE_MAP(8), then v2 rows
+  private val ddlV1 = Seq("id" -> "bigint", "name" -> "varchar(32)")
+  private val ddlDump: Seq[Array[Byte]] = {
     import BinlogRowCodec._
-
-    val v1 = Seq("id" -> "bigint", "name" -> "varchar(32)")
-    val s1 = BinlogSchema.fromMysqlTypes(v1)
-    val s2 = BinlogSchema.fromMysqlTypes(v1 :+ ("bal" -> "decimal(10,2)"))
-    val seed = (1 to 20).map(_.toByte).toArray
-    val ok = hx("00" + "00" + "00" + "0200" + "0000")
-    val eof = hx("fe" + "0000" + "0200")
-
-    val dumpEvents: Seq[Array[Byte]] = Seq(
+    val s1 = BinlogSchema.fromMysqlTypes(ddlV1)
+    val s2 = BinlogSchema.fromMysqlTypes(ddlV1 :+ ("bal" -> "decimal(10,2)"))
+    Seq(
       encodeEvent(19, encodeTableMap(7L, "db1", "t1", s1)),
       encodeEvent(WriteV2, encodeRows(WriteV2, s1,
         Seq(Seq[Any](1L, "alice")), tableId = 7L)),
@@ -248,6 +238,24 @@ class CdcEndToEndSpec extends SparkSpec {
       encodeEvent(UpdateV2, encodeRows(UpdateV2, s2,
         Seq(Seq[Any](1L, "alice", null), Seq[Any](1L, "alice", "99.90")),
         tableId = 8L)))
+  }
+
+  test("wire chain with a live ALTER: schema tracking survives the restart") {
+    // the round-8 composition: chunks → packets → session fold →
+    // SchemaStream (TABLE_MAP binding + DDL evolution in state) → typed
+    // rows under each event's era schema → snapshot. The restart cut
+    // lands AFTER the ALTER but before the new-era rows, so the evolved
+    // column list must come back from the state store, not the batch.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import BinlogRowCodec._
+
+    val v1 = ddlV1
+    val seed = (1 to 20).map(_.toByte).toArray
+    val ok = hx("00" + "00" + "00" + "0200" + "0000")
+    val eof = hx("fe" + "0000" + "0200")
+
+    val dumpEvents = ddlDump
     val serverPayloads: Seq[Array[Byte]] =
       Seq(handshakeV10(seed),
         (0xfe.toByte +: ("mysql_native_password".getBytes :+ 0.toByte)) ++ seed :+ 0.toByte,
@@ -426,5 +434,141 @@ class CdcEndToEndSpec extends SparkSpec {
     val (_, stale) = ReplicaStream.step(7L, resumed.iterator,
       (PacketReassembly.Fresh, st1._2), maxPending = 4096)
     assert(stale.isEmpty)
+  }
+
+  // ---- the schema fold inside the wire operator ----
+
+  private val ddlBootstrap = Map(("db1", "t1") -> ddlV1)
+
+  private type Stamped = (Long, Long, String, String, Seq[String], Seq[String], Int,
+    Seq[Byte])
+
+  /** A stamped event as plain values, for equality. */
+  private def flat(e: graft.streaming.SchemaEvent): Stamped =
+    (e.session, e.ordinal, e.db, e.table, e.names, e.mysqlTypes, e.eventType,
+      e.event.toSeq)
+
+  test("schema fold inside the wire operator: stamped events equal the " +
+      "per-session schema operator across restarts at DDL, TABLE_MAP and " +
+      "mid-packet cuts") {
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import graft.streaming.{SchemaEvent, SchemaStream, SessionEvent}
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+
+    val frames = sessionFrames(ddlDump)
+    val bytes = frames.toArray.flatten
+    // byte offset where each packet starts; dump event i is packet 10 + i
+    val starts = frames.scanLeft(0)(_ + _.length)
+    val cuts = Seq(
+      starts(12),                      // before the ALTER
+      starts(14),                      // after TABLE_MAP(8), before its row
+      (starts(15) + starts(16)) / 2)   // inside the last row event's packet
+    val segments = (0 +: cuts :+ bytes.length).sliding(2).toSeq.map { case Seq(a, b) =>
+      bytes.slice(a, b).grouped(13).toSeq
+    }
+    var idx = -1L
+    val triggers = segments.map(_.map { bs => idx += 1; ByteChunk(1L, idx, bs) })
+
+    def run(dir: String, restart: Boolean)(
+        build: Dataset[ByteChunk] => Dataset[SchemaEvent]): (Seq[Stamped], Int) = {
+      val in = MemoryStream[ByteChunk]
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[Stamped]()
+      def start() = build(in.toDS())
+        .writeStream.outputMode("append").option("checkpointLocation", s"$dir/ckpt")
+        .foreachBatch { (b: Dataset[SchemaEvent], _: Long) =>
+          b.collect().foreach(e => got.add(flat(e)))
+        }.start()
+      var q = start()
+      var stateful = 0
+      try triggers.zipWithIndex.foreach { case (t, i) =>
+        if (restart && i > 0) { q.stop(); q = start() }
+        in.addData(t)
+        q.processAllAvailable()
+        stateful = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan.collect { case o: StatefulOperator => o }.size
+      } finally q.stop()
+      (got.toArray(Array.empty[Stamped]).toSeq.sortBy(_._2), stateful)
+    }
+
+    val (fused, fusedOps) = run(Files.createTempDirectory("graft-schema-fused").toString,
+      restart = true)(in => SchemaStream.withSchema(
+        ReplicaStream.fromChunks(in, wireConfig), ddlBootstrap))
+    // a Dataset fromChunks did not build keeps the per-session operator
+    val (reference, referenceOps) = run(
+      Files.createTempDirectory("graft-schema-ref").toString, restart = false)(in =>
+      SchemaStream.withSchema(ReplicaStream.fromChunks(in, wireConfig)
+        .filter((_: SessionEvent) => true), ddlBootstrap))
+    assert(fusedOps == 1)
+    assert(referenceOps == 2)
+
+    assert(reference.map(e => (e._2, e._5)) == Seq(
+      1L -> Seq("id", "name"), 4L -> Seq("id", "name", "bal"),
+      5L -> Seq("id", "name", "bal")))
+    assert(fused == reference)
+  }
+
+  test("schema fold inside the wire operator: one exchange and one state " +
+      "store per trigger") {
+    import org.apache.spark.JobCounter
+    import graft.streaming.SchemaStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+
+    val rnd = new scala.util.Random(11)
+    val in = MemoryStream[ByteChunk]
+    val q = SchemaStream.withSchema(ReplicaStream.fromChunks(in.toDS(), wireConfig),
+        ddlBootstrap)
+      .writeStream.format("memory").queryName("wire_schema_fused")
+      .outputMode("append").start()
+    try {
+      val all = (1L to 2L).flatMap(s => cut(s, sessionFrames(ddlDump).toArray.flatten,
+        rnd, 40))
+      val (cold, warm) = all.partition(c => c.idx < 10)
+      in.addData(cold)
+      q.processAllAvailable()
+      val (_, jobs, stages) = JobCounter.countWithStages(spark.sparkContext) {
+        in.addData(warm)
+        q.processAllAvailable()
+      }
+      // one job: the source's shuffle-map stage and the stateful stage
+      assert((jobs, stages) == (1, 2))
+      assert(q.lastProgress.stateOperators.length == 1)
+      assert(spark.table("wire_schema_fused").count() == 6)
+    } finally q.stop()
+  }
+
+  test("schema fold inside the wire operator: an idle reset restarts the " +
+      "connection and keeps the evolved schema") {
+    import graft.streaming.{PacketReassembly, SchemaStream}
+    val rnd = new scala.util.Random(5)
+    def chunksOf(events: Seq[Array[Byte]]) =
+      cut(7L, sessionFrames(events).toArray.flatten, rnd, 50)
+    def names(evs: Seq[graft.streaming.SchemaEvent]) = evs.map(e => e.ordinal -> e.names)
+    val boot = SchemaStream.initial(ddlBootstrap)
+    val (fresh, fold) = ReplicaStream.fresh(wireConfig)
+
+    // TABLE_MAP(7), a v1 row, the ALTER; then the session goes idle
+    val (st1, ev1) = ReplicaStream.stepWithSchema(7L, chunksOf(ddlDump.take(3)).iterator,
+      (fresh, fold, boot), maxPending = 4096)
+    assert(names(ev1) == Seq(1L -> Seq("id", "name")))
+    val reset = ReplicaStream.idleReset(wireConfig)(st1)
+    assert(reset._1 == PacketReassembly.Fresh && reset._1.nextIdx == 0L)
+    assert(reset._2.st.phase == MysqlReplicaSession.AwaitHandshake)
+    assert(reset._2.eventsOut == 0L)
+    assert(reset._3 == st1._3)
+
+    // the session reconnects: chunk idx 0, a new bring-up, then the new era
+    val resumed = chunksOf(ddlDump.drop(3))
+    val (_, ev2) = ReplicaStream.stepWithSchema(7L, resumed.iterator, reset,
+      maxPending = 4096)
+    assert(names(ev2) == Seq(1L -> Seq("id", "name", "bal"),
+      2L -> Seq("id", "name", "bal")))
+    // a schema part reset with the rest would stamp the pre-ALTER columns
+    val (_, lost) = ReplicaStream.stepWithSchema(7L, resumed.iterator,
+      (fresh, fold, boot), maxPending = 4096)
+    assert(names(lost).map(_._2) == Seq(Seq("id", "name"), Seq("id", "name")))
   }
 }

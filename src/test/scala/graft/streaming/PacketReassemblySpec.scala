@@ -233,11 +233,13 @@ class PacketReassemblySpec extends SparkSpec {
     } finally q.stop()
   }
 
-  // NOTE: the idleTimeout FIRE path (state.hasTimedOut → remove) is not
-  // driven here — a ProcessingTimeTimeout query schedules continuous
-  // empty timeout batches that race processAllAvailable and hang the
-  // MemoryStream harness. Same constraint as Stateful.latestImage's
-  // tombstoneTtl; the removal branch is remove()+empty, reviewed inline.
+  // NOTE: the idleTimeout FIRE path (state.hasTimedOut → reset or
+  // remove) is not driven here — a ProcessingTimeTimeout query schedules
+  // continuous empty timeout batches that race processAllAvailable and
+  // hang the MemoryStream harness. Same constraint as
+  // Stateful.latestImage's tombstoneTtl; the branch applies the pure
+  // reset and emits nothing. The schema-stamping wire stage's reset,
+  // ReplicaStream.idleReset, is unit-tested in CdcEndToEndSpec.
 
   test("a contiguous burst larger than maxPending drains fine (bound is gap-only)") {
     implicit val sqlCtx = spark.sqlContext
